@@ -371,12 +371,12 @@ class OlapAgent(complete: String => String, oracle: SemanticOracle) {
         val key = graft.cube.PredicateAtoms.atoms(asOps)
         // Equal reuse: a session re-asking the same conditions gets the
         // cached node back, never a second execution
-        catalog.all.find(n => n.predicates == key && key.nonEmpty)
+        catalog.equalNode(key)
           .getOrElse {
             // implication-aware base (the same bestBaseImplied descent
             // filterQuery uses): a progressive NL session whose new step
             // set extends a cached node's executes ONLY the delta steps on
-            // that node's (already filtered, possibly persisted) frame.
+            // that node's (already filtered, pinned) frame.
             // Delta execution is sound only under a conjunctive logic
             // tree — dropping a satisfied leaf from an OR would change
             // semantics — so any other shape falls back to full execution.
@@ -389,22 +389,17 @@ class OlapAgent(complete: String => String, oracle: SemanticOracle) {
             val deltaSteps = plan.steps.filterNot(s =>
               cached.predicates.contains(graft.cube.PredicateAtoms.atom(
                 LogicalOp.SemFilter(s.field.toSeq, s.action))))
-            val (df, planOps) =
+            val (from, df, planOps) =
               if (cached.id != 0 && conjunctive) {
                 val d =
                   if (deltaSteps.isEmpty) cached.df
                   else executeFilter(cached.df, FilterPlan(deltaSteps,
                     LogicTree.Node("AND", deltaSteps.map(s => LogicTree.Leaf(s.id)))),
                     statsDf = base)
-                (d, cached.plan ++ deltaSteps.map(s =>
+                (cached, d, cached.plan ++ deltaSteps.map(s =>
                   LogicalOp.SemFilter(s.field.toSeq, s.action): LogicalOp))
-              } else (executeFilter(base, plan), asOps)
-            // id = position: keeps the catalog's id==index invariant for
-            // externally registered nodes
-            val n = graft.cube.CubeNode(catalog.all.length, query, key, df,
-              Map.empty, planOps, asOps)
-            catalog.register(n)
-            n
+              } else (catalog.node(0), executeFilter(base, plan), asOps)
+            catalog.admit(from, query, key, df, planOps, asOps)
           }
       }
     val (finalNode, summary, _) =

@@ -22,9 +22,15 @@ import graft.ops.{CountOp, NumReduce, Reattach, SemGroup, SemMap, SemReduce}
   *     superset and applies only its delta predicates (the reference's
   *     incremental-filter path, OLAP_Agent.py:397-418).
   *
-  * Scale posture: the catalog holds metadata + lazy DataFrames (callers opt
-  * into `persist()`); nothing here collects rows. Reused nodes mean the
-  * 100 TB base scan happens once per subsumption chain, not per query.
+  * Scale posture: nothing here collects rows. Every node the catalog
+  * computes is persisted (MEMORY_AND_DISK) and held in one process-wide,
+  * least-recently-used pin set of [[CubeCatalog.MaxPinned]] frames; an
+  * Equal or delta hit re-pins its node. So while a node stays pinned, a
+  * repeat or a refinement reads its cached rows instead of rescanning the
+  * base table and re-paying its semantic judgments. A node evicted from
+  * the pin set keeps its lazy lineage and recomputes the same answer from
+  * it. The root, and nodes registered from outside (a
+  * [[CatalogStore]] reload reads materialized parquet), are never pinned.
   */
 final case class Granularity(name: String, view: DataFrame,
     plan: Seq[LogicalOp], summary: Option[DataFrame] = None)
@@ -122,9 +128,28 @@ object PredicateAtoms {
   */
 class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
     relationJudge: Option[(String, String) => String] = None) {
+  import CubeCatalog.{Reuse, pins}
   private var nextId = 1
   private var nodes: Vector[CubeNode] =
     Vector(CubeNode(0, "All Data", Set.empty, root, Map.empty, Seq.empty))
+  /** Ids of the nodes this catalog computed: the only ones it pins. */
+  private val computed = scala.collection.mutable.Set.empty[Int]
+
+  private var equalHits = 0L
+  private var deltaHits = 0L
+  private var misses = 0L
+  private val evictions = new java.util.concurrent.atomic.AtomicLong
+
+  /** Lookup outcomes so far, and how many of this catalog's pins the
+    * shared pin set has evicted.
+    */
+  def reuse: Reuse = Reuse(equalHits, deltaHits, misses, evictions.get)
+
+  /** Pin a node this catalog computed (a no-op for any other node). */
+  private def repin(n: CubeNode): CubeNode = {
+    if (computed(n.id)) pins.pin(n.df, () => evictions.incrementAndGet())
+    n
+  }
 
   def all: Seq[CubeNode] = nodes
   /** Lookup by node ID (not vector position): externally registered
@@ -357,7 +382,7 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
   def filterQuery(queryText: String, filters: Seq[LogicalOp]): CubeNode = {
     val key = PredicateAtoms.atoms(filters)
     val base0 = bestBaseImplied(filters)
-    if (relation(base0.predicates, key) == Equal) return base0
+    if (relation(base0.predicates, key) == Equal) return equalHit(base0)
 
     // Oracle fallback (r18, BFS-bounded r19): only when the structural
     // path found no reuse at all (base = root) and a judge is wired. An
@@ -369,7 +394,7 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
     val base =
       if (base0.id != 0 || relationJudge.isEmpty) base0
       else judgedDescent(filters, queryText) match {
-        case Some((n, Equal5)) => return n
+        case Some((n, Equal5)) => return equalHit(n)
         case Some((n, _)) => n
         case None => base0
       }
@@ -377,19 +402,57 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
     val delta = filters.filterNot(f =>
       base.predicates.contains(PredicateAtoms.atom(f)))
     val df = Cascade.filter(base.df, delta.zipWithIndex.map(_.swap), None, oracle)
-    val n = CubeNode(nextId, queryText, key, df, base.dims,
-      base.plan ++ delta, filters)
-    nextId += 1
-    nodes = nodes :+ n
-    n
+    admit(base, queryText, key, df, base.plan ++ delta, filters, base.dims)
   }
 
+  private def equalHit(n: CubeNode): CubeNode = {
+    equalHits += 1
+    repin(n)
+  }
+
+  /** The cached node whose predicate set is exactly `key` (non-empty), as
+    * an Equal hit: counted, and re-pinned so its rows stay cached.
+    */
+  def equalNode(key: Set[String]): Option[CubeNode] =
+    if (key.isEmpty) None
+    else nodes.find(_.predicates == key).map(equalHit)
+
+  /** Register a node this catalog computed from `base`: a delta hit when
+    * `base` is a cached node (re-pinned), a miss when it is the root. The
+    * new node gets the next id and is pinned.
+    */
+  def admit(base: CubeNode, query: String, predicates: Set[String],
+      df: DataFrame, plan: Seq[LogicalOp], filterOps: Seq[LogicalOp],
+      dims: Map[String, DimensionViews] = Map.empty): CubeNode = {
+    if (base.id == 0) misses += 1
+    else { deltaHits += 1; repin(base) }
+    val n = CubeNode(nextId, query, predicates, df, dims, plan, filterOps)
+    nextId += 1
+    nodes = nodes :+ n
+    computed += n.id
+    repin(n)
+  }
+
+  /** Register a node built outside the catalog (never pinned). */
   def register(n: CubeNode): Unit = {
     nodes = nodes :+ n
     // externally minted ids (e.g. a CatalogStore reload) must not collide
     // with ids this catalog hands out next
     nextId = math.max(nextId, n.id + 1)
   }
+}
+
+object CubeCatalog {
+  /** Lookup outcomes of one catalog: Equal hits, delta hits (a cached
+    * node was the base), misses (the root was), and evictions of its
+    * nodes from the shared pin set.
+    */
+  final case class Reuse(equal: Long, delta: Long, miss: Long,
+      evicted: Long)
+
+  /** Cap of the process-wide pin set that holds computed nodes. */
+  private[cube] val MaxPinned = 8
+  private val pins = new graft.exec.PinSet(MaxPinned)
 }
 
 /** The composite OLAP verbs over a cube node (SURVEY.md §2d). */

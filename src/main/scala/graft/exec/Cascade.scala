@@ -139,49 +139,16 @@ object PlanRunner {
     case _ => false
   }
 
-  /** Frames pinned for open-set double-billing protection, bounded
-    * FIFO. persist (not localCheckpoint): lineage survives, so a lost
-    * block RECOMPUTES — re-billing a partition's oracle calls in a rare
-    * failure beats failing the plan outright, and localCheckpoint is
-    * documented unsafe under dynamic allocation. The cap bounds the
-    * CacheManager growth a long-lived service would otherwise
-    * accumulate (one pinned cascade per open-set plan, forever): past
-    * `maxPinned`, the OLDEST frame unpersists (non-blocking) — a later
-    * re-read of that old plan's result returns to the engine's default
-    * LAZY semantics (recompute, re-bill; with a non-deterministic
-    * oracle that is the same re-judgment any unpinned frame already
-    * has on re-read), while the plan currently executing always holds
-    * its pin. Eviction is SKIPPED when a newer pin shares the evictee's
-    * plan: Spark's CacheManager keys cached data by canonicalized plan,
-    * so unpersisting the old duplicate would silently uncache the live
-    * pin and re-open the double-billing hole.
+  /** Frames pinned for open-set double-billing protection (see the
+    * SemGroup case below). The cap bounds the CacheManager growth a
+    * long-lived service would otherwise accumulate (one pinned cascade
+    * per open-set plan, forever): past it, the oldest frame is evicted,
+    * and a later re-read of that old plan's result returns to the
+    * engine's default lazy semantics (recompute, re-bill), while the plan
+    * currently executing always holds its pin.
     */
-  private val pinnedFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-  private val maxPinned = 4
-
-  private def pin(df: DataFrame): DataFrame = {
-    val p = df.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pinnedFrames.add(p)
-    while (pinnedFrames.size > maxPinned) {
-      val old = pinnedFrames.poll()
-      if (old != null) {
-        val sharedWithLive = {
-          val it = pinnedFrames.iterator()
-          var found = false
-          while (!found && it.hasNext)
-            found = it.next().queryExecution.analyzed
-              .sameResult(old.queryExecution.analyzed)
-          found
-        }
-        if (!sharedWithLive)
-          try old.unpersist(blocking = false)
-          catch { case _: Exception => () } // a stopped session's frame
-      }
-    }
-    p
-  }
+  private val MaxPinned = 4
+  private val pins = new PinSet(MaxPinned)
 
   /** Resolve corpus count-column naming variants against available columns:
     * "count" / "<dim>_count" both mean the engine's "count_of_<dim>".
@@ -245,7 +212,7 @@ object PlanRunner {
               // open-set grouping scans twice (vocabulary mining is a
               // separate action before classification); when an earlier
               // plan step pays an OUT-OF-BAND oracle per row, pin the
-              // frame ([[pin]]: persist under a bounded FIFO) so the
+              // frame (persist under a bounded [[PinSet]]) so the
               // mining pass does not re-judge (and re-bill) the whole
               // upstream cascade. Compiled upstreams recompute for free
               // and skip the cache.
@@ -256,7 +223,7 @@ object PlanRunner {
                   oracle.compileExtract(m.mapDescription).isEmpty
                 case _ => false
               }
-              val src = if (oraclePaysUpstream) pin(base) else base
+              val src = if (oraclePaysUpstream) pins.pin(base) else base
               base = SemGroup(src, op, oracle, maxTags = 20)
             }
             out = base

@@ -274,14 +274,6 @@ object Merge {
   private def nextTs(parent: Manifest): Long =
     math.max(parent.ts + 1L, System.currentTimeMillis())
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c    => c.toString
-    }
-
   /** Thrown when the create-if-absent manifest claim finds the version
     * already committed by someone else — the caller must re-read the log
     * and redo its merge against the new parent.
@@ -295,15 +287,15 @@ object Merge {
 
   private def statsEntriesJson(stats: Seq[Skipping.FileStats]): String =
     stats.map { e =>
-      val mn = e.min.map(v => "\"" + jsonEscape(v) + "\"").getOrElse("null")
-      val mx = e.max.map(v => "\"" + jsonEscape(v) + "\"").getOrElse("null")
+      val mn = e.min.map(v => "\"" + JsonEscape(v) + "\"").getOrElse("null")
+      val mx = e.max.map(v => "\"" + JsonEscape(v) + "\"").getOrElse("null")
       val r = if (e.rows >= 0) s""","r":${e.rows}""" else ""
       val bf = e.bloom.map(v => s""","bf":"$v"""").getOrElse("") // base64:
         // no JSON-special characters by construction
       val nu = if (e.nulls >= 0) s""","nu":${e.nulls}""" else ""
       val sm = e.sum.map(v => s""","sm":"$v"""").getOrElse("") // decimal
         // digits and sign only — never needs escaping
-      s"""{"f":"${jsonEscape(e.file)}","c":"${jsonEscape(e.col)}",""" +
+      s"""{"f":"${JsonEscape(e.file)}","c":"${JsonEscape(e.col)}",""" +
         s""""mn":$mn,"mx":$mx$r$bf$nu$sm}"""
     }.mkString("[", ",", "]")
 
@@ -317,18 +309,18 @@ object Merge {
         // O(shards), not O(files)
         s""""shardSpan":${m.shardSpan},"shards":""" +
           m.shardIds.sortBy(_._1).map { case (i, id) =>
-            s"""{"i":$i,"id":"${jsonEscape(id)}"}"""
+            s"""{"i":$i,"id":"${JsonEscape(id)}"}"""
           }.mkString("[", ",", "]")
       else
         s""""files":""" +
           m.files.map(f => "\"" + f + "\"").mkString("[", ",", "]")
     val schemaField = m.dataSchema
-      .map(s => s""","dataSchema":"${jsonEscape(s)}"""").getOrElse("")
+      .map(s => s""","dataSchema":"${JsonEscape(s)}"""").getOrElse("")
     val txnField = m.txn.map { case (app, batch) =>
-      s""","txnApp":"${jsonEscape(app)}","txnBatch":$batch"""
+      s""","txnApp":"${JsonEscape(app)}","txnBatch":$batch"""
     }.getOrElse("")
     val layoutField = m.layout.map { case (k, n) =>
-      s""","keyCol":"${jsonEscape(k)}","nBuckets":$n"""
+      s""","keyCol":"${JsonEscape(k)}","nBuckets":$n"""
     }.getOrElse("")
     // per-file min/max stats (Delta/Iceberg-style): compact keys, values
     // in Skipping's type-exact string encoding so re-parse is lossless.
@@ -337,54 +329,54 @@ object Merge {
     val statsFields =
       if (m.statsCols.isEmpty) ""
       else {
-        val cols = m.statsCols.map(c => "\"" + jsonEscape(c) + "\"")
+        val cols = m.statsCols.map(c => "\"" + JsonEscape(c) + "\"")
           .mkString("[", ",", "]")
         s""","statsCols":$cols""" +
           (if (m.shardSpan > 0) ""
            else s""","stats":${statsEntriesJson(m.stats)}""")
       }
     val tsField = if (m.ts >= 0) s""","ts":${m.ts}""" else ""
-    val opField = m.op.map(o => s""","op":"${jsonEscape(o)}"""")
+    val opField = m.op.map(o => s""","op":"${JsonEscape(o)}"""")
       .getOrElse("") +
       (if (m.rowsUpserted >= 0) s""","rowsUp":${m.rowsUpserted}""" else "") +
       (if (m.rowsDeleted >= 0) s""","rowsDel":${m.rowsDeleted}""" else "")
     val constraintsField =
       if (m.constraints.isEmpty) ""
       else s""","constraints":""" + m.constraints.map { case (n, e) =>
-        s"""{"n":"${jsonEscape(n)}","e":"${jsonEscape(e)}"}"""
+        s"""{"n":"${JsonEscape(n)}","e":"${JsonEscape(e)}"}"""
       }.mkString("[", ",", "]")
     val dvField =
       if (m.dvFiles.isEmpty) ""
       else s""","dvFiles":""" + m.dvFiles.sorted
-        .map(f => "\"" + jsonEscape(f) + "\"").mkString("[", ",", "]")
+        .map(f => "\"" + JsonEscape(f) + "\"").mkString("[", ",", "]")
     val colMapField =
       if (m.colMap.isEmpty) ""
       else s""","colMap":""" + m.colMap.sortBy(_._1).map { case (l, p) =>
-        s"""{"l":"${jsonEscape(l)}","p":"${jsonEscape(p)}"}"""
+        s"""{"l":"${JsonEscape(l)}","p":"${JsonEscape(p)}"}"""
       }.mkString("[", ",", "]")
     val retiredField =
       if (m.physRetired.isEmpty) ""
       else s""","physRetired":""" + m.physRetired.sorted
-        .map(f => "\"" + jsonEscape(f) + "\"").mkString("[", ",", "]")
+        .map(f => "\"" + JsonEscape(f) + "\"").mkString("[", ",", "]")
     val aliasesField =
       if (m.colAliases.isEmpty) ""
       else s""","colAliases":""" + m.colAliases.sortBy(_._1).map {
-        case (l, p) => s"""{"l":"${jsonEscape(l)}","p":"${jsonEscape(p)}"}"""
+        case (l, p) => s"""{"l":"${JsonEscape(l)}","p":"${JsonEscape(p)}"}"""
       }.mkString("[", ",", "]")
     val copiedField =
       if (m.copied.isEmpty) ""
       else s""","copied":""" + m.copied.sorted
-        .map(f => "\"" + jsonEscape(f) + "\"").mkString("[", ",", "]")
+        .map(f => "\"" + JsonEscape(f) + "\"").mkString("[", ",", "]")
     val idHwmField =
       if (m.idHwm.isEmpty) ""
       else s""","idHwm":""" + m.idHwm.sortBy(_._1).map { case (c, v) =>
-        s"""{"c":"${jsonEscape(c)}","v":$v}"""
+        s"""{"c":"${JsonEscape(c)}","v":$v}"""
       }.mkString("[", ",", "]")
     val keySortedField = if (m.keySorted) s""","keySorted":true""" else ""
     val layoutColsField =
       if (m.layoutCols.isEmpty) ""
       else s""","layoutCols":""" + m.layoutCols
-        .map(c => "\"" + jsonEscape(c) + "\"").mkString("[", ",", "]") +
+        .map(c => "\"" + JsonEscape(c) + "\"").mkString("[", ",", "]") +
         s""","layoutNs":""" + m.layoutNs.mkString("[", ",", "]")
     (s"""{"version":${m.version},"parent":${m.parent},""" +
       s"""$filesField$schemaField$txnField$layoutField$statsFields""" +

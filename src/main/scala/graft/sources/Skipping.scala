@@ -358,16 +358,6 @@ object Skipping {
   private def statsPath(root: Path) = new Path(
     new Path(root, "_graft_stats"), "stats.json")
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c    => c.toString
-    }
-
   /** Cap on stored STRING stats (the Delta move): a long text column in
     * statsCols must not bloat every manifest/sidecar with full values.
     * Truncation stays SOUND by direction — a prefix is always a valid
@@ -566,12 +556,12 @@ object Skipping {
       }
     }.sortBy(e => (e.file, e.col))
     val arr = entries.map { e =>
-      val mn = e.min.map(v => "\"" + jsonEscape(v) + "\"").getOrElse("null")
-      val mx = e.max.map(v => "\"" + jsonEscape(v) + "\"").getOrElse("null")
-      s"""{"file":"${jsonEscape(e.file)}","col":"${jsonEscape(e.col)}",""" +
+      val mn = e.min.map(v => "\"" + JsonEscape(v) + "\"").getOrElse("null")
+      val mx = e.max.map(v => "\"" + JsonEscape(v) + "\"").getOrElse("null")
+      s"""{"file":"${JsonEscape(e.file)}","col":"${JsonEscape(e.col)}",""" +
         s""""min":$mn,"max":$mx}"""
     }.mkString("[", ",", "]")
-    val body = (s"""{"schema":"${jsonEscape(graft.sources.Merge.schemaToString(data.schema))}",""" +
+    val body = (s"""{"schema":"${JsonEscape(graft.sources.Merge.schemaToString(data.schema))}",""" +
       s""""stats":$arr}""").getBytes("UTF-8")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sp = statsPath(root)

@@ -129,24 +129,16 @@ object TableCatalog {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c    => c.toString
-    }
-
   private def body(s: CatState): Array[Byte] = {
     val pins = s.pins.toSeq.sortBy(_._1).map { case (name, p) =>
-      s""""${jsonEscape(name)}":{"path":"${jsonEscape(p.path)}",""" +
-        s""""version":${p.version},"kind":"${jsonEscape(p.kind)}"}"""
+      s""""${JsonEscape(name)}":{"path":"${JsonEscape(p.path)}",""" +
+        s""""version":${p.version},"kind":"${JsonEscape(p.kind)}"}"""
     }.mkString("{", ",", "}")
     val txnField = s.txn.map { case (app, batch) =>
-      s""","txnApp":"${jsonEscape(app)}","txnBatch":$batch"""
+      s""","txnApp":"${JsonEscape(app)}","txnBatch":$batch"""
     }.getOrElse("")
     (s"""{"version":${s.version},"parent":${s.parent},"ts":${s.ts},""" +
-      s""""op":"${jsonEscape(s.op)}","pins":$pins$txnField}""")
+      s""""op":"${JsonEscape(s.op)}","pins":$pins$txnField}""")
       .getBytes("UTF-8")
   }
 

@@ -71,18 +71,10 @@ object TxLog {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c    => c.toString
-    }
-
   private def body(s: State): Array[Byte] = {
     val tables = s.tables.toSeq.sortBy(_._1).map { case (name, files) =>
-      s""""${jsonEscape(name)}":""" +
-        files.sorted.map(f => "\"" + jsonEscape(f) + "\"")
+      s""""${JsonEscape(name)}":""" +
+        files.sorted.map(f => "\"" + JsonEscape(f) + "\"")
           .mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     (s"""{"version":${s.version},"parent":${s.parent},""" +

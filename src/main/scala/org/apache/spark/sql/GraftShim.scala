@@ -67,10 +67,16 @@ object GraftShim {
     * unpersisting those would destroy blocks that are unrecomputable
     * after a local checkpoint, so a non-leaf plan is a no-op here, never
     * a walk.
+    *
+    * Releases through `SparkContext.unpersistRDD` (`private[spark]`), not
+    * `RDD.unpersist`: the latter logs a "locally checkpointed ... cannot be
+    * recomputed" warning on every call, and here dropping the blocks is
+    * the point.
     */
   def unpinLocalCheckpoint(df: Dataset[_]): Unit =
     df.queryExecution.analyzed match {
-      case l: execution.LogicalRDD => l.rdd.unpersist(false)
+      case l: execution.LogicalRDD =>
+        l.rdd.sparkContext.unpersistRDD(l.rdd.id, blocking = false)
       case _ => ()
     }
 

@@ -1,7 +1,7 @@
 package graft.agent
 
 import graft.SparkSpec
-import graft.cube.CubeCatalog
+import graft.cube.{CubeCatalog, JudgeCountingOracle}
 import graft.oracle.DeterministicOracle
 import graft.plan.LogicalOp
 
@@ -205,6 +205,43 @@ class AgentSpec extends SparkSpec {
       .findAllIn(n2.df.queryExecution.analyzed.toString).length
     assert(filters >= 2,
       s"expected delta Filter over the cached node:\n${n2.df.queryExecution.analyzed}")
+  }
+
+  test("pinned session nodes: a repeat bills no judgments, a delta bills " +
+      "only its own step over the cached rows, and the catalog counts both") {
+    // one turn: slice steps (keyword prefilter AND a per-row judgment)
+    def turn(logic: String, actions: String*) = Seq(
+      """{"filter_query": "posts", "analysis_query": ""}""",
+      actions.zipWithIndex.map { case (a, i) =>
+        s"""{"id": ${i + 1}, "agent": "slice", "field": null, "action": "$a"}"""
+      }.mkString("""{"operations": [""", ", ",
+        s"""], "logic": ["$logic", ${actions.indices.map(_ + 1).mkString(", ")}]}"""),
+      """{"has_topk": false}""")
+    val sparkStep = "mentions spark"
+    val joinStep = "mentions join"
+    val s = new Scripted(turn("AND", sparkStep) ++ turn("AND", sparkStep) ++
+      turn("AND", sparkStep, joinStep) ++ turn("OR", sparkStep, "mentions flink"): _*)
+    val agent = new OlapAgent(s, new JudgeCountingOracle)
+    val cat = new CubeCatalog(docs, oracle)
+    def run(q: String): (Seq[Long], Long, Long) = {
+      val (s0, j0) = (JudgeCountingOracle.judged(sparkStep),
+        JudgeCountingOracle.judged(joinStep))
+      val ids = agent.runSession(cat, q).select("id").as[Long].collect()
+        .sorted.toSeq
+      (ids, JudgeCountingOracle.judged(sparkStep) - s0,
+        JudgeCountingOracle.judged(joinStep) - j0)
+    }
+    val (first, firstJudged, _) = run("spark posts")
+    assert(first == Seq(1L, 2L, 3L, 5L) && firstJudged > 0)
+    // Equal: the pinned node's rows, not one judgment re-billed
+    assert(run("spark posts again") == ((first, 0L, 0L)))
+    // delta: only the new step, judged over the 2 cached rows that pass
+    // its keyword prefilter; the cached step is not judged again
+    assert(run("spark join posts") == ((Seq(1L, 3L), 0L, 2L)))
+    // OR: no delta execution, a full run from the root
+    assert(run("spark or flink posts")._1 == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(cat.reuse == CubeCatalog.Reuse(equal = 1, delta = 1, miss = 2,
+      evicted = 0))
   }
 
   test("ReAct loop ends gracefully on a malformed completion") {

@@ -1,8 +1,32 @@
 package graft.cube
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
+
 import graft.SparkSpec
 import graft.oracle.{DeterministicOracle, TagRule}
 import graft.plan.{LogicalOp, NumCondition}
+
+/** Deterministic judgments that are never compiled, so every one runs as
+  * a per-row call, counted per condition. Top-level so executor closures
+  * serialize it cleanly; the counts live in the companion (one JVM).
+  */
+class JudgeCountingOracle extends DeterministicOracle {
+  override def compileJudge(condition: String) = None
+  override def judge(text: String, condition: String): Boolean = {
+    JudgeCountingOracle.counts
+      .computeIfAbsent(condition, _ => new AtomicLong).incrementAndGet()
+    super.judge(text, condition)
+  }
+}
+object JudgeCountingOracle {
+  val counts = new ConcurrentHashMap[String, AtomicLong]
+  def judged(condition: String): Long =
+    Option(counts.get(condition)).map(_.get).getOrElse(0L)
+}
 
 class CatalogSpec extends SparkSpec {
   import spark.implicits._
@@ -194,8 +218,21 @@ class CatalogSpec extends SparkSpec {
     // refinement on the fresh catalog starts from the persisted node:
     // the executed plan scans node_1, and the answer matches recompute
     val refined = fresh.filterQuery("high-score spark docs", Seq(fSpark, fScore))
-    // starts from a MATERIALIZED node (the newest eligible base), not root
-    assert(refined.df.inputFiles.forall(_.contains("node_")))
+    // starts from a MATERIALIZED node (the newest eligible base), not
+    // root. refined is pinned, so its optimized plan reads the cache:
+    // check the lineage, the analyzed plan's leaves, instead
+    val leafFiles = refined.df.queryExecution.analyzed.collectLeaves()
+      .flatMap {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation match {
+            case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+              h.location.inputFiles.toSeq
+            case _ => Seq("not a file relation")
+          }
+        case other => Seq(other.nodeName)
+      }
+    assert(leafFiles.nonEmpty && leafFiles.forall(_.contains("node_")),
+      leafFiles)
     assert(refined.df.select("id").as[Long].collect().sorted.toSeq ==
       Seq(3L, 4L))
     // and the fresh catalog mints non-colliding ids for new nodes
@@ -224,6 +261,69 @@ class CatalogSpec extends SparkSpec {
     // new ids mint past the gap
     val next = fresh.filterQuery("hs", Seq(fSpark, fScore))
     assert(next.id == 8)
+  }
+
+  private def ids(df: DataFrame): Seq[Long] =
+    df.select("id").as[Long].collect().sorted.toSeq
+
+  test("a repeated filterQuery reads the pinned node: zero judgments, " +
+      "same rows") {
+    val counting = new JudgeCountingOracle
+    val fJudged = LogicalOp.SemFilter(Seq("title"), "about window")
+    val cat = new CubeCatalog(fixture, counting)
+    val j0 = JudgeCountingOracle.judged(fJudged.condition)
+    val first = ids(cat.filterQuery("window docs", Seq(fJudged)).df)
+    val j1 = JudgeCountingOracle.judged(fJudged.condition)
+    assert(j1 > j0)
+    val again = cat.filterQuery("docs on windows", Seq(fJudged))
+    assert(ids(again.df) == first && first == Seq(2L, 3L))
+    assert(JudgeCountingOracle.judged(fJudged.condition) == j1)
+    assert(cat.reuse == CubeCatalog.Reuse(equal = 1, delta = 0, miss = 1,
+      evicted = 0))
+  }
+
+  test("computed nodes sit in a bounded LRU pin set: the least recent is " +
+      "evicted, answers from its lineage, and a hit re-pins it") {
+    val cat = new CubeCatalog(fixture, oracle)
+    val first = cat.filterQuery("spark docs", Seq(fSpark))
+    assert(first.df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    val rows = ids(first.df)
+    val words = Seq("flink", "duck", "window", "join", "streaming",
+      "basics", "functions", "internals")
+    assert(words.size == CubeCatalog.MaxPinned)
+    val others = words.map(w => cat.filterQuery(w,
+      Seq(LogicalOp.KeywordFilter(Seq("title"), Seq(w), "and", "contains"))))
+    assert(first.df.storageLevel == StorageLevel.NONE)
+    assert(others.forall(_.df.storageLevel == StorageLevel.MEMORY_AND_DISK))
+    assert(ids(first.df) == rows && rows == Seq(1L, 3L, 4L))
+    // an Equal hit re-pins it as the most recent pin, which evicts the
+    // least recent word node instead
+    assert(cat.filterQuery("spark docs again", Seq(fSpark)).id == first.id)
+    assert(first.df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(others.head.df.storageLevel == StorageLevel.NONE)
+    assert(cat.reuse == CubeCatalog.Reuse(equal = 1, delta = 0, miss = 9,
+      evicted = 2))
+  }
+
+  test("the root and CatalogStore-loaded nodes are never pinned") {
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_cat_store_pins").toString
+    val cat = new CubeCatalog(fixture, oracle)
+    cat.filterQuery("spark docs", Seq(fSpark))
+    CatalogStore.save(cat, path)
+    val fresh = CatalogStore.load(spark, fixture, path, oracle)
+    // an Equal hit on the root and on a loaded node, then a delta from it
+    assert(fresh.filterQuery("everything", Seq.empty).id == 0)
+    assert(fresh.filterQuery("spark docs", Seq(fSpark)).id == 1)
+    val refined = fresh.filterQuery("high-score spark docs",
+      Seq(fSpark, fScore))
+    assert(ids(refined.df) == Seq(3L, 4L))
+    assert(refined.df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(fresh.node(0).df.storageLevel == StorageLevel.NONE)
+    assert(fresh.node(1).df.storageLevel == StorageLevel.NONE)
+    assert(cat.node(0).df.storageLevel == StorageLevel.NONE)
+    assert(fresh.reuse == CubeCatalog.Reuse(equal = 2, delta = 1, miss = 0,
+      evicted = 0))
   }
 
   test("relation5 classifies all five reference relations structurally") {
