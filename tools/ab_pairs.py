@@ -15,9 +15,11 @@ first when i is even and the change first when i is odd.
 For every metric a run prints the report gives each side's median
 and quartiles, the change in the median, and how many pairs the change
 won (the direction comes from BENCHMARK.json; ties count for neither
-side). A gain is claimed only when the change wins at least 9 of every 10
-pairs and the medians differ by more than the parent's interquartile
-range. Runs that fail or answer wrongly are counted and reported. The raw
+side). Every run lasts BENCHMARK.json's `run_seconds`. A gain is claimed
+only when the change wins at least 9 of every 10 pairs run (a pair in
+which either side fails or answers wrongly is no win), the change has no
+more failed runs than the parent, and the medians differ by more than the
+parent's interquartile range. The raw
 results of every run go to `<workdir>/ab-<workload>-<seed>-t<trace>.json`.
 """
 import argparse
@@ -80,11 +82,13 @@ def quartiles(xs):
     return q[0], q[2]
 
 
-def directions():
+def benchmark():
+    """The run length BENCHMARK.json scores, and each metric's direction."""
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
-    return {m["name"]: m["better"]
-            for m in spec.get("end_to_end", []) + spec.get("per_layer", [])}
+    return spec["run_seconds"], {
+        m["name"]: m["better"]
+        for m in spec.get("end_to_end", []) + spec.get("per_layer", [])}
 
 
 def report(runs, better):
@@ -107,11 +111,12 @@ def report(runs, better):
         (p1, p3), (c1, c3) = quartiles(ps), quartiles(cs)
         lower = better.get(m, "higher" if m.endswith("_per_s") else "lower") == "lower"
         wins = sum((c < p) if lower else (c > p) for p, c in zip(ps, cs))
-        claim = (wins * 10 >= 9 * len(pairs) and abs(cm - pm) > p3 - p1 and
+        claim = (wins * 10 >= 9 * len(runs["parent"]) and
+                 bad["change"] <= bad["parent"] and abs(cm - pm) > p3 - p1 and
                  ((cm < pm) if lower else (cm > pm)))
         delta = "%+.1f%%" % (100.0 * (cm - pm) / pm) if pm else "n/a"
         print("%-32s %14.6g [%10.6g, %10.6g] %14.6g [%10.6g, %10.6g] %8s %2d/%-2d %s" % (
-            m, pm, p1, p3, cm, c1, c3, delta, wins, len(pairs),
+            m, pm, p1, p3, cm, c1, c3, delta, wins, len(runs["parent"]),
             "yes" if claim else "no"))
 
 
@@ -120,13 +125,13 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=float, default=12)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--parent", default="HEAD~1")
     ap.add_argument("--change", default="HEAD")
     ap.add_argument("--workdir", required=True,
                     help="where revisions are exported (outside the repository)")
     a = ap.parse_args()
+    a.seconds, better = benchmark()
     workdir = os.path.abspath(a.workdir)
     if os.path.commonpath([workdir, ROOT]) == ROOT:
         sys.exit("ab_pairs: --workdir must lie outside the repository")
@@ -147,7 +152,7 @@ def main():
         out = os.path.join(workdir, "ab-%s-%d-t%d.json" % (a.workload, a.seed, a.trace))
         with open(out, "w") as fh:
             json.dump({"args": vars(a), "trees": trees, "runs": runs}, fh, indent=1)
-    report(runs, directions())
+    report(runs, better)
 
 
 if __name__ == "__main__":
