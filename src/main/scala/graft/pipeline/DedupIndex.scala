@@ -327,11 +327,10 @@ object DedupIndex {
   def compact(spark: SparkSession, path: String,
       targetFiles: Int = 16, maxRetries: Int = 5): Unit = {
     readMeta(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val parent = state(spark, path)
-      val tables = parentTables(spark, path, parent)
-      val parentV = parent.map(_.version).getOrElse(-1L)
+    // a concurrent append/remove winning the version makes our rewrite
+    // stale (it lacks their rows): the loop drops OUR files and redoes
+    // the rewrite against the new state
+    TxLog.rewriteRetrying(spark, path, maxRetries, "compact") { parent =>
       val del = table(spark, path, parent, "deletes").map(_.distinct())
       def kept(name: String): Option[DataFrame] =
         table(spark, path, parent, name).map { cur =>
@@ -346,24 +345,12 @@ object DedupIndex {
         kept(sub).toSeq.map(df =>
           sub -> TxLog.stageInto(df.repartition(targetFiles), path, sub))
       }.toMap
-      try {
-        compactFence()
-        TxLog.commit(spark, path, TxLog.State(parentV + 1, parentV,
-          Map("bands" -> newFiles.getOrElse("bands", Nil),
-            "sigs" -> newFiles.getOrElse("sigs", Nil),
-            "deletes" -> Nil)))
-        return
-      } catch {
-        case _: TxLog.LostRace =>
-          // a concurrent append/remove won the version: our rewrite is
-          // stale (it lacks their rows). Drop OUR files, redo against
-          // the new state.
-          TxLog.deleteFiles(spark, path, newFiles.values.flatten.toSeq)
-          attempt += 1
-      }
+      compactFence()
+      (Map("bands" -> newFiles.getOrElse("bands", Nil),
+        "sigs" -> newFiles.getOrElse("sigs", Nil),
+        "deletes" -> Nil), newFiles.values.flatten.toSeq)
     }
-    throw new IllegalStateException(
-      s"compact lost the commit race $attempt times at $path — giving up")
+    ()
   }
 
   /** Reclaim files no retained log version references — superseded

@@ -28,77 +28,102 @@ import org.apache.spark.sql.functions._
   * Contract: retractions must match prior inserts (the relational
   * "multiset difference is non-negative" rule); a group driven below zero
   * is dropped like an emptied one.
+  *
+  * Storage: the state path is a one-sub-table [[graft.sources.TxLog]]
+  * log — the state's parquet files under `state/`, the committed file set
+  * in `_idx_log/v{N}.json`. Each fold is one staged write plus one
+  * claim, so a reader sees the old state or the new one, never a mix,
+  * and a crash anywhere leaves the last committed state (plus orphan
+  * files a later fold's vacuum reclaims). The fold reads version N and claims
+  * N+1: the read-modify-write cycle is single-writer, and a second
+  * writer loses the claim instead of silently overwriting. A state path
+  * written before the log (parquet files at its root, with an optional
+  * `_graft_synced` mark) still reads; its first fold migrates it.
   */
 object IncrementalAgg {
+  import graft.sources.{Merge, TxLog}
 
   private val flagCols = Seq("dirty_min", "dirty_max")
 
-  // test seam: invoked after the new state is durably materialized and
-  // before the old state files are swapped out — a spec simulates
-  // executor/block loss here to prove the pivot survives it
-  @volatile private[pipeline] var beforeOverwriteHook: () => Unit = () => ()
-
-  /** Per-path state-schema memo: every update/read of a state path pays
-    * parquet footer inference otherwise, and streaming maintenance
-    * (foreachBatch folds) resolves the same fixed-schema path once per
-    * micro-batch. Entries are written by our own writes (the exact
-    * schema just written) or a first inference read, so they always
-    * match the files on disk; [[init]] refreshes the entry, covering a
-    * re-initialized path inside one JVM. External rewrites of a live
-    * state path mid-session are out of scope (same immutable-input
-    * assumption as the engine's other read memos).
+  /** The app id of the synced-version stamp [[syncFromTable]] puts on
+    * each state it commits (the old layout kept it in a file by this name).
     */
-  private val stateSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
+  private val Synced = "_graft_synced"
 
-  private def readState(spark: SparkSession, path: String): DataFrame = {
-    val memo = stateSchemaMemo.get(path)
-    if (memo != null) spark.read.schema(memo).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      stateSchemaMemo.put(path, df.schema)
-      df
+  // test seams: beforeClaimHook runs after a fold's new state is durably
+  // staged and before the claim publishes it (a spec simulates executor
+  // block loss there); afterClaimHook runs once the claim has published
+  // it (a spec simulates a crash before the caller returns)
+  @volatile private[pipeline] var beforeClaimHook: () => Unit = () => ()
+  @volatile private[pipeline] var afterClaimHook: () => Unit = () => ()
+
+  /** The state rows at `st` (the pre-log layout's root files when None);
+    * reads go through TxLog's schema memo.
+    */
+  private def readState(spark: SparkSession, path: String,
+      st: Option[TxLog.State]): DataFrame = st match {
+    case Some(s) => TxLog.readTable(spark, path, s, "state").getOrElse(
+      throw new IllegalStateException(s"$path v${s.version} has no state"))
+    case None => spark.read.parquet(path)
+  }
+
+  /** Stage `df` as the state's next file set (durable, but invisible
+    * until claimed); returns the staged relative paths.
+    */
+  private def stage(df: DataFrame, path: String): Seq[String] =
+    TxLog.stageInto(df, path, "state")
+
+  /** Publish `files` as the state's version after `parent` with one
+    * claim, stamped `synced`. Then reclaim what the claim superseded:
+    * the state keeps its last two versions (crash orphans wait out the
+    * orphan floor), and a pre-log path loses the old layout's root files,
+    * since readers resolve the log from now on.
+    */
+  private def publish(spark: SparkSession, path: String,
+      parent: Option[TxLog.State], files: Seq[String],
+      synced: Option[(String, Long)]): Unit = {
+    beforeClaimHook()
+    val v = parent.map(_.version + 1).getOrElse(0L)
+    TxLog.commit(spark, path,
+      TxLog.State(v, v - 1, Map("state" -> files), synced))
+    afterClaimHook()
+    TxLog.vacuum(spark, path, Seq("state"), keepVersions = 2)
+    if (parent.isEmpty) {
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(root).filter(_.isFile)
+        .foreach(st => fs.delete(st.getPath, false))
     }
   }
 
-  /** Pivot of the read->fold->write cycle: land the new state DURABLY in
-    * a hidden tmp dir inside the state path (one Spark job — the fold
-    * computes while the old files, its input, are still in place; dot-
-    * prefixed dirs are invisible to the parquet reader), then swap the
-    * data files driver-side. Replaces the old localCheckpoint-then-
-    * overwrite pivot, which paid a second job (blocks -> parquet) per
-    * update and lost state to executor-block loss in the window; now the
-    * new state is on durable storage before any old file is touched, so
-    * the `checkpointDir` escape hatch is no longer needed for safety
-    * (accepted and ignored for API compatibility). The only non-durable
-    * window left is the driver-side rename swap; recovery there is
-    * unchanged: delete the state dir and re-initialize from current data.
+  /** The table version the state at `parent` is synced to: its stamp,
+    * or on a pre-log path the `_graft_synced` mark file.
     */
-  private def writeSwap(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // fixed tmp name: overwrite mode self-cleans a crashed prior attempt
-    // (the update cycle is single-writer by contract — read-modify-write)
-    val tmp = new org.apache.hadoop.fs.Path(p, "._graft_state_tmp")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    stateSchemaMemo.put(path, df.schema)
-    beforeOverwriteHook()
-    fs.listStatus(p)
-      .filter(st => st.isFile && {
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      })
-      .foreach(st => fs.delete(st.getPath, false))
-    fs.listStatus(tmp)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .foreach { st =>
-        // spark part names embed a per-job UUID: collisions impossible
-        require(fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
-          p, st.getPath.getName)),
-          s"failed to move new state file ${st.getPath} into $path")
+  private def syncedAt(spark: SparkSession, path: String,
+      parent: Option[TxLog.State]): Option[Long] = parent match {
+    case Some(s) => s.txn.collect { case (Synced, v) => v }
+    case None =>
+      val mark = new org.apache.hadoop.fs.Path(path, Synced)
+      val fs = mark.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(mark)) None
+      else {
+        val in = fs.open(mark)
+        try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
+        finally in.close()
       }
-    fs.delete(tmp, true)
+  }
+
+  /** One fold: `next` maps the current state rows to the new ones (None:
+    * nothing to change), which are staged and claimed on top; the synced
+    * version carries over.
+    */
+  private def fold(spark: SparkSession, path: String)
+      (next: DataFrame => Option[DataFrame]): Unit = {
+    val parent = TxLog.currentState(spark, path)
+    next(withFlags(readState(spark, path, parent))).foreach { df =>
+      publish(spark, path, parent, stage(df, path),
+        syncedAt(spark, path, parent).map((Synced, _)))
+    }
   }
 
   private def aggregate(df: DataFrame, keys: Seq[String],
@@ -109,14 +134,21 @@ object IncrementalAgg {
         min(col(valueCol).cast("double")).as("min_v"),
         max(col(valueCol).cast("double")).as("max_v"))
 
-  /** Initialize the state table from a first batch. */
-  def init(df: DataFrame, path: String, keys: Seq[String],
-      valueCol: String): Unit = {
-    val state = aggregate(df, keys, valueCol)
+  private def initial(df: DataFrame, keys: Seq[String],
+      valueCol: String): DataFrame =
+    aggregate(df, keys, valueCol)
       .withColumn("dirty_min", lit(false))
       .withColumn("dirty_max", lit(false))
-    state.write.mode("overwrite").parquet(path)
-    stateSchemaMemo.put(path, state.schema)
+
+  /** Initialize the state table from a first batch (on a path that holds
+    * one already, the new state replaces it in one claim).
+    */
+  def init(df: DataFrame, path: String, keys: Seq[String],
+      valueCol: String): Unit = {
+    val spark = df.sparkSession
+    val parent = TxLog.currentState(spark, path)
+    publish(spark, path, parent, stage(initial(df, keys, valueCol), path),
+      None)
   }
 
   // older state tables predate the dirty flags; treat absent as clean
@@ -132,25 +164,24 @@ object IncrementalAgg {
     */
   def update(spark: SparkSession, path: String, delta: DataFrame,
       keys: Seq[String], valueCol: String,
-      checkpointDir: Option[String] = None): Unit = {
-    val state = withFlags(readState(spark, path))
-    val d = aggregate(delta, keys, valueCol)
-      .select(keys.map(col) ++
-        Seq("cnt", "sum_exact", "min_v", "max_v")
-          .map(c => col(c).as(s"d_$c")): _*)
-    val merged = state.join(d, keys, "full_outer")
-      .select(keys.map(col) ++ Seq(
-        (coalesce(col("cnt"), lit(0L)) +
-          coalesce(col("d_cnt"), lit(0L))).as("cnt"),
-        (coalesce(col("sum_exact"), lit(0).cast("decimal(28,2)")) +
-          coalesce(col("d_sum_exact"), lit(0).cast("decimal(28,2)")))
-          .cast("decimal(28,2)").as("sum_exact"),
-        least(col("min_v"), col("d_min_v")).as("min_v"),
-        greatest(col("max_v"), col("d_max_v")).as("max_v"),
-        coalesce(col("dirty_min"), lit(false)).as("dirty_min"),
-        coalesce(col("dirty_max"), lit(false)).as("dirty_max")): _*)
-    writeSwap(merged, path)
-  }
+      checkpointDir: Option[String] = None): Unit =
+    fold(spark, path) { state =>
+      val d = aggregate(delta, keys, valueCol)
+        .select(keys.map(col) ++
+          Seq("cnt", "sum_exact", "min_v", "max_v")
+            .map(c => col(c).as(s"d_$c")): _*)
+      Some(state.join(d, keys, "full_outer")
+        .select(keys.map(col) ++ Seq(
+          (coalesce(col("cnt"), lit(0L)) +
+            coalesce(col("d_cnt"), lit(0L))).as("cnt"),
+          (coalesce(col("sum_exact"), lit(0).cast("decimal(28,2)")) +
+            coalesce(col("d_sum_exact"), lit(0).cast("decimal(28,2)")))
+            .cast("decimal(28,2)").as("sum_exact"),
+          least(col("min_v"), col("d_min_v")).as("min_v"),
+          greatest(col("max_v"), col("d_max_v")).as("max_v"),
+          coalesce(col("dirty_min"), lit(false)).as("dirty_min"),
+          coalesce(col("dirty_max"), lit(false)).as("dirty_max")): _*))
+    }
 
   /** Fold a delta with retractions: `opCol` is +1 (insert) or -1
     * (retract). One scan of the delta, one full-outer merge. Groups whose
@@ -160,8 +191,11 @@ object IncrementalAgg {
     */
   def updateWithRetractions(spark: SparkSession, path: String,
       delta: DataFrame, keys: Seq[String], valueCol: String,
-      opCol: String, checkpointDir: Option[String] = None): Unit = {
-    val state = withFlags(readState(spark, path))
+      opCol: String, checkpointDir: Option[String] = None): Unit =
+    fold(spark, path)(s => Some(retract(s, delta, keys, valueCol, opCol)))
+
+  private def retract(state: DataFrame, delta: DataFrame, keys: Seq[String],
+      valueCol: String, opCol: String): DataFrame = {
     val v = col(valueCol).cast("double")
     val adds = (c: Column) => when(col(opCol) > 0, c)
     val dels = (c: Column) => when(col(opCol) < 0, c)
@@ -174,7 +208,7 @@ object IncrementalAgg {
         min(dels(v)).as("d_del_min"), max(dels(v)).as("d_del_max"))
     val candMin = least(col("min_v"), col("d_add_min"))
     val candMax = greatest(col("max_v"), col("d_add_max"))
-    val merged = state.join(d, keys, "full_outer")
+    state.join(d, keys, "full_outer")
       .select(keys.map(col) ++ Seq(
         (coalesce(col("cnt"), lit(0L)) +
           coalesce(col("d_cnt"), lit(0L))).as("cnt"),
@@ -190,7 +224,6 @@ object IncrementalAgg {
           (col("d_del_max").isNotNull && col("d_del_max") >= candMax))
           .as("dirty_max")): _*)
       .filter(col("cnt") > 0)
-    writeSwap(merged, path)
   }
 
   /** Repair flagged groups' min/max from `net` (the CURRENT raw table —
@@ -199,27 +232,32 @@ object IncrementalAgg {
     */
   def rebuild(spark: SparkSession, path: String, net: DataFrame,
       keys: Seq[String], valueCol: String,
-      checkpointDir: Option[String] = None): Unit = {
-    val state = withFlags(readState(spark, path))
+      checkpointDir: Option[String] = None): Unit =
+    fold(spark, path)(repair(_, net, keys, valueCol))
+
+  /** The repaired state, or None when no group is flagged — then the
+    * (possibly enormous) net table is never touched: the check costs one
+    * scan of the bounded state parquet, not of raw data.
+    */
+  private def repair(state: DataFrame, net: DataFrame, keys: Seq[String],
+      valueCol: String): Option[DataFrame] = {
     val flagged = state.filter(col("dirty_min") || col("dirty_max"))
       .select(keys.map(col): _*)
-    // nothing dirty -> nothing to repair: skip without ever touching the
-    // (possibly enormous) net table. The check costs one scan of the
-    // bounded state parquet, not of raw data.
-    if (flagged.isEmpty) return
-    val fresh = net.join(flagged, keys, "left_semi")
-      .groupBy(keys.map(col): _*)
-      .agg(min(col(valueCol).cast("double")).as("f_min"),
-        max(col(valueCol).cast("double")).as("f_max"))
-    val repaired = state.join(fresh, keys, "left")
-      .select(keys.map(col) ++ Seq(
-        col("cnt"), col("sum_exact"),
-        when(col("dirty_min"), col("f_min")).otherwise(col("min_v"))
-          .as("min_v"),
-        when(col("dirty_max"), col("f_max")).otherwise(col("max_v"))
-          .as("max_v"),
-        lit(false).as("dirty_min"), lit(false).as("dirty_max")): _*)
-    writeSwap(repaired, path)
+    if (flagged.isEmpty) None
+    else {
+      val fresh = net.join(flagged, keys, "left_semi")
+        .groupBy(keys.map(col): _*)
+        .agg(min(col(valueCol).cast("double")).as("f_min"),
+          max(col(valueCol).cast("double")).as("f_max"))
+      Some(state.join(fresh, keys, "left")
+        .select(keys.map(col) ++ Seq(
+          col("cnt"), col("sum_exact"),
+          when(col("dirty_min"), col("f_min")).otherwise(col("min_v"))
+            .as("min_v"),
+          when(col("dirty_max"), col("f_max")).otherwise(col("max_v"))
+            .as("max_v"),
+          lit(false).as("dirty_min"), lit(false).as("dirty_max")): _*))
+    }
   }
 
   /** MATERIALIZED-VIEW SYNC over a versioned [[graft.sources.Merge]]
@@ -230,53 +268,38 @@ object IncrementalAgg {
     * ([[graft.sources.Merge.changesBetween]] — work ∝ the commits, not
     * the table), repair any delete-dirtied extremes from the current
     * snapshot (dirty groups only), and advance the watermark. The
-    * watermark lives in an underscore-prefixed sidecar inside the state
-    * dir (invisible to the parquet reader), moved into place atomically
-    * AFTER the fold. Crash posture matches the rest of IncrementalAgg:
-    * the state overwrite itself is not atomic, so a crash ANYWHERE
-    * mid-sync (fold or mark) leaves state that must not be re-folded —
-    * recover by deleting the state dir and letting the next sync
-    * re-initialize from the current snapshot (cheap relative to the
-    * history the sync otherwise never rescans). The caller keeps enough
-    * retained versions for the feed (vacuum `keepVersions` > commits
-    * between syncs).
+    * watermark is the state's `_graft_synced` stamp and rides the SAME
+    * claim as the folded state, so a crash anywhere leaves state and
+    * watermark consistent: before the claim the next sync refolds from
+    * the old watermark, after it the fold is never repeated. The caller
+    * keeps enough retained versions for the feed (vacuum `keepVersions`
+    * > commits between syncs).
     */
   def syncFromTable(spark: SparkSession, statePath: String,
       tablePath: String, keys: Seq[String], valueCol: String,
       checkpointDir: Option[String] = None): Long = {
-    import graft.sources.Merge
     val cur = Merge.currentVersion(spark, tablePath)
     require(cur >= 0, s"$tablePath has no version log")
-    val mark = new org.apache.hadoop.fs.Path(statePath, "_graft_synced")
-    val fs = mark.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def writeMark(v: Long): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(statePath,
-        s"._graft_synced_tmp_${java.util.UUID.randomUUID}")
-      val out = fs.create(tmp, true)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-      fs.delete(mark, false); fs.rename(tmp, mark)
-    }
-    val last: Option[Long] =
-      if (!fs.exists(mark)) None
-      else {
-        val in = fs.open(mark)
-        try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-        finally in.close()
-      }
-    last match {
-      case None =>
-        init(Merge.readVersion(spark, tablePath, cur), statePath, keys,
-          valueCol)
-        writeMark(cur)
+    val parent = TxLog.currentState(spark, statePath)
+    def snapshot = Merge.readVersion(spark, tablePath, cur)
+    syncedAt(spark, statePath, parent) match {
       case Some(v) if v == cur => () // already current
       case Some(v) =>
-        val feed = Merge.changesBetween(spark, tablePath, v, cur)
-        updateWithRetractions(spark, statePath, feed, keys, valueCol,
-          "op", checkpointDir)
-        rebuild(spark, statePath,
-          Merge.readVersion(spark, tablePath, cur), keys, valueCol,
-          checkpointDir)
-        writeMark(cur)
+        // fold, then repair from the staged fold: both staged, one claim
+        val folded = stage(retract(
+          withFlags(readState(spark, statePath, parent)),
+          Merge.changesBetween(spark, tablePath, v, cur), keys, valueCol,
+          "op"), statePath)
+        val repaired = repair(spark.read.parquet(folded.map(f =>
+            new org.apache.hadoop.fs.Path(statePath, f).toString): _*),
+          snapshot, keys, valueCol).map(stage(_, statePath))
+        publish(spark, statePath, parent, repaired.getOrElse(folded),
+          Some((Synced, cur)))
+        if (repaired.isDefined) TxLog.deleteFiles(spark, statePath, folded)
+      case None =>
+        publish(spark, statePath, parent,
+          stage(initial(snapshot, keys, valueCol), statePath),
+          Some((Synced, cur)))
     }
     cur
   }
@@ -292,7 +315,7 @@ object IncrementalAgg {
     */
   def read(spark: SparkSession, path: String,
       allowDirty: Boolean = false): DataFrame = {
-    val state = withFlags(readState(spark, path))
+    val state = withFlags(readState(spark, path, TxLog.currentState(spark, path)))
     if (!allowDirty) {
       val dirty = state.filter(col("dirty_min") || col("dirty_max")).count()
       require(dirty == 0L,
@@ -311,7 +334,7 @@ object IncrementalAgg {
     * groups' extremes are awaiting [[rebuild]].
     */
   def readWithFlags(spark: SparkSession, path: String): DataFrame =
-    withFlags(readState(spark, path))
+    withFlags(readState(spark, path, TxLog.currentState(spark, path)))
       .withColumn("sum_v", col("sum_exact").cast("double"))
       .drop("sum_exact")
 }

@@ -456,30 +456,19 @@ object Similarity {
       */
     def compact(spark: org.apache.spark.sql.SparkSession,
         path: String, maxRetries: Int = 5): Unit = {
-      var attempt = 0
-      while (attempt <= maxRetries) {
-        val parent = TxLog.currentState(spark, path)
-        val parentV = parent.map(_.version).getOrElse(-1L)
+      TxLog.rewriteRetrying(spark, path, maxRetries, "IvfIndex.compact") {
+          parent =>
         val cur = corpusTable(spark, path, parent)
         val nCells = loadCentroids(spark, path, parent).length
         val files = TxLog.stagePartitionedInto(
           cur.repartition(math.max(1, nCells), col("cell")),
           path, "corpus", Seq("cell"))
-        try {
-          // the model rides along UNCHANGED: carry the parent's
-          // centroids entry so the compacted state stays whole
-          TxLog.commit(spark, path, TxLog.State(parentV + 1, parentV,
-            parent.map(_.tables).getOrElse(Map.empty) +
-              ("corpus" -> files)))
-          return
-        } catch {
-          case _: TxLog.LostRace =>
-            TxLog.deleteFiles(spark, path, files)
-            attempt += 1
-        }
+        // the model rides along UNCHANGED: carry the parent's
+        // centroids entry so the compacted state stays whole
+        (parent.map(_.tables).getOrElse(Map.empty) + ("corpus" -> files),
+          files)
       }
-      throw new IllegalStateException(
-        s"IvfIndex.compact lost the commit race $attempt times at $path")
+      ()
     }
 
     /** Index-health signal for centroid DRIFT under sustained appends.
@@ -1385,10 +1374,8 @@ object Similarity {
       */
     def compact(spark: org.apache.spark.sql.SparkSession, path: String,
         maxRetries: Int = 5): Unit = {
-      var attempt = 0
-      while (attempt <= maxRetries) {
-        val parent = graft.sources.TxLog.currentState(spark, path)
-        val parentV = parent.map(_.version).getOrElse(-1L)
+      graft.sources.TxLog.rewriteRetrying(spark, path, maxRetries,
+          "IvfPq.compact") { parent =>
         val dead = tombstones(spark, path, parent).map(_.distinct())
         val live = dead.foldLeft(codesTable(spark, path, parent))(
           (c, d) => c.join(broadcast(d), Seq("neighbor_id"), "left_anti"))
@@ -1396,21 +1383,11 @@ object Similarity {
         val files = graft.sources.TxLog.stagePartitionedInto(
           live.repartition(math.max(1, nCells), col("cell")),
           path, "codes", Seq("cell"))
-        try {
-          // the quantizer models ride along UNCHANGED
-          graft.sources.TxLog.commit(spark, path,
-            graft.sources.TxLog.State(parentV + 1, parentV,
-              parent.map(_.tables).getOrElse(Map.empty) +
-                ("codes" -> files) + ("deletes" -> Nil)))
-          return
-        } catch {
-          case _: graft.sources.TxLog.LostRace =>
-            graft.sources.TxLog.deleteFiles(spark, path, files)
-            attempt += 1
-        }
+        // the quantizer models ride along UNCHANGED
+        (parent.map(_.tables).getOrElse(Map.empty) +
+          ("codes" -> files) + ("deletes" -> Nil), files)
       }
-      throw new IllegalStateException(
-        s"IvfPq.compact lost the commit race $attempt times at $path")
+      ()
     }
 
     /** Reclaim files no retained log version references — superseded

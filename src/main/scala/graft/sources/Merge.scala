@@ -190,7 +190,7 @@ object Merge {
     seg.stripPrefix("__bucket=").toLong
   }
 
-  private final case class Manifest(version: Long, parent: Long,
+  private[sources] final case class Manifest(version: Long, parent: Long,
       files: Seq[String], dataSchema: Option[String],
       txn: Option[(String, Long)] = None,
       layout: Option[(String, Int)] = None, // (keyCol, nBuckets)
@@ -274,12 +274,17 @@ object Merge {
   private def nextTs(parent: Manifest): Long =
     math.max(parent.ts + 1L, System.currentTimeMillis())
 
-  /** Thrown when the create-if-absent manifest claim finds the version
-    * already committed by someone else — the caller must re-read the log
-    * and redo its merge against the new parent.
+  /** The shared retry loop ([[VersionLog.retrying]]) with Merge's
+    * exhaustion message: each attempt re-reads the log and redoes its
+    * work against the new parent after a [[LostRace]].
     */
-  private final class LostCommitRace(version: Long)
-    extends Exception(s"lost commit race for v$version")
+  private def retryCommit[A](op: String, path: String, maxRetries: Int,
+      hint: String = "")(attempt: Int => A): A =
+    VersionLog.retrying(maxRetries,
+      n => s"$op lost the commit race $n times at $path$hint")(attempt)
+
+  private val ContentionHint =
+    " — giving up; retry with less write contention"
 
   // test seam: invoked between merge-write and manifest claim so a spec
   // can hold two committers at the same parent deterministically
@@ -301,7 +306,7 @@ object Merge {
 
   // hand-rolled JSON (flat schema; file names are spark part names and
   // bucket dirs — never need escaping; the DDL schema string is escaped)
-  private def manifestBody(m: Manifest): Array[Byte] = {
+  private[sources] def manifestBody(m: Manifest): Array[Byte] = {
     val filesField =
       if (m.shardSpan > 0)
         // sharded root: the file/stats lists live in content-addressed
@@ -390,7 +395,7 @@ object Merge {
     * entries, both sorted so identical content serializes to identical
     * bytes (content addressing relies on it).
     */
-  private def shardBody(files: Seq[String],
+  private[sources] def shardBody(files: Seq[String],
       stats: Seq[Skipping.FileStats]): Array[Byte] = {
     val fs = files.sorted.map(f => "\"" + f + "\"").mkString("[", ",", "]")
     val st =
@@ -442,18 +447,10 @@ object Merge {
     id
   }
 
-  /** Create-if-absent manifest commit — THE atomic point of every commit.
-    * A concurrent writer racing to the same version gets [[LostCommitRace]]
-    * and must redo its merge against the new parent.
-    *
-    * On the local filesystem `FileSystem.create(f, overwrite = false)` is
-    * check-THEN-create (two racers can both pass the check), so there the
-    * claim is a hard link of a fully-written temp file — atomic (O_EXCL
-    * semantics) AND all-or-nothing: the manifest appears with its complete
-    * body, no torn window at all. On HDFS and object-store committers the
-    * namenode/conditional-put create is already atomic; readers still
-    * validate bodies ([[readManifestOpt]]) to cover a crash between that
-    * create and the body write.
+  /** The manifest commit — THE atomic point of every commit: the
+    * [[VersionLog.claim]] of `v{N}.json`. A concurrent writer racing to
+    * the same version gets [[LostRace]] and must redo its merge against
+    * the new parent; readers validate bodies ([[readManifestOpt]]).
     */
   private def writeManifest(fs: FileSystem, root: Path, m0: Manifest,
       parent: Option[Manifest] = None,
@@ -482,81 +479,61 @@ object Merge {
         }
         m0.copy(shardIds = refs)
       }
-    val dir = logPath(root)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val target = new Path(dir, s"v${m.version}.json")
-    val body = manifestBody(m)
-    if ("file" == target.getFileSystem(fs.getConf).getScheme) {
-      val tmp = java.nio.file.Paths.get(dir.toUri.getPath,
-        s".tmp_v${m.version}_${java.util.UUID.randomUUID}.json")
-      java.nio.file.Files.write(tmp, body)
-      try java.nio.file.Files.createLink(
-        java.nio.file.Paths.get(target.toUri.getPath), tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new LostCommitRace(m.version)
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    } else {
-      val out =
-        try fs.create(target, false)
-        catch { case _: java.io.IOException => throw new LostCommitRace(m.version) }
-      try out.write(body) finally out.close()
-    }
+    VersionLog.claim(fs, VersionLog.versionFile(logPath(root), m.version),
+      manifestBody(m))
   }
 
-  /** Parse one manifest; None when the file is missing, empty, or
-    * truncated (a crashed committer's claim) — readers treat such a
-    * version as never committed.
-    *
-    * Driver-local parse (json4s, which Spark ships): a manifest is a few
-    * KB of metadata, and commit paths read O(versions) of them
-    * ([[latestTxn]], [[currentVersion]] walk-back) — a Spark job per
-    * read would put a scheduler round-trip inside every commit.
+  /** [[writeManifest]] for a commit that staged `newFiles` (and maybe a
+    * sidecar dir): a lost race deletes exactly what this attempt wrote —
+    * never the winner's — before the retry loop redoes the merge.
     */
-  /** `resolveShards = false` skips loading a sharded manifest's shard
+  private def claimStaged(fs: FileSystem, root: Path, m: Manifest,
+      parent: Manifest, touched: Option[Set[Long]], newFiles: Seq[String],
+      sidecarDir: Option[Path] = None): Unit =
+    try writeManifest(fs, root, m, Some(parent), touched)
+    catch {
+      case e: LostRace =>
+        deleteFiles(fs, root, newFiles)
+        sidecarDir.foreach(fs.delete(_, true))
+        throw e
+    }
+
+  /** Parsed manifests ([[VersionLog.Memo]]): commit paths walk
+    * O(versions) of them ([[currentVersion]], [[latestTxn]]) and
+    * multi-read SQL sessions re-resolve per read. Each entry records
+    * whether its shards are resolved; an inline manifest always is.
+    */
+  private val manifests = new VersionLog.Memo[(Manifest, Boolean)]
+
+  private def dropCachedManifests(root: Path): Unit = manifests.purge(root)
+
+  /** One manifest; None when the file is missing, empty, or truncated (a
+    * crashed committer's claim) — readers treat such a version as never
+    * committed. Driver-local parse (json4s, which Spark ships): a
+    * manifest is a few KB of metadata, and a Spark job per read would
+    * put a scheduler round-trip inside every commit.
+    *
+    * `resolveShards = false` skips loading a sharded manifest's shard
     * files (files/stats come back EMPTY): for validity walk-backs and
     * txn/ts scans that never touch the file list, it keeps metadata
     * reads O(1) per version instead of O(shards). Root-parse validity
     * is the correct commit criterion either way — shards are complete
     * before the root claim, exactly like data files.
     */
-  /** Parsed-manifest memo. Committed manifests are IMMUTABLE by the
-    * create-if-absent protocol, so a successful parse can be reused; the
-    * (mtime, length) of the manifest file guard the one legitimate way
-    * content changes under the same key — [[writeKeyed]] replacing the
-    * whole table (which also purges the path's entries explicitly).
-    * Commit paths walk O(versions) manifests ([[currentVersion]],
-    * [[latestTxn]]) and multi-read SQL sessions re-resolve per read;
-    * the memo turns each re-walk into one getFileStatus per version
-    * instead of a read+JSON-parse. Bounded; whole-map eviction.
-    */
-  private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Boolean, Long, Long), Manifest]
-  private val maxManifestCacheEntries = 8192
-
-  private def dropCachedManifests(root: Path): Unit = {
-    val prefix = root.toString
-    manifestCache.keySet.removeIf(_._1.startsWith(prefix))
-  }
-
   private def readManifestOpt(spark: SparkSession, root: Path,
       version: Long, resolveShards: Boolean = true): Option[Manifest] = {
-    val p = new Path(logPath(root), s"v$version.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stat =
-      try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val cacheKey = (root.toString, version, resolveShards,
-      stat.getModificationTime, stat.getLen)
-    val cached = manifestCache.get(cacheKey)
-    if (cached != null) return Some(cached)
-    val body =
-      try {
-        val in = fs.open(p)
-        try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      } catch { case _: java.io.IOException => return None }
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    manifests.read(fs, logPath(root), version,
+        fits = (e: (Manifest, Boolean)) => e._2 || !resolveShards) { body =>
+      parseManifest(fs, root, body, resolveShards)
+        .map(m => (m, resolveShards || m.shardSpan == 0))
+    }.map(_._1)
+  }
+
+  private def parseManifest(fs: FileSystem, root: Path, body: String,
+      resolveShards: Boolean): Option[Manifest] = {
     import org.json4s._
-    val parsed = scala.util.Try(
+    scala.util.Try(
       org.json4s.jackson.JsonMethods.parse(body)).toOption
       .flatMap { j =>
         def str(f: String): Option[String] = j \ f match {
@@ -729,14 +706,9 @@ object Merge {
           case _ => None // truncated or foreign body: not committed
         }
       }
-    parsed.foreach { m =>
-      if (manifestCache.size > maxManifestCacheEntries) manifestCache.clear()
-      manifestCache.put(cacheKey, m)
-    }
-    parsed
   }
 
-  private def readManifest(spark: SparkSession, root: Path,
+  private[sources] def readManifest(spark: SparkSession, root: Path,
       version: Long): Manifest =
     readManifestOpt(spark, root, version).getOrElse {
       val vs = listVersions(spark, root)
@@ -751,14 +723,10 @@ object Merge {
     }
 
   /** All version numbers with a manifest file present (committed or not). */
-  private def listVersions(spark: SparkSession, root: Path): Seq[Long] = {
-    val dir = logPath(root)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(_.stripPrefix("v").stripSuffix(".json").toLong).toSeq.sorted
-  }
+  private def listVersions(spark: SparkSession, root: Path): Seq[Long] =
+    VersionLog.versions(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      logPath(root))
 
   /** Latest COMMITTED version, or -1 if the table has no version log
     * (pre-versioning layout — [[readKeyed]] falls back to a raw read).
@@ -767,9 +735,8 @@ object Merge {
     */
   def currentVersion(spark: SparkSession, path: String): Long = {
     val (_, root) = fsFor(spark, path)
-    listVersions(spark, root).reverse
-      .find(v => readManifestOpt(spark, root, v,
-        resolveShards = false).isDefined)
+    VersionLog.newest(listVersions(spark, root))(v =>
+      readManifestOpt(spark, root, v, resolveShards = false).map(_ => v))
       .getOrElse(-1L)
   }
 
@@ -903,8 +870,7 @@ object Merge {
   def addConstraint(spark: SparkSession, path: String, name: String,
       exprSql: String, maxRetries: Int = 5): Long = {
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("addConstraint", path, maxRetries) { _ =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0, s"$path has no version log")
       val parent = readManifest(spark, root, parentV)
@@ -912,44 +878,35 @@ object Merge {
         s"constraint $name already exists on $path")
       enforceConstraints(versionDf(spark, path, root, parent),
         Seq((name, exprSql)), s"the existing rows of $path")
-      try {
-        writeManifest(fs, root,
-          parent.copy(version = parentV + 1, parent = parentV,
-            txn = None, ts = nextTs(parent), op = Some("addConstraint"),
-            rowsUpserted = 0L, rowsDeleted = 0L,
-            constraints = parent.constraints :+ ((name, exprSql))),
-          parent = Some(parent), touched = Some(Set.empty))
-        return parentV + 1
-      } catch { case _: LostCommitRace => attempt += 1 }
+      writeManifest(fs, root,
+        parent.copy(version = parentV + 1, parent = parentV,
+          txn = None, ts = nextTs(parent), op = Some("addConstraint"),
+          rowsUpserted = 0L, rowsDeleted = 0L,
+          constraints = parent.constraints :+ ((name, exprSql))),
+        parent = Some(parent), touched = Some(Set.empty))
+      parentV + 1
     }
-    throw new IllegalStateException(
-      s"addConstraint lost the commit race $attempt times at $path")
   }
 
   /** DROP CONSTRAINT: metadata-only commit removing `name`. */
   def dropConstraint(spark: SparkSession, path: String, name: String,
       maxRetries: Int = 5): Long = {
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("dropConstraint", path, maxRetries) { _ =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0, s"$path has no version log")
       val parent = readManifest(spark, root, parentV)
       require(parent.constraints.exists(_._1 == name),
         s"no constraint $name on $path (have: " +
         s"${parent.constraints.map(_._1).mkString(", ")})")
-      try {
-        writeManifest(fs, root,
-          parent.copy(version = parentV + 1, parent = parentV,
-            txn = None, ts = nextTs(parent), op = Some("dropConstraint"),
-            rowsUpserted = 0L, rowsDeleted = 0L,
-            constraints = parent.constraints.filterNot(_._1 == name)),
-          parent = Some(parent), touched = Some(Set.empty))
-        return parentV + 1
-      } catch { case _: LostCommitRace => attempt += 1 }
+      writeManifest(fs, root,
+        parent.copy(version = parentV + 1, parent = parentV,
+          txn = None, ts = nextTs(parent), op = Some("dropConstraint"),
+          rowsUpserted = 0L, rowsDeleted = 0L,
+          constraints = parent.constraints.filterNot(_._1 == name)),
+        parent = Some(parent), touched = Some(Set.empty))
+      parentV + 1
     }
-    throw new IllegalStateException(
-      s"dropConstraint lost the commit race $attempt times at $path")
   }
 
   /** TYPE WIDENING (Delta's type-widening table, the subset whose
@@ -1007,8 +964,7 @@ object Merge {
       to: String, maxRetries: Int = 5): Long = {
     require(from != to, s"rename to the same name '$from' is a no-op")
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("renameColumn", path, maxRetries) { _ =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0, s"$path has no version log")
       val parent = readManifest(spark, root, parentV)
@@ -1056,58 +1012,54 @@ object Merge {
         else parent.colAliases :+ ((from, physical))
       val newSchema = StructType(schema.fields.map(f =>
         if (f.name == from) f.copy(name = to) else f))
-      try {
-        writeManifest(fs, root,
-          parent.copy(version = parentV + 1, parent = parentV,
-            txn = None, ts = nextTs(parent), op = Some("renameColumn"),
-            rowsUpserted = 0L, rowsDeleted = 0L,
-            dataSchema = Some(schemaToString(newSchema)),
-            layout = parent.layout.map { case (k, n) =>
-              (if (k == from) to else k, n)
-            },
-            layoutCols = parent.layoutCols.map(k =>
-              if (k == from) to else k),
-            statsCols = parent.statsCols.map {
-              case c if c == from => to
-              // each spec KEEPS its own prefix (r18 fix: `bloomx:from`
-              // used to rename to `bloom:to`, silently de-externalizing
-              // the table's next commit; `statsx:from` didn't rename at
-              // all, crashing the next stats aggregate)
-              case c if Skipping.isExternalBloomSpec(c) &&
-                  Skipping.bloomBase(c) == from =>
-                Skipping.BloomxPrefix + to
-              case c if Skipping.isBloomSpec(c) &&
-                  Skipping.bloomBase(c) == from =>
-                Skipping.BloomPrefix + to
-              case c if Skipping.isStatsxSpec(c) &&
-                  c.stripPrefix(Skipping.StatsxPrefix) == from =>
-                Skipping.StatsxPrefix + to
-              case c if Skipping.isNdvSpec(c) &&
-                  c.stripPrefix(Skipping.NdvPrefix) == from =>
-                Skipping.NdvPrefix + to
-              case c if Skipping.isNdvxSpec(c) &&
-                  c.stripPrefix(Skipping.NdvxPrefix) == from =>
-                Skipping.NdvxPrefix + to
-              case c => c
-            },
-            stats = parent.stats.map {
-              case e if e.col == from => e.copy(col = to)
-              case e if Skipping.isBloomSpec(e.col) &&
-                  Skipping.bloomBase(e.col) == from =>
-                e.copy(col = Skipping.BloomPrefix + to)
-              case e if Skipping.isNdvSpec(e.col) &&
-                  e.col.stripPrefix(Skipping.NdvPrefix) == from =>
-                e.copy(col = Skipping.NdvPrefix + to)
-              case e => e
-            },
-            colMap = newMap.filter { case (l, p) => l != p },
-            colAliases = newAliases),
-          parent = Some(parent), touched = Some(Set.empty))
-        return parentV + 1
-      } catch { case _: LostCommitRace => attempt += 1 }
+      writeManifest(fs, root,
+        parent.copy(version = parentV + 1, parent = parentV,
+          txn = None, ts = nextTs(parent), op = Some("renameColumn"),
+          rowsUpserted = 0L, rowsDeleted = 0L,
+          dataSchema = Some(schemaToString(newSchema)),
+          layout = parent.layout.map { case (k, n) =>
+            (if (k == from) to else k, n)
+          },
+          layoutCols = parent.layoutCols.map(k =>
+            if (k == from) to else k),
+          statsCols = parent.statsCols.map {
+            case c if c == from => to
+            // each spec KEEPS its own prefix (r18 fix: `bloomx:from`
+            // used to rename to `bloom:to`, silently de-externalizing
+            // the table's next commit; `statsx:from` didn't rename at
+            // all, crashing the next stats aggregate)
+            case c if Skipping.isExternalBloomSpec(c) &&
+                Skipping.bloomBase(c) == from =>
+              Skipping.BloomxPrefix + to
+            case c if Skipping.isBloomSpec(c) &&
+                Skipping.bloomBase(c) == from =>
+              Skipping.BloomPrefix + to
+            case c if Skipping.isStatsxSpec(c) &&
+                c.stripPrefix(Skipping.StatsxPrefix) == from =>
+              Skipping.StatsxPrefix + to
+            case c if Skipping.isNdvSpec(c) &&
+                c.stripPrefix(Skipping.NdvPrefix) == from =>
+              Skipping.NdvPrefix + to
+            case c if Skipping.isNdvxSpec(c) &&
+                c.stripPrefix(Skipping.NdvxPrefix) == from =>
+              Skipping.NdvxPrefix + to
+            case c => c
+          },
+          stats = parent.stats.map {
+            case e if e.col == from => e.copy(col = to)
+            case e if Skipping.isBloomSpec(e.col) &&
+                Skipping.bloomBase(e.col) == from =>
+              e.copy(col = Skipping.BloomPrefix + to)
+            case e if Skipping.isNdvSpec(e.col) &&
+                e.col.stripPrefix(Skipping.NdvPrefix) == from =>
+              e.copy(col = Skipping.NdvPrefix + to)
+            case e => e
+          },
+          colMap = newMap.filter { case (l, p) => l != p },
+          colAliases = newAliases),
+        parent = Some(parent), touched = Some(Set.empty))
+      parentV + 1
     }
-    throw new IllegalStateException(
-      s"renameColumn lost the commit race $attempt times at $path")
   }
 
   /** ADD COLUMN — metadata-only (`ALTER TABLE ... ADD COLUMN`): the
@@ -1122,8 +1074,7 @@ object Merge {
   def addColumn(spark: SparkSession, path: String, name: String,
       dataType: DataType, maxRetries: Int = 5): Long = {
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("addColumn", path, maxRetries) { _ =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0, s"$path has no version log")
       val parent = readManifest(spark, root, parentV)
@@ -1151,19 +1102,15 @@ object Merge {
         s"'$name' was a previous logical name of a column in this table " +
         "(immutable stats sidecars may still reference it) — pick " +
         "another name or rewrite the table")
-      try {
-        writeManifest(fs, root,
-          parent.copy(version = parentV + 1, parent = parentV,
-            txn = None, ts = nextTs(parent), op = Some("addColumn"),
-            rowsUpserted = 0L, rowsDeleted = 0L,
-            dataSchema = Some(schemaToString(schema.add(name, dataType,
-              nullable = true)))),
-          parent = Some(parent), touched = Some(Set.empty))
-        return parentV + 1
-      } catch { case _: LostCommitRace => attempt += 1 }
+      writeManifest(fs, root,
+        parent.copy(version = parentV + 1, parent = parentV,
+          txn = None, ts = nextTs(parent), op = Some("addColumn"),
+          rowsUpserted = 0L, rowsDeleted = 0L,
+          dataSchema = Some(schemaToString(schema.add(name, dataType,
+            nullable = true)))),
+        parent = Some(parent), touched = Some(Set.empty))
+      parentV + 1
     }
-    throw new IllegalStateException(
-      s"addColumn lost the commit race $attempt times at $path")
   }
 
   /** WIDEN a column's type — metadata-only (`ALTER TABLE ... ALTER
@@ -1179,8 +1126,7 @@ object Merge {
   def widenColumn(spark: SparkSession, path: String, name: String,
       to: DataType, maxRetries: Int = 5): Long = {
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("widenColumn", path, maxRetries) { _ =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0, s"$path has no version log")
       val parent = readManifest(spark, root, parentV)
@@ -1191,21 +1137,21 @@ object Merge {
         s"no column '$name' in ${schema.fieldNames.mkString(", ")}")
       val f = schema(name)
       if (f.dataType.catalogString == to.catalogString)
-        return parentV // no-op: already that type
-      require(canWiden(f.dataType, to),
-        s"column '$name' cannot change ${f.dataType.simpleString} -> " +
-        s"${to.simpleString} — only lossless widening " +
-        "(integral up-chain, float->double, decimal growth) is " +
-        "metadata-only; anything else needs a rewrite")
-      require(!parent.layoutCols.contains(name),
-        s"the composite layout key '$name' cannot change type — its " +
-        "hash routes grid cells; rewrite with writeKeyedCols")
-      parent.layout.foreach { case (k, _) =>
-        require(name != k,
-          s"the layout key '$k' cannot change type — its hash routes " +
-          "buckets; rewrite via relayout/writeKeyed")
-      }
-      try {
+        parentV // no-op: already that type
+      else {
+        require(canWiden(f.dataType, to),
+          s"column '$name' cannot change ${f.dataType.simpleString} -> " +
+          s"${to.simpleString} — only lossless widening " +
+          "(integral up-chain, float->double, decimal growth) is " +
+          "metadata-only; anything else needs a rewrite")
+        require(!parent.layoutCols.contains(name),
+          s"the composite layout key '$name' cannot change type — its " +
+          "hash routes grid cells; rewrite with writeKeyedCols")
+        parent.layout.foreach { case (k, _) =>
+          require(name != k,
+            s"the layout key '$k' cannot change type — its hash routes " +
+            "buckets; rewrite via relayout/writeKeyed")
+        }
         writeManifest(fs, root,
           parent.copy(version = parentV + 1, parent = parentV,
             txn = None, ts = nextTs(parent), op = Some("widenColumn"),
@@ -1226,11 +1172,9 @@ object Merge {
               Skipping.isBloomSpec(e.col) &&
                 Skipping.bloomBase(e.col) == name)),
           parent = Some(parent), touched = Some(Set.empty))
-        return parentV + 1
-      } catch { case _: LostCommitRace => attempt += 1 }
+        parentV + 1
+      }
     }
-    throw new IllegalStateException(
-      s"widenColumn lost the commit race $attempt times at $path")
   }
 
   /** DROP COLUMN — metadata-only, like [[renameColumn]]: the column
@@ -1245,8 +1189,7 @@ object Merge {
   def dropColumn(spark: SparkSession, path: String, name: String,
       maxRetries: Int = 5): Long = {
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("dropColumn", path, maxRetries) { _ =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0, s"$path has no version log")
       val parent = readManifest(spark, root, parentV)
@@ -1270,40 +1213,36 @@ object Merge {
           "constraint first")
       }
       val physical = parent.colMap.toMap.getOrElse(name, name)
-      try {
-        writeManifest(fs, root,
-          parent.copy(version = parentV + 1, parent = parentV,
-            txn = None, ts = nextTs(parent), op = Some("dropColumn"),
-            rowsUpserted = 0L, rowsDeleted = 0L,
-            dataSchema = Some(schemaToString(StructType(
-              schema.fields.filterNot(_.name == name)))),
-            statsCols = parent.statsCols.filterNot(c => c == name ||
-              (Skipping.isBloomSpec(c) && Skipping.bloomBase(c) == name) ||
-              // r18: a dropped statsx column's spec must go too, or the
-              // next commit's stats aggregate references a gone column
-              (Skipping.isStatsxSpec(c) &&
-                c.stripPrefix(Skipping.StatsxPrefix) == name) ||
-              ((Skipping.isNdvSpec(c) || Skipping.isNdvxSpec(c)) &&
-                Skipping.ndvBase(c) == name)),
-            stats = parent.stats.filterNot(e =>
-              (Skipping.isNdvSpec(e.col) &&
-                e.col.stripPrefix(Skipping.NdvPrefix) == name) ||
-              (e.col == name &&
-              // dropping a data column literally named "statsx" on a
-              // pre-r19 table must not purge the shape-identical legacy
-              // placeholder entries — that would orphan every OTHER
-              // externalized column's sidecar stats and their liveness
-              !Skipping.isStatsxPlaceholder(e)) ||
-              (Skipping.isBloomSpec(e.col) &&
-                Skipping.bloomBase(e.col) == name)),
-            colMap = parent.colMap.filterNot(_._1 == name),
-            physRetired = (parent.physRetired :+ physical).distinct),
-          parent = Some(parent), touched = Some(Set.empty))
-        return parentV + 1
-      } catch { case _: LostCommitRace => attempt += 1 }
+      writeManifest(fs, root,
+        parent.copy(version = parentV + 1, parent = parentV,
+          txn = None, ts = nextTs(parent), op = Some("dropColumn"),
+          rowsUpserted = 0L, rowsDeleted = 0L,
+          dataSchema = Some(schemaToString(StructType(
+            schema.fields.filterNot(_.name == name)))),
+          statsCols = parent.statsCols.filterNot(c => c == name ||
+            (Skipping.isBloomSpec(c) && Skipping.bloomBase(c) == name) ||
+            // r18: a dropped statsx column's spec must go too, or the
+            // next commit's stats aggregate references a gone column
+            (Skipping.isStatsxSpec(c) &&
+              c.stripPrefix(Skipping.StatsxPrefix) == name) ||
+            ((Skipping.isNdvSpec(c) || Skipping.isNdvxSpec(c)) &&
+              Skipping.ndvBase(c) == name)),
+          stats = parent.stats.filterNot(e =>
+            (Skipping.isNdvSpec(e.col) &&
+              e.col.stripPrefix(Skipping.NdvPrefix) == name) ||
+            (e.col == name &&
+            // dropping a data column literally named "statsx" on a
+            // pre-r19 table must not purge the shape-identical legacy
+            // placeholder entries — that would orphan every OTHER
+            // externalized column's sidecar stats and their liveness
+            !Skipping.isStatsxPlaceholder(e)) ||
+            (Skipping.isBloomSpec(e.col) &&
+              Skipping.bloomBase(e.col) == name)),
+          colMap = parent.colMap.filterNot(_._1 == name),
+          physRetired = (parent.physRetired :+ physical).distinct),
+        parent = Some(parent), touched = Some(Set.empty))
+      parentV + 1
     }
-    throw new IllegalStateException(
-      s"dropColumn lost the commit race $attempt times at $path")
   }
 
   /** Per-file min/max stats for bucket-partitioned parquet under `dir`,
@@ -2235,8 +2174,7 @@ object Merge {
       statsCols: Seq[String], maxRetries: Int = 5): (Long, Int) = {
     require(statsCols.nonEmpty, "analyze needs >= 1 stats column")
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("analyze", path, maxRetries) { _ =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0, s"$path has no version log")
       val parent = readManifest(spark, root, parentV)
@@ -2286,22 +2224,16 @@ object Merge {
           }.toSeq.sortBy(e => (e.file, e.col))
         }
       commitFence()
-      try {
-        writeManifest(fs, root,
-          parent.copy(version = parentV + 1, parent = parentV,
-            txn = None, statsCols = statsCols,
-            stats = externalizeBlooms(fs, root, entries, statsCols),
-            ts = nextTs(parent), op = Some("analyze"),
-            rowsUpserted = 0L, rowsDeleted = 0L, copied = Seq.empty),
-          parent = Some(parent), touched = None) // stats changed in
-            // EVERY shard — no shard ref is reusable
-        return (parentV + 1, parent.files.size)
-      } catch {
-        case _: LostCommitRace => attempt += 1
-      }
+      writeManifest(fs, root,
+        parent.copy(version = parentV + 1, parent = parentV,
+          txn = None, statsCols = statsCols,
+          stats = externalizeBlooms(fs, root, entries, statsCols),
+          ts = nextTs(parent), op = Some("analyze"),
+          rowsUpserted = 0L, rowsDeleted = 0L, copied = Seq.empty),
+        parent = Some(parent), touched = None) // stats changed in
+          // EVERY shard — no shard ref is reusable
+      (parentV + 1, parent.files.size)
     }
-    throw new IllegalStateException(
-      s"analyze lost the commit race $attempt times at $path")
   }
 
   /** Per-file inventory of the CURRENT version (`DESCRIBE DETAIL` at
@@ -2646,13 +2578,12 @@ object Merge {
       maxRetries: Int = 5): Long = {
     val (fs, root) = fsFor(spark, path)
     val target = readManifest(spark, root, version)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("restore", path, maxRetries) { _ =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0, s"$path has no version log")
-      if (parentV == version) return parentV // already there: no-op
-      val parent = readManifest(spark, root, parentV)
-      try {
+      if (parentV == version) parentV // already there: no-op
+      else {
+        val parent = readManifest(spark, root, parentV)
         writeManifest(fs, root,
           Manifest(parentV + 1, parentV, target.files, target.dataSchema,
             layout = target.layout.orElse(parent.layout),
@@ -2674,13 +2605,9 @@ object Merge {
             keySorted = target.keySorted,
             layoutCols = target.layoutCols, layoutNs = target.layoutNs),
           parent = Some(parent), touched = None)
-        return parentV + 1
-      } catch {
-        case _: LostCommitRace => attempt += 1
+        parentV + 1
       }
     }
-    throw new IllegalStateException(
-      s"restore lost the commit race $attempt times at $path")
   }
 
   /** APPLY CHANGES (Delta's `APPLY CHANGES INTO`): fold one batch of
@@ -2892,98 +2819,45 @@ object Merge {
 
   private def tagsPath(root: Path) = new Path(logPath(root), "tags")
 
-  /** Read a small metadata file fully to EOF. A single
-    * `InputStream.read` may return fewer bytes than available on
-    * remote filesystems — truncating, say, a tag's version string and
-    * letting vacuum compute a wrong keep-set — so loop until -1.
-    */
-  private[sources] def readSmallUtf8(fs: FileSystem, f: Path): String = {
-    val in = fs.open(f)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, "UTF-8")
-    } finally in.close()
-  }
-
-  private def requireValidTag(tag: String): Unit =
-    require(tag.nonEmpty &&
-      tag.forall(c => c.isLetterOrDigit || c == '.' || c == '_' ||
-        c == '-'),
-      s"tag names are [A-Za-z0-9._-]+, got '$tag'")
-
   /** TAG a committed version with an immutable name — Iceberg's tags,
     * git tags for tables: `readTag(spark, path, "v2026-08-release")`
     * stays answerable forever, because [[vacuum]] keeps tagged
     * versions (manifest, data files, shards) alive regardless of
-    * `keepVersions` until the tag is dropped. Tags are create-if-absent
-    * and never repointed: re-tagging an existing name throws — delete
-    * and re-create to move it, so a reader can cache what a tag meant.
+    * `keepVersions` until the tag is dropped. Tags live in the
+    * [[VersionLog.Tags]] store: created through the claim and never
+    * repointed — re-tagging an existing name throws; delete and
+    * re-create to move it, so a reader can cache what a tag meant.
     */
   def tagVersion(spark: SparkSession, path: String, tag: String,
       version: Long): Unit = {
-    requireValidTag(tag)
+    VersionLog.Tags.requireValid(tag)
     val (fs, root) = fsFor(spark, path)
     readManifest(spark, root, version) // must exist and be retained
-    val dir = tagsPath(root)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val f = new Path(dir, tag)
-    try {
-      val out = fs.create(f, false)
-      try out.write(version.toString.getBytes("UTF-8"))
-      finally out.close()
-    } catch {
-      case e: java.io.IOException =>
-        if (fs.exists(f)) throw new IllegalArgumentException(
-          s"tag '$tag' already exists on $path (tags are immutable — " +
-          "deleteTag first to repoint)")
-        else throw e
-    }
+    VersionLog.Tags.create(fs, tagsPath(root), tag, version, path)
   }
 
   /** The version a tag names; throws on an unknown tag. */
   def tagVersionOf(spark: SparkSession, path: String, tag: String): Long = {
-    requireValidTag(tag)
     val (fs, root) = fsFor(spark, path)
-    val f = new Path(tagsPath(root), tag)
-    require(fs.exists(f), s"no tag '$tag' on $path")
-    readSmallUtf8(fs, f).trim.toLong
+    VersionLog.Tags.versionOf(fs, tagsPath(root), tag, path)
   }
 
   /** All tags: (tag, version), driver-local listing of the tags dir. */
   def tags(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val (fs, root) = fsFor(spark, path)
-    val dir = tagsPath(root)
-    val rows =
-      if (!fs.exists(dir)) Seq.empty[(String, Long)]
-      else fs.listStatus(dir).toSeq.map(_.getPath.getName).sorted
-        .map(t => t -> tagVersionOf(spark, path, t))
-    rows.toDF("tag", "version")
+    VersionLog.Tags.list(fs, tagsPath(root)).toDF("tag", "version")
   }
 
   /** Drop a tag (the version becomes vacuumable like any other). */
   def deleteTag(spark: SparkSession, path: String, tag: String): Unit = {
-    requireValidTag(tag)
     val (fs, root) = fsFor(spark, path)
-    val f = new Path(tagsPath(root), tag)
-    require(fs.exists(f), s"no tag '$tag' on $path")
-    fs.delete(f, false)
+    VersionLog.Tags.delete(fs, tagsPath(root), tag, path)
   }
 
   /** The rows of the version a tag names (`VERSION AS OF 'tag'`). */
   def readTag(spark: SparkSession, path: String, tag: String): DataFrame =
     readVersion(spark, path, tagVersionOf(spark, path, tag))
-
-  private def taggedVersions(spark: SparkSession, root: Path): Set[Long] = {
-    val (fs) = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = tagsPath(root)
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).toSeq
-      .map(s => readSmallUtf8(fs, s.getPath).trim.toLong).toSet
-  }
 
   /** Commit history of the RETAINED versions (DESCRIBE HISTORY): one
     * row per manifest — version, parent, operation, commit timestamp,
@@ -3614,8 +3488,7 @@ object Merge {
       filesPerBucket: Int,
       copiedFiles: Seq[String]): MergeStats = {
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (true) {
+    retryCommit("upsert", path, maxRetries, ContentionHint) { attempt =>
       val parentV = currentVersion(spark, path)
       txn.foreach { case (app, batch) =>
         if (latestTxn(spark, path, app).exists(_ >= batch)) {
@@ -3992,50 +3865,41 @@ object Merge {
           parent.colMap)
       val files = parent.files.filterNot(f => touched(bucketOf(f))) ++ newFiles
       commitFence()
-      try {
-        writeManifest(fs, root,
-          Manifest(parentV + 1, parentV, files.sorted,
-            Some(schemaToString(outSchema)), txn,
-            parent.layout.orElse(if (keyCols.size == 1)
-              Some((keyCols.head, bucketNs.head)) else None),
-            parent.statsCols,
-            // untouched buckets keep their stats, EXCEPT bloom filters
-            // on a column this commit widened: those hashed the narrow
-            // internal form and would wrongly prune under the wide
-            // probe type (rewritten buckets' newStats hashed wide)
-            parent.stats.filterNot(e => touched(bucketOf(e.file)))
-              .filterNot(e => Skipping.isBloomSpec(e.col) &&
-                widenedCols.contains(Skipping.bloomBase(e.col))) ++
-              newStats,
-            ts = nextTs(parent),
-            op = Some(if (copiedFiles.nonEmpty) "copyInto" else "upsert"),
-            rowsUpserted = rowsUpserted, rowsDeleted = rowsDeleted,
-            shardSpan = parent.shardSpan,
-            constraints = parent.constraints,
-            dvFiles = parent.dvFiles,
-            colMap = parent.colMap, physRetired = parent.physRetired,
-            colAliases = parent.colAliases,
-            copied = copiedFiles, idHwm = newIdHwm,
-            keySorted = parent.keySorted, // rewrites re-sort; the
-              // untouched files keep whatever the parent knew
-            layoutCols =
-              if (keyCols.size >= 2) keyCols else parent.layoutCols,
-            layoutNs =
-              if (keyCols.size >= 2) bucketNs else parent.layoutNs),
-          parent = Some(parent), touched = Some(touched))
-        return MergeStats(touched.size, nTotal, rowsUpserted, parentV + 1,
-          attempt, rowsDeleted = rowsDeleted)
-      } catch {
-        case _: LostCommitRace =>
-          // someone else committed v{parentV+1}: our merge is stale.
-          // Remove OUR files (exact set — never the winner's) and redo.
-          deleteFiles(fs, root, newFiles)
-          attempt += 1
-          if (attempt > maxRetries)
-            throw new IllegalStateException(
-              s"upsert lost the commit race $attempt times at $path — " +
-              "giving up; retry with less write contention")
-      }
+      // someone else committing v{parentV+1} makes our merge stale: the
+      // claim removes OUR files (exact set — never the winner's) and the
+      // loop redoes the merge
+      claimStaged(fs, root,
+        Manifest(parentV + 1, parentV, files.sorted,
+          Some(schemaToString(outSchema)), txn,
+          parent.layout.orElse(if (keyCols.size == 1)
+            Some((keyCols.head, bucketNs.head)) else None),
+          parent.statsCols,
+          // untouched buckets keep their stats, EXCEPT bloom filters
+          // on a column this commit widened: those hashed the narrow
+          // internal form and would wrongly prune under the wide
+          // probe type (rewritten buckets' newStats hashed wide)
+          parent.stats.filterNot(e => touched(bucketOf(e.file)))
+            .filterNot(e => Skipping.isBloomSpec(e.col) &&
+              widenedCols.contains(Skipping.bloomBase(e.col))) ++
+            newStats,
+          ts = nextTs(parent),
+          op = Some(if (copiedFiles.nonEmpty) "copyInto" else "upsert"),
+          rowsUpserted = rowsUpserted, rowsDeleted = rowsDeleted,
+          shardSpan = parent.shardSpan,
+          constraints = parent.constraints,
+          dvFiles = parent.dvFiles,
+          colMap = parent.colMap, physRetired = parent.physRetired,
+          colAliases = parent.colAliases,
+          copied = copiedFiles, idHwm = newIdHwm,
+          keySorted = parent.keySorted, // rewrites re-sort; the
+            // untouched files keep whatever the parent knew
+          layoutCols =
+            if (keyCols.size >= 2) keyCols else parent.layoutCols,
+          layoutNs =
+            if (keyCols.size >= 2) bucketNs else parent.layoutNs),
+        parent, Some(touched), newFiles)
+      MergeStats(touched.size, nTotal, rowsUpserted, parentV + 1,
+        attempt, rowsDeleted = rowsDeleted)
       // deterministic block release for every pin this attempt made —
       // on success, on a lost race (the retry re-pins), and on ANY
       // failure path (constraint refusal, stage error): without it a
@@ -4043,7 +3907,6 @@ object Merge {
       // blocks to GC-triggered cleaning (block-manager bloat)
       } finally unpinAll()
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** MERGE-ON-READ UPSERT: land a batch of updates/inserts WITHOUT
@@ -4113,8 +3976,7 @@ object Merge {
       maxRetries: Int, txn: Option[(String, Long)],
       tombstoneCol: Option[String]): MergeStats = {
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("upsertDV", path, maxRetries) { attempt =>
       val parentV = currentVersion(spark, path)
       txn.foreach { case (app, batch) =>
         if (latestTxn(spark, path, app).exists(_ >= batch)) {
@@ -4249,45 +4111,35 @@ object Merge {
         stageAndMove(spark, fs, root, staged, parent.statsCols,
           parent.colMap)
       commitFence()
-      try {
-        writeManifest(fs, root,
-          Manifest(parentV + 1, parentV,
-            (parent.files ++ newFiles).sorted, parent.dataSchema, txn,
-            parent.layout.orElse(if (keyCols.size == 1)
-              Some((keyCols.head, bucketNs.head)) else None),
-            parent.statsCols,
-            parent.stats ++ newStats, // old files keep GROSS entries
-            ts = nextTs(parent), op = Some("upsert-dv"),
-            rowsUpserted = rowsIn - rowsTombstoned,
-            rowsDeleted = nReplaced,
-            shardSpan = parent.shardSpan,
-            constraints = parent.constraints,
-            dvFiles = parent.dvFiles ++ dvRefs,
-            colMap = parent.colMap, physRetired = parent.physRetired,
-            colAliases = parent.colAliases,
-            idHwm = parent.idHwm,
-            // appended ranges overlap old files; a pure-delete batch
-            // (no appends) leaves the sort contract as it was
-            keySorted = newFiles.isEmpty && parent.keySorted,
-            layoutCols =
-              if (keyCols.size >= 2) keyCols else parent.layoutCols,
-            layoutNs =
-              if (keyCols.size >= 2) bucketNs else parent.layoutNs),
-          parent = Some(parent), touched = Some(touched))
-        return MergeStats(touched.size, nTotal,
-          rowsIn - rowsTombstoned, parentV + 1,
-          attempt, rowsDeleted = nReplaced)
-      } catch {
-        case _: LostCommitRace =>
-          deleteFiles(fs, root, newFiles)
-          if (dvRefs.nonEmpty)
-            fs.delete(new Path(root, dvRefs.head).getParent, true)
-          attempt += 1
-      }
+      claimStaged(fs, root,
+        Manifest(parentV + 1, parentV,
+          (parent.files ++ newFiles).sorted, parent.dataSchema, txn,
+          parent.layout.orElse(if (keyCols.size == 1)
+            Some((keyCols.head, bucketNs.head)) else None),
+          parent.statsCols,
+          parent.stats ++ newStats, // old files keep GROSS entries
+          ts = nextTs(parent), op = Some("upsert-dv"),
+          rowsUpserted = rowsIn - rowsTombstoned,
+          rowsDeleted = nReplaced,
+          shardSpan = parent.shardSpan,
+          constraints = parent.constraints,
+          dvFiles = parent.dvFiles ++ dvRefs,
+          colMap = parent.colMap, physRetired = parent.physRetired,
+          colAliases = parent.colAliases,
+          idHwm = parent.idHwm,
+          // appended ranges overlap old files; a pure-delete batch
+          // (no appends) leaves the sort contract as it was
+          keySorted = newFiles.isEmpty && parent.keySorted,
+          layoutCols =
+            if (keyCols.size >= 2) keyCols else parent.layoutCols,
+          layoutNs =
+            if (keyCols.size >= 2) bucketNs else parent.layoutNs),
+        parent, Some(touched), newFiles,
+        dvRefs.headOption.map(r => new Path(root, r).getParent))
+      MergeStats(touched.size, nTotal, rowsIn - rowsTombstoned, parentV + 1,
+        attempt, rowsDeleted = nReplaced)
       } finally unpinBatch()
     }
-    throw new IllegalStateException(
-      s"upsertDV lost the commit race $attempt times at $path")
   }
 
   /** INSERT OVERWRITE (full replace) as ONE versioned commit: the new
@@ -4305,8 +4157,7 @@ object Merge {
       maxRetries: Int = 5, txn: Option[(String, Long)] = None)
       : MergeStats = {
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("replaceAll", path, maxRetries) { attempt =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0,
         s"$path has no version log — write it with writeKeyed first")
@@ -4357,32 +4208,24 @@ object Merge {
         stageAndMove(spark, fs, root, merged, parent.statsCols,
           parent.colMap)
       commitFence()
-      try {
-        writeManifest(fs, root,
-          Manifest(parentV + 1, parentV, newFiles.sorted,
-            parent.dataSchema, txn, parent.layout,
-            parent.statsCols, newStats,
-            ts = nextTs(parent), op = Some("replace"),
-            rowsUpserted = rows, rowsDeleted = -1L,
-            shardSpan = parent.shardSpan,
-            constraints = parent.constraints,
-            dvFiles = Seq.empty, // replaced rows: vectors are history
-            colMap = parent.colMap, physRetired = parent.physRetired,
-            colAliases = parent.colAliases,
-            idHwm = newIdHwm,
-            keySorted = true, // full key-sorted rewrite
-            layoutCols = parent.layoutCols, layoutNs = parent.layoutNs),
-          parent = Some(parent), touched = None)
-        val cells = bucketNs.map(_.toLong).product.toInt
-        return MergeStats(cells, cells, rows, parentV + 1, attempt)
-      } catch {
-        case _: LostCommitRace =>
-          deleteFiles(fs, root, newFiles)
-          attempt += 1
-      }
+      claimStaged(fs, root,
+        Manifest(parentV + 1, parentV, newFiles.sorted,
+          parent.dataSchema, txn, parent.layout,
+          parent.statsCols, newStats,
+          ts = nextTs(parent), op = Some("replace"),
+          rowsUpserted = rows, rowsDeleted = -1L,
+          shardSpan = parent.shardSpan,
+          constraints = parent.constraints,
+          dvFiles = Seq.empty, // replaced rows: vectors are history
+          colMap = parent.colMap, physRetired = parent.physRetired,
+          colAliases = parent.colAliases,
+          idHwm = newIdHwm,
+          keySorted = true, // full key-sorted rewrite
+          layoutCols = parent.layoutCols, layoutNs = parent.layoutNs),
+        parent, None, newFiles)
+      val cells = bucketNs.map(_.toLong).product.toInt
+      MergeStats(cells, cells, rows, parentV + 1, attempt)
     }
-    throw new IllegalStateException(
-      s"replaceAll lost the commit race $attempt times at $path")
   }
 
   /** Row-level DELETE: remove every current row satisfying `predicate`
@@ -4412,8 +4255,7 @@ object Merge {
       txn: Option[(String, Long)] = None,
       filesPerBucket: Int = 1): MergeStats = {
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (true) {
+    retryCommit("deleteWhere", path, maxRetries, ContentionHint) { attempt =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0,
         s"$path has no version log — write it with writeKeyed first")
@@ -4456,37 +4298,26 @@ object Merge {
           parent.colMap)
       val files = parent.files.filterNot(f => touched(bucketOf(f))) ++ newFiles
       commitFence()
-      try {
-        writeManifest(fs, root,
-          Manifest(parentV + 1, parentV, files.sorted, parent.dataSchema,
-            txn, parent.layout, parent.statsCols,
-            parent.stats.filterNot(e => touched(bucketOf(e.file))) ++
-              newStats,
-            ts = nextTs(parent), op = Some("delete"),
-            rowsUpserted = 0L, rowsDeleted = rowsDeleted,
-            shardSpan = parent.shardSpan,
-            constraints = parent.constraints,
-            dvFiles = parent.dvFiles,
-            colMap = parent.colMap, physRetired = parent.physRetired,
-            colAliases = parent.colAliases,
-            // DELETE must never lower an identity mark — that is the
-            // exact re-mint hazard the persisted mark exists to close
-            idHwm = parent.idHwm, keySorted = parent.keySorted,
-            layoutCols = parent.layoutCols, layoutNs = parent.layoutNs),
-          parent = Some(parent), touched = Some(touched))
-        return MergeStats(touched.size, nB, 0L, parentV + 1, attempt,
-          rowsDeleted = rowsDeleted)
-      } catch {
-        case _: LostCommitRace =>
-          deleteFiles(fs, root, newFiles)
-          attempt += 1
-          if (attempt > maxRetries)
-            throw new IllegalStateException(
-              s"deleteWhere lost the commit race $attempt times at $path — " +
-              "giving up; retry with less write contention")
-      }
+      claimStaged(fs, root,
+        Manifest(parentV + 1, parentV, files.sorted, parent.dataSchema,
+          txn, parent.layout, parent.statsCols,
+          parent.stats.filterNot(e => touched(bucketOf(e.file))) ++
+            newStats,
+          ts = nextTs(parent), op = Some("delete"),
+          rowsUpserted = 0L, rowsDeleted = rowsDeleted,
+          shardSpan = parent.shardSpan,
+          constraints = parent.constraints,
+          dvFiles = parent.dvFiles,
+          colMap = parent.colMap, physRetired = parent.physRetired,
+          colAliases = parent.colAliases,
+          // DELETE must never lower an identity mark — that is the
+          // exact re-mint hazard the persisted mark exists to close
+          idHwm = parent.idHwm, keySorted = parent.keySorted,
+          layoutCols = parent.layoutCols, layoutNs = parent.layoutNs),
+        parent, Some(touched), newFiles)
+      MergeStats(touched.size, nB, 0L, parentV + 1, attempt,
+        rowsDeleted = rowsDeleted)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   final case class CompactStats(version: Long, bucketsRewritten: Int,
@@ -4563,8 +4394,7 @@ object Merge {
     require(newNs.map(_.toLong).product <= (1L << 20),
       "grid of more than 2^20 cells is past the sanity bound")
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("relayout", path, maxRetries) { _ =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0, s"$path has no version log")
       val parent = readManifest(spark, root, parentV)
@@ -4584,34 +4414,26 @@ object Merge {
         stageAndMove(spark, fs, root, repart, parent.statsCols,
           parent.colMap)
       commitFence()
-      try {
-        writeManifest(fs, root,
-          Manifest(parentV + 1, parentV, newFiles.sorted,
-            parent.dataSchema,
-            layout = if (keyCols.size == 1)
-              Some((keyCols.head, newNs.head)) else None,
-            statsCols = parent.statsCols, stats = newStats,
-            ts = nextTs(parent), op = Some("relayout"),
-            rowsUpserted = 0L, rowsDeleted = 0L,
-            shardSpan = parent.shardSpan,
-            constraints = parent.constraints,
-            dvFiles = Seq.empty, // the rewrite folded them
-            colMap = parent.colMap, physRetired = parent.physRetired,
-            colAliases = parent.colAliases,
-            idHwm = parent.idHwm,
-            keySorted = true, // full key-sorted rewrite
-            layoutCols = if (keyCols.size >= 2) keyCols else Seq.empty,
-            layoutNs = if (keyCols.size >= 2) newNs else Seq.empty),
-          parent = Some(parent), touched = None)
-        return parentV + 1
-      } catch {
-        case _: LostCommitRace =>
-          deleteFiles(fs, root, newFiles)
-          attempt += 1
-      }
+      claimStaged(fs, root,
+        Manifest(parentV + 1, parentV, newFiles.sorted,
+          parent.dataSchema,
+          layout = if (keyCols.size == 1)
+            Some((keyCols.head, newNs.head)) else None,
+          statsCols = parent.statsCols, stats = newStats,
+          ts = nextTs(parent), op = Some("relayout"),
+          rowsUpserted = 0L, rowsDeleted = 0L,
+          shardSpan = parent.shardSpan,
+          constraints = parent.constraints,
+          dvFiles = Seq.empty, // the rewrite folded them
+          colMap = parent.colMap, physRetired = parent.physRetired,
+          colAliases = parent.colAliases,
+          idHwm = parent.idHwm,
+          keySorted = true, // full key-sorted rewrite
+          layoutCols = if (keyCols.size >= 2) keyCols else Seq.empty,
+          layoutNs = if (keyCols.size >= 2) newNs else Seq.empty),
+        parent, None, newFiles)
+      parentV + 1
     }
-    throw new IllegalStateException(
-      s"relayout lost the commit race $attempt times at $path")
   }
 
   /** MERGE-ON-READ DELETE via DELETION VECTORS (Delta's DV feature):
@@ -4646,8 +4468,7 @@ object Merge {
       txn: Option[(String, Long)] = None,
       bitmapFormat: Boolean = true): MergeStats = {
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    retryCommit("deleteWhereDV", path, maxRetries) { attempt =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0,
         s"$path has no version log — write it with writeKeyed first")
@@ -4679,31 +4500,23 @@ object Merge {
       if (n == 0L)
         return MergeStats(0, nB, 0L, parentV, attempt)
       commitFence()
-      try {
-        writeManifest(fs, root,
-          Manifest(parentV + 1, parentV, parent.files, parent.dataSchema,
-            txn, parent.layout, parent.statsCols, parent.stats,
-            ts = nextTs(parent), op = Some("delete-dv"),
-            rowsUpserted = 0L, rowsDeleted = n,
-            shardSpan = parent.shardSpan,
-            constraints = parent.constraints,
-            dvFiles = parent.dvFiles ++ dvRefs,
-            colMap = parent.colMap, physRetired = parent.physRetired,
-            colAliases = parent.colAliases,
-            idHwm = parent.idHwm,
-            keySorted = parent.keySorted, // files untouched
-            layoutCols = parent.layoutCols, layoutNs = parent.layoutNs),
-          parent = Some(parent), touched = Some(Set.empty))
-        return MergeStats(0, nB, 0L, parentV + 1, attempt,
-          rowsDeleted = n)
-      } catch {
-        case _: LostCommitRace =>
-          fs.delete(new Path(root, dvRefs.head).getParent, true)
-          attempt += 1
-      }
+      claimStaged(fs, root,
+        Manifest(parentV + 1, parentV, parent.files, parent.dataSchema,
+          txn, parent.layout, parent.statsCols, parent.stats,
+          ts = nextTs(parent), op = Some("delete-dv"),
+          rowsUpserted = 0L, rowsDeleted = n,
+          shardSpan = parent.shardSpan,
+          constraints = parent.constraints,
+          dvFiles = parent.dvFiles ++ dvRefs,
+          colMap = parent.colMap, physRetired = parent.physRetired,
+          colAliases = parent.colAliases,
+          idHwm = parent.idHwm,
+          keySorted = parent.keySorted, // files untouched
+          layoutCols = parent.layoutCols, layoutNs = parent.layoutNs),
+        parent, Some(Set.empty), Nil,
+        Some(new Path(root, dvRefs.head).getParent))
+      MergeStats(0, nB, 0L, parentV + 1, attempt, rowsDeleted = n)
     }
-    throw new IllegalStateException(
-      s"deleteWhereDV lost the commit race $attempt times at $path")
   }
 
   /** Write `matched` (file, pos) rows as ONE new sidecar dir under
@@ -4775,8 +4588,7 @@ object Merge {
       "resortKey restores the KEY-sorted layout — contradictory with " +
       "a clusterBy/zOrder rewrite, which sorts by other columns")
     val (fs, root) = fsFor(spark, path)
-    var attempt = 0
-    while (true) {
+    retryCommit("compactVersion", path, maxRetries) { _ =>
       val parentV = currentVersion(spark, path)
       require(parentV >= 0, s"$path has no version log")
       val parent = readManifest(spark, root, parentV)
@@ -4813,24 +4625,15 @@ object Merge {
         // from vacuum — drop them with one metadata-only commit
         if (parent.dvFiles.nonEmpty) {
           commitFence()
-          try {
-            writeManifest(fs, root,
-              parent.copy(version = parentV + 1, parent = parentV,
-                txn = None, ts = nextTs(parent), op = Some("compact"),
-                rowsUpserted = 0L, rowsDeleted = 0L,
-                dvFiles = Seq.empty, copied = Seq.empty),
-              parent = Some(parent), touched = Some(Set.empty))
-            return CompactStats(parentV + 1, 0, parent.files.size,
-              parent.files.size)
-          } catch {
-            case _: LostCommitRace =>
-              attempt += 1
-              if (attempt > maxRetries) throw new IllegalStateException(
-                s"compactVersion lost the commit race $attempt times at $path")
-          }
+          writeManifest(fs, root,
+            parent.copy(version = parentV + 1, parent = parentV,
+              txn = None, ts = nextTs(parent), op = Some("compact"),
+              rowsUpserted = 0L, rowsDeleted = 0L,
+              dvFiles = Seq.empty, copied = Seq.empty),
+            parent = Some(parent), touched = Some(Set.empty))
+          CompactStats(parentV + 1, 0, parent.files.size, parent.files.size)
         } else
-          return CompactStats(parentV, 0, parent.files.size,
-            parent.files.size)
+          CompactStats(parentV, 0, parent.files.size, parent.files.size)
       } else {
       val rewriteFiles = toRewrite.values.flatten.toSeq.sorted
       val rows = versionDf(spark, path, root,
@@ -4888,49 +4691,39 @@ object Merge {
       val files = parent.files.filterNot(f => toRewrite.contains(bucketOf(f))) ++
         newFiles
       commitFence()
-      try {
-        writeManifest(fs, root,
-          Manifest(parentV + 1, parentV, files.sorted, parent.dataSchema,
-            layout = parent.layout, statsCols = parent.statsCols,
-            stats = parent.stats.filterNot(e =>
-              toRewrite.contains(bucketOf(e.file))) ++ newStats,
-            ts = nextTs(parent), op = Some("compact"),
-            rowsUpserted = 0L, rowsDeleted = 0L,
-            shardSpan = parent.shardSpan,
-            constraints = parent.constraints,
-            // every DV-touched bucket is in toRewrite: folded
-            dvFiles = Seq.empty,
-            colMap = parent.colMap, physRetired = parent.physRetired,
-            colAliases = parent.colAliases,
-            idHwm = parent.idHwm,
-            // a clusterBy/zOrder rewrite sorts files by the CLUSTER
-            // columns, not the key — the sorted-scan contract breaks
-            // until a full key-sorted rewrite restores it. A plain
-            // compact sorts its rewrites by key and carries the rest;
-            // when it rewrote EVERY bucket (resortKey, or they all
-            // exceeded target), the whole table is freshly key-sorted
-            // and the flag flips TRUE — the restore path after
-            // merge-on-read upserts dropped it.
-            keySorted =
-              if (clusterBy.nonEmpty || zOrderBy.nonEmpty) false
-              else if (toRewrite.size == byBucket.size &&
-                  sortKeysOf(parent).nonEmpty) true
-              else parent.keySorted,
-            layoutCols = parent.layoutCols, layoutNs = parent.layoutNs),
-          parent = Some(parent), touched = Some(toRewrite.keySet.toSet))
-        return CompactStats(parentV + 1, toRewrite.size, parent.files.size,
-          files.size)
-      } catch {
-        case _: LostCommitRace =>
-          deleteFiles(fs, root, newFiles)
-          attempt += 1
-          if (attempt > maxRetries)
-            throw new IllegalStateException(
-              s"compactVersion lost the commit race $attempt times at $path")
-      }
+      claimStaged(fs, root,
+        Manifest(parentV + 1, parentV, files.sorted, parent.dataSchema,
+          layout = parent.layout, statsCols = parent.statsCols,
+          stats = parent.stats.filterNot(e =>
+            toRewrite.contains(bucketOf(e.file))) ++ newStats,
+          ts = nextTs(parent), op = Some("compact"),
+          rowsUpserted = 0L, rowsDeleted = 0L,
+          shardSpan = parent.shardSpan,
+          constraints = parent.constraints,
+          // every DV-touched bucket is in toRewrite: folded
+          dvFiles = Seq.empty,
+          colMap = parent.colMap, physRetired = parent.physRetired,
+          colAliases = parent.colAliases,
+          idHwm = parent.idHwm,
+          // a clusterBy/zOrder rewrite sorts files by the CLUSTER
+          // columns, not the key — the sorted-scan contract breaks
+          // until a full key-sorted rewrite restores it. A plain
+          // compact sorts its rewrites by key and carries the rest;
+          // when it rewrote EVERY bucket (resortKey, or they all
+          // exceeded target), the whole table is freshly key-sorted
+          // and the flag flips TRUE — the restore path after
+          // merge-on-read upserts dropped it.
+          keySorted =
+            if (clusterBy.nonEmpty || zOrderBy.nonEmpty) false
+            else if (toRewrite.size == byBucket.size &&
+                sortKeysOf(parent).nonEmpty) true
+            else parent.keySorted,
+          layoutCols = parent.layoutCols, layoutNs = parent.layoutNs),
+        parent, Some(toRewrite.keySet.toSet), newFiles)
+      CompactStats(parentV + 1, toRewrite.size, parent.files.size,
+        files.size)
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** EXACTLY-ONCE streaming upsert: sink a stream of updates into the
@@ -4996,25 +4789,6 @@ object Merge {
       }
   }
 
-  /** Drop versions older than the latest `keepVersions` and delete every
-    * data file no retained version references (crash orphans and
-    * superseded pre-compaction files included), plus abandoned staging
-    * dirs. Time travel back past the horizon is gone after this — the
-    * storage-reclamation half of the copy-on-write contract.
-    *
-    * `graceMs` spares files/staging dirs modified within the last N ms:
-    * a concurrent committer's just-moved, not-yet-committed files look
-    * exactly like orphans, so when vacuuming beside live writers set it
-    * above the longest expected commit (with the default 0, do not run
-    * vacuum concurrently with writers). This applies with EXTRA force to
-    * SHARDED-manifest tables: a shard file is written BEFORE the root
-    * that references it, so a graceMs=0 vacuum racing an in-flight
-    * commit can reclaim a shard moments before its root lands — the
-    * commit still succeeds but the version is unreadable. The rule is
-    * one rule, not two: vacuum beside live writers ONLY with graceMs
-    * greater than the longest possible commit duration; graceMs = 0 is
-    * for quiesced tables.
-    */
   /** Default grace for NEVER-REFERENCED files (possible mid-commit
     * state): a live committer moves its staged files into the bucket
     * dirs BEFORE the manifest claim, so for a short window they are
@@ -5024,7 +4798,33 @@ object Merge {
     */
   val DefaultOrphanGraceMs: Long = 10L * 60L * 1000L
 
-  /** Returns the reclaimed (or, with `dryRun = true`, the reclaimABLE
+  /** Drop versions older than the latest `keepVersions` and delete every
+    * data file no retained version references (crash orphans and
+    * superseded pre-compaction files included), plus abandoned staging
+    * dirs. Time travel back past the horizon is gone after this — the
+    * storage-reclamation half of the copy-on-write contract. TAGGED
+    * versions survive any keepVersions (Iceberg semantics): their
+    * manifests, files, and shards live until the tag is dropped.
+    *
+    * Every file kind — data files, manifest shards, deletion-vector and
+    * bloom sidecars — is reclaimed by the one [[VersionLog.Sweep]] rule:
+    * not live in a retained version, then past `graceMs` if some
+    * manifest ever referenced it, else past the orphan floor
+    * `orphanGraceMs` (a commit in flight stages its files before its
+    * claim, so a never-referenced file may be mid-publish).
+    *
+    * `graceMs` spares files/staging dirs modified within the last N ms:
+    * when vacuuming beside live writers set it above the longest
+    * expected commit (with the default 0, do not run vacuum concurrently
+    * with writers). This applies with EXTRA force to SHARDED-manifest
+    * tables: a shard file is written BEFORE the root that references it,
+    * so a graceMs=0 vacuum racing an in-flight commit can reclaim a shard
+    * moments before its root lands — the commit still succeeds but the
+    * version is unreadable. The rule is one rule, not two: vacuum beside
+    * live writers ONLY with graceMs greater than the longest possible
+    * commit duration; graceMs = 0 is for quiesced tables.
+    *
+    * Returns the reclaimed (or, with `dryRun = true`, the reclaimABLE
     * — nothing is touched) file paths, table-root-relative where they
     * live under it. Dry run is the operator's pre-flight: the same
     * retention/tag/grace/orphan rules decide the set either way.
@@ -5035,123 +4835,56 @@ object Merge {
       dryRun: Boolean = false): Seq[String] = {
     require(keepVersions >= 1, "must keep >= 1 version")
     val (fs, root) = fsFor(spark, path)
-    val planned = Seq.newBuilder[String]
-    def reclaim(p: Path, recursive: Boolean): Unit = {
-      planned += p.toString.stripPrefix(root.toString).stripPrefix("/")
-      if (!dryRun) { fs.delete(p, recursive); () }
-    }
     val latest = currentVersion(spark, path)
     require(latest >= 0, s"$path has no version log")
     val keepFrom = math.max(0L, latest - keepVersions + 1)
-    // TAGGED versions survive any keepVersions (Iceberg semantics):
-    // their manifests, files, and shards live until the tag is dropped
-    val tagged = taggedVersions(spark, root)
-    val keepSet: Seq[Long] =
-      ((keepFrom to latest) ++ tagged.filter(_ < keepFrom)).sorted
+    val tagged = VersionLog.Tags.versions(fs, tagsPath(root))
     val allVersions = listVersions(spark, root)
-    val allManifests = allVersions
-      .flatMap(v => readManifestOpt(spark, root, v).toSeq)
-    val live = keepSet
-      .flatMap(v => readManifestOpt(spark, root, v).toSeq.flatMap(_.files))
-      .toSet
-    // files some manifest — retained or expired — DID commit: those are
-    // provably superseded history and reclaim under the caller's
-    // graceMs. A file NO manifest ever referenced is either a crash
-    // orphan or a commit IN FLIGHT RIGHT NOW (staged-and-moved, claim
-    // pending) — the two are indistinguishable, so it waits out the
-    // orphan floor instead (the structural fix for the vacuum/live-
-    // writer race: a graceMs=0 vacuum can no longer eat a commit that
-    // is mid-publish). One consequence, deliberately conservative: a
-    // grace-spared file whose last referencing manifest THIS vacuum
-    // deletes reads as never-referenced to the NEXT vacuum and waits
-    // the floor too — reclamation can only ever be delayed, never
-    // early.
-    val everReferenced = allManifests.flatMap(_.files).toSet
-    val now = System.currentTimeMillis()
-    val cutoff = now - graceMs
-    val orphanCutoff = now - math.max(graceMs, orphanGraceMs)
-    listDataFiles(fs, root).filterNot(live).foreach { f =>
+    val all = allVersions.flatMap(v => readManifestOpt(spark, root, v))
+    val kept = ((keepFrom to latest) ++ tagged.filter(_ < keepFrom))
+      .sorted.flatMap(v => readManifestOpt(spark, root, v))
+    val sweep = new VersionLog.Sweep(fs, root, graceMs, orphanGraceMs,
+      dryRun)
+    // (live, ever referenced) names of one file kind
+    def refs(of: Manifest => Seq[String]): (Set[String], Set[String]) =
+      (kept.flatMap(of).toSet, all.flatMap(of).toSet)
+    val (liveData, everData) = refs(_.files)
+    listDataFiles(fs, root).foreach { f =>
       val p = new Path(root, f)
-      val limit = if (everReferenced(f)) cutoff else orphanCutoff
-      if (fs.getFileStatus(p).getModificationTime <= limit)
-        reclaim(p, recursive = false)
+      sweep.offer(p, f, fs.getFileStatus(p).getModificationTime,
+        liveData, everData)
     }
-    allVersions
-      .filter(v => v < keepFrom && !tagged(v)).foreach { v =>
-        reclaim(new Path(logPath(root), s"v$v.json"), recursive = false)
-      }
-    // sharded-manifest tables: reclaim shard files no retained version
-    // references (content addressing means a shard can serve many
-    // versions — it dies only when its last referencing root is gone);
-    // a shard NO root ever referenced is a mid-commit/crash orphan and
-    // waits out the orphan floor like a data file
+    sweep.expire(logPath(root), allVersions, keepFrom, tagged)
+    // content-addressed shards: a shard can serve many versions, so it
+    // dies only when its last referencing root is gone
     val sp = shardsPath(root)
     if (fs.exists(sp)) {
-      val liveShards = keepSet
-        .flatMap(v => readManifestOpt(spark, root, v,
-            resolveShards = false).toSeq
-          .flatMap(_.shardIds.map(_._2)))
-        .toSet
-      val everShards = allManifests.flatMap(_.shardIds.map(_._2)).toSet
-      fs.listStatus(sp)
-        .filterNot(s => liveShards(s.getPath.getName))
-        .filter(s => s.getModificationTime <=
-          (if (everShards(s.getPath.getName)) cutoff else orphanCutoff))
-        .foreach(s => reclaim(s.getPath, recursive = false))
+      val (live, ever) = refs(_.shardIds.map(_._2))
+      fs.listStatus(sp).foreach(st => sweep.offer(st.getPath,
+        st.getPath.getName, st.getModificationTime, live, ever))
     }
-    // deletion-vector sidecars: a DV file lives while any retained
-    // version references it; never-referenced sidecars (a crashed OR
-    // in-flight deleteWhereDV) wait out the orphan floor
-    val dvRoot = new Path(root, "_graft_dv")
-    if (fs.exists(dvRoot)) {
-      val liveDv = keepSet
-        .flatMap(v => readManifestOpt(spark, root, v).toSeq
-          .flatMap(_.dvFiles))
-        .toSet
-      val everDv = allManifests.flatMap(_.dvFiles).toSet
-      fs.listStatus(dvRoot).filter(_.isDirectory).foreach { d =>
-        fs.listStatus(d.getPath).foreach { f =>
-          val rel = s"_graft_dv/${d.getPath.getName}/${f.getPath.getName}"
-          val limit = if (everDv(rel)) cutoff else orphanCutoff
-          if (!liveDv(rel) && f.getModificationTime <= limit)
-            reclaim(f.getPath, recursive = false)
+    // sidecar trees `<dir>/<commit>/<file>`, swept by their root-relative
+    // name; a commit dir left empty goes too
+    def sidecars(dir: String, of: Manifest => Seq[String]): Unit = {
+      val top = new Path(root, dir)
+      if (fs.exists(top)) {
+        val (live, ever) = refs(of)
+        fs.listStatus(top).filter(_.isDirectory).foreach { d =>
+          fs.listStatus(d.getPath).foreach { f =>
+            sweep.offer(f.getPath,
+              s"$dir/${d.getPath.getName}/${f.getPath.getName}",
+              f.getModificationTime, live, ever)
+          }
+          if (!dryRun && fs.listStatus(d.getPath).isEmpty)
+            fs.delete(d.getPath, true)
         }
-        if (!dryRun && fs.listStatus(d.getPath).isEmpty)
-          fs.delete(d.getPath, true)
       }
     }
-    // external bloom sidecars: live while any retained version's stats
-    // reference them; never-referenced files (a crashed or in-flight
-    // commit) wait out the orphan floor — same shape as DV sidecars
-    val bloomRoot = new Path(root, "_graft_bloom")
-    if (fs.exists(bloomRoot)) {
-      def refsOf(m: Manifest): Seq[String] = m.stats.flatMap(_.bloom)
-        .filter(Skipping.isBloomRef)
-        .map(_.stripPrefix(Skipping.BloomRefMark))
-      val liveBloom = keepSet
-        .flatMap(v => readManifestOpt(spark, root, v).toSeq
-          .flatMap(refsOf))
-        .toSet
-      val everBloom = allManifests.flatMap(refsOf).toSet
-      fs.listStatus(bloomRoot).filter(_.isDirectory).foreach { d =>
-        fs.listStatus(d.getPath).foreach { f =>
-          val rel =
-            s"_graft_bloom/${d.getPath.getName}/${f.getPath.getName}"
-          val limit = if (everBloom(rel)) cutoff else orphanCutoff
-          if (!liveBloom(rel) && f.getModificationTime <= limit)
-            reclaim(f.getPath, recursive = false)
-        }
-        if (!dryRun && fs.listStatus(d.getPath).isEmpty)
-          fs.delete(d.getPath, true)
-      }
-    }
-    // staging dirs are never referenced by construction: orphan floor
-    val sr = stagingRoot(root)
-    if (fs.exists(sr))
-      fs.listStatus(sr)
-        .filter(_.getModificationTime <= orphanCutoff)
-        .foreach(d => reclaim(d.getPath, recursive = true))
-    planned.result()
+    sidecars("_graft_dv", _.dvFiles)
+    sidecars("_graft_bloom", _.stats.flatMap(_.bloom)
+      .filter(Skipping.isBloomRef).map(_.stripPrefix(Skipping.BloomRefMark)))
+    sweep.staging(stagingRoot(root))
+    sweep.planned
   }
 
   /** Time-based retention (Delta's `delete retention period` shape):

@@ -11,9 +11,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * This is the Iceberg-REST-catalog move (Delta lacks it): each member
   * table keeps its own versioned manifest log exactly as before, and a
   * CATALOG LOG above them pins, per catalog version, the table version
-  * every member is at. The catalog commit — one create-if-absent JSON
-  * claim ([[TxLog.claimVersion]], the same atomic point Merge manifests
-  * use) — is the transaction's single publication event:
+  * every member is at. The catalog log runs the shared [[VersionLog]]
+  * protocol (claim, validated memoized read, retry loop, tags, sweep);
+  * the catalog commit — one create-if-absent claim of `v{N}.json` — is
+  * the transaction's single publication event:
   *
   *   - readers that resolve through the catalog ([[readTable]]) read
   *     each member AT ITS PINNED VERSION; since pinned manifests are
@@ -34,7 +35,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * CONTIGUOUSLY. An op that returns any other version proves a foreign
   * commit slipped under it — the published pin would smuggle that
   * foreign (possibly half-transacted) history into the catalog — so the
-  * attempt is abandoned and redone from fresh pins ([[StaleAttempt]]).
+  * attempt is abandoned and redone from fresh pins (a lost race).
   * With that check, a catalog version can only ever pin `pin-content +
   * exactly this transaction's ops`, which is serializability: racing
   * transacts are ordered by who wins the catalog claim; the loser
@@ -117,11 +118,6 @@ object TableCatalog {
   @volatile private[graft] var catFence: () => Unit = () => ()
   @volatile private[graft] var opFence: String => Unit = _ => ()
 
-  /** A foreign Merge commit interleaved under this attempt's table ops —
-    * publishing would leak un-cataloged history; redo from fresh pins.
-    */
-  private final class StaleAttempt extends Exception
-
   private def logDir(root: Path) = new Path(root, "_cat_log")
 
   private def fsFor(spark: SparkSession, root: String): (FileSystem, Path) = {
@@ -129,7 +125,7 @@ object TableCatalog {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def body(s: CatState): Array[Byte] = {
+  private[sources] def body(s: CatState): Array[Byte] = {
     val pins = s.pins.toSeq.sortBy(_._1).map { case (name, p) =>
       s""""${JsonEscape(name)}":{"path":"${JsonEscape(p.path)}",""" +
         s""""version":${p.version},"kind":"${JsonEscape(p.kind)}"}"""
@@ -142,19 +138,7 @@ object TableCatalog {
       .getBytes("UTF-8")
   }
 
-  /** Parse one catalog manifest; None when missing/truncated (a crashed
-    * claim) — readers walk back past it, mirroring Merge.
-    */
-  private def readState(spark: SparkSession, root: Path,
-      version: Long): Option[CatState] = {
-    val p = new Path(logDir(root), s"v$version.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val text =
-      try {
-        val in = fs.open(p)
-        try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      } catch { case _: java.io.IOException => return None }
+  private def parse(text: String): Option[CatState] = {
     import org.json4s._
     scala.util.Try(org.json4s.jackson.JsonMethods.parse(text)).toOption
       .flatMap { j =>
@@ -192,12 +176,34 @@ object TableCatalog {
       }
   }
 
-  private def listVersions(fs: FileSystem, root: Path): Seq[Long] = {
-    val dir = logDir(root)
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(_.stripPrefix("v").stripSuffix(".json").toLong).toSeq.sorted
+  private val states = new VersionLog.Memo[CatState]
+
+  /** One catalog manifest; None when missing/truncated (a crashed
+    * claim) — readers walk back past it.
+    */
+  private def readState(fs: FileSystem, root: Path,
+      version: Long): Option[CatState] =
+    states.read(fs, logDir(root), version)(parse)
+
+  private def listVersions(fs: FileSystem, root: Path): Seq[Long] =
+    VersionLog.versions(fs, logDir(root))
+
+  private def claim(fs: FileSystem, root: Path, s: CatState): Unit =
+    VersionLog.claim(fs, VersionLog.versionFile(logDir(root), s.version),
+      body(s))
+
+  /** One metadata commit on top of the current state, retried on a lost
+    * claim: `next` builds the child of the state it is given.
+    */
+  private def commitRetrying(spark: SparkSession, catRoot: String,
+      maxRetries: Int, op: String)(next: CatState => CatState): CatState = {
+    val (fs, root) = fsFor(spark, catRoot)
+    VersionLog.retrying(maxRetries,
+        n => s"$op lost the catalog race $n times at $catRoot") { _ =>
+      val s = next(state(spark, catRoot))
+      claim(fs, root, s)
+      s
+    }
   }
 
   /** Register a catalog over `tables` (name -> Merge table path), each
@@ -227,16 +233,14 @@ object TableCatalog {
       name -> Pin(path, v, kind = "idx")
     }
     val s = CatState(0L, -1L, System.currentTimeMillis(), "create", pins)
-    TxLog.claimVersion(fs, logDir(root), 0L, body(s))
+    claim(fs, root, s)
     s
   }
 
   /** Newest committed catalog state, walking back past torn claims. */
   def state(spark: SparkSession, catRoot: String): CatState = {
     val (fs, root) = fsFor(spark, catRoot)
-    listVersions(fs, root).reverse.iterator
-      .map(v => readState(spark, root, v))
-      .collectFirst { case Some(s) => s }
+    VersionLog.newest(listVersions(fs, root))(readState(fs, root, _))
       .getOrElse(throw new IllegalArgumentException(
         s"$catRoot holds no catalog log — create it first"))
   }
@@ -244,8 +248,8 @@ object TableCatalog {
   /** The catalog state at an exact version (catalog time travel). */
   def stateAt(spark: SparkSession, catRoot: String,
       version: Long): CatState = {
-    val (_, root) = fsFor(spark, catRoot)
-    readState(spark, root, version).getOrElse(
+    val (fs, root) = fsFor(spark, catRoot)
+    readState(fs, root, version).getOrElse(
       throw new IllegalArgumentException(
         s"$catRoot has no committed catalog version $version"))
   }
@@ -258,7 +262,7 @@ object TableCatalog {
       timestampMillis: Long): CatState = {
     val (fs, root) = fsFor(spark, catRoot)
     listVersions(fs, root).reverse.iterator
-      .flatMap(v => readState(spark, root, v))
+      .flatMap(v => readState(fs, root, v))
       .find(_.ts <= timestampMillis)
       .getOrElse(throw new IllegalArgumentException(
         s"timestamp $timestampMillis predates $catRoot's retained history"))
@@ -318,7 +322,7 @@ object TableCatalog {
       appId: String): Option[Long] = {
     val (fs, root) = fsFor(spark, catRoot)
     val batches = listVersions(fs, root)
-      .flatMap(v => readState(spark, root, v))
+      .flatMap(v => readState(fs, root, v))
       .flatMap(_.txn)
       .collect { case (a, b) if a == appId => b }
     if (batches.isEmpty) None else Some(batches.max)
@@ -359,8 +363,9 @@ object TableCatalog {
       maxRetries: Int = 5, opName: String = "transact",
       txn: Option[(String, Long)] = None): CatState = {
     val (fs, root) = fsFor(spark, catRoot)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    VersionLog.retrying(maxRetries,
+        n => s"transaction lost the catalog race $n times at $catRoot — " +
+          "giving up; retry with less write contention") { _ =>
       val st = state(spark, catRoot)
       // exactly-once replay check BEFORE building the ops (r19, the
       // applyChanges discipline): `opsOf` typically probes indexes /
@@ -426,9 +431,10 @@ object TableCatalog {
             case i: TxnIndex => i.run(spark, pin.path)
           }
           // a no-op (empty batch / no matching rows) commits nothing and
-          // reports the unchanged version — contiguity allows both
+          // reports the unchanged version — contiguity allows both; any
+          // other version means a foreign commit won the member's log
           if (got != expected && got != expected + 1)
-            throw new StaleAttempt
+            throw new LostRace(new Path(pin.path))
           newV(op.table) = got
           opFence(op.table)
         }
@@ -437,22 +443,18 @@ object TableCatalog {
           st.pins ++ touched.map(t =>
             t -> st.pins(t).copy(version = newV(t))), txn)
         catFence()
-        TxLog.claimVersion(fs, logDir(root), next.version, body(next))
-        return next
+        claim(fs, root, next)
+        next
       } catch {
-        // lost the catalog claim, a foreign commit interleaved, or a
-        // member-level claim race (inner maxRetries = 0): this attempt's
+        // a member-level claim race (inner maxRetries = 0) loses this
+        // attempt like a lost catalog claim or a foreign commit: its
         // table versions stay as orphans (invisible through the catalog;
         // the retry's restore discards them) — redo from fresh pins
-        case _: TxLog.LostRace | _: StaleAttempt => attempt += 1
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("commit race") =>
-          attempt += 1
+        case _: RetriesExhausted =>
+          throw new LostRace(VersionLog.versionFile(logDir(root),
+            st.version + 1))
       }
     }
-    throw new IllegalStateException(
-      s"transaction lost the catalog race $attempt times at $catRoot — " +
-      "giving up; retry with less write contention")
   }
 
   /** Streaming sink: apply each micro-batch as ONE exactly-once
@@ -497,26 +499,18 @@ object TableCatalog {
       path: String, kind: String = "merge",
       maxRetries: Int = 5): CatState = {
     require(kind == "merge" || kind == "idx", s"unknown member kind $kind")
-    val (fs, root) = fsFor(spark, catRoot)
     val v = kind match {
       case "idx" => TxLog.currentVersion(spark, path)
       case _ => Merge.currentVersion(spark, path)
     }
     require(v >= 0, s"member $name at $path has no $kind version log")
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val st = state(spark, catRoot)
+    commitRetrying(spark, catRoot, maxRetries, "addMember") { st =>
       require(!st.pins.contains(name),
         s"$name is already a member of the catalog at $catRoot")
-      val next = CatState(st.version + 1, st.version,
+      CatState(st.version + 1, st.version,
         math.max(st.ts + 1, System.currentTimeMillis()), "addMember",
         st.pins + (name -> Pin(path, v, kind)))
-      try { TxLog.claimVersion(fs, logDir(root), next.version, body(next))
-            return next }
-      catch { case _: TxLog.LostRace => attempt += 1 }
     }
-    throw new IllegalStateException(
-      s"addMember lost the catalog race $attempt times at $catRoot")
   }
 
   /** Drop a member from the catalog (a catalog commit). The member's
@@ -525,24 +519,15 @@ object TableCatalog {
     * its historical pins.
     */
   def removeMember(spark: SparkSession, catRoot: String, name: String,
-      maxRetries: Int = 5): CatState = {
-    val (fs, root) = fsFor(spark, catRoot)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val st = state(spark, catRoot)
+      maxRetries: Int = 5): CatState =
+    commitRetrying(spark, catRoot, maxRetries, "removeMember") { st =>
       require(st.pins.contains(name),
         s"$name is not a member of the catalog at $catRoot")
       require(st.pins.size > 1, "a catalog cannot drop its last member")
-      val next = CatState(st.version + 1, st.version,
+      CatState(st.version + 1, st.version,
         math.max(st.ts + 1, System.currentTimeMillis()), "removeMember",
         st.pins - name)
-      try { TxLog.claimVersion(fs, logDir(root), next.version, body(next))
-            return next }
-      catch { case _: TxLog.LostRace => attempt += 1 }
     }
-    throw new IllegalStateException(
-      s"removeMember lost the catalog race $attempt times at $catRoot")
-  }
 
   /** Roll every member whose table log has advanced past its pin back to
     * the pin (zero-copy restores): explicit cleanup of crashed
@@ -574,7 +559,7 @@ object TableCatalog {
   def history(spark: SparkSession, catRoot: String): DataFrame = {
     val (fs, root) = fsFor(spark, catRoot)
     val rows = listVersions(fs, root).reverse
-      .flatMap(v => readState(spark, root, v))
+      .flatMap(v => readState(fs, root, v))
       .flatMap(s => s.pins.toSeq.sortBy(_._1).map { case (name, p) =>
         (s.version, s.parent, s.ts, s.op, name, p.version, p.kind)
       })
@@ -583,62 +568,33 @@ object TableCatalog {
       "table_version", "kind")
   }
 
-  /** Reclaim history: drop catalog manifests older than the newest
-    * `keepCatalogVersions`, then vacuum every member keeping AT LEAST
-    * every table version still pinned by a retained catalog state — a
-    * member vacuum sized from the member log alone could reclaim a
-    * pinned version's files and break the catalog's snapshots, so size
-    * it here, from the pins. `graceMs` as in [[Merge.vacuum]]: beside
-    * live transactions, set it above the longest expected commit.
-    */
   // ------------------------------------------------- catalog tags
 
   private def tagsDir(root: Path) = new Path(logDir(root), "tags")
-
-  private def requireValidTag(tag: String): Unit =
-    require(tag.nonEmpty &&
-      tag.forall(c => c.isLetterOrDigit || c == '.' || c == '_' ||
-        c == '-'),
-      s"tag names are [A-Za-z0-9._-]+, got '$tag'")
 
   /** RELEASE TAGS at the catalog level: an immutable name for one
     * catalog version — which pins EVERY member's version at once, so
     * `readTable(..., Some(stateAtTag(...)))` is a named, permanent cross-table
     * snapshot ("the corpus + its dedup index + the stats rollup, as
-    * shipped in rel-2026-08"). Same discipline as [[Merge.tagVersion]]:
-    * create-if-absent, never repointed (delete and re-create to move),
-    * and [[vacuum]] keeps a tagged catalog version AND everything its
-    * pins reference alive until the tag is dropped.
+    * shipped in rel-2026-08"). The [[VersionLog.Tags]] store, as for
+    * [[Merge.tagVersion]]: created through the claim, never repointed
+    * (delete and re-create to move), and [[vacuum]] keeps a tagged
+    * catalog version AND everything its pins reference alive until the
+    * tag is dropped.
     */
   def tag(spark: SparkSession, catRoot: String, name: String,
       version: Long): Unit = {
-    requireValidTag(name)
+    VersionLog.Tags.requireValid(name)
     val (fs, root) = fsFor(spark, catRoot)
     stateAt(spark, catRoot, version) // must exist and be retained
-    val dir = tagsDir(root)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val f = new Path(dir, name)
-    try {
-      val out = fs.create(f, false)
-      try out.write(version.toString.getBytes("UTF-8"))
-      finally out.close()
-    } catch {
-      case e: java.io.IOException =>
-        if (fs.exists(f)) throw new IllegalArgumentException(
-          s"tag '$name' already exists on $catRoot (tags are immutable " +
-          "— deleteTag first to repoint)")
-        else throw e
-    }
+    VersionLog.Tags.create(fs, tagsDir(root), name, version, catRoot)
   }
 
   /** The catalog version a tag names; throws on an unknown tag. */
   def tagVersionOf(spark: SparkSession, catRoot: String,
       name: String): Long = {
-    requireValidTag(name)
     val (fs, root) = fsFor(spark, catRoot)
-    val f = new Path(tagsDir(root), name)
-    require(fs.exists(f), s"no tag '$name' on $catRoot")
-    Merge.readSmallUtf8(fs, f).trim.toLong
+    VersionLog.Tags.versionOf(fs, tagsDir(root), name, catRoot)
   }
 
   /** The pinned cross-table snapshot a tag names. */
@@ -650,31 +606,24 @@ object TableCatalog {
   def tags(spark: SparkSession, catRoot: String): DataFrame = {
     import spark.implicits._
     val (fs, root) = fsFor(spark, catRoot)
-    val dir = tagsDir(root)
-    val rows =
-      if (!fs.exists(dir)) Seq.empty[(String, Long)]
-      else fs.listStatus(dir).toSeq.map(_.getPath.getName).sorted
-        .map(t => t -> tagVersionOf(spark, catRoot, t))
-    rows.toDF("tag", "version")
+    VersionLog.Tags.list(fs, tagsDir(root)).toDF("tag", "version")
   }
 
   /** Drop a tag (its catalog version becomes vacuumable again). */
   def deleteTag(spark: SparkSession, catRoot: String,
       name: String): Unit = {
-    requireValidTag(name)
     val (fs, root) = fsFor(spark, catRoot)
-    val f = new Path(tagsDir(root), name)
-    require(fs.exists(f), s"no tag '$name' on $catRoot")
-    fs.delete(f, false)
+    VersionLog.Tags.delete(fs, tagsDir(root), name, catRoot)
   }
 
-  private def taggedVersions(fs: FileSystem, root: Path): Set[Long] = {
-    val dir = tagsDir(root)
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).toSeq
-      .map(s => Merge.readSmallUtf8(fs, s.getPath).trim.toLong).toSet
-  }
-
+  /** Reclaim history: drop catalog manifests older than the newest
+    * `keepCatalogVersions`, then vacuum every member keeping AT LEAST
+    * every table version still pinned by a retained catalog state — a
+    * member vacuum sized from the member log alone could reclaim a
+    * pinned version's files and break the catalog's snapshots, so size
+    * it here, from the pins. `graceMs` as in [[Merge.vacuum]]: beside
+    * live transactions, set it above the longest expected commit.
+    */
   def vacuum(spark: SparkSession, catRoot: String,
       keepCatalogVersions: Int = 1, graceMs: Long = 0L): Unit = {
     require(keepCatalogVersions >= 1, "must keep >= 1 catalog version")
@@ -686,10 +635,10 @@ object TableCatalog {
     // tagged catalog versions survive any keepCatalogVersions: their
     // state files stay, and their pins join the per-member floor below
     // so member vacuums never reclaim what a tagged snapshot reads
-    val tagged = taggedVersions(fs, root)
+    val tagged = VersionLog.Tags.versions(fs, tagsDir(root))
     val retained =
       ((keepFrom to latest) ++ tagged.filter(_ < keepFrom)).sorted
-      .flatMap(v => readState(spark, root, v))
+      .flatMap(v => readState(fs, root, v))
     val minPin: Map[String, (Pin, Long)] = retained
       .flatMap(_.pins.toSeq)
       .groupBy(_._1)
@@ -714,8 +663,7 @@ object TableCatalog {
             graceMs = graceMs)
       }
     }
-    versions.filter(v => v < keepFrom && !tagged(v)).foreach { v =>
-      fs.delete(new Path(logDir(root), s"v$v.json"), false)
-    }
+    new VersionLog.Sweep(fs, root, 0L, 0L, dryRun = false)
+      .expire(logDir(root), versions, keepFrom, tagged)
   }
 }

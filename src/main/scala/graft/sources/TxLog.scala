@@ -29,13 +29,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     table. Recovery is "nothing": the next reader resolves the last
   *     good manifest; the next vacuum sweeps the orphans.
   *
-  * Concurrency: the manifest claim is create-if-absent (hard link on the
-  * local filesystem — atomic AND all-or-nothing; namenode/conditional-put
-  * atomicity on HDFS/object stores), so two writers racing to v{N+1}
-  * serialize: the loser gets [[LostRace]] and must re-resolve and retry
-  * ([[commitRetrying]] wraps the loop). Readers validate manifests and
-  * walk back past a claimed-but-unwritten one, mirroring
-  * `Merge.currentVersion`.
+  * Concurrency: commits go through the shared [[VersionLog]] protocol —
+  * the create-if-absent claim of `v{N}.json`, so two writers racing to
+  * v{N+1} serialize (the loser gets [[LostRace]]; [[commitRetrying]]
+  * wraps the retry loop), and the validated, memoized read that walks
+  * back past a claimed-but-unwritten manifest.
   *
   * At 100 TB the cost model matches Merge's: a commit writes one small
   * JSON (O(index files) entries — index tables are a compressed fraction
@@ -48,16 +46,18 @@ object TxLog {
   /** One committed index state: for each named sub-table, the relative
     * paths (under the index root) of the parquet files that constitute
     * it. A table absent from the map (or mapped to Nil) is empty at
-    * this version.
+    * this version. `txn` is an optional (appId, batchId) stamp riding the
+    * same claim (IncrementalAgg records the table version its state is
+    * synced to); manifests written without it read as None.
     */
   final case class State(version: Long, parent: Long,
-      tables: Map[String, Seq[String]])
+      tables: Map[String, Seq[String]],
+      txn: Option[(String, Long)] = None)
 
   /** The create-if-absent claim found the version already committed —
     * re-resolve the log and retry against the new parent.
     */
-  final class LostRace(version: Long)
-    extends Exception(s"lost index-log commit race for v$version")
+  type LostRace = graft.sources.LostRace
 
   // test seam: invoked immediately before each commit attempt so a spec
   // can inject a conflicting commit deterministically
@@ -71,67 +71,35 @@ object TxLog {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def body(s: State): Array[Byte] = {
+  private[sources] def body(s: State): Array[Byte] = {
     val tables = s.tables.toSeq.sortBy(_._1).map { case (name, files) =>
       s""""${JsonEscape(name)}":""" +
         files.sorted.map(f => "\"" + JsonEscape(f) + "\"")
           .mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    val txnField = s.txn.map { case (app, batch) =>
+      s""","txnApp":"${JsonEscape(app)}","txnBatch":$batch"""
+    }.getOrElse("")
     (s"""{"version":${s.version},"parent":${s.parent},""" +
-      s""""tables":$tables}""").getBytes("UTF-8")
+      s""""tables":$tables$txnField}""").getBytes("UTF-8")
   }
 
-  /** Parsed-state memo (the [[Merge]] manifest memo, mirrored).
-    * Committed index manifests are IMMUTABLE under the create-if-absent
-    * protocol, so a successful parse is reusable; (mtime, length) guard
-    * the only way bytes could legitimately change under the same
-    * (root, version) key — an index root wholesale rebuilt at the same
-    * path. Probes resolve [[currentState]] per query (a walk over the
-    * log tail), so without the memo every probe re-reads and re-parses
-    * JSON it has seen before; with it, resolution is one getFileStatus
-    * per version. Bounded; whole-map eviction.
+  /** Parsed states; probes resolve [[currentState]] per query, so a
+    * memo hit keeps that to one getFileStatus per version.
     */
-  private val stateCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, Long), State]
-  private val maxStateCacheEntries = 8192
+  private val states = new VersionLog.Memo[State]
 
   /** Purge memoized states under `root` — call when an index is
-    * wholesale REBUILT at the same path (delete + re-commit v0): the
-    * (mtime, length) guard can collide across a same-millisecond
-    * rebuild whose manifest bytes have identical length (staged file
-    * names are fixed-width UUIDs), so the rebuild site purges
-    * explicitly, exactly as [[Merge]]'s writeKeyed purges its memo.
+    * wholesale REBUILT at the same path (delete + re-commit v0), exactly
+    * as [[Merge]]'s writeKeyed purges its memo.
     */
-  def dropCachedStates(root: String): Unit = {
-    val prefix = new Path(root).toString
-    // exact root or a path COMPONENT under it — a bare startsWith
-    // would also evict the sibling `/a/bc` when purging `/a/b`
-    // (over-purge: benign but wasteful)
-    stateCache.keySet.removeIf(k =>
-      k._1 == prefix || k._1.startsWith(prefix + "/"))
-  }
+  def dropCachedStates(root: String): Unit = states.purge(new Path(root))
 
-  /** Parse one manifest; None when missing/truncated (a crashed claim). */
-  private def readState(spark: SparkSession, root: Path,
-      version: Long): Option[State] = {
-    val p = new Path(logDir(root), s"v$version.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stat =
-      try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val cacheKey = (root.toString, version,
-      stat.getModificationTime, stat.getLen)
-    val cached = stateCache.get(cacheKey)
-    if (cached != null) return Some(cached)
-    val text =
-      try {
-        val in = fs.open(p)
-        try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      } catch { case _: java.io.IOException => return None }
+  private def parse(text: String): Option[State] = {
     import org.json4s._
     scala.util.Try(org.json4s.jackson.JsonMethods.parse(text)).toOption
       .flatMap { j =>
-        def num(f: String): Option[Long] = j \ f match {
+        def num(v: JValue): Option[Long] = v match {
           case JInt(n) => Some(n.toLong); case JLong(n) => Some(n)
           case _ => None
         }
@@ -148,33 +116,27 @@ object TxLog {
             else Some(parsed.flatten.toMap)
           case _ => None
         }
-        for (v <- num("version"); p <- num("parent"); t <- tables)
-          yield State(v, p, t)
-      } match {
-        case some @ Some(s) =>
-          if (stateCache.size >= maxStateCacheEntries) stateCache.clear()
-          stateCache.put(cacheKey, s)
-          some
-        case None => None
+        val txn = (j \ "txnApp", num(j \ "txnBatch")) match {
+          case (JString(a), Some(b)) => Some((a, b))
+          case _ => None
+        }
+        for (v <- num(j \ "version"); p <- num(j \ "parent"); t <- tables)
+          yield State(v, p, t, txn)
       }
   }
 
-  private def listVersions(fs: FileSystem, root: Path): Seq[Long] = {
-    val dir = logDir(root)
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(_.stripPrefix("v").stripSuffix(".json").toLong).toSeq.sorted
-  }
+  /** One manifest; None when missing/truncated (a crashed claim). */
+  private def readState(fs: FileSystem, root: Path,
+      version: Long): Option[State] =
+    states.read(fs, logDir(root), version)(parse)
 
   /** Newest COMMITTED state, walking back past torn manifests; None when
     * the root carries no log (a pre-protocol layout or a fresh path).
     */
   def currentState(spark: SparkSession, root: String): Option[State] = {
     val (fs, r) = fsFor(spark, root)
-    listVersions(fs, r).reverse.iterator
-      .map(v => readState(spark, r, v))
-      .collectFirst { case Some(s) => s }
+    VersionLog.newest(VersionLog.versions(fs, logDir(r)))(
+      readState(fs, r, _))
   }
 
   /** Newest committed version; -1 when the root carries no log. */
@@ -187,8 +149,8 @@ object TxLog {
     */
   def stateAt(spark: SparkSession, root: String,
       version: Long): Option[State] = {
-    val (_, r) = fsFor(spark, root)
-    readState(spark, r, version)
+    val (fs, r) = fsFor(spark, root)
+    readState(fs, r, version)
   }
 
   /** Zero-copy rollback (the index-side [[Merge.restore]]): commit the
@@ -202,54 +164,26 @@ object TxLog {
     val target = stateAt(spark, root, version).getOrElse(
       throw new IllegalArgumentException(
         s"$root has no committed index version $version"))
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    VersionLog.retrying(maxRetries,
+        n => s"index restore lost the commit race $n times at $root") { _ =>
       val cur = currentState(spark, root).getOrElse(
         throw new IllegalStateException(s"$root lost its log"))
-      if (cur.version == version) return cur.version
-      val next = State(cur.version + 1, cur.version, target.tables)
-      try { commit(spark, root, next); return next.version }
-      catch { case _: LostRace => attempt += 1 }
+      if (cur.version == version) cur.version
+      else {
+        commit(spark, root,
+          State(cur.version + 1, cur.version, target.tables, target.txn))
+        cur.version + 1
+      }
     }
-    throw new IllegalStateException(
-      s"index restore lost the commit race $attempt times at $root")
   }
 
-  /** Atomic create-if-absent commit of `s` (the Merge manifest claim):
+  /** Atomic create-if-absent commit of `s` (the [[VersionLog]] claim):
     * throws [[LostRace]] when v{s.version} is already claimed.
     */
   def commit(spark: SparkSession, root: String, s: State): Unit = {
     val (fs, r) = fsFor(spark, root)
-    claimVersion(fs, logDir(r), s.version, body(s))
-  }
-
-  /** The create-if-absent version claim itself, shared with every other
-    * versioned log in the engine ([[TableCatalog]]'s catalog log): write
-    * `bytes` as `<dir>/v<version>.json` atomically-and-all-or-nothing,
-    * throwing [[LostRace]] when the version is already claimed.
-    */
-  private[sources] def claimVersion(fs: FileSystem, dir: Path,
-      version: Long, bytes: Array[Byte]): Unit = {
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val target = new Path(dir, s"v$version.json")
-    if ("file" == target.getFileSystem(fs.getConf).getScheme) {
-      // local fs: create(overwrite=false) is check-then-create; hard-link
-      // a fully written temp file instead — atomic and all-or-nothing
-      val tmp = java.nio.file.Paths.get(dir.toUri.getPath,
-        s".tmp_v${version}_${java.util.UUID.randomUUID}.json")
-      java.nio.file.Files.write(tmp, bytes)
-      try java.nio.file.Files.createLink(
-        java.nio.file.Paths.get(target.toUri.getPath), tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new LostRace(version)
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    } else {
-      val out =
-        try fs.create(target, false)
-        catch { case _: java.io.IOException => throw new LostRace(version) }
-      try out.write(bytes) finally out.close()
-    }
+    VersionLog.claim(fs, VersionLog.versionFile(logDir(r), s.version),
+      body(s))
   }
 
   /** Optimistic-concurrency loop: resolve the current state, build the
@@ -259,19 +193,38 @@ object TxLog {
     * parent+1, so steps only describe the table contents.
     */
   def commitRetrying(spark: SparkSession, root: String, maxRetries: Int = 5)
-      (step: Option[State] => Map[String, Seq[String]]): State = {
-    var attempt = 0
-    while (attempt <= maxRetries) {
+      (step: Option[State] => Map[String, Seq[String]]): State =
+    VersionLog.retrying(maxRetries,
+        n => s"index commit lost the race $n times at $root — giving up") {
+        _ =>
       val parent = currentState(spark, root)
       val next = State(parent.map(_.version + 1).getOrElse(0L),
         parent.map(_.version).getOrElse(-1L), step(parent))
       commitFence()
-      try { commit(spark, root, next); return next }
-      catch { case _: LostRace => attempt += 1 }
+      commit(spark, root, next)
+      next
     }
-    throw new IllegalStateException(
-      s"index commit lost the race $attempt times at $root — giving up")
-  }
+
+  /** The REWRITE form of [[commitRetrying]] (index compactions): `stage`
+    * writes this attempt's files from the resolved parent and returns
+    * (the tables to commit, the files it staged). A lost race deletes
+    * exactly those files — never the winner's — and redoes the rewrite
+    * against the new parent, so nothing the winner added is lost.
+    */
+  private[graft] def rewriteRetrying(spark: SparkSession, root: String,
+      maxRetries: Int, op: String)
+      (stage: Option[State] => (Map[String, Seq[String]], Seq[String]))
+      : State =
+    VersionLog.retrying(maxRetries,
+        n => s"$op lost the commit race $n times at $root") { _ =>
+      val parent = currentState(spark, root)
+      val parentV = parent.map(_.version).getOrElse(-1L)
+      val (tables, staged) = stage(parent)
+      val next = State(parentV + 1, parentV, tables)
+      try commit(spark, root, next)
+      catch { case e: LostRace => deleteFiles(spark, root, staged); throw e }
+      next
+    }
 
   /** Write `df`'s rows as new parquet files under `<root>/<table>/` via
     * a job-scoped staging dir + rename, returning the EXACT relative
@@ -353,24 +306,30 @@ object TxLog {
     * typing at first read — so partitioned reads key on a digest of the
     * full file list instead (one inference per distinct state, still a
     * hit for the common repeated-resolution of one state per batch).
-    * Bounded: cleared past a size cap (re-inference is correct, just
-    * slower), so a long session cannot grow it without limit.
+    * Bounded by the [[VersionLog.Bounded]] eviction rule (re-inference
+    * is correct, just slower), so a long session cannot grow it.
     */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.types.StructType]
-  private val SchemaMemoCap = 4096
+  private val schemaMemo =
+    new VersionLog.Bounded[(String, String),
+      org.apache.spark.sql.types.StructType](4096)
+
+  /** The memo key of a read: (head file, "") for a plain one; for a
+    * partitioned one, a digest of the full file list with a NUL between
+    * paths (no path contains NUL, so `["ab","c"]` and `["a","bc"]`
+    * differ) paired with the base path.
+    */
+  private[sources] def schemaKey(paths: Seq[String],
+      basePath: Option[String]): (String, String) = basePath match {
+    case None => (paths.head, "")
+    case Some(b) =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      paths.foreach { p => md.update(p.getBytes("UTF-8")); md.update(0: Byte) }
+      (java.util.Base64.getEncoder.encodeToString(md.digest()), b)
+  }
 
   private def readWithMemo(spark: SparkSession, paths: Seq[String],
       basePath: Option[String]): DataFrame = {
-    val key = basePath match {
-      case None => (paths.head, "")
-      case Some(b) =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        paths.foreach(p => md.update(p.getBytes("UTF-8")))
-        (java.util.Base64.getEncoder.encodeToString(md.digest()), b)
-    }
-    if (schemaMemo.size > SchemaMemoCap) schemaMemo.clear()
-    val sch = schemaMemo.computeIfAbsent(key, _ =>
+    val sch = schemaMemo.getOrElseUpdate(schemaKey(paths, basePath))(
       basePath.foldLeft(spark.read) {
         (r, b) => r.option("basePath", b)
       }.parquet(paths: _*).schema)
@@ -410,11 +369,10 @@ object TxLog {
 
   /** Delete files no retained version references (compaction leftovers
     * and crash orphans), manifests older than the horizon, and stale
-    * staging dirs. `graceMs` spares recently-modified files — when
-    * vacuuming beside live writers set it above the longest expected
-    * commit, exactly as with [[Merge.vacuum]].
-    */
-  /** Returns the reclaimed (or, with `dryRun = true`, the reclaimABLE
+    * staging dirs, by the [[VersionLog.Sweep]] rule. `graceMs` spares
+    * recently-modified files — when vacuuming beside live writers set it
+    * above the longest expected commit, exactly as with [[Merge.vacuum]].
+    * Returns the reclaimed (or, with `dryRun = true`, the reclaimABLE
     * — nothing touched) root-relative paths, mirroring
     * [[Merge.vacuum]]'s pre-flight contract.
     */
@@ -424,58 +382,34 @@ object TxLog {
       dryRun: Boolean = false): Seq[String] = {
     require(keepVersions >= 1, "must keep >= 1 version")
     val (fs, r) = fsFor(spark, root)
-    val planned = Seq.newBuilder[String]
-    def reclaim(p: Path, recursive: Boolean): Unit = {
-      planned += p.toString.stripPrefix(r.toString).stripPrefix("/")
-      if (!dryRun) { fs.delete(p, recursive); () }
-    }
-    val versions = listVersions(fs, r)
+    val versions = VersionLog.versions(fs, logDir(r))
     if (versions.isEmpty) return Seq.empty
     val latest = versions.max
     val keepFrom = math.max(0L, latest - keepVersions + 1)
-    val states = versions
-      .map(v => v -> readState(spark, r, v)).toMap
-    val live = (keepFrom to latest)
-      .flatMap(v => states.getOrElse(v, None).toSeq.flatMap(_.tables.values))
-      .flatten.toSet
-    // the Merge.vacuum distinction: a file some manifest committed is
-    // superseded history (caller's graceMs); a file NO manifest ever
-    // referenced is a crash orphan OR an append mid-publish — it waits
-    // out the orphan floor, so a graceMs=0 vacuum cannot eat a commit
-    // between its stage-and-move and its claim
-    val everReferenced = states.values.flatten
-      .flatMap(_.tables.values).flatten.toSet
-    val now = System.currentTimeMillis()
-    val cutoff = now - graceMs
-    val orphanCutoff = now - math.max(graceMs, orphanGraceMs)
+    val states = versions.map(v => v -> readState(fs, r, v)).toMap
+    def files(ss: Iterable[State]) = ss.flatMap(_.tables.values.flatten).toSet
+    val live = files((keepFrom to latest).flatMap(states.getOrElse(_, None)))
+    val ever = files(states.values.flatten)
+    val sweep = new VersionLog.Sweep(fs, r, graceMs, orphanGraceMs, dryRun)
     tables.foreach { t =>
       val dir = new Path(r, t)
       if (fs.exists(dir)) {
         // walk partition subdirs too (`cell=N/part-*.parquet`)
-        def sweep(d: Path, rel: String): Unit =
+        def walk(d: Path, rel: String): Unit =
           fs.listStatus(d).foreach { st =>
             val name = st.getPath.getName
             if (st.isDirectory && name.contains("="))
-              sweep(st.getPath, s"$rel$name/")
-            else if (st.isFile && name.endsWith(".parquet") &&
-                !live(s"$t/$rel$name") &&
-                st.getModificationTime <= (if (everReferenced(
-                  s"$t/$rel$name")) cutoff else orphanCutoff))
-              reclaim(st.getPath, recursive = false)
+              walk(st.getPath, s"$rel$name/")
+            else if (st.isFile && name.endsWith(".parquet"))
+              sweep.offer(st.getPath, s"$t/$rel$name",
+                st.getModificationTime, live, ever)
           }
-        sweep(dir, "")
+        walk(dir, "")
       }
     }
-    versions.filter(_ < keepFrom).foreach { v =>
-      reclaim(new Path(logDir(r), s"v$v.json"), recursive = false)
-    }
-    // staging dirs are never referenced by construction: orphan floor
-    val sd = stagingDir(r)
-    if (fs.exists(sd))
-      fs.listStatus(sd)
-        .filter(_.getModificationTime <= orphanCutoff)
-        .foreach(d => reclaim(d.getPath, recursive = true))
-    planned.result()
+    sweep.expire(logDir(r), versions, keepFrom)
+    sweep.staging(stagingDir(r))
+    sweep.planned
   }
 
   /** Delete the exact relative files `rels` (a failed committer cleaning

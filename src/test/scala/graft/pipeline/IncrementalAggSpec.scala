@@ -80,9 +80,9 @@ class IncrementalAggSpec extends SparkSpec {
     assert(r.getAs[Double]("min_v") == 1.0 &&
       r.getAs[Double]("max_v") == 9.0)
     // and the state carries no dirty flag (rebuild would be a no-op scan)
-    val raw = spark.read.parquet(path).collect()(0)
-    assert(!raw.getAs[Boolean]("dirty_min") &&
-      !raw.getAs[Boolean]("dirty_max"))
+    val flags = IncrementalAgg.readWithFlags(spark, path).collect()(0)
+    assert(!flags.getAs[Boolean]("dirty_min") &&
+      !flags.getAs[Boolean]("dirty_max"))
   }
 
   test("reading dirty state fails fast; flags visible via readWithFlags") {
@@ -111,9 +111,8 @@ class IncrementalAggSpec extends SparkSpec {
 
   test("the state pivot survives executor-block loss (durable tmp swap)") {
     // the read->fold->write cycle's window: after the fold is
-    // materialized, before the old state files are replaced. The pivot
-    // lands the new state DURABLY (a hidden tmp dir inside the state
-    // path) before touching any old file, so losing every executor
+    // materialized, before the claim publishes it. The fold stages the
+    // new state DURABLY before the claim, so losing every executor
     // block in that window — the failure that killed the old
     // localCheckpoint pivot — must not lose the update.
     def blowAwayBlocks(): Unit =
@@ -122,15 +121,16 @@ class IncrementalAggSpec extends SparkSpec {
     val delta = Seq(("a", 2.0), ("b", 3.0)).toDF("g", "v")
     val path = fresh("durable")
     IncrementalAgg.init(Seq(("a", 1.0)).toDF("g", "v"), path, Seq("g"), "v")
-    IncrementalAgg.beforeOverwriteHook = blowAwayBlocks
+    IncrementalAgg.beforeClaimHook = blowAwayBlocks
     try IncrementalAgg.update(spark, path, delta, Seq("g"), "v")
-    finally IncrementalAgg.beforeOverwriteHook = () => ()
+    finally IncrementalAgg.beforeClaimHook = () => ()
     val out = IncrementalAgg.read(spark, path).orderBy("g").collect()
     assert(out.map(r => (r.getAs[String]("g"), r.getAs[Long]("cnt"),
       r.getAs[Double]("sum_v"))).toSeq ==
       Seq(("a", 2L, 3.0), ("b", 1L, 3.0)))
-    // the swap cleans its tmp dir up
-    assert(!new java.io.File(path, "._graft_state_tmp").exists())
+    // the fold leaves no staging directory behind
+    val staging = new java.io.File(path, "_idx_staging")
+    assert(!staging.exists() || staging.list().isEmpty)
     // and only the new state's files are visible in the state dir
     assert(IncrementalAgg.read(spark, path).count() == 2L)
   }
@@ -182,5 +182,44 @@ class IncrementalAggSpec extends SparkSpec {
     val before = state()
     assert(IncrementalAgg.syncFromTable(spark, st, tbl, Seq("g"), "v") == 2L)
     assert(state() == before)
+  }
+
+  test("syncFromTable: a crash after the fold's claim is never re-folded " +
+      "(the synced version rides the same claim)") {
+    import graft.sources.Merge
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_mv_crash").toFile
+    dir.deleteOnExit()
+    val tbl = new java.io.File(dir, "tbl").getAbsolutePath
+    val st = new java.io.File(dir, "state").getAbsolutePath
+    def truth() = Merge.readKeyed(spark, tbl).groupBy("g")
+      .agg(count(lit(1)).as("cnt"), sum($"v").as("sum_v"),
+        min($"v").as("min_v"), max($"v").as("max_v"))
+      .orderBy("g").collect().map(r => (r.getString(0), r.getLong(1),
+        r.getDouble(2), r.getDouble(3), r.getDouble(4))).toSeq
+    def state() = IncrementalAgg.read(spark, st).orderBy("g").collect()
+      .map(r => (r.getAs[String]("g"), r.getAs[Long]("cnt"),
+        r.getAs[Double]("sum_v"), r.getAs[Double]("min_v"),
+        r.getAs[Double]("max_v"))).toSeq
+    Merge.writeKeyed((0L until 40L).map(i => (i, s"g${i % 3}", i * 1.0))
+      .toDF("id", "g", "v"), tbl, "id", nBuckets = 4)
+    assert(IncrementalAgg.syncFromTable(spark, st, tbl, Seq("g"), "v") == 0L)
+    // an update, an insert and a delete of a group's max, so the sync
+    // both folds retractions and repairs an extreme
+    Merge.upsert(spark, tbl,
+      Seq((3L, "g0", 300.0), (100L, "g1", 1.0)).toDF("id", "g", "v"),
+      "id", 4)
+    Merge.deleteWhere(spark, tbl, $"id" === 38L)
+    IncrementalAgg.afterClaimHook =
+      () => throw new IllegalStateException("crash after the claim")
+    try {
+      val e = intercept[IllegalStateException] {
+        IncrementalAgg.syncFromTable(spark, st, tbl, Seq("g"), "v")
+      }
+      assert(e.getMessage == "crash after the claim")
+    } finally IncrementalAgg.afterClaimHook = () => ()
+    // the re-sync finds the fold already published: nothing is counted twice
+    assert(IncrementalAgg.syncFromTable(spark, st, tbl, Seq("g"), "v") == 2L)
+    assert(state() == truth())
   }
 }

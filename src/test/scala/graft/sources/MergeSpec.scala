@@ -35,7 +35,7 @@ class MergeSpec extends SparkSpec {
     Files.write(f.toPath, content.getBytes("UTF-8"))
     val p = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(Merge.readSmallUtf8(fs, p) == content)
+    assert(VersionLog.readSmallUtf8(fs, p) == content)
   }
 
   test("filesInfo inventories the current version: bucket, rows, bytes") {
