@@ -5,10 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal VERSIONED FILE LOG for persisted index layouts (the
   * [[graft.pipeline.DedupIndex]] LSH tables, the
-  * [[graft.pipeline.Similarity.IvfPq]] codes table): the same commit
-  * protocol [[Merge]] gives keyed data tables, reduced to what an index
-  * needs — a set of NAMED sub-tables, each a list of immutable parquet
-  * files, with an atomic create-if-absent manifest as the commit point.
+  * [[graft.pipeline.Similarity.IvfPq]] codes table) and for
+  * [[graft.pipeline.IncrementalAgg]]'s state: the [[VersionLog]] commit
+  * protocol that [[Merge]] also runs, over what an index needs — a set
+  * of NAMED sub-tables, each a list of immutable parquet files, with an
+  * atomic create-if-absent manifest as the commit point.
   *
   * Why indexes need this: a live probe resolves "the index" to a
   * concrete file set. Directory-read layouts make that resolution racy —
@@ -373,8 +374,8 @@ object TxLog {
     * recently-modified files — when vacuuming beside live writers set it
     * above the longest expected commit, exactly as with [[Merge.vacuum]].
     * Returns the reclaimed (or, with `dryRun = true`, the reclaimABLE
-    * — nothing touched) root-relative paths, mirroring
-    * [[Merge.vacuum]]'s pre-flight contract.
+    * — nothing touched) root-relative paths, the same pre-flight
+    * contract as [[Merge.vacuum]].
     */
   def vacuum(spark: SparkSession, root: String, tables: Seq[String],
       keepVersions: Int = 1, graceMs: Long = 0L,
