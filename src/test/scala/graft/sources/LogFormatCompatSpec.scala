@@ -146,28 +146,28 @@ class LogFormatCompatSpec extends SparkSpec {
   }
 
   // create (a Merge member and an index member), then one txn-stamped
-  // transaction
+  // transaction; the members' temp-dir paths are replaced by /data/...
+  // (path strings are copied through unescaped, so the bytes are still
+  // what that writer emits for such pins)
   private val catalogV0 =
-      """{"version":0,"parent":-1,"ts":1792253379988,"op":"create","pins":{"i":""" +
-      """{"path":"/tmp/golden14201035634728000579/idx","version":0,"kind":"i""" +
-      """dx"},"t":{"path":"/tmp/golden14201035634728000579/inline","version":""" +
-      """1,"kind":"merge"}}}"""
+      """{"version":0,"parent":-1,"ts":1792253379988,"op":"create","pins":""" +
+      """{"i":{"path":"/data/idx","version":0,"kind":"idx"},"t":{"path":""" +
+      """"/data/inline","version":1,"kind":"merge"}}}"""
   private val catalogV1 =
       """{"version":1,"parent":0,"ts":1792253380705,"op":"transact","pins":""" +
-      """{"i":{"path":"/tmp/golden14201035634728000579/idx","version":0,"ki""" +
-      """nd":"idx"},"t":{"path":"/tmp/golden14201035634728000579/inline","v""" +
-      """ersion":2,"kind":"merge"}},"txnApp":"cat-app","txnBatch":3}"""
+      """{"i":{"path":"/data/idx","version":0,"kind":"idx"},"t":{"path":""" +
+      """"/data/inline","version":2,"kind":"merge"}},"txnApp":"cat-app",""" +
+      """"txnBatch":3}"""
 
   test("golden: a TableCatalog state reads and re-emits byte for byte") {
     val root = tmp("catalog")
     put(root, "_cat_log/v0.json", utf8(catalogV0))
     put(root, "_cat_log/v1.json", utf8(catalogV1))
     val cat = root.getAbsolutePath
-    val base = "/tmp/golden14201035634728000579"
     val st = TableCatalog.state(spark, cat)
     assert(st == TableCatalog.CatState(1L, 0L, 1792253380705L, "transact",
-      Map("i" -> TableCatalog.Pin(s"$base/idx", 0L, "idx"),
-        "t" -> TableCatalog.Pin(s"$base/inline", 2L, "merge")),
+      Map("i" -> TableCatalog.Pin("/data/idx", 0L, "idx"),
+        "t" -> TableCatalog.Pin("/data/inline", 2L, "merge")),
       Some(("cat-app", 3L))))
     assert(TableCatalog.latestTxn(spark, cat, "cat-app").contains(3L))
     Seq(0L -> catalogV0, 1L -> catalogV1).foreach { case (v, golden) =>
