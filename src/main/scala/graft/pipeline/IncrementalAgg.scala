@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -57,14 +58,31 @@ object IncrementalAgg {
   @volatile private[pipeline] var beforeClaimHook: () => Unit = () => ()
   @volatile private[pipeline] var afterClaimHook: () => Unit = () => ()
 
-  /** The state rows at `st` (the pre-log layout's root files when None);
-    * reads go through TxLog's schema memo.
+  /** The state rows at `st`; reads go through TxLog's schema memo. When
+    * None (the pre-log layout), exactly the root's own parquet files: a
+    * directory read is left to Spark's listing rules, and a first fold
+    * stages its files under `state/` before the claim.
     */
   private def readState(spark: SparkSession, path: String,
       st: Option[TxLog.State]): DataFrame = st match {
     case Some(s) => TxLog.readTable(spark, path, s, "state").getOrElse(
       throw new IllegalStateException(s"$path v${s.version} has no state"))
-    case None => spark.read.parquet(path)
+    case None =>
+      val files = rootFiles(spark, path).map(_.getName)
+        .filter(n => n.endsWith(".parquet") && !n.startsWith("_") &&
+          !n.startsWith("."))
+      require(files.nonEmpty, s"$path holds no state")
+      spark.read.parquet(files.map(new Path(path, _).toString): _*)
+  }
+
+  /** The files at the state path's root: only the pre-log layout has
+    * any (its parquet, `_SUCCESS`, the `_graft_synced` mark).
+    */
+  private def rootFiles(spark: SparkSession, path: String): Seq[Path] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).filter(_.isFile).map(_.getPath).toSeq
   }
 
   /** Stage `df` as the state's next file set (durable, but invisible
@@ -76,8 +94,9 @@ object IncrementalAgg {
   /** Publish `files` as the state's version after `parent` with one
     * claim, stamped `synced`. Then reclaim what the claim superseded:
     * the state keeps its last two versions (crash orphans wait out the
-    * orphan floor), and a pre-log path loses the old layout's root files,
-    * since readers resolve the log from now on.
+    * orphan floor), and the old layout's root files go, since readers
+    * resolve the log from now on (every fold sweeps them, so a crash
+    * between the migrating claim and that delete leaks nothing).
     */
   private def publish(spark: SparkSession, path: String,
       parent: Option[TxLog.State], files: Seq[String],
@@ -88,11 +107,10 @@ object IncrementalAgg {
       TxLog.State(v, v - 1, Map("state" -> files), synced))
     afterClaimHook()
     TxLog.vacuum(spark, path, Seq("state"), keepVersions = 2)
-    if (parent.isEmpty) {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(root).filter(_.isFile)
-        .foreach(st => fs.delete(st.getPath, false))
+    val old = rootFiles(spark, path)
+    if (old.nonEmpty) {
+      val fs = old.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      old.foreach(fs.delete(_, false))
     }
   }
 
@@ -103,7 +121,7 @@ object IncrementalAgg {
       parent: Option[TxLog.State]): Option[Long] = parent match {
     case Some(s) => s.txn.collect { case (Synced, v) => v }
     case None =>
-      val mark = new org.apache.hadoop.fs.Path(path, Synced)
+      val mark = new Path(path, Synced)
       val fs = mark.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(mark)) None
       else {
@@ -290,8 +308,8 @@ object IncrementalAgg {
           withFlags(readState(spark, statePath, parent)),
           Merge.changesBetween(spark, tablePath, v, cur), keys, valueCol,
           "op"), statePath)
-        val repaired = repair(spark.read.parquet(folded.map(f =>
-            new org.apache.hadoop.fs.Path(statePath, f).toString): _*),
+        val staged = TxLog.State(-1L, -1L, Map("state" -> folded))
+        val repaired = repair(readState(spark, statePath, Some(staged)),
           snapshot, keys, valueCol).map(stage(_, statePath))
         publish(spark, statePath, parent, repaired.getOrElse(folded),
           Some((Synced, cur)))

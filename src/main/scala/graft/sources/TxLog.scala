@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Minimal VERSIONED FILE LOG for persisted index layouts (the
   * [[graft.pipeline.DedupIndex]] LSH tables, the
@@ -231,7 +232,10 @@ object TxLog {
     * a job-scoped staging dir + rename, returning the EXACT relative
     * paths produced — a racing writer's files can never leak into this
     * committer's manifest (the Merge stage-and-move discipline). The
-    * files are invisible to probes until a commit references them.
+    * files are invisible to probes until a commit references them. The
+    * written schema seeds the schema memo under the key a [[readTable]]
+    * of exactly these files uses, so a state rewritten whole each time
+    * (an IncrementalAgg fold) is never read back through inference.
     */
   def stageInto(df: DataFrame, root: String, table: String): Seq[String] = {
     val spark = df.sparkSession
@@ -251,7 +255,12 @@ object TxLog {
         moved += s"$table/${f.getPath.getName}"
       }
     fs.delete(staging, true)
-    moved.result().sorted
+    val files = moved.result().sorted
+    files.headOption.foreach { f =>
+      schemaMemo.put(schemaKey(Seq(new Path(r, f).toString), None),
+        df.schema)
+    }
+    files
   }
 
   /** [[stageInto]] for a PARTITIONED sub-table (e.g. an ANN codes table
@@ -307,12 +316,13 @@ object TxLog {
     * typing at first read — so partitioned reads key on a digest of the
     * full file list instead (one inference per distinct state, still a
     * hit for the common repeated-resolution of one state per batch).
-    * Bounded by the [[VersionLog.Bounded]] eviction rule (re-inference
+    * Entries come from a first inference or from [[stageInto]]'s own
+    * write (a parquet read makes the written schema's fields nullable,
+    * as inference would). Bounded by the [[VersionLog.Bounded]] eviction rule (re-inference
     * is correct, just slower), so a long session cannot grow it.
     */
-  private val schemaMemo =
-    new VersionLog.Bounded[(String, String),
-      org.apache.spark.sql.types.StructType](4096)
+  private[sources] val schemaMemo =
+    new VersionLog.Bounded[(String, String), StructType](4096)
 
   /** The memo key of a read: (head file, "") for a plain one; for a
     * partitioned one, a digest of the full file list with a NUL between

@@ -137,8 +137,8 @@ private[sources] object VersionLog {
     * otherwise collide). A re-walk of the log tail then costs one
     * getFileStatus per version instead of a read and a parse.
     */
-  final class Memo[V <: AnyRef](cap: Int = 8192) {
-    private val memo = new Bounded[(String, Long, Long, Long), V](cap)
+  final class Memo[V <: AnyRef] {
+    private val memo = new Bounded[(String, Long, Long, Long), V](8192)
 
     /** `dir/v{version}.json` parsed by `parse`; None when the file is
       * missing, unreadable or does not parse (a torn claim), so callers

@@ -222,4 +222,47 @@ class IncrementalAggSpec extends SparkSpec {
     assert(IncrementalAgg.syncFromTable(spark, st, tbl, Seq("g"), "v") == 2L)
     assert(state() == truth())
   }
+
+  test("a pre-log state path reads only its own files while its first " +
+      "fold is staged, and the migrated fold counts the delta once") {
+    // the pre-log layout: the state's parquet at the root (what init
+    // wrote before the log; flags absent, as in the oldest states)
+    val base = Seq(("a", 1.0), ("b", 2.0)).toDF("g", "v")
+    val delta = Seq(("a", 4.0), ("c", 5.0)).toDF("g", "v")
+    val path = fresh("prelog")
+    base.groupBy("g").agg(count(lit(1)).as("cnt"),
+        sum($"v".cast("decimal(28,2)")).as("sum_exact"),
+        min($"v".cast("double")).as("min_v"),
+        max($"v".cast("double")).as("max_v"))
+      .write.parquet(path)
+    def state() = IncrementalAgg.read(spark, path).orderBy("g").collect()
+      .map(r => (r.getAs[String]("g"), r.getAs[Long]("cnt"),
+        r.getAs[Double]("sum_v"))).toSeq
+    def rootFiles() = new java.io.File(path).listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    val old = Seq(("a", 1L, 1.0), ("b", 1L, 2.0))
+    assert(state() == old)
+    // a crash between staging the fold and its claim: the staged files
+    // under state/ must stay invisible to the old layout's read
+    IncrementalAgg.beforeClaimHook =
+      () => throw new IllegalStateException("crash before the claim")
+    try intercept[IllegalStateException] {
+      IncrementalAgg.update(spark, path, delta, Seq("g"), "v")
+    } finally IncrementalAgg.beforeClaimHook = () => ()
+    assert(state() == old)
+    // a crash after the migrating claim, before the root files go: the
+    // log now decides, and the next fold reclaims the old root files
+    IncrementalAgg.afterClaimHook =
+      () => throw new IllegalStateException("crash after the claim")
+    try intercept[IllegalStateException] {
+      IncrementalAgg.update(spark, path, delta, Seq("g"), "v")
+    } finally IncrementalAgg.afterClaimHook = () => ()
+    val folded = Seq(("a", 2L, 5.0), ("b", 1L, 2.0), ("c", 1L, 5.0))
+    assert(state() == folded)
+    assert(rootFiles().nonEmpty)
+    IncrementalAgg.update(spark, path, Seq(("b", 1.0)).toDF("g", "v"),
+      Seq("g"), "v")
+    assert(state() == Seq(("a", 2L, 5.0), ("b", 2L, 3.0), ("c", 1L, 5.0)))
+    assert(rootFiles().isEmpty)
+  }
 }

@@ -41,4 +41,27 @@ class TxLogMemoSpec extends SparkSpec {
     val r2b = TxLog.readPartitioned(spark, root, s2, "codes").get
     assert(r2b.schema == r2.schema)
   }
+
+  test("a stage seeds the schema memo with the schema a read infers") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_txmemo_seed").toFile.getAbsolutePath
+    // non-null columns, nested non-null elements and values, and the
+    // types the index and aggregate tables store
+    val df = Seq((1L, "a", 2.5)).toDF("id", "s", "v").select(
+      $"id", $"s", count(lit(1)).over().as("cnt"),
+      $"v".cast("decimal(28,2)").as("dec"), lit(true).as("flag"),
+      array(lit(1L), $"id").as("arr"), struct($"id", lit("x")).as("st"),
+      map(lit("k"), lit(1.0)).as("m"), lit(Array[Byte](1, 2)).as("bin"),
+      current_timestamp().as("ts"), current_date().as("d"))
+    val files = TxLog.stageInto(df, root, "t")
+    val paths =
+      files.map(f => new org.apache.hadoop.fs.Path(root, f).toString)
+    assert(TxLog.schemaMemo.get(TxLog.schemaKey(paths, None))
+      .contains(df.schema))
+    val state = TxLog.commitRetrying(spark, root)(_ => Map("t" -> files))
+    val seeded = TxLog.readTable(spark, root, state, "t").get
+    val inferred = spark.read.parquet(paths: _*)
+    assert(seeded.schema == inferred.schema)
+    assert(seeded.collect().toSeq == inferred.collect().toSeq)
+  }
 }
