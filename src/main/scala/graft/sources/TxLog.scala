@@ -318,8 +318,9 @@ object TxLog {
     * hit for the common repeated-resolution of one state per batch).
     * Entries come from a first inference or from [[stageInto]]'s own
     * write (a parquet read makes the written schema's fields nullable,
-    * as inference would). Bounded by the [[VersionLog.Bounded]] eviction rule (re-inference
-    * is correct, just slower), so a long session cannot grow it.
+    * as inference would). Bounded by the [[VersionLog.Bounded]]
+    * eviction rule (re-inference is correct, just slower), so a long
+    * session cannot grow it.
     */
   private[sources] val schemaMemo =
     new VersionLog.Bounded[(String, String), StructType](4096)
