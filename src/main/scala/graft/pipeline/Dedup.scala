@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Per-row LSH signature + bucket keys, the one-kernel UDF result shape
-  * shared by the MinHash and SimHash pipelines. Top-level (not nested in
+  * shared by the SimHash and n-gram pipelines. Top-level (not nested in
   * the object) so Catalyst's generated serializer code can call its
   * accessors.
   */
@@ -135,35 +135,8 @@ object Dedup {
     * allocation at all.
     */
   def minhashSigFromText(n: Int, k: Int) = udf { text: String =>
-    if (text == null) null
-    else {
-      val trimmed = text.toLowerCase.trim
-      if (trimmed.isEmpty) null
-      else {
-        val toks = trimmed.split("\\s+")
-        if (toks.length < n) null
-        else {
-          // base hash per shingle = FNV over the n tokens joined by ' '
-          val nShingles = toks.length - n + 1
-          val base = new Array[Long](nShingles)
-          var s = 0
-          while (s < nShingles) {
-            var h = 0xcbf29ce484222325L
-            var t = 0
-            while (t < n) {
-              if (t > 0) { h ^= ' '; h *= 0x100000001b3L }
-              val tok = toks(s + t)
-              var c = 0
-              while (c < tok.length) { h ^= tok.charAt(c); h *= 0x100000001b3L; c += 1 }
-              t += 1
-            }
-            base(s) = h
-            s += 1
-          }
-          sigFromBases(base, k)
-        }
-      }
-    }
+    val base = shingleBases(text, n)
+    if (base == null) null else sigFromBases(base, k)
   }
 
   /** LSH band keys for a signature: b bands of r rows; band j's key is the
@@ -237,22 +210,6 @@ object Dedup {
       j += 1
     }
     bk
-  }
-
-  /** Signature AND band keys in one kernel (one UDF call per row — no
-    * higher-order band-hash expression tree; see [[minhashSigFromText]]
-    * for why the flat tree matters).
-    */
-  private def minhashSigBandsFromText(n: Int, k: Int, bands: Int) = {
-    val r = k / bands
-    udf { text: String =>
-      val base = shingleBases(text, n)
-      if (base == null) null
-      else {
-        val sig = sigFromBases(base, k)
-        SigBands(sig, bandKeysOf(sig, bands, r))
-      }
-    }
   }
 
   /** Dropped-bucket visibility (recall loss must never be silent): every
@@ -336,31 +293,47 @@ object Dedup {
 
   /** Candidate duplicate pairs via MinHash-LSH with in-bucket verification.
     *
-    * Shape: one signature pass (sig + band keys in a single kernel), one
-    * shuffle into (band, key) buckets, pair generation + estimate inside
-    * each bucket, one slim distinct over qualifying pairs. Two shuffles
-    * total; the wide signatures cross the wire once (b× band inflation,
-    * bounded), and no verify join exists at all.
+    * Shape: one signature pass, one shuffle into (band, key) buckets, pair
+    * generation + estimate inside each bucket, one slim distinct over
+    * qualifying pairs. Two shuffles total; the wide signatures cross the
+    * wire once (b× band inflation, bounded), and no verify join exists at
+    * all.
     *
     * @return (id_a, id_b, est_jaccard) with id_a < id_b, est >= threshold.
     */
   def minhashCandidates(df: DataFrame, idCol: String, text: Column,
       shingleN: Int = 3, k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = {
+      threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame =
+    minhashSigCandidates(df, idCol, minhashSigFromText(shingleN, k)(text),
+      k, bands, threshold, maxBucket)
+
+  /** [[minhashCandidates]] over an already computed signature column
+    * (`sig`: k MinHash values, null for a row with none) — the entry for a
+    * caller that carries its rows' signatures, such as
+    * [[DedupIndex.streamingAdmitBatches]]'s signed frame, so the kernel
+    * runs once per row however many passes read the signature.
+    */
+  private[pipeline] def minhashSigCandidates(df: DataFrame, idCol: String,
+      sig: Column, k: Int, bands: Int, threshold: Double,
+      maxBucket: Int = 1000): DataFrame = {
     requireIntegralId(df, idCol)
     require(k % bands == 0, "bands must divide k")
     val spark = df.sparkSession
     import spark.implicits._
-    // no isNotNull filter on the UDF output: a pushed-down filter would
-    // re-evaluate the UDF per row (Filter + Project each compute it);
-    // posexplode of the null struct's null band array emits no rows, which
-    // drops too-short/null texts for free with a single UDF evaluation
+    val r = k / bands
+    val keys = udf { s: Seq[Long] =>
+      if (s == null) null else bandKeysOf(s.toArray, bands, r)
+    }
+    // no isNotNull filter on the signature: a pushed-down filter would
+    // re-evaluate a computed signature per row (Filter + Project each
+    // compute it); posexplode of a null band array emits no rows, which
+    // drops too-short/null texts for free. The signature is projected
+    // below the explode, so it is computed once even when `sig` is a UDF.
     val dropped = newDropAcc(df)
-    val fat = df.select(col(idCol).cast("long").as("id"),
-        minhashSigBandsFromText(shingleN, k, bands)(text).as("sb"))
-      .select(col("id"), col("sb.sig").as("sig"),
-        posexplode(col("sb.bands")).as(Seq("band", "key")))
-    fat.select(col("band"), col("key"), col("id"), col("sig"))
+    df.select(col(idCol).cast("long").as("id"), sig.as("sig"))
+      .select(col("id"), col("sig"),
+        posexplode(keys(col("sig"))).as(Seq("band", "key")))
+      .select(col("band"), col("key"), col("id"), col("sig"))
       .as[(Int, Long, Long, Array[Long])]
       .groupByKey { case (band, key, _, _) => (band, key) }
       .flatMapGroups { (_: (Int, Long), it: Iterator[(Int, Long, Long, Array[Long])]) =>
@@ -522,7 +495,7 @@ object Dedup {
     * (same two-shuffle shape as [[minhashCandidates]]).
     */
   /** SimHash signature + its four 16-bit chunk keys in one kernel (single
-    * UDF evaluation per row — same rationale as [[minhashSigBandsFromText]]).
+    * UDF evaluation per row — same rationale as [[minhashSigFromText]]).
     * Tokenization matches [[TextAnalysis.tokensCol]] over lowercased text.
     * Empty/blank text -> null (dropped by the downstream explode).
     */

@@ -12,13 +12,22 @@ import graft.sources.TxLog
   * a 0.01% delta. This index persists the corpus's LSH band keys (and a
   * signature side table) once; each new batch then costs:
   *
+  *   - ONE scan of the batch and ONE MinHash pass over it, when it is
+  *     admitted by [[streamingAdmitBatches]]: the batch is materialized
+  *     once as a SIGNED FRAME (its own columns plus its signature), and
+  *     everything below reads that frame, never the source or the
+  *     kernel again. (The lazy [[dedupAgainst]] plans the same joins
+  *     over an unmaterialized signed frame, so a caller's action re-reads
+  *     the batch once per branch.)
   *   - ONE scan of the bands table, probed by a BROADCAST of the batch's
   *     band keys (a broadcast hash join — the big side never shuffles),
   *   - ONE scan of the signatures table for the verify step, again
   *     against broadcast candidate ids,
-  *   - [[append]]: survivors' band/sig rows written as NEW files —
-  *     existing index files are immutable (the [[Similarity.IvfPq]]
-  *     append posture).
+  *   - one in-bucket pass over the batch's own signatures for the
+  *     batch-internal duplicates ([[Dedup.minhashCandidates]]' kernel),
+  *   - [[append]]: survivors' band/sig rows written as NEW files from the
+  *     signatures they carry — existing index files are immutable (the
+  *     [[Similarity.IvfPq]] append posture).
   *
   * Large batches ([[dedupAgainst]]'s `maxProbeBroadcastBytes`): the
   * broadcast-probe plan assumes batch ≪ corpus. A backfill-sized batch
@@ -104,19 +113,43 @@ object DedupIndex {
       num("threshold"))
   }
 
-  /** (band, key, id) + (id, sig) rows for a frame, under `m`'s params.
-    * Signature-less rows (null/too-short text) contribute nothing — they
-    * can never be near-duplicates under the shingle contract.
+  /** Carried-signature column of a signed frame ([[signed]]). */
+  private val SigCol = "__graft_minhash_sig"
+
+  /** `df`'s columns plus its MinHash signature under `m`'s params in
+    * [[SigCol]] — null for a null or too-short text, which can never be
+    * a near-duplicate under the shingle contract.
     */
-  private def bandRows(df: DataFrame, idCol: String, text: Column,
-      m: Meta): (DataFrame, DataFrame) = {
-    val sigs = Dedup.signatures(df, idCol, text, m.shingleN, m.k)
-    val bands = sigs.select(col("id"),
+  private def signed(df: DataFrame, text: Column, m: Meta): DataFrame =
+    df.withColumn(SigCol, Dedup.minhashSigFromText(m.shingleN, m.k)(text))
+
+  /** The (id, sig) rows of a signed frame that have a signature. */
+  private def sigRows(signedDf: DataFrame, idCol: String): DataFrame =
+    signedDf.select(col(idCol).as("id"), col(SigCol).as("sig"))
+      .filter(col("sig").isNotNull)
+
+  /** (band, key, id) rows of (id, sig) rows under `m`'s params: the one
+    * place the persisted band-key format is made.
+    */
+  private def bandRows(sigs: DataFrame, m: Meta): DataFrame =
+    sigs.select(col("id"),
         posexplode(Dedup.bandKeys(col("sig"), m.bands, m.k / m.bands))
           .as(Seq("band", "key")))
       .select(col("band").cast("int").as("band"), col("key"), col("id"))
-    (bands, sigs)
-  }
+
+  /** The broadcast-vs-shuffle decision: does the batch's Catalyst size
+    * estimate fit `maxProbeBroadcastBytes`?
+    */
+  private def broadcastable(batch: DataFrame,
+      maxProbeBroadcastBytes: Long): Boolean =
+    batch.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      BigInt(maxProbeBroadcastBytes)
+
+  /** Small-side wrapper: broadcast a batch-derived side on the normal
+    * path; let it shuffle on the large-batch path.
+    */
+  private def small(df: DataFrame, useBroadcast: Boolean): DataFrame =
+    if (useBroadcast) broadcast(df) else df
 
   /** Build the index over `df` (the corpus) at `path`, replacing any
     * existing index there (old files, tombstones, and log included).
@@ -131,8 +164,8 @@ object DedupIndex {
     if (fs.exists(root)) fs.delete(root, true) // fresh index, fresh log
     TxLog.dropCachedStates(path) // rebuilt in place: stale memo out
     val m = Meta(shingleN, k, bands, threshold)
-    val (b, s) = bandRows(df, idCol, text, m)
-    val bandFiles = TxLog.stageInto(b, path, "bands")
+    val s = Dedup.signatures(df, idCol, text, shingleN, k)
+    val bandFiles = TxLog.stageInto(bandRows(s, m), path, "bands")
     val sigFiles = TxLog.stageInto(s, path, "sigs")
     TxLog.commit(spark, path, TxLog.State(0L, -1L,
       Map("bands" -> bandFiles, "sigs" -> sigFiles)))
@@ -192,25 +225,24 @@ object DedupIndex {
       maxProbeBroadcastBytes: Long = DefaultProbeBroadcastBytes)
       : DataFrame = {
     val m = readMeta(spark, path)
-    dominatedByAt(spark, path, state(spark, path), m, newDf, idCol, text,
-      maxProbeBroadcastBytes)
+    dominatedByAt(spark, path, state(spark, path), m,
+      Dedup.signatures(newDf, idCol, text, m.shingleN, m.k), idCol,
+      broadcastable(newDf, maxProbeBroadcastBytes))
   }
 
+  /** [[dominatedBy]] over the batch's signature rows `ns` (id, sig) at a
+    * resolved state, with the broadcast decision already made from the
+    * batch itself — never from how its signatures were made.
+    */
   private def dominatedByAt(spark: SparkSession, path: String,
-      st: Option[TxLog.State], m: Meta, newDf: DataFrame, idCol: String,
-      text: Column, maxProbeBroadcastBytes: Long): DataFrame = {
-    val (nb, ns) = bandRows(newDf, idCol, text, m)
-    val est = newDf.queryExecution.optimizedPlan.stats.sizeInBytes
-    val useBroadcast = est <= BigInt(maxProbeBroadcastBytes)
-    // small-side wrapper: broadcast the batch-derived sides on the
-    // normal path; let them shuffle on the large-batch path
-    def small(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df
+      st: Option[TxLog.State], m: Meta, ns: DataFrame, idCol: String,
+      useBroadcast: Boolean): DataFrame = {
+    val nb = bandRows(ns, m)
     val bandsOpt = table(spark, path, st, "bands")
     val sigsOpt = table(spark, path, st, "sigs")
     if (bandsOpt.isEmpty || sigsOpt.isEmpty)
       // empty index: nothing can dominate
-      return newDf.select(col(idCol)).limit(0)
+      return ns.select(col("id").as(idCol)).limit(0)
         .withColumn("est", lit(0.0))
     val indexBands = bandsOpt.get
     val indexSigs = sigsOpt.get
@@ -218,7 +250,7 @@ object DedupIndex {
     // tombstoned corpus ids ([[remove]]) no longer suppress anything
     val cand0 = indexBands
       .join(small(nb.select(col("band"), col("key"),
-        col("id").as("new_id"))), Seq("band", "key"))
+        col("id").as("new_id")), useBroadcast), Seq("band", "key"))
       .select(col("id").as("corpus_id"), col("new_id"))
       .distinct()
     val cand = table(spark, path, st, "deletes") match {
@@ -229,11 +261,12 @@ object DedupIndex {
     }
     // verify on true signatures; candidate set is batch-bounded, so it
     // rides the same small-side rule as the other probe joins
-    small(cand).join(indexSigs, cand("corpus_id") === indexSigs("id"))
+    small(cand, useBroadcast)
+      .join(indexSigs, cand("corpus_id") === indexSigs("id"))
       .select(col("corpus_id"), col("new_id"),
         col("sig").as("corpus_sig"))
       .join(small(ns.select(col("id").as("new_id"),
-        col("sig").as("new_sig"))), Seq("new_id"))
+        col("sig").as("new_sig")), useBroadcast), Seq("new_id"))
       .select(col("new_id"),
         Dedup.estJaccard(col("corpus_sig"), col("new_sig")).as("est"))
       .filter(col("est") >= m.threshold)
@@ -256,13 +289,27 @@ object DedupIndex {
     // an explicit state pins the probe (how a TableCatalog admission
     // reads the index at the catalog's published version)
     val st = if (at.isDefined) at else state(spark, path)
-    val inBatch = Dedup.minhashCandidates(newDf, idCol, text,
-      m.shingleN, m.k, m.bands, m.threshold)
+    survivorsOf(spark, path, st, m, signed(newDf, text, m), idCol,
+      broadcastable(newDf, maxProbeBroadcastBytes)).drop(SigCol)
+  }
+
+  /** The rows of a signed frame that survive the index at `st` and the
+    * in-batch pass, in the frame's column order (signature included).
+    * Lazy: every branch reads `signedDf`, so a caller materializes it
+    * first to read its source once.
+    */
+  private def survivorsOf(spark: SparkSession, path: String,
+      st: Option[TxLog.State], m: Meta, signedDf: DataFrame, idCol: String,
+      useBroadcast: Boolean): DataFrame = {
+    val inBatch = Dedup.minhashSigCandidates(signedDf, idCol, col(SigCol),
+        m.k, m.bands, m.threshold)
       .select(col("id_b").as(idCol)).distinct()
-    val vsCorpus = dominatedByAt(spark, path, st, m, newDf, idCol, text,
-      maxProbeBroadcastBytes).select(col(idCol))
-    newDf.join(inBatch.unionByName(vsCorpus).distinct(),
-      Seq(idCol), "left_anti")
+    val vsCorpus = dominatedByAt(spark, path, st, m,
+      sigRows(signedDf, idCol), idCol, useBroadcast).select(col(idCol))
+    // the dropped ids are batch-bounded: the same small-side rule
+    signedDf.join(small(inBatch.unionByName(vsCorpus).distinct(),
+        useBroadcast), Seq(idCol), "left_anti")
+      .select(signedDf.columns.toSeq.map(col): _*)
   }
 
   /** Append `survivors` (rows already admitted by [[dedupAgainst]]) to
@@ -276,9 +323,15 @@ object DedupIndex {
   def append(spark: SparkSession, path: String, survivors: DataFrame,
       idCol: String, text: Column): Long = {
     val m = readMeta(spark, path)
-    val (b, s) = bandRows(survivors, idCol, text, m)
-    val bandFiles = TxLog.stageInto(b, path, "bands")
-    val sigFiles = TxLog.stageInto(s, path, "sigs")
+    appendSigs(spark, path,
+      Dedup.signatures(survivors, idCol, text, m.shingleN, m.k), m)
+  }
+
+  /** [[append]] of (id, sig) rows. */
+  private def appendSigs(spark: SparkSession, path: String, sigs: DataFrame,
+      m: Meta): Long = {
+    val bandFiles = TxLog.stageInto(bandRows(sigs, m), path, "bands")
+    val sigFiles = TxLog.stageInto(sigs, path, "sigs")
     TxLog.commitRetrying(spark, path) { parent =>
       val t = parentTables(spark, path, parent)
       t + ("bands" -> (t.getOrElse("bands", Nil) ++ bandFiles)) +
@@ -373,16 +426,26 @@ object DedupIndex {
     * restart safe: a replayed batch re-probes against the grown index
     * and its already-admitted rows drop as self-duplicates.
     *
-    * Ordering contract: survivors are MATERIALIZED (localCheckpoint)
-    * before anything else — the probe plan reads the index, so an
-    * append before evaluation would make every survivor a duplicate of
-    * itself — then `sink` runs BEFORE `append`. With an idempotent sink
-    * (e.g. [[graft.sources.Merge.upsert]] with a txn stamp keyed on the
-    * batch id) the pair is exactly-once under crash-replay: a crash
-    * after sink, before append, replays into a txn no-op sink and a
-    * fresh append; a crash after append replays into an empty survivor
-    * set and touches nothing. A non-idempotent sink degrades to
-    * at-least-once.
+    * Ordering contract, per micro-batch ([[admitBatch]]):
+    *   1. `_meta.json` is read and the index state resolved ONCE;
+    *   2. the SIGNED FRAME (the batch's columns plus its signature) is
+    *      MATERIALIZED (localCheckpoint) — the batch's one source scan
+    *      and one MinHash pass;
+    *   3. survivors are derived from it (in-batch pass, probe of the
+    *      resolved snapshot, anti-join) and MATERIALIZED too, before
+    *      anything else — the probe plan reads the index, so an append
+    *      before evaluation would make every survivor a duplicate of
+    *      itself;
+    *   4. `sink` runs on exactly the batch's columns;
+    *   5. only then the append writes the band/sig rows from the
+    *      survivors' carried signatures and claims a log version.
+    * The broadcast-vs-shuffle probe decision reads the batch's own size
+    * estimate, as [[dedupAgainst]] does. With an idempotent sink (e.g.
+    * [[graft.sources.Merge.upsert]] with a txn stamp keyed on the batch
+    * id) the pair is exactly-once under crash-replay: a crash after
+    * sink, before append, replays into a txn no-op sink and a fresh
+    * append; a crash after append replays into an empty survivor set and
+    * touches nothing. A non-idempotent sink degrades to at-least-once.
     */
   def streamingAdmit(stream: DataFrame, indexPath: String, idCol: String,
       textCol: String)(sink: DataFrame => Unit)
@@ -405,12 +468,30 @@ object DedupIndex {
     require(stream.isStreaming, "streamingAdmit needs a streaming frame")
     stream.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        val survivors = dedupAgainst(batch.sparkSession, indexPath,
-          batch, idCol, col(textCol)).localCheckpoint(true)
-        sink(survivors, batchId)
-        append(batch.sparkSession, indexPath, survivors, idCol,
-          col(textCol))
-        ()
+        admitBatch(batch, indexPath, idCol, col(textCol), batchId,
+          DefaultProbeBroadcastBytes)(sink)
     }
+  }
+
+  /** One micro-batch's admission under [[streamingAdmit]]'s ordering
+    * contract.
+    */
+  private[pipeline] def admitBatch(batch: DataFrame, indexPath: String,
+      idCol: String, text: Column, batchId: Long,
+      maxProbeBroadcastBytes: Long)(sink: (DataFrame, Long) => Unit)
+      : Unit = {
+    val spark = batch.sparkSession
+    val m = readMeta(spark, indexPath)
+    val st = state(spark, indexPath)
+    val signedBatch = signed(batch, text, m).localCheckpoint(true)
+    val survivors =
+      try survivorsOf(spark, indexPath, st, m, signedBatch, idCol,
+          broadcastable(batch, maxProbeBroadcastBytes))
+        .localCheckpoint(true)
+      finally org.apache.spark.sql.GraftShim.unpinLocalCheckpoint(
+        signedBatch)
+    sink(survivors.drop(SigCol), batchId)
+    appendSigs(spark, indexPath, sigRows(survivors, idCol), m)
+    ()
   }
 }

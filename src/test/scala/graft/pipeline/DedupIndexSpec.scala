@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -388,4 +390,246 @@ class DedupIndexSpec extends SparkSpec {
         s"append of $id must be probe-visible, got ${got.toSeq}")
     }
   }
+
+  // 40-token texts: one changed word keeps 35 of 38 shingles, an estimate
+  // well above the 0.7 default threshold
+  private def longDoc(i: Long): String =
+    (0 until 40).map(j => s"v${i}_$j").mkString(" ")
+  private def nearDup(t: String): String =
+    t.split(" ").updated(20, "changed").mkString(" ")
+
+  private def writeBatch(dir: java.nio.file.Path, name: String,
+      rows: Seq[(Long, String)], i: Int): Unit = {
+    val f = dir.resolve(name)
+    Files.writeString(f, rows.map { case (id, t) =>
+      s"""{"doc_id": $id, "text": "$t"}""" }.mkString("\n"))
+    // file sources order new files by modification time
+    f.toFile.setLastModified(1700000000000L + i * 60000L)
+  }
+
+  private val docSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("doc_id LONG, text STRING")
+
+  /** Drain every new file under `in` through one AvailableNow query. */
+  private def drain(in: String, idx: String, checkpoint: String)(
+      sink: (org.apache.spark.sql.DataFrame, Long) => Unit): Unit =
+    DedupIndex.streamingAdmitBatches(
+        spark.readStream.schema(docSchema).option("maxFilesPerTrigger", 1)
+          .json(in),
+        idx, "doc_id", "text")(sink)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .start().awaitTermination()
+
+  test("streaming admission opens each batch file exactly once") {
+    val base = Files.createTempDirectory("graft_sdi_scan")
+    val in = base.resolve("in"); Files.createDirectories(in)
+    val idx = base.resolve("idx").toString
+    DedupIndex.build(corpus, "doc_id", col("text"), idx)
+    writeBatch(in, "b0.json", Seq((1000L, longDoc(1000L)),
+      (1001L, nearDup(longDoc(1000L))), (1002L, corpus
+        .filter($"doc_id" === 3L).select("text").as[String].head())), 0)
+    writeBatch(in, "b1.json", Seq((1100L, longDoc(1100L)),
+      (1101L, nearDup(longDoc(1000L)))), 1)
+    writeBatch(in, "b2.json", Seq((1200L, longDoc(1200L))), 2)
+    spark.sparkContext.hadoopConfiguration.setClass("fs.countopen.impl",
+      classOf[CountingOpenFs], classOf[org.apache.hadoop.fs.FileSystem])
+    CountingOpenFs.opens.clear()
+    val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
+    drain(s"countopen://$in", idx, base.resolve("ckpt").toString) {
+      (surv, _) => admitted ++= surv.select("doc_id").as[Long].collect()
+    }
+    assert(admitted.toSet == Set(1000L, 1100L, 1200L), s"got $admitted")
+    val opens = CountingOpenFs.opens.asScala.toMap
+      .map { case (p, n) => new org.apache.hadoop.fs.Path(p).getName -> n.sum }
+    assert(opens == Map("b0.json" -> 1L, "b1.json" -> 1L, "b2.json" -> 1L),
+      s"each batch file must be read once per admission, got $opens")
+  }
+
+  test("streamed admission == dedupAgainst + append, batch by batch: " +
+      "same admitted ids, same sigs and bands rows") {
+    val base = Files.createTempDirectory("graft_sdi_equiv")
+    val in = base.resolve("in"); Files.createDirectories(in)
+    val streamed = base.resolve("streamed").toString
+    val stepped = base.resolve("stepped").toString
+    DedupIndex.build(corpus, "doc_id", col("text"), streamed)
+    DedupIndex.build(corpus, "doc_id", col("text"), stepped)
+    val copyOf3 = corpus.filter($"doc_id" === 3L).select("text")
+      .as[String].head()
+    val batches = Seq(
+      // in-batch near-dup (1003 of 1001) and a copy of an indexed doc
+      Seq((1000L, longDoc(1000L)), (1001L, longDoc(1001L)),
+        (1002L, copyOf3), (1003L, nearDup(longDoc(1001L)))),
+      // cross-batch near-dup of 1000 (admitted by the batch before),
+      // plus an in-batch pair
+      Seq((1100L, nearDup(longDoc(1000L))), (1101L, longDoc(1101L)),
+        (1102L, longDoc(1101L)), (1103L, longDoc(1103L))),
+      // exact copy of an earlier survivor, near-dup of a dropped row
+      Seq((1200L, longDoc(1101L)), (1201L, nearDup(longDoc(1001L))),
+        (1202L, longDoc(1202L))))
+    def indexRows(path: String) = {
+      val st = graft.sources.TxLog.currentState(spark, path).get
+      def rows(t: String) = graft.sources.TxLog.readTable(spark, path, st, t)
+        .get.collect().map(_.toSeq).toSet
+      (rows("sigs"), rows("bands"))
+    }
+    batches.zipWithIndex.foreach { case (rows, i) =>
+      writeBatch(in, s"b$i.json", rows, i)
+      val viaStream = scala.collection.mutable.ArrayBuffer.empty[Long]
+      drain(in.toString, streamed, base.resolve("ckpt").toString) {
+        (surv, _) => viaStream ++= surv.select("doc_id").as[Long].collect()
+      }
+      val batch = spark.read.schema(docSchema)
+        .json(in.resolve(s"b$i.json").toString)
+      val surv = DedupIndex.dedupAgainst(spark, stepped, batch, "doc_id",
+        col("text")).localCheckpoint(true)
+      DedupIndex.append(spark, stepped, surv, "doc_id", col("text"))
+      val viaSteps = surv.select("doc_id").as[Long].collect().toSet
+      assert(viaStream.toSet == viaSteps, s"batch $i")
+      assert(indexRows(streamed) == indexRows(stepped), s"batch $i")
+    }
+    // the planted duplicates really were dropped
+    val (sigs, _) = indexRows(streamed)
+    val ids = sigs.map(_.head.asInstanceOf[Long])
+    assert(ids.filter(_ >= 1000L) ==
+      Set(1000L, 1001L, 1101L, 1103L, 1202L), s"got $ids")
+  }
+
+  test("admission edge rows: null and short texts reach the sink and " +
+      "add no index rows; the sink sees the batch schema; the in-batch " +
+      "pass still reports dropped buckets") {
+    val path = freshDir()
+    DedupIndex.build(corpus, "doc_id", col("text"), path)
+    // id not the first column, plus a column the engine never reads
+    val crowd = "one text shared by more rows than an lsh bucket holds"
+    val batch = (Seq[(String, Long, String)](
+        (null, 2000L, "null"), ("two words", 2001L, "short"),
+        (longDoc(2002L), 2002L, "doc"),
+        (nearDup(longDoc(2002L)), 2003L, "near")) ++
+      (0 until 1001).map(i => (crowd, 3000L + i, "crowd")))
+      .toDF("text", "doc_id", "src")
+    val seen = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.sql.DataFrame]
+    val sigsBefore = spark.read.parquet(s"$path/sigs").count()
+    DedupIndex.admitBatch(batch, path, "doc_id", col("text"), 0L,
+      DedupIndex.DefaultProbeBroadcastBytes) { (surv, _) => seen += surv }
+    assert(seen.size == 1)
+    assert(seen.head.schema == batch.schema,
+      s"sink must see exactly the batch columns: ${seen.head.schema}")
+    val got = seen.head.select("doc_id").as[Long].collect().toSet
+    assert(got.contains(2000L) && got.contains(2001L) &&
+      got.contains(2002L) && !got.contains(2003L), s"got $got")
+    // the crowd's buckets overflow maxBucket in every band: its pairs are
+    // lost (all copies survive) and the drop is reported, not silent
+    assert(Dedup.lastDroppedBuckets == 16L)
+    assert(got.count(_ >= 3000L) == 1001)
+    val st = graft.sources.TxLog.currentState(spark, path).get
+    val sigIds = graft.sources.TxLog.readTable(spark, path, st, "sigs").get
+      .select("id").as[Long].collect()
+    val bandIds = graft.sources.TxLog.readTable(spark, path, st, "bands")
+      .get.select("id").as[Long].collect().toSet
+    assert(sigIds.length == sigsBefore + 1 + 1001)
+    assert(!sigIds.contains(2000L) && !sigIds.contains(2001L))
+    assert(!bandIds.contains(2000L) && !bandIds.contains(2001L))
+  }
+
+  test("admission plan: one source scan, broadcast probe at the batch's " +
+      "own size estimate, shuffle one byte below it") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      SortMergeJoinExec}
+    val dir = Files.createTempDirectory("graft_sdi_plan")
+    writeBatch(dir, "b.json", Seq((1300L, longDoc(1300L)),
+      (1301L, nearDup(longDoc(1300L))), (1302L, corpus
+        .filter($"doc_id" === 3L).select("text").as[String].head())), 0)
+    val batch = spark.read.schema(docSchema)
+      .json(dir.resolve("b.json").toString)
+    val est = batch.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    val helper = new org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper {}
+    // join strategies are the planner's choice: read them off the plan
+    // before AQE's runtime rewrites (which may, say, drop a join whose
+    // side turned out empty)
+    def has(plans: Seq[SparkPlan])(pf: PartialFunction[SparkPlan, _]) =
+      plans.exists { p =>
+        val planned = p match {
+          case a: org.apache.spark.sql.execution.adaptive
+              .AdaptiveSparkPlanExec => a.inputPlan
+          case other => other
+        }
+        planned.collect(pf).nonEmpty
+      }
+    // every physical plan one admission (into a fresh index) executes,
+    // via a query listener; a marker query flushes the (asynchronous,
+    // ordered) listener bus
+    def admissionPlans(maxProbe: Long): Seq[SparkPlan] = {
+      val path = freshDir()
+      DedupIndex.build(corpus, "doc_id", col("text"), path)
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val flushed = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            ns: Long): Unit =
+          if (qe.analyzed.output.exists(_.name == "graft_flush_marker"))
+            flushed.countDown()
+          else plans.add(qe.executedPlan)
+        def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        DedupIndex.admitBatch(batch, path, "doc_id", col("text"), 0L,
+          maxProbe) { (surv, _) => surv.select("doc_id").collect(); () }
+        spark.range(1).toDF("graft_flush_marker").collect()
+        assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally spark.listenerManager.unregister(listener)
+      plans.asScala.toSeq
+    }
+    val plans = admissionPlans(DedupIndex.DefaultProbeBroadcastBytes)
+    val shown = plans.mkString("\n")
+    // the scans are read off the executed plans: what actually ran
+    val scans = plans.flatMap(p => helper.collectWithSubqueries(p) {
+      case s: FileSourceScanExec
+          if s.relation.location.inputFiles.exists(_.endsWith("b.json")) => s
+    })
+    assert(scans.size == 1, s"source scans:\n$shown")
+    assert(has(plans) { case j: BroadcastHashJoinExec => j },
+      s"no broadcast probe:\n$shown")
+    assert(!has(plans) { case j: SortMergeJoinExec => j },
+      s"a small batch must not sort-merge:\n$shown")
+    // with Spark's own broadcast threshold off, only the probe's hints
+    // broadcast: on at exactly the batch's estimate, off one byte below
+    val auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val atEst = admissionPlans(est)
+      assert(has(atEst) { case j: BroadcastHashJoinExec => j },
+        s"no broadcast probe at the estimate:\n${atEst.mkString("\n")}")
+      val below = admissionPlans(est - 1)
+      assert(!has(below) { case j: BroadcastHashJoinExec => j },
+        s"one byte below the batch's estimate must not broadcast:\n" +
+          below.mkString("\n"))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto)
+  }
+}
+
+/** Local FS under its own scheme that counts `open` calls per path — the
+  * seam the scan-once test above reads. Everything else behaves like
+  * the local disk.
+  */
+class CountingOpenFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countopen:///")
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    CountingOpenFs.opens.computeIfAbsent(f.toUri.getPath,
+      _ => new java.util.concurrent.atomic.LongAdder).increment()
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingOpenFs {
+  val opens = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.atomic.LongAdder]
 }
