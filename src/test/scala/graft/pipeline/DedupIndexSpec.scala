@@ -440,8 +440,8 @@ class DedupIndexSpec extends SparkSpec {
       (surv, _) => admitted ++= surv.select("doc_id").as[Long].collect()
     }
     assert(admitted.toSet == Set(1000L, 1100L, 1200L), s"got $admitted")
-    val opens = CountingOpenFs.opens.asScala.toMap
-      .map { case (p, n) => new org.apache.hadoop.fs.Path(p).getName -> n.sum }
+    val opens = CountingOpenFs.opens.asScala.toMap.map { case (p, n) =>
+      new org.apache.hadoop.fs.Path(p).getName -> n.sum }
     assert(opens == Map("b0.json" -> 1L, "b1.json" -> 1L, "b2.json" -> 1L),
       s"each batch file must be read once per admission, got $opens")
   }
@@ -464,7 +464,8 @@ class DedupIndexSpec extends SparkSpec {
       // plus an in-batch pair
       Seq((1100L, nearDup(longDoc(1000L))), (1101L, longDoc(1101L)),
         (1102L, longDoc(1101L)), (1103L, longDoc(1103L))),
-      // exact copy of an earlier survivor, near-dup of a dropped row
+      // exact copy of an earlier survivor, and a second near-dup of
+      // 1001 (whose first near-dup 1003 was dropped in batch 0)
       Seq((1200L, longDoc(1101L)), (1201L, nearDup(longDoc(1001L))),
         (1202L, longDoc(1202L))))
     def indexRows(path: String) = {
