@@ -1,12 +1,11 @@
 package graft.agent
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.DataFrame
 import scala.jdk.CollectionConverters._
 
 import graft.cube.{CubeCatalog, CubeNode, Verbs}
-import graft.exec.{Dice, PlanRunner, Slice}
+import graft.exec.{Cascade, Dice, PlanRunner, Slice}
 import graft.oracle.SemanticOracle
 import graft.plan.{LogicTree, LogicalOp, PlanJson}
 
@@ -169,10 +168,11 @@ class OlapAgent(complete: String => String, oracle: SemanticOracle) {
     FilterPlan(steps, logic)
   }
 
-  /** Execute a filter plan: each step lowers to its verb's predicate
-    * (dice strategy selection / slice keyword+sem), folded under the
-    * plan's logic tree — the mask combination of Exection_Agent.py:181-210
-    * as one codegen'd Column.
+  /** Execute a filter plan through the filter executor ([[Cascade]]): a
+    * slice step lowers to its keyword prefilter AND its sem leaf, a dice
+    * step to the leaf of its chosen strategy, and the plan's logic tree is
+    * rewritten over those leaves — the mask combination of
+    * Exection_Agent.py:181-210 with its three-valued short circuit.
     *
     * `statsDf` (default: `df` itself) is the frame the dice/slice
     * STRATEGY CHOICE profiles. Predicates are name-resolved Columns, so
@@ -186,26 +186,22 @@ class OlapAgent(complete: String => String, oracle: SemanticOracle) {
   def executeFilter(df: DataFrame, plan: FilterPlan,
       statsDf: DataFrame = null): DataFrame = {
     val sdf = Option(statsDf).getOrElse(df)
-    val preds: Map[Int, Column] = plan.steps.map { s =>
-      val p = s.agent match {
-        case "dice" =>
-          val field = s.field.getOrElse(
-            sys.error(s"dice step ${s.id} without field"))
-          Dice.predicate(sdf, field, s.action, oracle)
-        case "slice" => Slice.predicate(sdf, sdf.columns.toSeq, s.action, oracle)
-        case other   => sys.error(s"unknown agent '$other'")
-      }
-      s.id -> p
+    val leaves = scala.collection.mutable.ArrayBuffer.empty[(Int, Cascade.Leaf)]
+    def add(l: Cascade.Leaf) = { leaves += leaves.size -> l; LogicTree.Leaf(leaves.size - 1) }
+    val steps: Map[Int, LogicTree] = plan.steps.map { s =>
+      s.id -> (s.agent match {
+        case "dice" => add(Dice.leaf(sdf, s.field.getOrElse(
+          sys.error(s"dice step ${s.id} without field")), s.action, oracle))
+        case "slice" => LogicTree.Node("AND",
+          Slice.ops(sdf.columns.toSeq, s.action).map(op => add(Cascade.lower(sdf, op))))
+        case other => sys.error(s"unknown agent '$other'")
+      })
     }.toMap
-    def fold(t: LogicTree): Column = t match {
-      case LogicTree.Leaf(id) => preds(id)
-      case LogicTree.Node(op, cs) =>
-        val built = cs.map(fold)
-        if (built.isEmpty) lit(true)
-        else if (op.equalsIgnoreCase("or")) built.reduce(_ || _)
-        else built.reduce(_ && _)
+    def rewrite(t: LogicTree): LogicTree = t match {
+      case LogicTree.Leaf(id) => steps(id)
+      case LogicTree.Node(op, cs) => LogicTree.Node(op, cs.map(rewrite))
     }
-    df.filter(fold(LogicTree.normalize(plan.logic)))
+    Cascade.run(df, leaves.toSeq, rewrite(plan.logic), oracle)
   }
 
   // ----------------------------------------------- direct plan generation

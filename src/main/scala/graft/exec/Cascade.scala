@@ -1,30 +1,34 @@
 package graft.exec
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
-import graft.oracle.SemanticOracle
+import graft.oracle.{BatchedOracle, SemanticOracle}
 import graft.plan.{LogicalOp, LogicTree}
 import graft.ops._
 
-/** Cost-ordered filter-cascade construction.
+/** Cost-ordered filter cascade: the engine's one filter executor.
   *
   * The reference's execution agent flattens the filter plan, sorts it by a
   * cost class (numeric/keyword=0 < pattern/enum=1 < LLM=2,
   * Exection_Agent.py:54-60,105-113) and evaluates ops cheapest-first with
   * three-valued short-circuiting so expensive ops only ever see undecided
-  * rows (Exection_Agent.py:380-394, 181-210).
-  *
-  * The Spark-native equivalent needs no multi-pass row routing:
-  *   - every leaf becomes a `Column` predicate;
-  *   - within every AND/OR node, children are ordered cheap-first;
-  *   - Spark's `And`/`Or` codegen short-circuits per row, so an expensive
-  *     oracle UDF on the right of a cheap keyword predicate is only
-  *     evaluated for rows the cheap one left undecided — the reference's
-  *     cascade, fused into one whole-stage-codegen pass;
-  *   - Catalyst additionally splits the cheap conjuncts out and pushes them
-  *     into the parquet scan (`PushedFilters`), which the reference cannot do.
+  * rows (Exection_Agent.py:380-394, 181-210). In band (cheap leaves,
+  * compiled judgments, per-row UDFs) the tree is one `Column`, children of
+  * every AND/OR node ordered cheap-first: Spark's `And`/`Or` codegen
+  * short-circuits per row, and Catalyst pushes the cheap conjuncts into the
+  * scan. Sem leaves a [[BatchedOracle]] judges out of band take the staged
+  * form of [[run]], for any AND/OR tree.
   */
 object Cascade {
+
+  /** A filter leaf lowered for execution, with its cost class. */
+  sealed trait Leaf { def cost: Int }
+  /** A predicate already in Column form. */
+  final case class Pred(pred: Column, cost: Int) extends Leaf
+  /** A sem_filter judgment: in band when the oracle compiles it or cannot
+    * batch, out of band otherwise. */
+  final case class Judge(op: LogicalOp.SemFilter) extends Leaf { val cost = 2 }
 
   /** Reference PRIORITY_MAP semantics (Exection_Agent.py:54-60). */
   def cost(op: LogicalOp): Int = op match {
@@ -33,89 +37,128 @@ object Cascade {
     case _ => 1
   }
 
-  def leafPredicate(df: DataFrame, op: LogicalOp,
-      oracle: SemanticOracle): Column = op match {
-    case f: LogicalOp.KeywordFilter =>
-      KeywordFilter.predicate(df, f.columns, f.keywords, f.logic, f.relation)
+  def lower(df: DataFrame, op: LogicalOp): Leaf = op match {
+    case f: LogicalOp.KeywordFilter => Pred(
+      KeywordFilter.predicate(df, f.columns, f.keywords, f.logic, f.relation),
+      cost(f))
     case f: LogicalOp.NumFilter =>
-      NumFilter.predicate(f.conditions, f.logic)
-    case f: LogicalOp.SemFilter =>
-      SemFilter.predicate(df, f.columns, f.condition, oracle)
-    case other =>
-      sys.error(s"not a filter operator: ${other.name}")
+      Pred(NumFilter.predicate(f.conditions, f.logic), cost(f))
+    case f: LogicalOp.SemFilter => Judge(f)
+    case other => sys.error(s"not a filter operator: ${other.name}")
   }
 
-  /** Fold a logic tree over filter leaves into one Column, children of each
-    * node ordered by cost class (stable within a class, preserving plan
-    * order — matching `reorder_by_priority`'s stable sort).
-    */
-  def predicate(df: DataFrame, leaves: Map[Int, LogicalOp], tree: LogicTree,
-      oracle: SemanticOracle): Column = {
+  private def inBand(df: DataFrame, leaf: Leaf,
+      oracle: SemanticOracle): Column = leaf match {
+    case Pred(p, _) => p
+    case Judge(f) => SemFilter.predicate(df, f.columns, f.condition, oracle)
+  }
 
+  /** Fold a logic tree into one Column over `value` per leaf, children of
+    * each node ordered by cost class (stable within a class, preserving
+    * plan order — matching `reorder_by_priority`'s stable sort). */
+  private def fold(t: LogicTree, leaves: Map[Int, Leaf],
+      value: Int => Column): Column = {
     def leafCost(t: LogicTree): Int = t match {
-      case LogicTree.Leaf(id) => cost(leaves(id))
+      case LogicTree.Leaf(id) => leaves(id).cost
       case LogicTree.Node(_, cs) => if (cs.isEmpty) 0 else cs.map(leafCost).max
     }
-
     def build(t: LogicTree): Column = t match {
-      case LogicTree.Leaf(id) => leafPredicate(df, leaves(id), oracle)
+      case LogicTree.Leaf(id) => value(id)
       case LogicTree.Node(op, cs) =>
-        val ordered = cs.sortBy(leafCost).map(build)
-        Ops.foldLogic(ordered, op.toLowerCase)
+        Ops.foldLogic(cs.sortBy(leafCost).map(build), op.toLowerCase)
     }
-    build(LogicTree.normalize(tree))
-  }
-
-  /** Some(leaf ids) when the normalized tree is an AND over plain leaves
-    * (or a single leaf) — the shape eligible for staged batched execution.
-    */
-  private def andLeafIds(t: LogicTree): Option[Seq[Int]] = t match {
-    case LogicTree.Leaf(id) => Some(Seq(id))
-    case LogicTree.Node(op, cs) if op.equalsIgnoreCase("and") &&
-        cs.forall(_.isInstanceOf[LogicTree.Leaf]) =>
-      Some(cs.collect { case LogicTree.Leaf(id) => id })
-    case _ => None
+    build(t)
   }
 
   /** Filter `df` by a plan of filter ops composed under `tree`; a missing
     * tree means AND of all (the reference's default when no logic is given).
-    *
-    * Staged batched cascade (Exection_Agent.py:380-394): under a pure AND
-    * of leaves with a non-compilable [[graft.oracle.BatchedOracle]], the
-    * cheap Column leaves run first as one codegen'd filter and ONLY the
-    * survivors stream through the batched sem_filter stages — the
-    * reference's undecided-row staging, instead of a per-row UDF leaf
-    * inside the single-pass predicate. Mixed OR trees keep the one-pass
-    * Column form (short-circuit still minimizes oracle evaluations there).
     */
   def filter(df: DataFrame, ops: Seq[(Int, LogicalOp)],
-      tree: Option[LogicTree], oracle: SemanticOracle): DataFrame = {
-    val t = tree.getOrElse(LogicTree.Node("AND", ops.map(o => LogicTree.Leaf(o._1))))
-    val leaves = ops.toMap
-    val norm = LogicTree.normalize(t)
-    (oracle, andLeafIds(norm)) match {
-      case (b: graft.oracle.BatchedOracle, Some(ids)) =>
-        val (semIds, cheapIds) = ids.partition { id =>
-          leaves(id) match {
-            case f: LogicalOp.SemFilter =>
-              oracle.compileJudge(f.condition).isEmpty
-            case _ => false
-          }
-        }
-        if (semIds.isEmpty) df.filter(predicate(df, leaves, norm, oracle))
-        else {
-          val pre =
-            if (cheapIds.isEmpty) df
-            else df.filter(predicate(df, leaves,
-              LogicTree.Node("AND", cheapIds.map(LogicTree.Leaf(_))), oracle))
-          semIds.map(leaves).collect { case f: LogicalOp.SemFilter => f }
-            .foldLeft(pre) { (d, f) =>
-              graft.oracle.BatchedExec.semFilter(d,
-                Ops.textCol(d, f.columns), f.condition, b)
+      tree: Option[LogicTree], oracle: SemanticOracle): DataFrame =
+    run(df, ops.map { case (id, op) => id -> lower(df, op) },
+      tree.getOrElse(LogicTree.Node("AND", ops.map(o => LogicTree.Leaf(o._1)))),
+      oracle)
+
+  /** Filter `df` by `tree` over lowered `leaves` (in plan order). The output
+    * has `df`'s schema, and its logical plan adds exactly one `Filter`.
+    *
+    * Staged form: that Filter drops the rows the cheap leaves already fail
+    * (out-of-band leaves read TRUE). One `mapPartitions` kernel then walks
+    * each partition in order, in blocks of [[MaxBlockRows]] rows, the other
+    * leaves as helper columns coalesced to false (sound: the tree has no
+    * NOT). Per out-of-band leaf, in plan order, it judges in batches of 64
+    * the rows whose tree is still undecided (unjudged leaves unknown) and
+    * that the leaf can still change; a row without text is false with no
+    * call. It emits the rows whose tree came out true. */
+  def run(df: DataFrame, leaves: Seq[(Int, Leaf)], tree: LogicTree,
+      oracle: SemanticOracle): DataFrame = {
+    val t = LogicTree.normalize(tree)
+    val byId = leaves.toMap
+    val staged = oracle match {
+      case b: BatchedOracle => leaves.collect {
+        case (id, Judge(f)) if oracle.compileJudge(f.condition).isEmpty =>
+          (id, f.condition, b)
+      }
+      case _ => Seq.empty
+    }
+    val semIds = staged.map(_._1).toSet
+    val mayPass = df.filter(fold(t, byId, id =>
+      if (semIds(id)) lit(true) else inBand(df, byId(id), oracle)))
+    if (staged.isEmpty) return mayPass
+    val helpers = leaves.map { case (id, leaf) => s"__leaf_$id" -> (leaf match {
+      case Judge(f) if semIds(id) => nullif(Ops.textCol(df, f.columns), lit(""))
+      case _ => coalesce(inBand(df, leaf, oracle), lit(false))
+    })}
+    val in = mayPass.select(col("*") +: helpers.map { case (n, c) => c.as(n) }: _*)
+    val at = leaves.map(_._1).zip(df.columns.length until in.columns.length).toMap
+    in.mapPartitions { rows =>
+      rows.grouped(MaxBlockRows).flatMap { block =>
+        val judged = block.map(_ => scala.collection.mutable.Map.empty[Int, Boolean])
+        def value(r: Int)(id: Int): Option[Boolean] =
+          if (!semIds(id)) Some(block(r).getBoolean(at(id)))
+          else if (block(r).isNullAt(at(id))) Some(false)
+          else judged(r).get(id)
+        staged.foreach { case (id, condition, b) =>
+          block.indices.filter(r => value(r)(id).isEmpty &&
+              eval(t, value(r)).isEmpty && reaches(t, id, value(r)))
+            .grouped(64).foreach { rs =>
+              val outs = b.judgeBatch(rs.map(block(_).getString(at(id))), condition)
+              require(outs.length == rs.length,
+                s"oracle batch returned ${outs.length} results for ${rs.length} inputs")
+              rs.lazyZip(outs).foreach((r, o) => judged(r)(id) = o)
             }
         }
-      case _ => df.filter(predicate(df, leaves, norm, oracle))
+        block.indices.filter(r => eval(t, value(r)).contains(true)).map(block)
+      }
+    }(RowEncoder.encoderFor(in.schema)).drop(helpers.map(_._1): _*)
+  }
+
+  /** Rows the staged kernel holds at once. */
+  private val MaxBlockRows = 4096
+
+  /** Kleene (three-valued) value of `t`; None = undecided. */
+  private def eval(t: LogicTree, v: Int => Option[Boolean]): Option[Boolean] =
+    t match {
+      case LogicTree.Leaf(id) => v(id)
+      case LogicTree.Node(_, Seq()) => Some(true)
+      case LogicTree.Node(op, cs) =>
+        val or = op.equalsIgnoreCase("or")
+        val vs = cs.map(eval(_, v))
+        if (vs.contains(Some(or))) Some(or)
+        else if (vs.forall(_.isDefined)) Some(!or)
+        else None
     }
+
+  /** Whether leaf `id` can still change the value of `t`: on its path every
+    * AND sibling may be true and every OR sibling may be false.
+    */
+  private def reaches(t: LogicTree, id: Int,
+      v: Int => Option[Boolean]): Boolean = t match {
+    case LogicTree.Leaf(i) => i == id
+    case LogicTree.Node(op, cs) =>
+      val or = op.equalsIgnoreCase("or")
+      cs.indices.exists(i => reaches(cs(i), id, v) &&
+        cs.indices.forall(j => j == i || !eval(cs(j), v).contains(or)))
   }
 }
 

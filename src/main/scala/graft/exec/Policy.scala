@@ -300,7 +300,7 @@ object Policied {
       case Dice.EnumStrategy =>
         FilterEnum.fromValues(df, column, condition, metered, enumVals.get)
       case _ =>
-        df.filter(Dice.predicate(df, column, condition, metered))
+        Dice(df, column, condition, metered)
     }
     new PoliciedFilter(out, "dice", column, choice, est, meter, charsM,
       usdPerCall, usdPerMChars)

@@ -3,8 +3,8 @@ package graft.exec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.oracle.SemanticOracle
-import graft.plan.{LogicalOp, NumCondition}
-import graft.ops.{KeywordFilter, NumFilter, Ops, SemFilter}
+import graft.plan.{LogicalOp, LogicTree, NumCondition}
+import graft.ops.{Ops, SemFilter}
 
 /** Column statistics gates for physical-strategy selection — the
   * data-driven validators of the reference's dice agent
@@ -213,8 +213,11 @@ object FilterPattern {
     * template shape, compare numerically. Rows not matching -> null -> out.
     */
   def predicate(column: String, template: String, group: Int,
+      conditions: Seq[NumCondition], logic: String): Column =
+    compare(column, templateRegex(template), group, conditions, logic)
+
+  private def compare(column: String, rx: String, group: Int,
       conditions: Seq[NumCondition], logic: String): Column = {
-    val rx = templateRegex(template)
     val extracted = regexp_extract(col(column).cast("string"), rx, group)
     val v = when(extracted === "", lit(null)).otherwise(extracted)
       .try_cast("double")
@@ -236,14 +239,9 @@ object FilterPattern {
     * codegen'd regex and no per-template enumeration.
     */
   def digitRunPredicate(column: String, group: Int,
-      conditions: Seq[NumCondition], logic: String = "and"): Column = {
-    val rx = s"^(?:[^0-9]*[0-9]+){${group - 1}}[^0-9]*([0-9]+)"
-    val extracted = regexp_extract(col(column).cast("string"), rx, 1)
-    val v = when(extracted === "", lit(null)).otherwise(extracted)
-      .try_cast("double")
-    val preds = conditions.map(c => Ops.cmp(v, c.op, c.threshold))
-    coalesce(Ops.foldLogic(preds, logic), lit(false))
-  }
+      conditions: Seq[NumCondition], logic: String = "and"): Column =
+    compare(column, s"^(?:[^0-9]*[0-9]+){${group - 1}}[^0-9]*([0-9]+)", 1,
+      conditions, logic)
 }
 
 /** `filter_enum_llm` physical strategy (Operaters.py:281-313): for
@@ -293,20 +291,7 @@ object FilterEnum {
       .distinct().limit(maxDistinct)
       .collect().map(_.getString(0)).toSeq.sorted, condition, oracle)
 
-  /** Escalating form: the exact keep-set filter when the column's
-    * distinct set fits `maxDistinct`, the per-row semantic filter when
-    * it does not — never a truncated value set.
-    */
-  def apply(df: DataFrame, column: String, condition: String,
-      oracle: SemanticOracle, maxDistinct: Int = 100): DataFrame =
-    distinctWithin(df, column, maxDistinct) match {
-      case Some(vals) => fromValues(df, column, condition, oracle, vals)
-      case None =>
-        SemFilter(df,
-          graft.plan.LogicalOp.SemFilter(Seq(column), condition), oracle)
-    }
-
-  /** [[apply]] over a pre-collected EXACT distinct set (from
+  /** The keep-set filter over a pre-collected EXACT distinct set (from
     * [[distinctWithin]]) — no second distinct job, no truncation.
     */
   def fromValues(df: DataFrame, column: String, condition: String,
@@ -349,33 +334,31 @@ object Dice {
     else SemFallback
   }
 
-  /** The chosen strategy's predicate as a composable Column — the form the
-    * agent layer needs to fold several dice/slice steps under one logic
-    * tree (the reference combines per-op masks, Exection_Agent.py:181-210).
+  /** The chosen strategy's filter leaf — the form the agent layer needs
+    * to compose several dice/slice steps under one logic tree (the
+    * reference combines per-op masks, Exection_Agent.py:181-210).
     */
-  def predicate(df: DataFrame, column: String, condition: String,
-      oracle: SemanticOracle): Column = choose(df, column, condition) match {
-    case PatternStrategy =>
-      // the comparable digit run is derived from the dominant template's
-      // per-run cardinality (memoized with the stats), not hardcoded
-      FilterPattern.digitRunPredicate(column,
-        ColumnStats.patternStatsCached(df, column).comparableGroup,
-        Seq(parseCompare(condition).get))
-    case CompareStrategy =>
-      val cond = parseCompare(condition).get.copy(column = column)
-      NumFilter.predicate(Seq(cond), "and")
-    case EnumStrategy =>
-      // exact bound, never a truncated keep-set: the sampled gate can
-      // undercount a column whose rare values sit past the sample
-      // prefix — overflow escalates to the per-row predicate
-      FilterEnum.distinctWithin(df, column, 100) match {
-        case Some(vals) =>
-          col(column).cast("string")
-            .isin(FilterEnum.keepFrom(vals, condition, oracle): _*)
-        case None => SemFilter.predicate(df, Seq(column), condition, oracle)
-      }
-    case SemFallback =>
-      SemFilter.predicate(df, Seq(column), condition, oracle)
+  def leaf(df: DataFrame, column: String, condition: String,
+      oracle: SemanticOracle): Cascade.Leaf = {
+    lazy val sem = Cascade.Judge(LogicalOp.SemFilter(Seq(column), condition))
+    choose(df, column, condition) match {
+      case PatternStrategy =>
+        // the comparable digit run is derived from the dominant template's
+        // per-run cardinality (memoized with the stats), not hardcoded
+        Cascade.Pred(FilterPattern.digitRunPredicate(column,
+          ColumnStats.patternStatsCached(df, column).comparableGroup,
+          Seq(parseCompare(condition).get)), 1)
+      case CompareStrategy => Cascade.lower(df, LogicalOp.NumFilter(
+        Seq(parseCompare(condition).get.copy(column = column)), "and"))
+      case EnumStrategy =>
+        // exact bound, never a truncated keep-set: the sampled gate can
+        // undercount a column whose rare values sit past the sample
+        // prefix — overflow escalates to the per-row judgment
+        FilterEnum.distinctWithin(df, column, 100).fold[Cascade.Leaf](sem)(
+          vals => Cascade.Pred(col(column).cast("string")
+            .isin(FilterEnum.keepFrom(vals, condition, oracle): _*), 1))
+      case SemFallback => sem
+    }
   }
 
   /** Run the dice verb: pick a strategy from the data (via [[choose]], the
@@ -384,7 +367,8 @@ object Dice {
     */
   def apply(df: DataFrame, column: String, condition: String,
       oracle: SemanticOracle): DataFrame =
-    df.filter(predicate(df, column, condition, oracle))
+    Cascade.run(df, Seq(0 -> leaf(df, column, condition, oracle)),
+      LogicTree.Leaf(0), oracle)
 }
 
 /** The slice verb (Agents/Slice_Agent.py:38-108): cross-field filter lowered
@@ -399,25 +383,17 @@ object Slice {
     toks.filterNot(t => toks.exists(o => o != t && t.contains(o)))
   }
 
-  /** The slice predicate as a composable Column (keyword prefilter AND
-    * semantic judgment; And short-circuits, so the oracle only sees rows
-    * the keyword disjunction kept).
+  /** The slice step as filter ops composed by AND: the keyword-OR
+    * prefilter (absent when the condition yields no keywords), then the
+    * semantic judgment.
     */
-  def predicate(df: DataFrame, columns: Seq[String], condition: String,
-      oracle: SemanticOracle): Column = {
-    val kw = keywords(condition)
-    val sem = SemFilter.predicate(df, columns, condition, oracle)
-    if (kw.isEmpty) sem
-    else KeywordFilter.predicate(df, columns, kw, "or", "contains") && sem
-  }
+  def ops(columns: Seq[String], condition: String): Seq[LogicalOp] =
+    Some(keywords(condition)).filter(_.nonEmpty).toSeq
+      .map(LogicalOp.KeywordFilter(columns, _, "or", "contains")) :+
+      LogicalOp.SemFilter(columns, condition)
 
   def apply(df: DataFrame, columns: Seq[String], condition: String,
-      oracle: SemanticOracle): DataFrame = {
-    val kw = keywords(condition)
-    val pre =
-      if (kw.isEmpty) df
-      else KeywordFilter(df,
-        LogicalOp.KeywordFilter(columns, kw, "or", "contains"))
-    SemFilter(pre, LogicalOp.SemFilter(columns, condition), oracle)
-  }
+      oracle: SemanticOracle): DataFrame =
+    Cascade.filter(df, ops(columns, condition).zipWithIndex.map(_.swap),
+      None, oracle)
 }

@@ -123,21 +123,12 @@ object SemFilter {
     }
   }
 
-  /** Standalone sem_filter. A non-compilable [[graft.oracle.BatchedOracle]]
-    * (an LLM transport) routes through the mapPartitions batched path — one
-    * oracle call per batch with per-partition client reuse — instead of a
-    * per-row UDF. Inside a mixed cascade (where leaves must be Columns) the
-    * UDF path still applies, but cost ordering has already minimized the
-    * rows that reach it.
-    */
+  /** Standalone sem_filter through the filter executor
+    * ([[graft.exec.Cascade]]): judged in batches out of band by a
+    * non-compilable [[graft.oracle.BatchedOracle]], in band otherwise. */
   def apply(df: DataFrame, op: LogicalOp.SemFilter,
-      oracle: SemanticOracle): DataFrame = oracle match {
-    case b: graft.oracle.BatchedOracle
-        if oracle.compileJudge(op.condition).isEmpty =>
-      graft.oracle.BatchedExec.semFilter(df, Ops.textCol(df, op.columns),
-        op.condition, b)
-    case _ => df.filter(predicate(df, op.columns, op.condition, oracle))
-  }
+      oracle: SemanticOracle): DataFrame =
+    graft.exec.Cascade.filter(df, Seq(0 -> op), None, oracle)
 }
 
 /** `sem_map` — derive a new named dimension from row text

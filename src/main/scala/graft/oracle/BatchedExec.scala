@@ -64,13 +64,6 @@ object BatchedExec {
     }(enc).drop("__oracle_text")
   }
 
-  /** sem_filter via batched oracle judgments. */
-  def semFilter(df: DataFrame, text: Column, condition: String,
-      oracle: BatchedOracle, batchSize: Int = 64): DataFrame =
-    withBatchedColumn(df, "__judge", BooleanType, text, batchSize)(
-      ts => oracle.judgeBatch(ts, condition))
-      .filter(col("__judge")).drop("__judge")
-
   /** sem_map via batched oracle extraction. */
   def semMap(df: DataFrame, outCol: String, text: Column, desc: String,
       oracle: BatchedOracle, batchSize: Int = 64): DataFrame =
@@ -101,7 +94,7 @@ object BatchedExec {
 
   /** Pairwise duels via batched oracle: appends a boolean `outCol` (does
     * side a beat side b?) computed one batch of PAIRS per oracle call —
-    * the duel-mode analogue of [[semFilter]] (a C² duel set would
+    * the duel-mode analogue of [[semScore]] (a C² duel set would
     * otherwise cost C² single RPCs).
     */
   def semDuel(df: DataFrame, outCol: String, ta: Column, tb: Column,

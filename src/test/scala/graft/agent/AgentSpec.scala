@@ -219,29 +219,52 @@ class AgentSpec extends SparkSpec {
       """{"has_topk": false}""")
     val sparkStep = "mentions spark"
     val joinStep = "mentions join"
-    val s = new Scripted(turn("AND", sparkStep) ++ turn("AND", sparkStep) ++
-      turn("AND", sparkStep, joinStep) ++ turn("OR", sparkStep, "mentions flink"): _*)
-    val agent = new OlapAgent(s, new JudgeCountingOracle)
-    val cat = new CubeCatalog(docs, oracle)
-    def run(q: String): (Seq[Long], Long, Long) = {
-      val (s0, j0) = (JudgeCountingOracle.judged(sparkStep),
-        JudgeCountingOracle.judged(joinStep))
-      val ids = agent.runSession(cat, q).select("id").as[Long].collect()
-        .sorted.toSeq
-      (ids, JudgeCountingOracle.judged(sparkStep) - s0,
-        JudgeCountingOracle.judged(joinStep) - j0)
+    val flinkStep = "mentions flink"
+    import graft.oracle.CountingOracle
+    def filters(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.logical.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f }.size
+    // the same session judged in band (per-row UDF) and out of band (a
+    // batched, non-compilable oracle through the staged cascade)
+    Seq[(graft.oracle.SemanticOracle, String => Long)](
+      (new JudgeCountingOracle, JudgeCountingOracle.judged),
+      (new CountingOracle, CountingOracle.judged)
+    ).foreach { case (judgeOracle, judged) =>
+      val s = new Scripted(turn("AND", sparkStep) ++ turn("AND", sparkStep) ++
+        turn("AND", sparkStep, joinStep) ++ turn("OR", sparkStep, flinkStep): _*)
+      val agent = new OlapAgent(s, judgeOracle)
+      val cat = new CubeCatalog(docs, oracle)
+      def run(q: String): (Seq[Long], Long, Long) = {
+        val (s0, j0) = (judged(sparkStep), judged(joinStep))
+        val ids = agent.runSession(cat, q).select("id").as[Long].collect()
+          .sorted.toSeq
+        (ids, judged(sparkStep) - s0, judged(joinStep) - j0)
+      }
+      val (first, firstJudged, _) = run("spark posts")
+      assert(first == Seq(1L, 2L, 3L, 5L) && firstJudged > 0)
+      assert(filters(cat.all.last.df) == 1) // a root turn adds one Filter
+      // Equal: the pinned node's rows, not one judgment re-billed
+      assert(run("spark posts again") == ((first, 0L, 0L)))
+      // delta: only the new step, judged over the 2 cached rows that pass
+      // its keyword prefilter; the cached step is not judged again
+      assert(run("spark join posts") == ((Seq(1L, 3L), 0L, 2L)))
+      assert(filters(cat.all.last.df) == 2) // the base's Filter plus one
+      // OR: no delta execution, a full run from the root
+      CountingOracle.pairs.clear(); CountingOracle.batches.set(0)
+      assert(run("spark or flink posts")._1 == Seq(1L, 2L, 3L, 4L, 5L))
+      assert(cat.reuse == CubeCatalog.Reuse(equal = 1, delta = 1, miss = 2,
+        evicted = 0))
+      assert(filters(cat.all.last.df) == 1)
+      if (judgeOracle.isInstanceOf[CountingOracle]) {
+        // each undecided row judged once per sem leaf: the 4 rows passing
+        // the spark prefilter, then only the flink row (the spark arm is
+        // false there); in at most ceil(judged / 64) + partitions batches
+        assert(judged(sparkStep) == 4L && judged(flinkStep) == 1L)
+        CountingOracle.pairs.forEach((k, v) => assert(v.get == 1, s"$k"))
+        val partitions = docs.rdd.getNumPartitions
+        assert(CountingOracle.batches.get() <= (5 + 63) / 64 + partitions)
+      }
     }
-    val (first, firstJudged, _) = run("spark posts")
-    assert(first == Seq(1L, 2L, 3L, 5L) && firstJudged > 0)
-    // Equal: the pinned node's rows, not one judgment re-billed
-    assert(run("spark posts again") == ((first, 0L, 0L)))
-    // delta: only the new step, judged over the 2 cached rows that pass
-    // its keyword prefilter; the cached step is not judged again
-    assert(run("spark join posts") == ((Seq(1L, 3L), 0L, 2L)))
-    // OR: no delta execution, a full run from the root
-    assert(run("spark or flink posts")._1 == Seq(1L, 2L, 3L, 4L, 5L))
-    assert(cat.reuse == CubeCatalog.Reuse(equal = 1, delta = 1, miss = 2,
-      evicted = 0))
   }
 
   test("ReAct loop ends gracefully on a malformed completion") {

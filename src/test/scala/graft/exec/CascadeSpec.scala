@@ -23,7 +23,7 @@ class CascadeSpec extends SparkSpec {
     val t1 = PlanJson.decodeLogic("""["AND", 0, 1, 2]""")
     val t2 = PlanJson.decodeLogic("""["AND", 2, 1, 0]""")
     def run(t: LogicTree) =
-      df.filter(Cascade.predicate(df, leaves, t, oracle))
+      Cascade.filter(df, leaves.toSeq, Some(t), oracle)
         .select("id").as[Long].collect().sorted.toSeq
     assert(run(t1) == run(t2))
     assert(run(t1) == Seq(3L))
@@ -31,7 +31,7 @@ class CascadeSpec extends SparkSpec {
 
   test("nested OR/AND tree evaluates correctly") {
     val t = PlanJson.decodeLogic("""["OR", ["AND", 0, 1], 2]""")
-    val got = df.filter(Cascade.predicate(df, leaves, t, oracle))
+    val got = Cascade.filter(df, leaves.toSeq, Some(t), oracle)
       .select("id").as[Long].collect().sorted.toSeq
     // (spark && v>25): 3,5 ; window: 2,3  => union 2,3,5
     assert(got == Seq(2L, 3L, 5L))

@@ -142,28 +142,30 @@ class PropertySpec extends SparkSpec {
     forAll(genTree(2)) { t =>
       val expected = rows.filter { case (_, lv) => evalTree(t, lv) }
         .map(_._1).toSeq.sorted
-      val got = df.filter(Cascade.predicate(df, leaves, t, oracle))
+      val got = Cascade.filter(df, leaves.toSeq, Some(t), oracle)
         .select("id").as[Long].collect().sorted.toSeq
       assert(got == expected, s"tree $t")
     }
   }
 
-  test("staged batched cascade equals the one-pass path for random AND plans") {
-    // a batched, non-compilable oracle routes AND-of-leaves plans through
-    // the staged path (cheap columns first, survivors batched); semantics
-    // must be identical to the compiled one-pass predicate
-    val batched = new graft.oracle.CountingOracle
-    val genSubset: Gen[Seq[Int]] = for {
-      n <- Gen.choose(1, 5)
-      xs <- Gen.listOfN(n, Gen.choose(0, 4))
-    } yield xs.distinct
-    forAll(genSubset, n = 25) { idxs =>
-      val ops = idxs.map(leaves).zipWithIndex.map(_.swap)
-      val staged = Cascade.filter(df, ops, None, batched)
+  test("staged batched cascade equals the one-pass path for random AND/OR trees") {
+    // a batched, non-compilable oracle routes every tree through the staged
+    // path (batched judgments per sem leaf, three-valued routing); with
+    // leaf 1 as a second sem leaf, semantics must equal the compiled
+    // one-pass predicate, and no (row, sem leaf) pair is judged twice
+    import graft.oracle.CountingOracle
+    val batched = new CountingOracle
+    val withTwoSem = leaves + (1 -> LogicalOp.SemFilter(Seq("txt"), "join"))
+    val ops = withTwoSem.toSeq.sortBy(_._1)
+    forAll(genTree(2), n = 25) { t =>
+      CountingOracle.pairs.clear()
+      val staged = Cascade.filter(df, ops, Some(t), batched)
         .select("id").as[Long].collect().sorted.toSeq
-      val onePass = Cascade.filter(df, ops, None, oracle)
+      val onePass = Cascade.filter(df, ops, Some(t), oracle)
         .select("id").as[Long].collect().sorted.toSeq
-      assert(staged == onePass, s"plan $idxs")
+      assert(staged == onePass, s"tree $t")
+      CountingOracle.pairs.forEach((k, v) =>
+        assert(v.get == 1, s"tree $t judged $k ${v.get} times"))
     }
   }
 }

@@ -3,6 +3,7 @@ package graft.oracle
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** Deterministic oracle forced onto the batched path, counting batch
   * calls to prove batching actually happens. Top-level so the closure
@@ -15,6 +16,8 @@ class CountingOracle extends DeterministicOracle with BatchedOracle {
     CountingOracle.batches.incrementAndGet()
     CountingOracle.maxBatch.updateAndGet(m => math.max(m, texts.length))
     CountingOracle.texts.addAndGet(texts.length)
+    texts.foreach(t => CountingOracle.pairs
+      .computeIfAbsent((condition, t), _ => new AtomicInteger).incrementAndGet())
     super.judgeBatch(texts, condition)
   }
   override def duelBatch(pairs: Seq[(String, String)], query: String) = {
@@ -29,6 +32,13 @@ object CountingOracle {
   val texts = new AtomicInteger(0)
   val duelBatches = new AtomicInteger(0)
   val duels = new AtomicInteger(0)
+  /** Judgments per (condition, text). */
+  val pairs = new java.util.concurrent.ConcurrentHashMap[(String, String), AtomicInteger]
+  def judged(condition: String): Long = {
+    var n = 0L
+    pairs.forEach((k, v) => if (k._1 == condition) n += v.get)
+    n
+  }
 }
 
 class BatchedExecSpec extends SparkSpec {
@@ -41,8 +51,10 @@ class BatchedExecSpec extends SparkSpec {
   test("batched sem_filter matches compiled path and batches requests") {
     CountingOracle.batches.set(0); CountingOracle.maxBatch.set(0)
     val oracle = new CountingOracle
-    val batched = BatchedExec.semFilter(docs, col("txt"), "spark", oracle,
-      batchSize = 32).select("id").as[Long].collect().sorted.toSeq
+    val batched = BatchedExec.withBatchedColumn(docs, "j",
+      org.apache.spark.sql.types.BooleanType, col("txt"), 32)(
+      ts => oracle.judgeBatch(ts, "spark"))
+      .filter(col("j")).select("id").as[Long].collect().sorted.toSeq
     val compiled = graft.ops.SemFilter(docs,
       graft.plan.LogicalOp.SemFilter(Seq("txt"), "spark"),
       DeterministicOracle.default).select("id").as[Long].collect().sorted.toSeq
@@ -100,6 +112,42 @@ class BatchedExecSpec extends SparkSpec {
     assert(batched == direct)
     val pairs = CountingOracle.duels.get()
     assert(pairs > 0 && CountingOracle.duelBatches.get() <= pairs / 32 + 8)
+  }
+
+  test("staged edge rows: a keyword-less slice, a dice sem fallback and a " +
+      "null text; the output keeps the input schema") {
+    val oracle = new CountingOracle
+    val compiled = DeterministicOracle.default
+    // eight distinct values: too spread out for the enum strategy
+    val texts = Seq("spark doc one", "flink doc two", "spark doc three", null,
+      "duck doc five", "spark doc six", "pandas doc seven", "flink doc eight")
+    val rows = texts.zipWithIndex.map { case (t, i) => (i + 1L, t) }
+      .toDF("id", "txt")
+    val everyText = texts.filter(_ != null).map(_ -> 1).toMap
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").as[Long].collect().sorted.toSeq
+    def judgedTexts(cond: String) = {
+      val ts = scala.collection.mutable.Map.empty[String, Int]
+      CountingOracle.pairs.forEach((k, v) => if (k._1 == cond) ts(k._2) = v.get)
+      ts.toMap
+    }
+    // a slice whose condition yields no keywords is its sem leaf alone:
+    // every row with text is judged once, none is prefiltered
+    assert(graft.exec.Slice.keywords("about it").isEmpty)
+    CountingOracle.pairs.clear()
+    val noKw = graft.exec.Slice(rows, Seq("txt"), "about it", oracle)
+    assert(ids(noKw) == ids(graft.exec.Slice(rows, Seq("txt"), "about it", compiled)))
+    assert(noKw.schema == rows.schema)
+    assert(judgedTexts("about it") == everyText)
+    // a dice step on free text falls back to the sem leaf, judged in batches
+    assert(graft.exec.Dice.choose(rows, "txt", "spark") == graft.exec.Dice.SemFallback)
+    CountingOracle.pairs.clear()
+    val dice = graft.exec.Dice(rows, "txt", "spark", oracle)
+    assert(ids(dice) == Seq(1L, 3L, 6L))
+    assert(dice.schema == rows.schema)
+    // the null text (row 4) is judged false without an oracle call
+    assert(judgedTexts("spark") == everyText)
+    assert(!CountingOracle.pairs.keySet.asScala.exists(k => k._2 == null || k._2.isEmpty))
   }
 
   test("batch kernel arity mismatch fails loudly") {
