@@ -73,6 +73,29 @@ object SparkEntry {
     p.toFile.getAbsolutePath
   }
 
+  /** Deletes the tree at `p`, children first; an absent `p` is a no-op.
+    * A failed delete throws, so a gate that cannot reset its scratch
+    * fails instead of running over stale state.
+    */
+  private def rmTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val files = java.nio.file.Files.walk(p)
+      try files.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => java.nio.file.Files.delete(f))
+      finally files.close()
+    }
+
+  /** Each bucket data file under the Merge table at `path` → its mtime:
+    * the rewrite-free gates compare two snapshots of this map. */
+  private def dataFiles(path: String): Map[String, Long] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(path))
+      .filter(f => f.getPath.contains("__bucket=") &&
+        f.getName.endsWith(".parquet"))
+      .map(f => f.getPath -> f.lastModified()).toMap
+  }
+
   /** Per-gate phase tracer (enable with SPARK_GRAFT_TRACE=1): each call
     * prints the seconds since the previous mark to stderr, so a gate's
     * wall time decomposes into its lifecycle phases (SURVEY §6's
@@ -1370,16 +1393,7 @@ object SparkEntry {
         t(s, dir, "part").selectExpr("p_partkey AS id",
           "p_name AS name", "p_retailprice AS price"),
         path, "id", 16, statsCols = Seq("id"))
-      def dataFiles(): Map[String, Long] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(path))
-          .filter(f => f.getPath.contains("__bucket=") &&
-            f.getName.endsWith(".parquet"))
-          .map(f => f.getPath -> f.lastModified()).toMap
-      }
-      val before = dataFiles()
+      val before = dataFiles(path)
       val upd = t(s, dir, "part").where("p_partkey % 97 = 0")
         .selectExpr("p_partkey AS id",
           "concat('u_', p_name) AS name",
@@ -1390,7 +1404,7 @@ object SparkEntry {
         upd.unionByName(news), "id", 16)
       require(st.rowsDeleted > 0,
         s"the batch must replace real rows for this gate to bite: $st")
-      val after = dataFiles()
+      val after = dataFiles(path)
       require(before.forall { case (f, m) => after.get(f).contains(m) },
         "merge-on-read upsert must not rewrite any existing data file")
       require(after.size > before.size,
@@ -1419,16 +1433,7 @@ object SparkEntry {
         t(s, dir, "part").selectExpr("p_partkey AS id",
           "p_name AS name", "p_retailprice AS price"),
         path, "id", 16, statsCols = Seq("id"))
-      def dataFiles(): Map[String, Long] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(path))
-          .filter(f => f.getPath.contains("__bucket=") &&
-            f.getName.endsWith(".parquet"))
-          .map(f => f.getPath -> f.lastModified()).toMap
-      }
-      val before = dataFiles()
+      val before = dataFiles(path)
       s.conf.set("spark.graft.dml.mergeOnRead", "true")
       try {
         s.sql(s"UPDATE $cat.parts SET price = price + 1 " +
@@ -1445,7 +1450,7 @@ object SparkEntry {
           WHEN MATCHED THEN UPDATE SET name = u.name
           WHEN NOT MATCHED THEN INSERT (id, name, price)
             VALUES (u.id, u.name, u.price)""")
-        val after = dataFiles()
+        val after = dataFiles(path)
         require(before.forall { case (f, m) =>
             after.get(f).contains(m) },
           "three merge-on-read DML statements must rewrite NOTHING")
@@ -1477,16 +1482,7 @@ object SparkEntry {
         t(s, dir, "part").selectExpr("p_partkey AS id",
           "p_name AS name", "p_retailprice AS price"),
         path, "id", 16, statsCols = Seq("id"))
-      def dataFiles(): Map[String, Long] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-          else Seq(f)
-        walk(new java.io.File(path))
-          .filter(f => f.getPath.contains("__bucket=") &&
-            f.getName.endsWith(".parquet"))
-          .map(f => f.getPath -> f.lastModified()).toMap
-      }
-      val before = dataFiles()
+      val before = dataFiles(path)
       s.conf.set("spark.graft.dml.mergeOnRead", "true")
       try {
         val src = s"graft_sqlmord_src_$sf"
@@ -1504,7 +1500,7 @@ object SparkEntry {
           WHEN MATCHED THEN UPDATE SET name = u.name
           WHEN NOT MATCHED THEN INSERT (id, name, price)
             VALUES (u.id, u.name, u.price)""")
-        val after = dataFiles()
+        val after = dataFiles(path)
         require(before.forall { case (f, m) =>
             after.get(f).contains(m) },
           "a MERGE with a DELETE branch must stay merge-on-read: no " +
@@ -2695,12 +2691,6 @@ object SparkEntry {
       import graft.sources.Merge
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_cpi_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val path = base.resolve("tbl").toString
       val landing = base.resolve("landing")
@@ -3819,12 +3809,6 @@ object SparkEntry {
       import graft.sources.Merge
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_rl_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val path = base.resolve("tbl").toString
       val part = t(s, dir, "part")
@@ -3864,32 +3848,18 @@ object SparkEntry {
       import graft.sources.Merge
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_dv_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val path = base.resolve("tbl").toString
       val part = t(s, dir, "part")
         .select("p_partkey", "p_brand", "p_retailprice")
       Merge.writeKeyed(part, path, "p_partkey", nBuckets = 64)
-      def dataFiles(): Map[String, Long] = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-        walk(new java.io.File(path))
-          .filter(f => f.getPath.contains("__bucket=") &&
-            f.getName.endsWith(".parquet"))
-          .map(f => f.getPath -> f.lastModified()).toMap
-      }
-      val before = dataFiles()
+      val before = dataFiles(path)
       val s1 = Merge.deleteWhereDV(s, path,
         col("p_partkey") % 100 === 13 && col("p_partkey") <= 2000)
       val s2 = Merge.deleteWhereDV(s, path, col("p_partkey") < 3)
       require(s1.rowsDeleted > 0 && s2.rowsDeleted > 0,
         "both DV deletes must match rows")
-      require(dataFiles() == before,
+      require(dataFiles(path) == before,
         "deletion vectors must not touch any data file")
       val preFold = Merge.readKeyed(s, path).orderBy("p_partkey")
         .collect()
@@ -3911,12 +3881,6 @@ object SparkEntry {
       val dec = (c: String) => col(c).cast("decimal(18,2)")
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_v2cdf_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val path = base.resolve("tbl").toString
       val part = t(s, dir, "part")
@@ -3958,12 +3922,6 @@ object SparkEntry {
       val dec = (c: String) => col(c).cast("decimal(18,2)")
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_cdfd_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val path = base.resolve("tbl").toString
       val part = t(s, dir, "part")
@@ -4006,12 +3964,6 @@ object SparkEntry {
       import graft.sources.Merge
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_wap_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val prod = base.resolve("prod").toString
       val stage = base.resolve("stage").toString
@@ -4057,12 +4009,6 @@ object SparkEntry {
       val dec = (c: String) => col(c).cast("decimal(18,2)")
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_clone_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val src = base.resolve("src").toString
       val dst = base.resolve("dst").toString
@@ -4099,12 +4045,6 @@ object SparkEntry {
       import graft.sources.Merge
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_tag_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val path = base.resolve("tbl").toString
       val orders = t(s, dir, "orders")
@@ -4446,11 +4386,6 @@ object SparkEntry {
       val sfName = new java.io.File(dir).getName
       val base = Paths.get(scratchRoot,
         s"graft_stream_upsert_$sfName")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (Files.exists(p)) {
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-        }
       rmTree(base)
       val inDir = base.resolve("in"); Files.createDirectories(inDir)
       val tbl = base.resolve("tbl").toString
@@ -4622,11 +4557,7 @@ object SparkEntry {
       // v0, and a leftover sync watermark (v2 from a previous run in
       // this JVM — the bench runs every gate three times) would ask for
       // changesBetween(2, 0) and throw
-      def rmTree(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmTree)
-        f.delete(); ()
-      }
-      rmTree(new java.io.File(st))
+      rmTree(java.nio.file.Paths.get(st))
       val part = t(s, dir, "part")
         .select("p_partkey", "p_brand", "p_retailprice")
       Merge.writeKeyed(part, tbl, "p_partkey", nBuckets = 16)
@@ -4891,11 +4822,6 @@ object SparkEntry {
       val inDir = base.resolve("in")
       val statePath = base.resolve("state").toString
       // fresh state + inputs every run: the gate must exercise the fold
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (Files.exists(p)) {
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-        }
       rmTree(base)
       Files.createDirectories(inDir)
       val e = t(s, dir, "events").select("user_id", "event_type", "ts",
@@ -4951,11 +4877,6 @@ object SparkEntry {
         s"graft_stream_retr_$sfName")
       val inDir = base.resolve("in")
       val statePath = base.resolve("state").toString
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (Files.exists(p)) {
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-        }
       rmTree(base)
       Files.createDirectories(inDir)
       val e = t(s, dir, "events").select("user_id", "event_type", "ts",
@@ -5018,11 +4939,6 @@ object SparkEntry {
       val inDir = base.resolve("in")
       val outDir = base.resolve("out").toString
       val ckpt = base.resolve("ckpt").toString
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (Files.exists(p)) {
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-        }
       rmTree(base)
       Files.createDirectories(inDir)
       val ev = t(s, dir, "events")
@@ -5957,11 +5873,6 @@ object SparkEntry {
       import java.nio.file.{Files, Paths}
       val sfx = new java.io.File(dir).getName
       val base = Paths.get(scratchRoot, s"graft_sdi_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (Files.exists(p)) {
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-        }
       rmTree(base)
       val inDir = base.resolve("in"); Files.createDirectories(inDir)
       val idxPath = base.resolve("idx").toString
@@ -6014,11 +5925,6 @@ object SparkEntry {
       import org.apache.spark.sql.streaming.Trigger
       val sfx = new java.io.File(dir).getName
       val base = Paths.get(scratchRoot, s"graft_sau_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (Files.exists(p)) {
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-        }
       rmTree(base)
       val inDir = base.resolve("in"); Files.createDirectories(inDir)
       val idxPath = base.resolve("idx").toString
@@ -6087,11 +5993,6 @@ object SparkEntry {
       import org.apache.spark.sql.streaming.Trigger
       val sfx = new java.io.File(dir).getName
       val base = Paths.get(scratchRoot, s"graft_stc_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (Files.exists(p)) {
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-        }
       rmTree(base)
       val inDir = base.resolve("in"); Files.createDirectories(inDir)
       val factPath = base.resolve("fact").toString
@@ -6176,11 +6077,6 @@ object SparkEntry {
       import s.implicits._
       val sfx = new java.io.File(dir).getName
       val base = Paths.get(scratchRoot, s"graft_tsink_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (Files.exists(p)) {
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-        }
       rmTree(base)
       val inDir = base.resolve("in"); Files.createDirectories(inDir)
       val tbl = base.resolve("tbl").toString
@@ -6234,12 +6130,6 @@ object SparkEntry {
       import org.apache.spark.sql.streaming.Trigger
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_rowcap_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val path = base.resolve("tbl").toString
       val ckpt = base.resolve("ckpt").toString
@@ -6319,12 +6209,6 @@ object SparkEntry {
       val dec = (c: String) => col(c).cast("decimal(18,2)")
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_tss_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val path = base.resolve("tbl").toString
       val ckpt = base.resolve("ckpt").toString
@@ -6398,12 +6282,6 @@ object SparkEntry {
       val dec = (c: String) => col(c).cast("decimal(18,2)")
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_cdf_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val path = base.resolve("tbl").toString
       val ckpt = base.resolve("ckpt").toString
@@ -6486,12 +6364,6 @@ object SparkEntry {
       val dec = (c: String) => col(c).cast("decimal(18,2)")
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_tmv_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val tbl = base.resolve("tbl").toString
       val ckpt = base.resolve("ckpt").toString
@@ -6547,12 +6419,6 @@ object SparkEntry {
       val dec = (c: String) => col(c).cast("decimal(18,2)")
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_repl_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val src = base.resolve("src").toString
       val rep = base.resolve("rep").toString
@@ -6626,12 +6492,6 @@ object SparkEntry {
       val dec = (c: String) => col(c).cast("decimal(18,2)")
       val sfx = new java.io.File(dir).getName
       val base = java.nio.file.Paths.get(scratchRoot, s"graft_replc_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.delete(f))
-        }
       rmTree(base)
       val src = base.resolve("src").toString
       val rep = base.resolve("rep").toString
@@ -6699,11 +6559,6 @@ object SparkEntry {
       import org.apache.spark.sql.streaming.Trigger
       val sfx = new java.io.File(dir).getName
       val base = Paths.get(scratchRoot, s"graft_sci_$sfx")
-      def rmTree(p: java.nio.file.Path): Unit =
-        if (Files.exists(p)) {
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-        }
       rmTree(base)
       val inDir = base.resolve("in"); Files.createDirectories(inDir)
       val corpusPath = base.resolve("corpus").toString

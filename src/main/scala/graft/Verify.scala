@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.sources.JsonEscape
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -58,31 +59,15 @@ object Verify {
       timings(name) =
         ((System.nanoTime() - t0) / 1e9, gcMsAcc.get() - gc0)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.map { case (k, v) => k -> str(v) }))
     Files.writeString(Paths.get(s"$outDir/_failed.json"),
-      failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-        .mkString("{", ",", "}"))
+      obj(failed.map { case (k, v) => k -> str(v) }))
     // per-query {sec, gc_ms}: beside the dump for the driver AND as a
     // repo artifact (the outDir is ephemeral; BENCH_LAST.json precedent)
-    val tJson = timings
-      .map { case (k, (s, g)) =>
-        s"${q(k)}: {" + "\"sec\":" + "%.4f".format(s) +
-          s""","gc_ms":$g}"""
-      }.mkString("{", ",", "}")
+    val tJson = obj(timings.map { case (k, (s, g)) =>
+      k -> ("{\"sec\":" + "%.4f".format(s) + s""","gc_ms":$g}""")
+    })
     Files.writeString(Paths.get(s"$outDir/_timings.json"), tJson)
     if (only.isEmpty) // partial local probes must not pose as the round's run
       try Files.writeString(Paths.get("VERIFY_TIMINGS.json"), tJson)
@@ -92,4 +77,13 @@ object Verify {
         s"[verify] ${failed.size} FAILED dumps: ${failed.keys.mkString(",")}")
     spark.stop()
   }
+
+  /** A JSON string literal: [[JsonEscape]] keeps a tab or CR in the
+    * oracle SQL, or a surrogate half left by cutting an error message,
+    * from breaking the driver's `json.load` or the UTF-8 write. */
+  private[graft] def str(s: String): String = "\"" + JsonEscape(s) + "\""
+
+  /** A JSON object of `key: value`; each value is already JSON text. */
+  private[graft] def obj(fields: Iterable[(String, String)]): String =
+    fields.map { case (k, v) => s"${str(k)}: $v" }.mkString("{", ",", "}")
 }

@@ -165,16 +165,6 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
   def attachRootDims(dims: Map[String, DimensionViews]): Unit =
     nodes = nodes.updated(0, nodes(0).copy(dims = nodes(0).dims ++ dims))
 
-  sealed trait Relation
-  case object Equal extends Relation
-  case object Subset extends Relation    // cached ⊃ query (query adds preds)
-  case object NoRelation extends Relation
-
-  def relation(cached: Set[String], query: Set[String]): Relation =
-    if (cached == query) Equal
-    else if (cached.subsetOf(query)) Subset
-    else NoRelation
-
   /** The reference's full five-way relation (OLAP_Memory.py:5-64), decided
     * STRUCTURALLY instead of by LLM judgment. Conjunctive semantics: more
     * atoms = fewer rows.
@@ -382,7 +372,7 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
   def filterQuery(queryText: String, filters: Seq[LogicalOp]): CubeNode = {
     val key = PredicateAtoms.atoms(filters)
     val base0 = bestBaseImplied(filters)
-    if (relation(base0.predicates, key) == Equal) return equalHit(base0)
+    if (base0.predicates == key) return equalHit(base0)
 
     // Oracle fallback (r18, BFS-bounded r19): only when the structural
     // path found no reuse at all (base = root) and a judge is wired. An

@@ -225,9 +225,48 @@ object Policied {
       extends PoliciedOp(df, operator, column, strategy.name, estCalls,
         meter, charsMeter, usdPerCall, usdPerMChars)
 
-  private def meters(df: DataFrame): (LongAccumulator, LongAccumulator) =
-    (df.sparkSession.sparkContext.longAccumulator("graft.oracle.calls"),
-      df.sparkSession.sparkContext.longAccumulator("graft.oracle.chars"))
+  /** Fresh call and judged-character meters, and `oracle` wrapped to
+    * bill them. MinCost runs the cheapest correct plan (compiled paths
+    * stay codegen, zero calls); MaxQuality forces every judgment
+    * out-of-band and bills it.
+    */
+  private def metering(df: DataFrame, oracle: SemanticOracle, policy: Policy)
+      : (LongAccumulator, LongAccumulator, MeteredOracle) = {
+    val sc = df.sparkSession.sparkContext
+    val meter = sc.longAccumulator("graft.oracle.calls")
+    val charsM = sc.longAccumulator("graft.oracle.chars")
+    (meter, charsM, new MeteredOracle(oracle, meter,
+      forwardCompile = policy == Policy.MinCost, chars = charsM))
+  }
+
+  /** Token reduction's parity probe: `reduceTo` is tried only when it
+    * names a strict subset of the judged columns (all of `df`'s when
+    * `columns` is empty), and kept only if `same` holds for the full and
+    * the reduced text of every one of `paritySample` sampled rows.
+    * Returns whether the reduction is kept, and the per-row strategy
+    * label.
+    */
+  private def parityProbe(df: DataFrame, columns: Seq[String],
+      reduceTo: Seq[String], paritySample: Int,
+      same: (String, String) => Boolean): (Boolean, String) = {
+    val fullCols = if (columns.nonEmpty) columns else df.columns.toSeq
+    val wantReduce = reduceTo.nonEmpty &&
+      reduceTo.toSet.subsetOf(fullCols.toSet) &&
+      reduceTo.toSet != fullCols.toSet
+    val reduceOk = wantReduce && {
+      val sample = df.select(Ops.textCol(df, columns).as("f"),
+        Ops.textCol(df, reduceTo).as("r")).limit(paritySample).collect()
+      sample.forall { r =>
+        same(Option(r.getString(0)).getOrElse(""),
+          Option(r.getString(1)).getOrElse(""))
+      }
+    }
+    val strategy =
+      if (reduceOk) "per_row_reduced"
+      else if (wantReduce) "per_row_reduction_rejected"
+      else "per_row"
+    (reduceOk, strategy)
+  }
 
   /** Catalyst's plan-time row-count statistic, -1 when unknown (the
     * meter supplies the truth post-run).
@@ -260,12 +299,7 @@ object Policied {
   def dice(df: DataFrame, column: String, condition: String,
       oracle: SemanticOracle, policy: Policy, usdPerCall: Double = 0.0,
       maxDistinct: Int = 100, usdPerMChars: Double = 0.0): PoliciedFilter = {
-    val (meter, charsM) = meters(df)
-    // MinCost runs the cheapest correct plan (compiled paths stay
-    // codegen, zero calls); MaxQuality forces every judgment
-    // out-of-band and bills it
-    val metered = new MeteredOracle(oracle, meter,
-      forwardCompile = policy == Policy.MinCost, chars = charsM)
+    val (meter, charsM, metered) = metering(df, oracle, policy)
     val (choice, enumVals): (Dice.Choice, Option[Seq[String]]) =
       policy match {
         case Policy.MaxQuality => (Dice.SemFallback, None)
@@ -321,9 +355,7 @@ object Policied {
       oracle: SemanticOracle, policy: Policy, usdPerCall: Double = 0.0,
       usdPerMChars: Double = 0.0, reduceTo: Seq[String] = Seq.empty,
       paritySample: Int = 64): PoliciedOp = {
-    val (meter, charsM) = meters(df)
-    val metered = new MeteredOracle(oracle, meter,
-      forwardCompile = policy == Policy.MinCost, chars = charsM)
+    val (meter, charsM, metered) = metering(df, oracle, policy)
     val compiled =
       policy == Policy.MinCost && oracle.compileJudge(condition).isDefined
     if (compiled) {
@@ -331,23 +363,10 @@ object Policied {
       new PoliciedOp(out, "sem_filter", columns.mkString(","), "compiled",
         0L, meter, charsM, usdPerCall, usdPerMChars)
     } else {
-      val fullCols = if (columns.nonEmpty) columns else df.columns.toSeq
-      val wantReduce = reduceTo.nonEmpty &&
-        reduceTo.toSet.subsetOf(fullCols.toSet) &&
-        reduceTo.toSet != fullCols.toSet
-      val reduceOk = wantReduce && {
-        val sample = df.select(Ops.textCol(df, columns).as("f"),
-          Ops.textCol(df, reduceTo).as("r")).limit(paritySample).collect()
-        sample.forall { r =>
-          metered.judge(Option(r.getString(0)).getOrElse(""), condition) ==
-            metered.judge(Option(r.getString(1)).getOrElse(""), condition)
-        }
-      }
+      val (reduceOk, strategy) = parityProbe(df, columns, reduceTo,
+        paritySample, (f, r) =>
+          metered.judge(f, condition) == metered.judge(r, condition))
       val judged = if (reduceOk) reduceTo else columns
-      val strategy =
-        if (reduceOk) "per_row_reduced"
-        else if (wantReduce) "per_row_reduction_rejected"
-        else "per_row"
       val out = SemFilter(df, LogicalOp.SemFilter(judged, condition), metered)
       new PoliciedOp(out, "sem_filter", columns.mkString(","), strategy,
         rowEst(df), meter, charsM, usdPerCall, usdPerMChars)
@@ -366,9 +385,7 @@ object Policied {
       policy: Policy, usdPerCall: Double = 0.0, usdPerMChars: Double = 0.0,
       reduceTo: Seq[String] = Seq.empty,
       paritySample: Int = 64): PoliciedOp = {
-    val (meter, charsM) = meters(df)
-    val metered = new MeteredOracle(oracle, meter,
-      forwardCompile = policy == Policy.MinCost, chars = charsM)
+    val (meter, charsM, metered) = metering(df, oracle, policy)
     val compiled = policy == Policy.MinCost &&
       oracle.compileExtract(op.mapDescription).isDefined
     if (compiled) {
@@ -376,25 +393,11 @@ object Policied {
         op.keyword, "compiled", 0L, meter, charsM, usdPerCall,
         usdPerMChars)
     } else {
-      val fullCols = if (op.columns.nonEmpty) op.columns else df.columns.toSeq
-      val wantReduce = reduceTo.nonEmpty &&
-        reduceTo.toSet.subsetOf(fullCols.toSet) &&
-        reduceTo.toSet != fullCols.toSet
-      val reduceOk = wantReduce && {
-        val sample = df.select(Ops.textCol(df, op.columns).as("f"),
-          Ops.textCol(df, reduceTo).as("r")).limit(paritySample).collect()
-        sample.forall { r =>
-          metered.extract(Option(r.getString(0)).getOrElse(""),
-            op.mapDescription) ==
-            metered.extract(Option(r.getString(1)).getOrElse(""),
-              op.mapDescription)
-        }
-      }
+      val (reduceOk, strategy) = parityProbe(df, op.columns, reduceTo,
+        paritySample, (f, r) =>
+          metered.extract(f, op.mapDescription) ==
+            metered.extract(r, op.mapDescription))
       val judged = if (reduceOk) op.copy(columns = reduceTo) else op
-      val strategy =
-        if (reduceOk) "per_row_reduced"
-        else if (wantReduce) "per_row_reduction_rejected"
-        else "per_row"
       new PoliciedOp(graft.ops.SemMap(df, judged, metered), "sem_map",
         op.keyword, strategy, rowEst(df), meter, charsM, usdPerCall,
         usdPerMChars)
@@ -415,9 +418,7 @@ object Policied {
   def semTopK(df: DataFrame, op: LogicalOp.SemTopK, oracle: SemanticOracle,
       policy: Policy, idCol: String, usdPerCall: Double = 0.0,
       usdPerMChars: Double = 0.0, overscan: Int = 4): PoliciedOp = {
-    val (meter, charsM) = meters(df)
-    val metered = new MeteredOracle(oracle, meter,
-      forwardCompile = policy == Policy.MinCost, chars = charsM)
+    val (meter, charsM, metered) = metering(df, oracle, policy)
     policy match {
       case Policy.MinCost =>
         val out = SemTopK(df, op, metered, tiebreak = Seq(idCol))
@@ -452,9 +453,7 @@ object Policied {
       usdPerMChars: Double = 0.0, maxTags: Int = 20,
       reduceTo: Seq[String] = Seq.empty,
       paritySample: Int = 64): PoliciedOp = {
-    val (meter, charsM) = meters(df)
-    val metered = new MeteredOracle(oracle, meter,
-      forwardCompile = policy == Policy.MinCost, chars = charsM)
+    val (meter, charsM, metered) = metering(df, oracle, policy)
     val v =
       if (vocab.nonEmpty) vocab
       else SemGroup.mineVocabulary(df, op.columns, maxTags)
@@ -465,26 +464,13 @@ object Policied {
     // cost zero calls at any prompt size), parity-probed on the
     // ASSIGNED LABELS: any sampled row whose reduced-text label differs
     // rejects the reduction
-    val fullCols = if (op.columns.nonEmpty) op.columns else df.columns.toSeq
-    val wantReduce = !compiled && reduceTo.nonEmpty &&
-      reduceTo.toSet.subsetOf(fullCols.toSet) &&
-      reduceTo.toSet != fullCols.toSet
-    val reduceOk = wantReduce && {
-      val sample = df.select(Ops.textCol(df, op.columns).as("f"),
-        Ops.textCol(df, reduceTo).as("r")).limit(paritySample).collect()
-      sample.forall { r =>
-        metered.classify(Option(r.getString(0)).getOrElse(""), v) ==
-          metered.classify(Option(r.getString(1)).getOrElse(""), v)
-      }
-    }
+    val (reduceOk, mode) =
+      if (compiled) (false, "compiled")
+      else parityProbe(df, op.columns, reduceTo, paritySample, (f, r) =>
+        metered.classify(f, v) == metered.classify(r, v))
     val judged = if (reduceOk) op.copy(columns = reduceTo) else op
     val out = SemGroup(df, judged, v, metered)
     val est = if (compiled) 0L else rowEst(df)
-    val mode =
-      if (compiled) "compiled"
-      else if (reduceOk) "per_row_reduced"
-      else if (wantReduce) "per_row_reduction_rejected"
-      else "per_row"
     new PoliciedOp(out, "sem_group", op.keyword, s"${kind}_$mode", est,
       meter, charsM, usdPerCall, usdPerMChars)
   }
@@ -499,9 +485,7 @@ object Policied {
   def slice(df: DataFrame, columns: Seq[String], condition: String,
       oracle: SemanticOracle, policy: Policy, usdPerCall: Double = 0.0,
       usdPerMChars: Double = 0.0): PoliciedOp = {
-    val (meter, charsM) = meters(df)
-    val metered = new MeteredOracle(oracle, meter,
-      forwardCompile = policy == Policy.MinCost, chars = charsM)
+    val (meter, charsM, metered) = metering(df, oracle, policy)
     val compiled =
       policy == Policy.MinCost && oracle.compileJudge(condition).isDefined
     val out = Slice(df, columns, condition, metered)

@@ -13,7 +13,7 @@ package graft.sources
   *
   * Every other character, surrogate pairs included, is copied unchanged.
   */
-private[sources] object JsonEscape {
+private[graft] object JsonEscape {
   def apply(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 8)
     def hex(c: Char): Unit = sb.append("\\u%04x".format(c.toInt))
