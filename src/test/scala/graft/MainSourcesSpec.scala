@@ -40,14 +40,10 @@ class MainSourcesSpec extends AnyFunSuite {
       (f, lines) <- main
       (line, i) <- lines.zipWithIndex
       if line.contains("def main(") || line.contains("extends App")
-    } yield {
-      val owner = lines.take(i + 1).reverseIterator
-        .collectFirst { case l if objectDecl.findFirstIn(l).isDefined =>
-          objectDecl.findFirstMatchIn(l).get.group(1) }
-        .getOrElse("?")
-      s"$owner (${f.getPath}:${i + 1})"
-    }
-    assert(mains.map(_.takeWhile(_ != ' ')).sorted ==
+    } yield lines.take(i + 1).reverseIterator
+      .flatMap(objectDecl.findFirstMatchIn(_)).nextOption()
+      .fold("?")(_.group(1)) -> s"${f.getPath}:${i + 1}"
+    assert(mains.map(_._1).sorted ==
       Seq("Bench", "Smoke", "Verify"), mains.mkString("\n"))
   }
 
