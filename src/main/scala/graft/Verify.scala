@@ -63,15 +63,11 @@ object Verify {
       obj(SparkEntry.oracleSql.map { case (k, v) => k -> str(v) }))
     Files.writeString(Paths.get(s"$outDir/_failed.json"),
       obj(failed.map { case (k, v) => k -> str(v) }))
-    // per-query {sec, gc_ms}: beside the dump for the driver AND as a
-    // repo artifact (the outDir is ephemeral; BENCH_LAST.json precedent)
-    val tJson = obj(timings.map { case (k, (s, g)) =>
-      k -> ("{\"sec\":" + "%.4f".format(s) + s""","gc_ms":$g}""")
-    })
-    Files.writeString(Paths.get(s"$outDir/_timings.json"), tJson)
-    if (only.isEmpty) // partial local probes must not pose as the round's run
-      try Files.writeString(Paths.get("VERIFY_TIMINGS.json"), tJson)
-      catch { case _: Throwable => }
+    // per-query {sec, gc_ms} of every attempted gate, beside the dump
+    Files.writeString(Paths.get(s"$outDir/_timings.json"),
+      obj(timings.map { case (k, (s, g)) =>
+        k -> ("{\"sec\":" + "%.4f".format(s) + s""","gc_ms":$g}""")
+      }))
     if (failed.nonEmpty)
       System.err.println(
         s"[verify] ${failed.size} FAILED dumps: ${failed.keys.mkString(",")}")

@@ -34,7 +34,7 @@ import graft.plan.{LogicTree, LogicalOp, PlanJson}
 object OlapAgent {
   /** Plug-and-run wiring for an LLM-backed deployment: the transport's
     * `complete` drives planning AND the same oracle answers row-level
-    * judgments (batched through the operators' BatchedOracle routing).
+    * judgments (batched out of band, since it compiles nothing).
     */
   def apply(oracle: graft.oracle.PromptingOracle): OlapAgent =
     new OlapAgent(oracle.complete _, oracle)

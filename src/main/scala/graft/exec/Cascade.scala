@@ -3,7 +3,7 @@ package graft.exec
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
-import graft.oracle.{BatchedOracle, SemanticOracle}
+import graft.oracle.SemanticOracle
 import graft.plan.{LogicalOp, LogicTree}
 import graft.ops._
 
@@ -13,12 +13,12 @@ import graft.ops._
   * cost class (numeric/keyword=0 < pattern/enum=1 < LLM=2,
   * Exection_Agent.py:54-60,105-113) and evaluates ops cheapest-first with
   * three-valued short-circuiting so expensive ops only ever see undecided
-  * rows (Exection_Agent.py:380-394, 181-210). In band (cheap leaves,
-  * compiled judgments, per-row UDFs) the tree is one `Column`, children of
-  * every AND/OR node ordered cheap-first: Spark's `And`/`Or` codegen
-  * short-circuits per row, and Catalyst pushes the cheap conjuncts into the
-  * scan. Sem leaves a [[BatchedOracle]] judges out of band take the staged
-  * form of [[run]], for any AND/OR tree.
+  * rows (Exection_Agent.py:380-394, 181-210). In band (cheap leaves and
+  * compiled judgments) the tree is one `Column`, children of every AND/OR
+  * node ordered cheap-first: Spark's `And`/`Or` codegen short-circuits per
+  * row, and Catalyst pushes the cheap conjuncts into the scan. Every sem
+  * leaf the oracle does not compile is judged out of band, in batches, by
+  * the staged form of [[run]], for any AND/OR tree.
   */
 object Cascade {
 
@@ -26,8 +26,8 @@ object Cascade {
   sealed trait Leaf { def cost: Int }
   /** A predicate already in Column form. */
   final case class Pred(pred: Column, cost: Int) extends Leaf
-  /** A sem_filter judgment: in band when the oracle compiles it or cannot
-    * batch, out of band otherwise. */
+  /** A sem_filter judgment: in band when the oracle compiles it, out of
+    * band otherwise. */
   final case class Judge(op: LogicalOp.SemFilter) extends Leaf { val cost = 2 }
 
   /** Reference PRIORITY_MAP semantics (Exection_Agent.py:54-60). */
@@ -50,7 +50,8 @@ object Cascade {
   private def inBand(df: DataFrame, leaf: Leaf,
       oracle: SemanticOracle): Column = leaf match {
     case Pred(p, _) => p
-    case Judge(f) => SemFilter.predicate(df, f.columns, f.condition, oracle)
+    case Judge(f) =>
+      oracle.compileJudge(f.condition).get(Ops.textCol(df, f.columns))
   }
 
   /** Fold a logic tree into one Column over `value` per leaf, children of
@@ -94,12 +95,9 @@ object Cascade {
       oracle: SemanticOracle): DataFrame = {
     val t = LogicTree.normalize(tree)
     val byId = leaves.toMap
-    val staged = oracle match {
-      case b: BatchedOracle => leaves.collect {
-        case (id, Judge(f)) if oracle.compileJudge(f.condition).isEmpty =>
-          (id, f.condition, b)
-      }
-      case _ => Seq.empty
+    val staged = leaves.collect {
+      case (id, Judge(f)) if oracle.compileJudge(f.condition).isEmpty =>
+        (id, f.condition)
     }
     val semIds = staged.map(_._1).toSet
     val mayPass = df.filter(fold(t, byId, id =>
@@ -118,11 +116,11 @@ object Cascade {
           if (!semIds(id)) Some(block(r).getBoolean(at(id)))
           else if (block(r).isNullAt(at(id))) Some(false)
           else judged(r).get(id)
-        staged.foreach { case (id, condition, b) =>
+        staged.foreach { case (id, condition) =>
           block.indices.filter(r => value(r)(id).isEmpty &&
               eval(t, value(r)).isEmpty && reaches(t, id, value(r)))
             .grouped(64).foreach { rs =>
-              val outs = b.judgeBatch(rs.map(block(_).getString(at(id))), condition)
+              val outs = oracle.judgeBatch(rs.map(block(_).getString(at(id))), condition)
               require(outs.length == rs.length,
                 s"oracle batch returned ${outs.length} results for ${rs.length} inputs")
               rs.lazyZip(outs).foreach((r, o) => judged(r)(id) = o)

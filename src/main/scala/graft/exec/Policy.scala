@@ -2,7 +2,7 @@ package graft.exec
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.util.LongAccumulator
-import graft.oracle.{BatchedOracle, SemanticOracle, TagRule}
+import graft.oracle.{SemanticOracle, TagRule}
 import graft.ops.{Ops, SemFilter, SemGroup, SemTopK}
 import graft.plan.LogicalOp
 
@@ -64,18 +64,20 @@ object Policy {
   */
 final class MeteredOracle(inner: SemanticOracle, val calls: LongAccumulator,
     forwardCompile: Boolean = false, chars: LongAccumulator = null)
-    extends BatchedOracle {
+    extends SemanticOracle {
   private def bill(t: String): Unit = {
     calls.add(1L)
     if (chars != null && t != null) chars.add(t.length.toLong)
   }
-  private def billAll(ts: Seq[String]): Unit = {
-    calls.add(ts.count(_ != null).toLong)
+  private def addChars(ts: IterableOnce[String]): Unit =
     if (chars != null) {
       var n = 0L
-      ts.foreach(t => if (t != null) n += t.length)
+      ts.iterator.foreach(t => if (t != null) n += t.length)
       chars.add(n)
     }
+  private def billAll(ts: Seq[String]): Unit = {
+    calls.add(ts.count(_ != null).toLong)
+    addChars(ts)
   }
   override def compileJudge(c: String): Option[org.apache.spark.sql.Column =>
       org.apache.spark.sql.Column] =
@@ -109,75 +111,42 @@ final class MeteredOracle(inner: SemanticOracle, val calls: LongAccumulator,
     bill(text); inner.classify(text, vocab)
   }
   override def summarize(values: Seq[String], desc: String): String = {
-    calls.add(1L)
-    if (chars != null) values.foreach(v =>
-      if (v != null) chars.add(v.length.toLong))
+    calls.add(1L); addChars(values)
     inner.summarize(values, desc)
   }
   override def score(text: String, query: String): Double = {
     bill(text); inner.score(text, query)
   }
   override def duel(a: String, b: String, query: String): Boolean = {
-    calls.add(1L)
-    if (chars != null) {
-      if (a != null) chars.add(a.length.toLong)
-      if (b != null) chars.add(b.length.toLong)
-    }
+    calls.add(1L); addChars(Iterator(a, b))
     inner.duel(a, b, query)
   }
-  // batched variants: forward WHOLE batches to a batched inner transport
-  // (one RPC there), metering per judged text; a scalar inner routes
-  // through the scalar overrides above, which meter themselves.
-  override def judgeBatch(texts: Seq[String], condition: String): Seq[Boolean] =
-    inner match {
-      case b: BatchedOracle =>
-        billAll(texts); b.judgeBatch(texts, condition)
-      case _ => texts.map(t => t != null && judge(t, condition))
-    }
-  override def extractBatch(texts: Seq[String], desc: String): Seq[Option[String]] =
-    inner match {
-      case b: BatchedOracle =>
-        billAll(texts); b.extractBatch(texts, desc)
-      case _ => texts.map(t => if (t == null) None else extract(t, desc))
-    }
+  // batched variants: forward WHOLE batches to the inner oracle (one RPC
+  // for a batched transport), metering per non-null judged text
+  override def judgeBatch(texts: Seq[String], condition: String): Seq[Boolean] = {
+    billAll(texts); inner.judgeBatch(texts, condition)
+  }
+  override def extractBatch(texts: Seq[String], desc: String): Seq[Option[String]] = {
+    billAll(texts); inner.extractBatch(texts, desc)
+  }
   override def extractAllBatch(texts: Seq[String],
-      desc: String): Seq[Seq[String]] =
-    inner match {
-      case b: BatchedOracle =>
-        billAll(texts); b.extractAllBatch(texts, desc)
-      case _ => texts.map(t => if (t == null) Seq.empty else extractAll(t, desc))
-    }
+      desc: String): Seq[Seq[String]] = {
+    billAll(texts); inner.extractAllBatch(texts, desc)
+  }
   override def classifyBatch(texts: Seq[String],
-      vocab: Seq[TagRule]): Seq[Option[String]] =
-    inner match {
-      case b: BatchedOracle =>
-        billAll(texts); b.classifyBatch(texts, vocab)
-      case _ => texts.map(t => if (t == null) None else classify(t, vocab))
-    }
-  override def scoreBatch(texts: Seq[String], query: String): Seq[Double] =
-    inner match {
-      case b: BatchedOracle =>
-        billAll(texts); b.scoreBatch(texts, query)
-      case _ => texts.map(t => if (t == null) 0.0 else score(t, query))
-    }
+      vocab: Seq[TagRule]): Seq[Option[String]] = {
+    billAll(texts); inner.classifyBatch(texts, vocab)
+  }
+  override def scoreBatch(texts: Seq[String], query: String): Seq[Double] = {
+    billAll(texts); inner.scoreBatch(texts, query)
+  }
+  /** One billed call per pair, with the chars of both sides. */
   override def duelBatch(pairs: Seq[(String, String)],
-      query: String): Seq[Boolean] =
-    inner match {
-      case b: BatchedOracle =>
-        calls.add(pairs.size.toLong)
-        if (chars != null) {
-          var n = 0L
-          pairs.foreach { case (a, bb) =>
-            if (a != null) n += a.length
-            if (bb != null) n += bb.length
-          }
-          chars.add(n)
-        }
-        b.duelBatch(pairs, query)
-      case _ => pairs.map { case (a, b) =>
-        duel(Option(a).getOrElse(""), Option(b).getOrElse(""), query)
-      }
-    }
+      query: String): Seq[Boolean] = {
+    calls.add(pairs.size.toLong)
+    addChars(pairs.iterator.flatMap { case (a, b) => Iterator(a, b) })
+    inner.duelBatch(pairs, query)
+  }
 }
 
 /** Policy-directed lowering with per-operator oracle-cost accounting —
@@ -327,9 +296,9 @@ object Policied {
     }
     val out = choice match {
       case Dice.SemFallback =>
-        // the batched mapPartitions path (MeteredOracle is a
-        // BatchedOracle with no compile hooks) — per-partition client
-        // reuse, one oracle call per batch, every row judged
+        // judged through the filter executor: batched out of band (one
+        // oracle call per batch, every row judged) unless the meter
+        // forwards a compiled judge
         SemFilter(df, LogicalOp.SemFilter(Seq(column), condition), metered)
       case Dice.EnumStrategy =>
         FilterEnum.fromValues(df, column, condition, metered, enumVals.get)
@@ -359,7 +328,7 @@ object Policied {
     val compiled =
       policy == Policy.MinCost && oracle.compileJudge(condition).isDefined
     if (compiled) {
-      val out = df.filter(SemFilter.predicate(df, columns, condition, metered))
+      val out = SemFilter(df, LogicalOp.SemFilter(columns, condition), metered)
       new PoliciedOp(out, "sem_filter", columns.mkString(","), "compiled",
         0L, meter, charsM, usdPerCall, usdPerMChars)
     } else {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.oracle.SemanticOracle
 import graft.plan.{LogicalOp, LogicTree, NumCondition}
-import graft.ops.{Ops, SemFilter}
+import graft.ops.Ops
 
 /** Column statistics gates for physical-strategy selection — the
   * data-driven validators of the reference's dice agent

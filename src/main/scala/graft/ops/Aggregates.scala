@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.oracle.SemanticOracle
+import org.apache.spark.sql.types.{BooleanType, DoubleType}
+import graft.oracle.{BatchedExec, SemanticOracle}
 import graft.plan.LogicalOp
 
 /** `count` — rows per group, plus per-column distinct counts when `columns`
@@ -98,15 +99,11 @@ object SemTopK {
       tiebreak: Seq[String] = Seq.empty,
       scoreCol: String = "sem_score"): DataFrame = {
     val text = Ops.textCol(df, op.columns)
-    val scored = (oracle, oracle.compileScore(op.query)) match {
-      case (_, Some(f)) => df.withColumn(scoreCol, f(text))
-      case (b: graft.oracle.BatchedOracle, None) =>
-        // LLM-style oracle: batched mapPartitions scoring, not per-row UDF
-        graft.oracle.BatchedExec.semScore(df, scoreCol, text, op.query, b)
-      case (_, None) =>
-        val sc = udf((t: String) =>
-          if (t == null) 0.0 else oracle.score(t, op.query))
-        df.withColumn(scoreCol, sc(text))
+    val scored = oracle.compileScore(op.query) match {
+      case Some(f) => df.withColumn(scoreCol, f(text))
+      case None =>
+        BatchedExec.withBatchedColumn(df, scoreCol, DoubleType, Seq(text))(
+          ts => oracle.scoreBatch(ts.head, op.query))
     }
     scored
       .orderBy(col(scoreCol).desc +: tiebreak.map(col(_).asc): _*)
@@ -142,18 +139,11 @@ object SemTopK {
     val right = withText.select(col(idCol).as("__idb"), col("__t").as("__tb"))
     val pairsDf = left.crossJoin(broadcast(right))
       .filter(col("__ida") =!= col("__idb"))
-    // a batched (LLM) oracle duels one BATCH of pairs per call instead of
-    // one RPC per pair (C^2 single calls at the default candidate bound)
-    val flagged = oracle match {
-      case b: graft.oracle.BatchedOracle =>
-        graft.oracle.BatchedExec.semDuel(pairsDf, "__flag",
-          col("__ta"), col("__tb"), op.query, b)
-      case _ =>
-        val duelU = udf { (ta: String, tb: String) =>
-          oracle.duel(Option(ta).getOrElse(""), Option(tb).getOrElse(""), op.query)
-        }
-        pairsDf.withColumn("__flag", duelU(col("__ta"), col("__tb")))
-    }
+    // one BATCH of pairs per oracle call instead of one RPC per pair (C^2
+    // single calls at the default candidate bound)
+    val flagged = BatchedExec.withBatchedColumn(pairsDf, "__flag",
+      BooleanType, Seq(col("__ta"), col("__tb")))(
+      ts => oracle.duelBatch(ts(0).zip(ts(1)), op.query))
     val wins = flagged
       .withColumn("__win", when(col("__flag"), 1).otherwise(0))
       .groupBy(col("__ida").as(idCol))

@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.oracle.{SemanticOracle, TagRule}
+import org.apache.spark.sql.types.{ArrayType, StringType}
+import graft.oracle.{BatchedExec, SemanticOracle, TagRule}
 import graft.plan.{LogicalOp, NumCondition}
 
 /** Shared helpers for the operator kernels. */
@@ -106,26 +107,12 @@ object NumFilter {
 }
 
 /** `sem_filter` — semantic row predicate over the row text
-  * (Operaters.py:45-78). Compiles to native expressions when the oracle
-  * allows (DeterministicOracle: AND-entailment of condition tokens —
-  * codegen + scan pushdown); otherwise evaluates the oracle through a
-  * UDF (batched per partition by Spark's evaluator).
+  * (Operaters.py:45-78), run through the filter executor
+  * ([[graft.exec.Cascade]]). Compiles to native expressions when the
+  * oracle allows (DeterministicOracle: AND-entailment of condition tokens —
+  * codegen + scan pushdown); otherwise judged in batches out of band.
   */
 object SemFilter {
-  def predicate(df: DataFrame, columns: Seq[String], condition: String,
-      oracle: SemanticOracle): Column = {
-    val text = Ops.textCol(df, columns)
-    oracle.compileJudge(condition) match {
-      case Some(f) => f(text)
-      case None =>
-        val judge = udf((t: String) => t != null && oracle.judge(t, condition))
-        judge(text)
-    }
-  }
-
-  /** Standalone sem_filter through the filter executor
-    * ([[graft.exec.Cascade]]): judged in batches out of band by a
-    * non-compilable [[graft.oracle.BatchedOracle]], in band otherwise. */
   def apply(df: DataFrame, op: LogicalOp.SemFilter,
       oracle: SemanticOracle): DataFrame =
     graft.exec.Cascade.filter(df, Seq(0 -> op), None, oracle)
@@ -137,28 +124,16 @@ object SemFilter {
   * reference bug of always using all columns (Operaters.py:347).
   */
 object SemMap {
-  def column(df: DataFrame, columns: Seq[String], desc: String,
-      oracle: SemanticOracle): Column = {
-    val text = Ops.textCol(df, columns)
-    oracle.compileExtract(desc) match {
-      case Some(f) => f(text)
-      case None =>
-        val ex = udf((t: String) =>
-          if (t == null) None else oracle.extract(t, desc))
-        ex(text)
-    }
-  }
-
-  /** Standalone sem_map; batched-oracle routing as in [[SemFilter.apply]]. */
+  /** Compiled extraction in codegen, otherwise batched out of band. */
   def apply(df: DataFrame, op: LogicalOp.SemMap,
-      oracle: SemanticOracle): DataFrame = oracle match {
-    case b: graft.oracle.BatchedOracle
-        if oracle.compileExtract(op.mapDescription).isEmpty =>
-      graft.oracle.BatchedExec.semMap(df, op.keyword,
-        Ops.textCol(df, op.columns), op.mapDescription, b)
-    case _ =>
-      df.withColumn(op.keyword,
-        column(df, op.columns, op.mapDescription, oracle))
+      oracle: SemanticOracle): DataFrame = {
+    val text = Ops.textCol(df, op.columns)
+    oracle.compileExtract(op.mapDescription) match {
+      case Some(f) => df.withColumn(op.keyword, f(text))
+      case None =>
+        BatchedExec.withBatchedColumn(df, op.keyword, StringType, Seq(text))(
+          ts => oracle.extractBatch(ts.head, op.mapDescription).map(_.orNull))
+    }
   }
 }
 
@@ -181,16 +156,9 @@ object SemMapMulti {
     val text = Ops.textCol(df, op.columns)
     val withVals = oracle.compileExtractAll(op.mapDescription) match {
       case Some(f) => df.withColumn("__vals", f(text))
-      case None => oracle match {
-        case b: graft.oracle.BatchedOracle =>
-          graft.oracle.BatchedExec.semMapAll(df, "__vals", text,
-            op.mapDescription, b)
-        case _ =>
-          val ex = udf((t: String) =>
-            if (t == null) Seq.empty[String]
-            else oracle.extractAll(t, op.mapDescription))
-          df.withColumn("__vals", ex(text))
-      }
+      case None =>
+        BatchedExec.withBatchedColumn(df, "__vals", ArrayType(StringType),
+          Seq(text))(ts => oracle.extractAllBatch(ts.head, op.mapDescription))
     }
     // a re-derived dimension REPLACES its old column (withColumn
     // semantics, like scalar SemMap) instead of minting a duplicate name
@@ -212,7 +180,8 @@ object SemMapMulti {
   *            non-stopword tokens — a distributed agg, no driver collect of
   *            raw rows);
   *   phase 2: broadcast the vocabulary and classify each row (codegen'd
-  *            CASE cascade for compilable oracles, UDF otherwise).
+  *            CASE cascade for compilable oracles, batched out of band
+  *            otherwise).
   */
 object SemGroup {
   import graft.oracle.DeterministicOracle.stopwords
@@ -232,28 +201,16 @@ object SemGroup {
       .collect().map(r => TagRule(r.getString(0), r.getString(0))).toSeq
   }
 
-  def column(df: DataFrame, columns: Seq[String], vocab: Seq[TagRule],
-      oracle: SemanticOracle): Column = {
-    val text = Ops.textCol(df, columns)
-    oracle.compileClassify(vocab) match {
-      case Some(f) => f(text)
-      case None =>
-        val cls = udf((t: String) =>
-          if (t == null) None else oracle.classify(t, vocab))
-        cls(text)
-    }
-  }
-
-  /** Closed-set grouping with a caller-provided vocabulary;
-    * batched-oracle routing as in [[SemFilter.apply]].
-    */
+  /** Closed-set grouping with a caller-provided vocabulary. */
   def apply(df: DataFrame, op: LogicalOp.SemGroup, vocab: Seq[TagRule],
-      oracle: SemanticOracle): DataFrame = oracle match {
-    case b: graft.oracle.BatchedOracle
-        if oracle.compileClassify(vocab).isEmpty =>
-      graft.oracle.BatchedExec.semClassify(df, op.keyword,
-        Ops.textCol(df, op.columns), vocab, b)
-    case _ => df.withColumn(op.keyword, column(df, op.columns, vocab, oracle))
+      oracle: SemanticOracle): DataFrame = {
+    val text = Ops.textCol(df, op.columns)
+    oracle.compileClassify(vocab) match {
+      case Some(f) => df.withColumn(op.keyword, f(text))
+      case None =>
+        BatchedExec.withBatchedColumn(df, op.keyword, StringType, Seq(text))(
+          ts => oracle.classifyBatch(ts.head, vocab).map(_.orNull))
+    }
   }
 
   /** Open-set grouping: mine the vocabulary, then classify. */

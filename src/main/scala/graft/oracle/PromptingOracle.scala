@@ -6,13 +6,15 @@ package graft.oracle
   * sem_topk:453-494) recast over one abstract completion function.
   *
   * Subclasses implement [[complete]] (and ideally [[completeBatch]] with a
-  * real batched RPC); the engine side — batching, partition-local client
-  * reuse, cost-ordered cascades that shrink this oracle's input — lives in
-  * [[BatchedExec]] and the operators, and is fully tested with
-  * deterministic fakes. No network code here: the build environment is
+  * real batched RPC). It compiles nothing, so the engine reaches it only
+  * through the `*Batch` overrides below, each one [[completeBatch]] per
+  * batch; the engine side — batching, partition-local client reuse,
+  * cost-ordered cascades that shrink this oracle's input — lives in
+  * [[BatchedExec]], [[graft.exec.Cascade]] and the operators, and is fully
+  * tested with deterministic fakes. No network code here: the build environment is
   * zero-egress, and the transport is deployment-specific.
   */
-abstract class PromptingOracle extends BatchedOracle {
+abstract class PromptingOracle extends SemanticOracle {
 
   /** One completion. Implementations own the transport and rate
     * limiting; they see already-batched traffic from [[BatchedExec]].
@@ -215,9 +217,9 @@ abstract class PromptingOracle extends BatchedOracle {
 
   // batched variants route through completeBatch (one RPC per batch)
 
-  /** Null texts never reach the LLM: the per-row UDF path short-circuits
-    * null -> false/None/0.0, and the batched path must agree (same answer
-    * through either routing mode, and no wasted completions). Runs the
+  /** Null texts never reach the LLM: the default batch methods
+    * short-circuit null -> false/None/0.0, and these overrides must agree
+    * (same answer as the scalar loop, and no wasted completions). Runs the
     * batch over non-null texts only and stitches defaults back in position.
     */
   private def batchNonNull[R](texts: Seq[String], default: R)(

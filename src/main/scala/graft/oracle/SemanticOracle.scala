@@ -22,9 +22,11 @@ final case class TagRule(keyword: String, tag: String)
   *     operator;
   *   - an oracle that CAN be expressed as native Catalyst expressions
   *     advertises that via the `compile*` hooks, keeping the hot path inside
-  *     whole-stage codegen with predicate pushdown. Only oracles that
-  *     genuinely need out-of-band calls (LLM) fall back to the batched
-  *     `mapPartitions`/UDF path in the operators.
+  *     whole-stage codegen with predicate pushdown. Every judgment a hook
+  *     does not compile runs out of band through the `*Batch` methods, in
+  *     the batched `mapPartitions` kernels ([[BatchedExec]],
+  *     [[graft.exec.Cascade]]); a remote oracle overrides them with one
+  *     RPC per batch.
   *
   * Scale posture: `judge`/`extract`/`score`/`classify` are row-local and
   * embarrassingly parallel; `summarize` only ever sees a bounded distinct
@@ -66,7 +68,7 @@ trait SemanticOracle extends Serializable {
 
   /** Catalyst compilation hooks: Some(textCol => predicate/value column) when
     * this oracle's semantics are expressible as native Spark expressions
-    * (keeps codegen + pushdown). None => operators use the UDF path.
+    * (keeps codegen + pushdown). None => operators use the batch methods.
     */
   def compileJudge(condition: String): Option[Column => Column] = None
   def compileExtract(desc: String): Option[Column => Column] = None
@@ -74,6 +76,26 @@ trait SemanticOracle extends Serializable {
   def compileExtractAll(desc: String): Option[Column => Column] = None
   def compileClassify(vocab: Seq[TagRule]): Option[Column => Column] = None
   def compileScore(query: String): Option[Column => Column] = None
+
+  /** Batched judgments, one call per batch of row texts (a null text has
+    * no row text and never reaches the scalar call). Defaults loop the
+    * scalar judgment; a remote oracle overrides them with one RPC.
+    */
+  def judgeBatch(texts: Seq[String], condition: String): Seq[Boolean] =
+    texts.map(t => t != null && judge(t, condition))
+  def extractBatch(texts: Seq[String], desc: String): Seq[Option[String]] =
+    texts.map(t => if (t == null) None else extract(t, desc))
+  def extractAllBatch(texts: Seq[String], desc: String): Seq[Seq[String]] =
+    texts.map(t => if (t == null) Seq.empty else extractAll(t, desc))
+  def classifyBatch(texts: Seq[String], vocab: Seq[TagRule]): Seq[Option[String]] =
+    texts.map(t => if (t == null) None else classify(t, vocab))
+  def scoreBatch(texts: Seq[String], query: String): Seq[Double] =
+    texts.map(t => if (t == null) 0.0 else score(t, query))
+  /** One batched call for a set of pairwise duels (sem_topk duel mode). */
+  def duelBatch(pairs: Seq[(String, String)], query: String): Seq[Boolean] =
+    pairs.map { case (a, b) =>
+      duel(Option(a).getOrElse(""), Option(b).getOrElse(""), query)
+    }
 }
 
 /** Deterministic, fully Catalyst-compilable oracle (the engine default).

@@ -5,8 +5,9 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scan over `src/main`: the only entry points are the three
-  * harness mains, none of them hard-codes a core count, and JSON string
-  * escaping has one home, [[graft.sources.JsonEscape]].
+  * harness mains, none of them hard-codes a core count, JSON string
+  * escaping has one home, [[graft.sources.JsonEscape]], and every
+  * non-compiled `sem_*` judgment goes through the oracle's batch methods.
   */
 class MainSourcesSpec extends AnyFunSuite {
 
@@ -64,5 +65,20 @@ class MainSourcesSpec extends AnyFunSuite {
     assert(main.exists { case (f, lines) =>
       f.getName == home && escapes(lines).nonEmpty },
       s"the escape match is missing from $home")
+  }
+
+  test("no per-row UDF in the semantic layers and no BatchedOracle type test") {
+    val semantic = Seq("ops", "exec", "oracle", "cube", "agent")
+      .map(p => new File(s"src/main/scala/graft/$p").getPath + File.separator)
+    val udf = """\budf\s*[({]""".r
+    val typeTest =
+      """(?::\s*|InstanceOf\[)(?:graft\.oracle\.)?BatchedOracle\b""".r
+    val hits = for {
+      (f, lines) <- main
+      (line, i) <- lines.zipWithIndex
+      if typeTest.findFirstIn(line).isDefined ||
+        (semantic.exists(f.getPath.startsWith) && udf.findFirstIn(line).isDefined)
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

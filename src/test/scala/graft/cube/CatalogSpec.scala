@@ -10,8 +10,9 @@ import graft.SparkSpec
 import graft.oracle.{DeterministicOracle, TagRule}
 import graft.plan.{LogicalOp, NumCondition}
 
-/** Deterministic judgments that are never compiled, so every one runs as
-  * a per-row call, counted per condition. Top-level so executor closures
+/** Deterministic judgments that are never compiled, so every one runs out
+  * of band through the default batch loop: one scalar call per judged
+  * text, counted per condition. Top-level so executor closures
   * serialize it cleanly; the counts live in the companion (one JVM).
   */
 class JudgeCountingOracle extends DeterministicOracle {

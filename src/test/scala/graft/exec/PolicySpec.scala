@@ -80,6 +80,35 @@ class PolicySpec extends SparkSpec {
       == Seq(true, false, false))
     assert(batchRpcs == 1, "one RPC per batch, not per row")
     assert(acc.value == 2L, "nulls never reach (or bill) the transport")
+    // a scalar inner (no batch override): every batch call bills the same
+    // texts and chars as the meter's own scalar overrides looped over the
+    // non-null texts, and answers the same
+    val scalar = new DeterministicOracle()
+    def meter() = {
+      val calls = spark.sparkContext.longAccumulator("test.calls")
+      val chars = spark.sparkContext.longAccumulator("test.chars")
+      (calls, chars, new MeteredOracle(scalar, calls, chars = chars))
+    }
+    val texts = Seq("spark err", null, "b", "")
+    val pairs = Seq(("spark a", "b"), (null, "spark"), ("x", null))
+    val vocab = Seq(graft.oracle.TagRule("spark", "s"))
+    val (bCalls, bChars, b) = meter()
+    val (lCalls, lChars, l) = meter()
+    val batched = Seq(b.judgeBatch(texts, "spark"),
+      b.extractBatch(texts, "(\\w+)"), b.extractAllBatch(texts, "(\\w+)"),
+      b.classifyBatch(texts, vocab), b.scoreBatch(texts, "spark"),
+      b.duelBatch(pairs, "spark"))
+    val looped = Seq(texts.map(t => t != null && l.judge(t, "spark")),
+      texts.map(t => if (t == null) None else l.extract(t, "(\\w+)")),
+      texts.map(t => if (t == null) Seq.empty else l.extractAll(t, "(\\w+)")),
+      texts.map(t => if (t == null) None else l.classify(t, vocab)),
+      texts.map(t => if (t == null) 0.0 else l.score(t, "spark")),
+      pairs.map { case (x, y) =>
+        l.duel(Option(x).getOrElse(""), Option(y).getOrElse(""), "spark") })
+    assert(batched == looped)
+    assert((bCalls.value, bChars.value) == ((lCalls.value, lChars.value)))
+    // five text batches of 3 non-null texts (10 chars), 3 pairs (14 chars)
+    assert((bCalls.value, bChars.value) == ((5L * 3 + 3, 5L * 10 + 14)))
   }
 
   test("Policied.run reports plan wall time, total calls, and $ for a " +

@@ -88,15 +88,15 @@ class OperatorSpec extends SparkSpec {
     assert(got.toSeq == Seq(1L, 3L))
   }
 
-  test("sem_filter compiled and UDF paths agree") {
+  test("sem_filter compiled and batched paths agree") {
     val noCompile = new DeterministicOracle() {
       override def compileJudge(c: String) = None
     }
     val compiled = SemFilter(docs, LogicalOp.SemFilter(Seq("title"), "spark join"), oracle)
       .select("id").as[Long].collect().sorted.toSeq
-    val viaUdf = SemFilter(docs, LogicalOp.SemFilter(Seq("title"), "spark join"), noCompile)
+    val batched = SemFilter(docs, LogicalOp.SemFilter(Seq("title"), "spark join"), noCompile)
       .select("id").as[Long].collect().sorted.toSeq
-    assert(compiled == viaUdf)
+    assert(compiled == batched)
   }
 
   test("sem_map extracts via regex, no-match becomes null (NA)") {
@@ -109,7 +109,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("sem_map one-to-many: fan-out per extracted value with ordinal " +
-      "lineage; zero-match rows drop; compiled, UDF, and batched paths " +
+      "lineage; zero-match rows drop; compiled and batched paths " +
       "agree; the plan is Generate with NO added shuffle") {
     val op = LogicalOp.SemMap(Seq("title"), "([a-z]+a[a-z]+)", "word")
     val got = SemMapMulti(docs, op, oracle)
@@ -121,7 +121,8 @@ class OperatorSpec extends SparkSpec {
     // lineage: every source column survives on every derived row
     assert(SemMapMulti(docs, op, oracle).columns.toSeq ==
       Seq("id", "title", "score", "word_idx", "word"))
-    // non-compiled paths (UDF scalar oracle / batched transport) agree
+    // non-compiled oracles (the scalar default loop / a transport's own
+    // extractAll) agree, both batched out of band
     val noCompile = new DeterministicOracle() {
       override def compileExtractAll(d: String) = None
     }

@@ -1,6 +1,10 @@
 package graft.oracle
 
 import graft.SparkSpec
+import graft.plan.LogicalOp
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
 import org.apache.spark.sql.functions._
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
@@ -26,6 +30,16 @@ class CountingOracle extends DeterministicOracle with BatchedOracle {
     super.duelBatch(pairs, query)
   }
 }
+/** A scalar oracle: every `compile*` hook hidden and no batch override,
+  * so each judgment runs through the default per-text batch loop. */
+class ScalarOracle extends DeterministicOracle {
+  override def compileJudge(c: String) = None
+  override def compileExtract(d: String) = None
+  override def compileExtractAll(d: String) = None
+  override def compileClassify(v: Seq[TagRule]) = None
+  override def compileScore(q: String) = None
+}
+
 object CountingOracle {
   val batches = new AtomicInteger(0)
   val maxBatch = new AtomicInteger(0)
@@ -52,8 +66,8 @@ class BatchedExecSpec extends SparkSpec {
     CountingOracle.batches.set(0); CountingOracle.maxBatch.set(0)
     val oracle = new CountingOracle
     val batched = BatchedExec.withBatchedColumn(docs, "j",
-      org.apache.spark.sql.types.BooleanType, col("txt"), 32)(
-      ts => oracle.judgeBatch(ts, "spark"))
+      org.apache.spark.sql.types.BooleanType, Seq(col("txt")), 32)(
+      ts => oracle.judgeBatch(ts.head, "spark"))
       .filter(col("j")).select("id").as[Long].collect().sorted.toSeq
     val compiled = graft.ops.SemFilter(docs,
       graft.plan.LogicalOp.SemFilter(Seq("txt"), "spark"),
@@ -67,7 +81,8 @@ class BatchedExecSpec extends SparkSpec {
 
   test("batched sem_map appends nullable extraction column") {
     val oracle = new CountingOracle
-    val got = BatchedExec.semMap(docs, "num", col("txt"), "(\\d+)", oracle)
+    val got = graft.ops.SemMap(docs,
+      LogicalOp.SemMap(Seq("txt"), "(\\d+)", "num"), oracle)
       .select("id", "num").as[(Long, Option[String])].collect().toMap
     assert(got(7L).contains("7"))
     assert(got.size == 200)
@@ -150,11 +165,41 @@ class BatchedExecSpec extends SparkSpec {
     assert(!CountingOracle.pairs.keySet.asScala.exists(k => k._2 == null || k._2.isEmpty))
   }
 
+  test("a scalar oracle runs every sem_* judgment batched: the plan holds " +
+      "a MapPartitions and no ScalaUDF, and the rows equal the compiled oracle's") {
+    val vocab = Seq(TagRule("spark", "s"), TagRule("other", "o"))
+    val ops: Seq[(String, SemanticOracle => DataFrame)] = Seq(
+      "sem_filter" -> (o => graft.ops.SemFilter(docs,
+        LogicalOp.SemFilter(Seq("txt"), "spark"), o)),
+      "sem_map, derived twice" -> { o =>
+        // re-deriving a dimension replaces its column, as `withColumn` does
+        val op = LogicalOp.SemMap(Seq("txt"), "(\\d+)", "num")
+        graft.ops.SemMap(graft.ops.SemMap(docs, op, o), op, o)
+      },
+      "sem_map_multi" -> (o => graft.ops.SemMapMulti(docs,
+        LogicalOp.SemMap(Seq("txt"), "([a-z]+)", "word"), o)),
+      "sem_group" -> (o => graft.ops.SemGroup(docs,
+        LogicalOp.SemGroup(Seq("txt"), "by engine", "engine"), vocab, o)),
+      "sem_topk" -> (o => graft.ops.SemTopK(docs,
+        LogicalOp.SemTopK(Seq("txt"), "spark doc", 5), o, tiebreak = Seq("id"))),
+      "duelTopK" -> (o => graft.ops.SemTopK.duelTopK(docs,
+        LogicalOp.SemTopK(Seq("txt"), "spark", 3), o, "id")))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    ops.foreach { case (name, run) =>
+      val got = run(new ScalarOracle)
+      val plan = got.queryExecution.analyzed
+      assert(plan.find(_.isInstanceOf[MapPartitions]).isDefined, s"$name:\n$plan")
+      assert(plan.find(_.expressions.exists(
+        _.find(_.isInstanceOf[ScalaUDF]).isDefined)).isEmpty, s"$name:\n$plan")
+      assert(rows(got) == rows(run(DeterministicOracle.default)), name)
+    }
+  }
+
   test("batch kernel arity mismatch fails loudly") {
     val bad = intercept[org.apache.spark.SparkException] {
       BatchedExec.withBatchedColumn(docs, "x",
-        org.apache.spark.sql.types.StringType, col("txt"), 16)(
-        ts => ts.take(1).map(identity)).count()
+        org.apache.spark.sql.types.StringType, Seq(col("txt")), 16)(
+        ts => ts.head.take(1).map(identity)).count()
     }
     assert(bad.getMessage.contains("oracle batch") ||
       bad.getCause != null)

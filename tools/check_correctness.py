@@ -46,12 +46,15 @@ def main(sf_dir, out_dir):
     # per-query run health emitted by graft.Verify (r18): {sec, gc_ms}
     tpath = os.path.join(out_dir, "_timings.json")
     timings = json.load(open(tpath)) if os.path.exists(tpath) else {}
+    # the gates Verify attempted: it times every one, failed or not, so a
+    # filtered run is scored on its own gates; with no timings, every gate
+    expected = timings.keys() if os.path.exists(tpath) else oracle.keys()
     results = {}
     # a query whose dump is MISSING (its Verify run crashed) must fail
     # loudly, not be silently skipped
     dumped = {n for n in os.listdir(out_dir)
               if os.path.isdir(os.path.join(out_dir, n))}
-    for name in sorted(oracle.keys() - dumped):
+    for name in sorted(expected - dumped):
         results[name] = {"status": "MISSING_DUMP (query failed in Verify?)"}
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
