@@ -1,9 +1,8 @@
 package graft.exec
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.oracle.SemanticOracle
+import graft.oracle.{BatchedExec, SemanticOracle}
 import graft.plan.{LogicalOp, LogicTree}
 import graft.ops._
 
@@ -84,13 +83,14 @@ object Cascade {
     * has `df`'s schema, and its logical plan adds exactly one `Filter`.
     *
     * Staged form: that Filter drops the rows the cheap leaves already fail
-    * (out-of-band leaves read TRUE). One `mapPartitions` kernel then walks
-    * each partition in order, in blocks of [[MaxBlockRows]] rows, the other
-    * leaves as helper columns coalesced to false (sound: the tree has no
-    * NOT). Per out-of-band leaf, in plan order, it judges in batches of 64
-    * the rows whose tree is still undecided (unjudged leaves unknown) and
-    * that the leaf can still change; a row without text is false with no
-    * call. It emits the rows whose tree came out true. */
+    * (out-of-band leaves read TRUE). One [[BatchedExec.run]] operator then
+    * walks each partition in order, in blocks of [[MaxBlockRows]] rows, the
+    * other leaves as helper columns coalesced to false (sound: the tree has
+    * no NOT). Per out-of-band leaf, in plan order, it judges in batches of
+    * [[JudgeBatch]] the rows whose tree is still undecided (unjudged leaves
+    * unknown) and that the leaf can still change; a row without text is
+    * false with no call. It emits the rows whose tree came out true, as
+    * they are. */
   def run(df: DataFrame, leaves: Seq[(Int, Leaf)], tree: LogicTree,
       oracle: SemanticOracle): DataFrame = {
     val t = LogicTree.normalize(tree)
@@ -103,36 +103,38 @@ object Cascade {
     val mayPass = df.filter(fold(t, byId, id =>
       if (semIds(id)) lit(true) else inBand(df, byId(id), oracle)))
     if (staged.isEmpty) return mayPass
-    val helpers = leaves.map { case (id, leaf) => s"__leaf_$id" -> (leaf match {
+    val helpers = leaves.map { case (id, leaf) => leaf match {
       case Judge(f) if semIds(id) => nullif(Ops.textCol(df, f.columns), lit(""))
       case _ => coalesce(inBand(df, leaf, oracle), lit(false))
-    })}
-    val in = mayPass.select(col("*") +: helpers.map { case (n, c) => c.as(n) }: _*)
-    val at = leaves.map(_._1).zip(df.columns.length until in.columns.length).toMap
-    in.mapPartitions { rows =>
-      rows.grouped(MaxBlockRows).flatMap { block =>
-        val judged = block.map(_ => scala.collection.mutable.Map.empty[Int, Boolean])
-        def value(r: Int)(id: Int): Option[Boolean] =
-          if (!semIds(id)) Some(block(r).getBoolean(at(id)))
-          else if (block(r).isNullAt(at(id))) Some(false)
-          else judged(r).get(id)
-        staged.foreach { case (id, condition) =>
-          block.indices.filter(r => value(r)(id).isEmpty &&
-              eval(t, value(r)).isEmpty && reaches(t, id, value(r)))
-            .grouped(64).foreach { rs =>
-              val outs = oracle.judgeBatch(rs.map(block(_).getString(at(id))), condition)
-              require(outs.length == rs.length,
-                s"oracle batch returned ${outs.length} results for ${rs.length} inputs")
-              rs.lazyZip(outs).foreach((r, o) => judged(r)(id) = o)
-            }
-        }
-        block.indices.filter(r => eval(t, value(r)).contains(true)).map(block)
+    }}
+    val ids = leaves.map(_._1)
+    BatchedExec.run(mayPass, helpers, None, MaxBlockRows, s"judge[$JudgeBatch]") {
+        (at, block) =>
+      val ord = ids.zip(at).toMap
+      val judged = block.map(_ => scala.collection.mutable.Map.empty[Int, Boolean])
+      def value(r: Int)(id: Int): Option[Boolean] =
+        if (!semIds(id)) Some(block(r).getBoolean(ord(id)))
+        else if (block(r).isNullAt(ord(id))) Some(false)
+        else judged(r).get(id)
+      staged.foreach { case (id, condition) =>
+        block.indices.filter(r => value(r)(id).isEmpty &&
+            eval(t, value(r)).isEmpty && reaches(t, id, value(r)))
+          .grouped(JudgeBatch).foreach { rs =>
+            val outs = oracle.judgeBatch(
+              rs.map(block(_).getUTF8String(ord(id)).toString), condition)
+            require(outs.length == rs.length,
+              s"oracle batch returned ${outs.length} results for ${rs.length} inputs")
+            rs.lazyZip(outs).foreach((r, o) => judged(r)(id) = o)
+          }
       }
-    }(RowEncoder.encoderFor(in.schema)).drop(helpers.map(_._1): _*)
+      block.iterator.zipWithIndex
+        .collect { case (row, r) if eval(t, value(r)).contains(true) => row }
+    }
   }
 
-  /** Rows the staged kernel holds at once. */
+  /** Rows the staged kernel holds at once, and texts per judge call. */
   private val MaxBlockRows = 4096
+  private val JudgeBatch = 64
 
   /** Kleene (three-valued) value of `t`; None = undecided. */
   private def eval(t: LogicTree, v: Int => Option[Boolean]): Option[Boolean] =

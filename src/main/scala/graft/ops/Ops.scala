@@ -146,7 +146,7 @@ object SemMap {
   * within its source row (0-based, text order).
   *
   * Physical shape: one scan, the extraction column (codegen'd
-  * `regexp_extract_all` for compilable oracles, batched mapPartitions
+  * `regexp_extract_all` for compilable oracles, a batched `OracleBatch`
   * for LLM transports), then `posexplode` — a Generate node, NO shuffle
   * added at any scale (fan-out is partition-local).
   */

@@ -24,9 +24,9 @@ final case class TagRule(keyword: String, tag: String)
   *     advertises that via the `compile*` hooks, keeping the hot path inside
   *     whole-stage codegen with predicate pushdown. Every judgment a hook
   *     does not compile runs out of band through the `*Batch` methods, in
-  *     the batched `mapPartitions` kernels ([[BatchedExec]],
-  *     [[graft.exec.Cascade]]); a remote oracle overrides them with one
-  *     RPC per batch.
+  *     the batched `OracleBatch` operator of [[BatchedExec]], which
+  *     [[graft.exec.Cascade]] runs through too; a remote oracle overrides
+  *     them with one RPC per batch.
   *
   * Scale posture: `judge`/`extract`/`score`/`classify` are row-local and
   * embarrassingly parallel; `summarize` only ever sees a bounded distinct

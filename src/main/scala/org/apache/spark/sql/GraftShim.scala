@@ -41,8 +41,9 @@ object GraftShim {
     */
   type AbstractDT = org.apache.spark.sql.types.AbstractDataType
 
-  /** `Dataset.ofRows` is `private[sql]`; the SQL DML commands
-    * (graft.sources.v2.GraftDml) need it to re-issue the ALREADY
+  /** `Dataset.ofRows` is `private[sql]`; graft.oracle.BatchedExec needs it
+    * to wrap its own operator, and the SQL DML commands
+    * (graft.sources.v2.GraftDml) to re-issue the ALREADY
     * RESOLVED relation/source plans a DML statement carries as
     * DataFrames — keeping the original attribute ids, so the
     * statement's own resolved condition and assignment expressions
@@ -51,6 +52,15 @@ object GraftShim {
   def ofRows(spark: SparkSession,
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `RDD.mapPartitionsInternal` is `private[spark]`: the closure-cleaner-
+    * free map the engine's own physical operators (graft.oracle's
+    * OracleBatchExec) run over `child.execute()`, as Spark's do.
+    */
+  def mapPartitionsInternal[T, U: scala.reflect.ClassTag](
+      rdd: org.apache.spark.rdd.RDD[T])(
+      f: Iterator[T] => Iterator[U]): org.apache.spark.rdd.RDD[U] =
+    rdd.mapPartitionsInternal(f)
 
   /** Drop the storage blocks behind a `localCheckpoint`-ed frame.
     * `Dataset.unpersist` only uncaches `cache()`-ed plans — a local

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source scan over `src/main`: the only entry points are the three
   * harness mains, none of them hard-codes a core count, JSON string
   * escaping has one home, [[graft.sources.JsonEscape]], and every
-  * non-compiled `sem_*` judgment goes through the oracle's batch methods.
+  * non-compiled `sem_*` judgment goes through the oracle's batch methods
+  * on `InternalRow`s, with no `Row` round trip.
   */
 class MainSourcesSpec extends AnyFunSuite {
 
@@ -67,9 +68,11 @@ class MainSourcesSpec extends AnyFunSuite {
       s"the escape match is missing from $home")
   }
 
+  /** Path prefixes of the paper-algebra layers. */
+  private val semantic = Seq("ops", "exec", "oracle", "cube", "agent")
+    .map(p => new File(s"src/main/scala/graft/$p").getPath + File.separator)
+
   test("no per-row UDF in the semantic layers and no BatchedOracle type test") {
-    val semantic = Seq("ops", "exec", "oracle", "cube", "agent")
-      .map(p => new File(s"src/main/scala/graft/$p").getPath + File.separator)
     val udf = """\budf\s*[({]""".r
     val typeTest =
       """(?::\s*|InstanceOf\[)(?:graft\.oracle\.)?BatchedOracle\b""".r
@@ -78,6 +81,20 @@ class MainSourcesSpec extends AnyFunSuite {
       (line, i) <- lines.zipWithIndex
       if typeTest.findFirstIn(line).isDefined ||
         (semantic.exists(f.getPath.startsWith) && udf.findFirstIn(line).isDefined)
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no RowEncoder and no Dataset.mapPartitions in the semantic layers") {
+    // GroupTopK's local top-k prune keeps a bounded per-group buffer over
+    // a whole partition and calls no oracle: its one Row kernel is known
+    // and stays until it is ported, any other one is a regression
+    val known = new File("src/main/scala/graft/ops/GroupTopK.scala").getPath
+    val rowKernel = """\bRowEncoder\b|\.mapPartitions\b""".r
+    val hits = for {
+      (f, lines) <- main if semantic.exists(f.getPath.startsWith)
+      (line, i) <- lines.zipWithIndex
+      if rowKernel.findFirstIn(line).isDefined && f.getPath != known
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
   }

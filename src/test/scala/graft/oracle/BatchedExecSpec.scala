@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.plan.LogicalOp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
-import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, SerializeFromObject}
 import org.apache.spark.sql.functions._
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
@@ -166,7 +166,8 @@ class BatchedExecSpec extends SparkSpec {
   }
 
   test("a scalar oracle runs every sem_* judgment batched: the plan holds " +
-      "a MapPartitions and no ScalaUDF, and the rows equal the compiled oracle's") {
+      "an OracleBatch, no ScalaUDF and no object (de)serialization, and the " +
+      "rows equal the compiled oracle's") {
     val vocab = Seq(TagRule("spark", "s"), TagRule("other", "o"))
     val ops: Seq[(String, SemanticOracle => DataFrame)] = Seq(
       "sem_filter" -> (o => graft.ops.SemFilter(docs,
@@ -188,11 +189,100 @@ class BatchedExecSpec extends SparkSpec {
     ops.foreach { case (name, run) =>
       val got = run(new ScalarOracle)
       val plan = got.queryExecution.analyzed
-      assert(plan.find(_.isInstanceOf[MapPartitions]).isDefined, s"$name:\n$plan")
+      assert(plan.find(_.isInstanceOf[OracleBatch]).isDefined, s"$name:\n$plan")
+      assert(plan.find(p => p.isInstanceOf[DeserializeToObject] ||
+        p.isInstanceOf[SerializeFromObject]).isEmpty, s"$name:\n$plan")
       assert(plan.find(_.expressions.exists(
         _.find(_.isInstanceOf[ScalaUDF]).isDefined)).isEmpty, s"$name:\n$plan")
       assert(rows(got) == rows(run(DeterministicOracle.default)), name)
     }
+  }
+
+  /** Rows with a null text, an empty text and an existing `tag` column. */
+  private lazy val edge = Seq[(Long, String, String)](
+    (1L, "spark doc 1", "a"), (2L, null, "b"), (3L, "", "c"),
+    (4L, "flink doc 4", null), (5L, "spark and flink doc 5", "e"))
+    .toDF("id", "txt", "tag").repartition(2)
+
+  private def sortedRows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+
+  test("OracleBatch yields the compiled oracle's rows for every output type, " +
+      "null and empty texts and a column replaced in place") {
+    val vocab = Seq(TagRule("spark", "s"), TagRule("flink", "f"))
+    val ops: Seq[(String, SemanticOracle => DataFrame)] = Seq(
+      "StringType: sem_map over tag" -> (o => graft.ops.SemMap(edge,
+        LogicalOp.SemMap(Seq("txt"), "(\\d+)", "tag"), o)),
+      "StringType: sem_group" -> (o => graft.ops.SemGroup(edge,
+        LogicalOp.SemGroup(Seq("txt"), "by engine", "engine"), vocab, o)),
+      "ArrayType(StringType): sem_map_multi" -> (o => graft.ops.SemMapMulti(edge,
+        LogicalOp.SemMap(Seq("txt"), "([a-z]+)", "word"), o)),
+      "DoubleType: sem_topk" -> (o => graft.ops.SemTopK(edge,
+        LogicalOp.SemTopK(Seq("txt"), "spark doc", 4), o, tiebreak = Seq("id"))),
+      "BooleanType over two inputs: the duel" -> (o => graft.ops.SemTopK.duelTopK(
+        edge, LogicalOp.SemTopK(Seq("txt"), "spark", 2), o, "id")))
+    ops.foreach { case (name, run) =>
+      val got = run(new ScalarOracle)
+      assert(got.queryExecution.analyzed.find(_.isInstanceOf[OracleBatch])
+        .isDefined, name)
+      assert(got.schema == run(DeterministicOracle.default).schema, name)
+      assert(sortedRows(got) == sortedRows(run(DeterministicOracle.default)), name)
+    }
+    // replaced in place: same column position, no helper column left
+    val mapped = graft.ops.SemMap(edge,
+      LogicalOp.SemMap(Seq("txt"), "(\\d+)", "tag"), new ScalarOracle)
+    assert(mapped.columns.toSeq == Seq("id", "txt", "tag"))
+    // a null input text reaches the kernel as null, an empty one as ""
+    val seen = BatchedExec.withBatchedColumn(edge, "seen",
+      org.apache.spark.sql.types.StringType, Seq(col("txt")), 2)(
+      ts => ts.head.map(t => if (t == null) "<null>" else s"[$t]"))
+      .select("id", "seen").as[(Long, String)].collect().toMap
+    assert(seen == Map(1L -> "[spark doc 1]", 2L -> "<null>", 3L -> "[]",
+      4L -> "[flink doc 4]", 5L -> "[spark and flink doc 5]"))
+  }
+
+  test("OracleBatch output feeds a shuffle and a persisted frame read twice") {
+    val op = LogicalOp.SemGroup(Seq("txt"), "by engine", "engine")
+    val vocab = Seq(TagRule("spark", "s"), TagRule("other", "o"))
+    def grouped(o: SemanticOracle) = graft.ops.SemGroup(docs, op, vocab, o)
+    // roll_up-style count: the exchange reads the operator's UnsafeRows
+    def rollUp(o: SemanticOracle) = sortedRows(grouped(o).groupBy("engine").count())
+    assert(rollUp(new ScalarOracle) == rollUp(DeterministicOracle.default))
+    val want = sortedRows(grouped(DeterministicOracle.default))
+    CountingOracle.batches.set(0)
+    val oracle = new CountingOracle
+    val pinned = graft.exec.Cascade.filter(docs,
+      Seq(0 -> LogicalOp.SemFilter(Seq("txt"), "spark")), None, oracle)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val first = sortedRows(pinned)
+      val calls = CountingOracle.batches.get()
+      assert(sortedRows(pinned) == first && first.length == 66)
+      assert(CountingOracle.batches.get() == calls, "the second read re-judged")
+      val p2 = grouped(new ScalarOracle).persist()
+      try {
+        assert(sortedRows(p2) == want && p2.count() == want.length)
+      } finally p2.unpersist()
+    } finally pinned.unpersist()
+  }
+
+  test("OracleBatch plans in a new session, registers its strategy once per " +
+      "session and names its kernel in plans") {
+    val other = spark.newSession()
+    val strategy = OracleBatchStrategy
+    val local = other.createDataFrame(docs.collect().toSeq.asJava, docs.schema)
+    val op = LogicalOp.SemMap(Seq("txt"), "(\\d+)", "num")
+    val got = graft.ops.SemMap(graft.ops.SemMap(local, op, new ScalarOracle),
+      op, new ScalarOracle)
+    assert(other.experimental.extraStrategies.count(_ == strategy) == 1)
+    assert(sortedRows(got) == sortedRows(graft.ops.SemMap(local, op,
+      DeterministicOracle.default)))
+    val executed = got.queryExecution.executedPlan
+    assert(executed.find(_.isInstanceOf[OracleBatchExec]).isDefined, executed)
+    assert(executed.toString.contains("OracleBatch map->num[64]"), executed)
+    val judged = graft.ops.SemFilter(local,
+      LogicalOp.SemFilter(Seq("txt"), "spark"), new ScalarOracle)
+    assert(judged.queryExecution.analyzed.toString.contains("OracleBatch judge[64]"))
+    assert(judged.count() == 66)
   }
 
   test("batch kernel arity mismatch fails loudly") {
