@@ -268,12 +268,11 @@ class BatchedExecSpec extends SparkSpec {
   test("OracleBatch plans in a new session, registers its strategy once per " +
       "session and names its kernel in plans") {
     val other = spark.newSession()
-    val strategy = OracleBatchStrategy
     val local = other.createDataFrame(docs.collect().toSeq.asJava, docs.schema)
     val op = LogicalOp.SemMap(Seq("txt"), "(\\d+)", "num")
     val got = graft.ops.SemMap(graft.ops.SemMap(local, op, new ScalarOracle),
       op, new ScalarOracle)
-    assert(other.experimental.extraStrategies.count(_ == strategy) == 1)
+    assert(other.experimental.extraStrategies.count(_ == OracleBatchStrategy) == 1)
     assert(sortedRows(got) == sortedRows(graft.ops.SemMap(local, op,
       DeterministicOracle.default)))
     val executed = got.queryExecution.executedPlan
