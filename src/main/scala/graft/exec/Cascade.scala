@@ -86,11 +86,12 @@ object Cascade {
     * (out-of-band leaves read TRUE). One [[BatchedExec.run]] operator then
     * walks each partition in order, in blocks of [[MaxBlockRows]] rows, the
     * other leaves as helper columns coalesced to false (sound: the tree has
-    * no NOT). Per out-of-band leaf, in plan order, it judges in batches of
-    * [[JudgeBatch]] the rows whose tree is still undecided (unjudged leaves
-    * unknown) and that the leaf can still change; a row without text is
-    * false with no call. It emits the rows whose tree came out true, as
-    * they are. */
+    * no NOT) and one text column per distinct `columns` list the
+    * out-of-band leaves judge. Per out-of-band leaf, in plan order, it
+    * judges in batches of [[JudgeBatch]] the rows whose tree is still
+    * undecided (unjudged leaves unknown) and that the leaf can still
+    * change; a row without text is false with no call. It emits the rows
+    * whose tree came out true, as they are. */
   def run(df: DataFrame, leaves: Seq[(Int, Leaf)], tree: LogicTree,
       oracle: SemanticOracle): DataFrame = {
     val t = LogicTree.normalize(tree)
@@ -103,14 +104,21 @@ object Cascade {
     val mayPass = df.filter(fold(t, byId, id =>
       if (semIds(id)) lit(true) else inBand(df, byId(id), oracle)))
     if (staged.isEmpty) return mayPass
-    val helpers = leaves.map { case (id, leaf) => leaf match {
-      case Judge(f) if semIds(id) => nullif(Ops.textCol(df, f.columns), lit(""))
-      case _ => coalesce(inBand(df, leaf, oracle), lit(false))
-    }}
-    val ids = leaves.map(_._1)
+    // one helper per cheap leaf, then one text per distinct `columns`
+    // list, shared by the sem leaves that read it
+    val cheap = leaves.filterNot(l => semIds(l._1))
+    val textOf = leaves.collect {
+      case (id, Judge(f)) if semIds(id) => id -> f.columns
+    }
+    val texts = textOf.map(_._2).distinct
+    val helpers = cheap.map { case (_, leaf) =>
+      coalesce(inBand(df, leaf, oracle), lit(false))
+    } ++ texts.map(cs => nullif(Ops.textCol(df, cs), lit("")))
+    val slot = cheap.map(_._1).zipWithIndex ++
+      textOf.map { case (id, cs) => id -> (cheap.size + texts.indexOf(cs)) }
     BatchedExec.run(mayPass, helpers, None, MaxBlockRows, s"judge[$JudgeBatch]") {
         (at, block) =>
-      val ord = ids.zip(at).toMap
+      val ord = slot.map { case (id, i) => id -> at(i) }.toMap
       val judged = block.map(_ => scala.collection.mutable.Map.empty[Int, Boolean])
       def value(r: Int)(id: Int): Option[Boolean] =
         if (!semIds(id)) Some(block(r).getBoolean(ord(id)))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
@@ -143,20 +143,19 @@ object Merge {
   private def shardsPath(root: Path) = new Path(logPath(root), "shards")
   private def stagingRoot(root: Path) = new Path(root, "_graft_staging")
 
-  /** Relative paths of all data files currently in the bucket dirs. */
-  private def listDataFiles(fs: FileSystem, root: Path,
-      buckets: Option[Set[Long]] = None): Seq[String] = {
+  /** Every data file currently in the bucket dirs under `root`: its
+    * relative path (`__bucket=N/name`) and listed status, by path.
+    */
+  private def listDataStatuses(fs: FileSystem,
+      root: Path): Seq[(String, FileStatus)] = {
     if (!fs.exists(root)) return Seq.empty
-    val dirs = fs.listStatus(root).filter(s => s.isDirectory &&
-      s.getPath.getName.startsWith("__bucket="))
-    val wanted = dirs.filter { d =>
-      buckets.forall(_.contains(d.getPath.getName.stripPrefix("__bucket=").toLong))
-    }
-    wanted.flatMap { d =>
-      fs.listStatus(d.getPath).filter(f => f.isFile &&
-          f.getPath.getName.endsWith(".parquet"))
-        .map(f => s"${d.getPath.getName}/${f.getPath.getName}")
-    }.toSeq.sorted
+    fs.listStatus(root).filter(s => s.isDirectory &&
+        s.getPath.getName.startsWith("__bucket="))
+      .flatMap { d =>
+        fs.listStatus(d.getPath).filter(f => f.isFile &&
+            f.getPath.getName.endsWith(".parquet"))
+          .map(f => s"${d.getPath.getName}/${f.getPath.getName}" -> f)
+      }.toSeq.sortBy(_._1)
   }
 
   /** Schema codec for manifests/anchors: DDL for plain schemas (keeps
@@ -1476,24 +1475,19 @@ object Merge {
     }
   }
 
-  private def bucketFileStats(spark: SparkSession, dir: String,
-      statsCols: Seq[String],
-      schemaHint: Option[StructType] = None): Seq[Skipping.FileStats] = {
-    if (statsCols.isEmpty) return Seq.empty
+  /** Per-file stats of `files`, the `__bucket=N/` data files a writer
+    * just listed under `dir`, read under `schema`, the schema it wrote
+    * (the __bucket partition column included): no listing and no footer
+    * inference.
+    */
+  private def bucketFileStats(spark: SparkSession, dir: Path,
+      files: Seq[FileStatus], statsCols: Seq[String],
+      schema: StructType): Seq[Skipping.FileStats] = {
     // an EMPTY initial commit (CREATE TABLE before any INSERT) wrote no
     // data files — nothing to collect stats over; later commits record
     // stats for the files they write, statsCols persists in the manifest
-    if (listDataFiles(new Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-        new Path(dir)).isEmpty)
-      return Seq.empty
-    // write-path callers KNOW the schema they just wrote (including the
-    // __bucket partition column) — passing it skips a per-commit footer
-    // inference; the values read back are identical either way
-    val df = schemaHint match {
-      case Some(s) => spark.read.schema(s).parquet(dir)
-      case None => spark.read.parquet(dir)
-    }
+    if (statsCols.isEmpty || files.isEmpty) return Seq.empty
+    val df = ManifestScan.scan(spark, files, Some(dir.toString), Some(schema))
     // `bloom:c` specs index column c with a per-file Bloom filter
     // (point-lookup pruning); plain names and `statsx:c` record min/max
     // intervals (statsx differs only at manifest-write time, where
@@ -1573,13 +1567,13 @@ object Merge {
       df.withColumn("__bucket", bucketCol(keyCol, nBuckets)),
       filesPerBucket, nBuckets, sortKey = Seq(keyCol))
       .write.mode("overwrite").partitionBy("__bucket").parquet(path)
-    writeManifest(fs, root, Manifest(0L, -1L, listDataFiles(fs, root),
+    val written = listDataStatuses(fs, root)
+    writeManifest(fs, root, Manifest(0L, -1L, written.map(_._1),
       Some(schemaToString(df.schema)), layout = Some((keyCol, nBuckets)),
       statsCols = statsCols,
       stats = externalizeBlooms(fs, root,
-        bucketFileStats(df.sparkSession, path, statsCols,
-          schemaHint = Some(df.schema.add("__bucket",
-            org.apache.spark.sql.types.LongType))), statsCols),
+        bucketFileStats(df.sparkSession, root, written.map(_._2), statsCols,
+          df.schema.add("__bucket", LongType)), statsCols),
       ts = System.currentTimeMillis(), op = Some("write"),
       shardSpan = manifestShardSpan, constraints = constraints,
       keySorted = true))
@@ -1622,13 +1616,13 @@ object Merge {
       df.withColumn("__bucket", bucketColMulti(keyCols, nBuckets)),
       filesPerBucket, total.toInt, sortKey = keyCols)
       .write.mode("overwrite").partitionBy("__bucket").parquet(path)
-    writeManifest(fs, root, Manifest(0L, -1L, listDataFiles(fs, root),
+    val written = listDataStatuses(fs, root)
+    writeManifest(fs, root, Manifest(0L, -1L, written.map(_._1),
       Some(schemaToString(df.schema)),
       statsCols = statsCols,
       stats = externalizeBlooms(fs, root,
-        bucketFileStats(df.sparkSession, path, statsCols,
-          schemaHint = Some(df.schema.add("__bucket",
-            org.apache.spark.sql.types.LongType))), statsCols),
+        bucketFileStats(df.sparkSession, root, written.map(_._2), statsCols,
+          df.schema.add("__bucket", LongType)), statsCols),
       ts = System.currentTimeMillis(), op = Some("write"),
       layoutCols = keyCols, layoutNs = nBuckets, keySorted = true))
   }
@@ -1636,8 +1630,11 @@ object Merge {
   /** Read a manifest's file set with the version's own schema (plus the
     * __bucket partition column, typed explicitly so files that PREDATE an
     * added column fill it with nulls instead of failing or being schema-
-    * merged). Without a recorded schema (pre-evolution manifests) falls
-    * back to inference + partition discovery.
+    * merged). The files, data and deletion vectors alike, are read as
+    * named through [[ManifestScan]]: no glob, no listing and no listing
+    * job. Only a manifest that records no schema (one written before
+    * schema evolution) still goes through `spark.read`, with footer
+    * inference and partition discovery.
     */
   private def versionDf(spark: SparkSession, path: String, root: Path,
       m: Manifest, keepPos: Boolean = false): DataFrame = {
@@ -1674,9 +1671,10 @@ object Merge {
       s"version ${m.version} of $path references clone-source files " +
       "but records no schema — cannot align the groups")
     def read(base: String, files: Seq[String]) = {
-      val reader = spark.read.option("basePath", base)
-      val df = schemaOpt.map(reader.schema).getOrElse(reader)
-        .parquet(files: _*)
+      val df = schemaOpt match {
+        case Some(_) => ManifestScan.read(spark, files, Some(base), schemaOpt)
+        case None => spark.read.option("basePath", base).parquet(files: _*)
+      }
       if (!withPos) df
       else df.withColumn("__dv_file", col("_metadata.file_path"))
         .withColumn("__dv_pos", col("_metadata.row_index"))
@@ -1699,9 +1697,7 @@ object Merge {
     val dvApplied =
       if (m.dvFiles.isEmpty) base
       else {
-        val raw = spark.read
-          .schema(DvCodec.SupersetSchema)
-          .parquet(m.dvFiles.map(f => new Path(root, f).toString): _*)
+        val raw = readDv(spark, root, m.dvFiles)
         val dv = raw.where(col("dv").isNull)
           .select(col("file"), col("pos"))
           .unionAll(raw.where(col("dv").isNotNull)
@@ -1794,6 +1790,14 @@ object Merge {
     else readVersion(spark, path, v)
   }
 
+  /** `exprs` evaluated on the driver: over a one-row LOCAL relation the
+    * optimizer folds them to literals, so no Spark job runs.
+    */
+  private[sources] def evalLocal(spark: SparkSession,
+      exprs: Seq[Column]): org.apache.spark.sql.Row =
+    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row()),
+      new StructType()).select(exprs: _*).head()
+
   /** Files of `version` whose recorded per-file stats admit every bound,
     * plus the version's total file count — the MANIFEST-LEVEL skipping
     * plan for a versioned table (the [[Skipping]] sidecar idea composed
@@ -1833,8 +1837,8 @@ object Merge {
             Skipping.pointsOf(b).isDefined => Skipping.pointsOf(b).get
       }.filter(ps => ps.nonEmpty && ps.size <= 1024).map { ps =>
         val dt = schema(kc).dataType
-        val row = spark.range(1).select(ps.map(p =>
-          pmod(xxhash64(lit(p).cast(dt)), lit(n.toLong))): _*).head()
+        val row = evalLocal(spark, ps.map(p =>
+          pmod(xxhash64(lit(p).cast(dt)), lit(n.toLong))))
         ps.indices.filterNot(row.isNullAt).map(row.getLong).toSet
       }
     }
@@ -2342,6 +2346,14 @@ object Merge {
   private lazy val dvDecodeUdf =
     udf((b: Array[Byte]) => DvCodec.decode(b))
 
+  /** The rows of the DV sidecars `dvFiles` (root-relative), v1 and v2
+    * alike, under the superset schema.
+    */
+  private def readDv(spark: SparkSession, root: Path,
+      dvFiles: Seq[String]): DataFrame =
+    ManifestScan.read(spark, dvFiles.map(f => new Path(root, f).toString),
+      None, Some(DvCodec.SupersetSchema))
+
   /** Per-file LIVE deleted-row counts of a manifest's DV sidecars,
     * keyed by the manifest's own file names (inert entries for
     * rewritten files drop out). One job, output bounded by the
@@ -2358,9 +2370,7 @@ object Merge {
       val abs = if (p.isAbsolute) p else new Path(root, p)
       fs.makeQualified(abs).toString -> f
     }.toMap
-    spark.read
-      .schema(DvCodec.SupersetSchema)
-      .parquet(m.dvFiles.map(f => new Path(root, f).toString): _*)
+    readDv(spark, root, m.dvFiles)
       .groupBy("file")
       .agg(sum(coalesce(col("n"), lit(1L))).as("deleted"))
       .collect()
@@ -2415,10 +2425,7 @@ object Merge {
       (o.dvFiles.toSet diff n.dvFiles.toSet)
     val dvTouched: Set[Long] =
       if (dvDelta.isEmpty) Set.empty
-      else spark.read
-        .schema(DvCodec.SupersetSchema)
-        .parquet(dvDelta.toSeq.sorted
-          .map(f => new Path(root, f).toString): _*)
+      else readDv(spark, root, dvDelta.toSeq.sorted)
         .select("file").distinct().collect()
         .map(r => bucketOf(r.getString(0))).toSet
     fileDiff ++ dvTouched
@@ -3282,32 +3289,26 @@ object Merge {
         val b = c.stripPrefix(Skipping.NdvxPrefix)
         Skipping.NdvxPrefix + m.getOrElse(b, b)
       } else m.getOrElse(c, c)
-    val stats =
-      if (fs.listStatus(staging).exists(_.isDirectory))
-        bucketFileStats(spark, staging.toString,
-          statsCols.map(mapCol(_, l2p)),
-          schemaHint = Some(phys.schema)) // the staged frame's own
-            // schema (physical names, __bucket included) — no inference
-          .map(e => e.copy(col = mapCol(e.col, p2l)))
-      else Seq.empty // empty write: no bucket dirs, nothing to stat
-    val moved = Seq.newBuilder[String]
-    fs.listStatus(staging)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__bucket="))
-      .foreach { d =>
-        val destDir = new Path(root, d.getPath.getName)
-        if (!fs.exists(destDir)) fs.mkdirs(destDir)
-        fs.listStatus(d.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .foreach { f =>
-            val dest = new Path(destDir, f.getPath.getName)
-            // spark part names embed a per-job UUID: collisions impossible
-            require(fs.rename(f.getPath, dest),
-              s"failed to move staged file ${f.getPath} to $dest")
-            moved += s"${d.getPath.getName}/${f.getPath.getName}"
-          }
+    // one listing of the staged files serves the stats pass and the move
+    // (an empty write has no bucket dirs, so nothing to stat or move)
+    val staged = listDataStatuses(fs, staging)
+    val stats = bucketFileStats(spark, staging, staged.map(_._2),
+        statsCols.map(mapCol(_, l2p)),
+        phys.schema) // the staged frame's own schema (physical names,
+          // __bucket included) — no inference
+      .map(e => e.copy(col = mapCol(e.col, p2l)))
+    staged.groupBy(_._1.takeWhile(_ != '/')).foreach { case (dir, files) =>
+      val destDir = new Path(root, dir)
+      if (!fs.exists(destDir)) fs.mkdirs(destDir)
+      files.foreach { case (rel, f) =>
+        val dest = new Path(root, rel)
+        // spark part names embed a per-job UUID: collisions impossible
+        require(fs.rename(f.getPath, dest),
+          s"failed to move staged file ${f.getPath} to $dest")
       }
+    }
     fs.delete(staging, true)
-    (moved.result().sorted, externalizeBlooms(fs, root, stats, statsCols))
+    (staged.map(_._1), externalizeBlooms(fs, root, stats, statsCols))
   }
 
   private def deleteFiles(fs: FileSystem, root: Path,
@@ -4561,18 +4562,19 @@ object Merge {
       }
     dvDf.write.mode("overwrite").parquet(dvPath.toString)
     // count what was actually recorded: v1 = footer row counts, v2 =
-    // the n column over file-count rows
-    val n = spark.read.schema(DvCodec.SupersetSchema)
-      .parquet(dvPath.toString)
+    // the n column over file-count rows — over the one listing that also
+    // names the sidecars for the manifest
+    val written = fs.listStatus(dvPath)
+      .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+    val n = ManifestScan.scan(spark, written, None,
+        Some(DvCodec.SupersetSchema))
       .agg(coalesce(sum(coalesce(col("n"), lit(1L))), lit(0L)))
       .collect()(0).getLong(0)
     if (n == 0L) {
       fs.delete(dvPath, true)
       (Seq.empty, 0L)
     } else
-      (fs.listStatus(dvPath)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(st => s"$dvDir/${st.getPath.getName}").toSeq.sorted, n)
+      (written.map(st => s"$dvDir/${st.getPath.getName}").sorted, n)
   }
 
   def compactVersion(spark: SparkSession, path: String,
@@ -4849,9 +4851,8 @@ object Merge {
     def refs(of: Manifest => Seq[String]): (Set[String], Set[String]) =
       (kept.flatMap(of).toSet, all.flatMap(of).toSet)
     val (liveData, everData) = refs(_.files)
-    listDataFiles(fs, root).foreach { f =>
-      val p = new Path(root, f)
-      sweep.offer(p, f, fs.getFileStatus(p).getModificationTime,
+    listDataStatuses(fs, root).foreach { case (f, st) =>
+      sweep.offer(new Path(root, f), f, st.getModificationTime,
         liveData, everData)
     }
     sweep.expire(logPath(root), allVersions, keepFrom, tagged)

@@ -339,15 +339,17 @@ object TxLog {
       (java.util.Base64.getEncoder.encodeToString(md.digest()), b)
   }
 
+  /** Exactly `paths`, read as named through [[ManifestScan]] (no glob, no
+    * listing, no listing job) under the memoized schema; a memo miss
+    * infers it from the footers and memoizes what the read resolved.
+    */
   private def readWithMemo(spark: SparkSession, paths: Seq[String],
       basePath: Option[String]): DataFrame = {
-    val sch = schemaMemo.getOrElseUpdate(schemaKey(paths, basePath))(
-      basePath.foldLeft(spark.read) {
-        (r, b) => r.option("basePath", b)
-      }.parquet(paths: _*).schema)
-    basePath.foldLeft(spark.read.schema(sch)) {
-      (r, b) => r.option("basePath", b)
-    }.parquet(paths: _*)
+    val key = schemaKey(paths, basePath)
+    val known = schemaMemo.get(key)
+    val df = ManifestScan.read(spark, paths, basePath, known)
+    if (known.isEmpty) schemaMemo.put(key, df.schema)
+    df
   }
 
   /** [[readTable]] for a partitioned sub-table: reads the state's exact

@@ -138,7 +138,7 @@ class GraftBucketScan(path: String, version: Long, dataSchema: StructType,
       vs.map(v =>
         pmod(xxhash64(lit(v).cast(dt)), lit(bucketNs(i).toLong)))
     }
-    val row = spark.range(1).select(exprs: _*).head()
+    val row = graft.sources.Merge.evalLocal(spark, exprs)
     var off = 0
     val keeps: Seq[(Int, Set[Long])] = perDim.map { case (i, vs) =>
       val ks = vs.indices.filterNot(j => row.isNullAt(off + j))

@@ -41,6 +41,11 @@ object GraftShim {
     */
   type AbstractDT = org.apache.spark.sql.types.AbstractDataType
 
+  /** `StructType.asNullable` is `private[spark]`; a file relation reads
+    * every column nullable, nested ones included, as `DataSource` makes it.
+    */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** `Dataset.ofRows` is `private[sql]`; graft.oracle.BatchedExec needs it
     * to wrap its own operator, and the SQL DML commands
     * (graft.sources.v2.GraftDml) to re-issue the ALREADY

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * harness mains, none of them hard-codes a core count, JSON string
   * escaping has one home, [[graft.sources.JsonEscape]], and every
   * non-compiled `sem_*` judgment goes through the oracle's batch methods
-  * on `InternalRow`s, with no `Row` round trip.
+  * on `InternalRow`s, with no `Row` round trip. Merge and TxLog read the
+  * files their manifests name through [[graft.sources.ManifestScan]], and
+  * no `spark.range(1)` job evaluates driver-side expressions.
   */
 class MainSourcesSpec extends AnyFunSuite {
 
@@ -95,6 +97,39 @@ class MainSourcesSpec extends AnyFunSuite {
       (f, lines) <- main if semantic.exists(f.getPath.startsWith)
       (line, i) <- lines.zipWithIndex
       if rowKernel.findFirstIn(line).isDefined && f.getPath != known
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("Merge and TxLog read manifest-named files only through ManifestScan") {
+    // a `.parquet(` call is a write when the nearest `.write`/`.read`
+    // at or above it is a `.write`; of the reads, only the schema-less
+    // fallback (`case None =>`) and the directory read of a table with no
+    // log (`path`) may bypass the helper
+    val logs = Seq("Merge.scala", "TxLog.scala")
+      .map(n => new File(s"src/main/scala/graft/sources/$n").getPath)
+    def isWrite(lines: IndexedSeq[String], i: Int): Boolean =
+      (i to math.max(0, i - 5) by -1).map(lines)
+        .find(l => l.contains(".write") || l.contains(".read"))
+        .exists(_.contains(".write"))
+    val hits = for {
+      (f, lines) <- main if logs.contains(f.getPath)
+      (line, i) <- lines.zipWithIndex
+      if line.contains(".parquet(") && !isWrite(lines, i) &&
+        !line.contains("case None =>") && !line.contains(".parquet(path)")
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+    assert(main.exists { case (f, lines) =>
+      f.getName == "ManifestScan.scala" &&
+        lines.exists(_.contains("new InMemoryFileIndex(")) },
+      "ManifestScan no longer builds its own file index")
+  }
+
+  test("no spark.range(1) job evaluates expressions on the driver") {
+    val one = """\brange\(1\)""".r
+    val hits = for {
+      (f, lines) <- main
+      (line, i) <- lines.zipWithIndex if one.findFirstIn(line).isDefined
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
   }

@@ -198,6 +198,24 @@ class BatchedExecSpec extends SparkSpec {
     }
   }
 
+  test("staged sem leaves over the same columns share one text input") {
+    val two = docs.withColumn("tag", lit("x"))
+    val leaves = Seq(
+      0 -> LogicalOp.SemFilter(Seq("txt"), "spark"),
+      1 -> LogicalOp.SemFilter(Seq("txt"), "other"),
+      2 -> LogicalOp.SemFilter(Seq("txt", "tag"), "spark"))
+    val or = graft.plan.LogicTree.Node("OR", leaves.map(l =>
+      graft.plan.LogicTree.Leaf(l._1)))
+    def run(o: SemanticOracle) = graft.exec.Cascade.filter(two, leaves, Some(or), o)
+    val got = run(new CountingOracle)
+    val batch = got.queryExecution.analyzed.collectFirst {
+      case b: OracleBatch => b
+    }.getOrElse(fail(got.queryExecution.analyzed.toString))
+    // one text per distinct `columns` list: (txt) and (txt, tag)
+    assert(batch.inputs.size == 2, batch)
+    assert(sortedRows(got) == sortedRows(run(DeterministicOracle.default)))
+  }
+
   /** Rows with a null text, an empty text and an existing `tag` column. */
   private lazy val edge = Seq[(Long, String, String)](
     (1L, "spark doc 1", "a"), (2L, null, "b"), (3L, "", "c"),
