@@ -350,6 +350,10 @@ class OlapAgent(complete: String => String, oracle: SemanticOracle) {
     * decompose -> delta filter plan -> catalog-registered filter result ->
     * ReAct analysis -> top-k epilogue. `historyQuery` is the previous
     * session query ("" for the first).
+    * The filter goes through the one cube lookup,
+    * [[CubeCatalog.filterQuery]], each step keyed as a sem_filter atom of
+    * its NL action; its delta steps run through [[executeFilter]] with
+    * the base table's profile.
     */
   def runSession(catalog: CubeCatalog, query: String,
       historyQuery: String = "", maxSteps: Int = 10): DataFrame = {
@@ -359,44 +363,19 @@ class OlapAgent(complete: String => String, oracle: SemanticOracle) {
       if (filterQ.isEmpty) catalog.node(0)
       else {
         val plan = planFilter(base.columns.toSeq, historyQuery, filterQ)
-        // the catalog keys on LogicalOp atoms; verb-level steps carry their
-        // NL action, so they canonicalize as a sem_filter atom per step
-        // (same subsumption behavior as the reference's judged memory)
-        val asOps: Seq[LogicalOp] = plan.steps.map(s =>
-          LogicalOp.SemFilter(s.field.toSeq, s.action))
-        val key = graft.cube.PredicateAtoms.atoms(asOps)
-        // Equal reuse: a session re-asking the same conditions gets the
-        // cached node back, never a second execution
-        catalog.equalNode(key)
-          .getOrElse {
-            // implication-aware base (the same bestBaseImplied descent
-            // filterQuery uses): a progressive NL session whose new step
-            // set extends a cached node's executes ONLY the delta steps on
-            // that node's (already filtered, pinned) frame.
-            // Delta execution is sound only under a conjunctive logic
-            // tree — dropping a satisfied leaf from an OR would change
-            // semantics — so any other shape falls back to full execution.
-            val cached = catalog.bestBaseImplied(asOps)
-            val conjunctive = LogicTree.normalize(plan.logic) match {
-              case LogicTree.Leaf(_) => true
-              case LogicTree.Node(op, cs) => op.equalsIgnoreCase("and") &&
-                cs.forall(_.isInstanceOf[LogicTree.Leaf])
-            }
-            val deltaSteps = plan.steps.filterNot(s =>
-              cached.predicates.contains(graft.cube.PredicateAtoms.atom(
-                LogicalOp.SemFilter(s.field.toSeq, s.action))))
-            val (from, df, planOps) =
-              if (cached.id != 0 && conjunctive) {
-                val d =
-                  if (deltaSteps.isEmpty) cached.df
-                  else executeFilter(cached.df, FilterPlan(deltaSteps,
-                    LogicTree.Node("AND", deltaSteps.map(s => LogicTree.Leaf(s.id)))),
-                    statsDf = base)
-                (cached, d, cached.plan ++ deltaSteps.map(s =>
-                  LogicalOp.SemFilter(s.field.toSeq, s.action): LogicalOp))
-              } else (catalog.node(0), executeFilter(base, plan), asOps)
-            catalog.admit(from, query, key, df, planOps, asOps)
-          }
+        // steps and tree renumbered by position, the ids filterQuery uses
+        val index = plan.steps.map(_.id).zipWithIndex.toMap
+        val steps = plan.steps.map(s => s.copy(id = index(s.id)))
+        def reindex(t: LogicTree): LogicTree = t match {
+          case LogicTree.Leaf(id) => LogicTree.Leaf(index(id))
+          case LogicTree.Node(op, cs) => LogicTree.Node(op, cs.map(reindex))
+        }
+        catalog.filterQuery(query,
+          steps.map(s => LogicalOp.SemFilter(s.field.toSeq, s.action)),
+          Some(reindex(plan.logic)), (df, ops, tree) =>
+            executeFilter(df, FilterPlan(ops.map(o => steps(o._1)),
+              tree.getOrElse(LogicTree.Node("AND",
+                ops.map(o => LogicTree.Leaf(o._1))))), statsDf = base))
       }
     val (finalNode, summary, _) =
       if (analysisQ.isEmpty) (node, None, Seq.empty)

@@ -3,7 +3,7 @@ package graft.cube
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.oracle.{SemanticOracle, TagRule}
-import graft.plan.LogicalOp
+import graft.plan.{LogicTree, LogicalOp}
 import graft.exec.Cascade
 import graft.ops.{CountOp, NumReduce, Reattach, SemGroup, SemMap, SemReduce}
 
@@ -21,6 +21,8 @@ import graft.ops.{CountOp, NumReduce, Reattach, SemGroup, SemMap, SemReduce}
   *     is deterministic. A new query starts from the smallest cached
   *     superset and applies only its delta predicates (the reference's
   *     incremental-filter path, OLAP_Agent.py:397-418).
+  *     [[CubeCatalog.filterQuery]] is the one lookup and the one place
+  *     that admits a node, for direct queries and agent sessions alike.
   *
   * Scale posture: nothing here collects rows. Every node the catalog
   * computes is persisted (MEMORY_AND_DISK) and held in one process-wide,
@@ -44,9 +46,10 @@ final case class CubeNode(id: Int, query: String,
     filterOps: Seq[LogicalOp] = Seq.empty)
 
 /** Canonicalization of filter predicates for subsumption keys: each filter
-  * op encodes to a normalized string atom; a query's key is the SET of its
-  * atoms (conjunctive semantics). Non-conjunctive plans bail to no-reuse
-  * (SURVEY.md §7 hard-part #4).
+  * op encodes to a normalized string atom; a conjunctive query's key is
+  * the SET of its atoms. Any other logic tree is keyed by the single
+  * [[treeAtom]] of the whole tree, so it is reused only by the same tree
+  * and never as a delta base (SURVEY.md §7 hard-part #4).
   */
 object PredicateAtoms {
   def atom(op: LogicalOp): String = op match {
@@ -62,6 +65,27 @@ object PredicateAtoms {
   }
 
   def atoms(filters: Seq[LogicalOp]): Set[String] = filters.map(atom).toSet
+
+  /** One atom for a logic tree over `filters` (leaf ids index into it):
+    * the normalized tree, children sorted so `OR(A,B)` and `OR(B,A)`
+    * match, leaf atoms length-prefixed so no atom text is ambiguous.
+    */
+  def treeAtom(tree: LogicTree, filters: Seq[LogicalOp]): String = {
+    def enc(t: LogicTree): String = t match {
+      case LogicTree.Leaf(id) => val a = atom(filters(id)); s"${a.length}:$a"
+      case LogicTree.Node(op, cs) =>
+        cs.map(enc).sorted.mkString(s"${op.toLowerCase}(", ",", ")")
+    }
+    "tree:" + enc(LogicTree.normalize(tree))
+  }
+
+  /** Does `tree` normalize to a flat AND of all `n` filters? */
+  def flatAnd(tree: LogicTree, n: Int): Boolean =
+    (LogicTree.normalize(tree) match {
+      case LogicTree.Node(op, cs) if op.equalsIgnoreCase("and") => cs
+      case t => Seq(t)
+    }).map { case LogicTree.Leaf(id) => id; case _ => -1 }.toSet ==
+      (0 until n).toSet
 
   /** Conservative single-atom implication: do `q`'s rows form a subset of
     * `c`'s rows? The structural analogue of the reference's LLM `Subset`
@@ -284,19 +308,12 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
     }
   }
 
-  /** Smallest cached superset of the query's predicate set — the
-    * deterministic analogue of OLAP_Memory.get_current_node's BFS descent.
-    */
-  def bestBase(query: Set[String]): CubeNode =
-    nodes.filter(n => n.predicates.subsetOf(query))
-      .maxBy(n => (n.predicates.size, -n.id)) // most predicates; oldest wins ties
-
   /** Implication-aware base: a cached node is usable when EVERY one of its
     * filters is implied by some query filter (so cached rows ⊇ query rows)
     * — catching range refinements (`x >= 300` over a cached `x >= 200`) and
     * keyword-superset refinements, not just syntactic atom containment.
     */
-  def bestBaseImplied(filters: Seq[LogicalOp]): CubeNode = {
+  private def bestBaseImplied(filters: Seq[LogicalOp]): CubeNode = {
     // exact atom-set match wins outright — without this, a looser
     // implication-eligible node could shadow the cached answer and the
     // Equal fast-path would never fire for refinement chains
@@ -364,12 +381,27 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
     best
   }
 
-  /** Run a conjunctive filter query against the catalog: find the smallest
-    * cached superset, apply only the DELTA predicates (every query filter
-    * whose exact atom the base doesn't already enforce), register the
-    * result. Returns the (possibly reused) node.
+  /** The one cube lookup: `filters` composed under `tree` (leaf ids
+    * index `filters`; None is AND of all). A flat AND returns its Equal
+    * node, or starts from the smallest cached superset and has `exec`
+    * run only the DELTA (every filter whose atom the base lacks) on it.
+    * Any other tree is keyed by its [[PredicateAtoms.treeAtom]]: an Equal
+    * hit on the same tree, else a full run from the root, admitted with
+    * no `filterOps` so it is never a base. `exec` takes the frame, the
+    * ops with their `filters` index, and the tree.
     */
-  def filterQuery(queryText: String, filters: Seq[LogicalOp]): CubeNode = {
+  def filterQuery(queryText: String, filters: Seq[LogicalOp],
+      tree: Option[LogicTree] = None,
+      exec: (DataFrame, Seq[(Int, LogicalOp)], Option[LogicTree]) => DataFrame =
+        Cascade.filter(_, _, _, oracle)): CubeNode = {
+    val ops = filters.zipWithIndex.map(_.swap)
+    if (!tree.forall(PredicateAtoms.flatAnd(_, filters.size))) {
+      val key = Set(PredicateAtoms.treeAtom(tree.get, filters))
+      val root = nodes(0)
+      return nodes.find(_.predicates == key).map(equalHit).getOrElse(
+        admit(root, queryText, key, exec(root.df, ops, tree), filters,
+          Seq.empty, root.dims))
+    }
     val key = PredicateAtoms.atoms(filters)
     val base0 = bestBaseImplied(filters)
     if (base0.predicates == key) return equalHit(base0)
@@ -389,10 +421,11 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
         case None => base0
       }
 
-    val delta = filters.filterNot(f =>
-      base.predicates.contains(PredicateAtoms.atom(f)))
-    val df = Cascade.filter(base.df, delta.zipWithIndex.map(_.swap), None, oracle)
-    admit(base, queryText, key, df, base.plan ++ delta, filters, base.dims)
+    val delta = ops.filterNot(o =>
+      base.predicates.contains(PredicateAtoms.atom(o._2)))
+    val df = if (delta.isEmpty) base.df else exec(base.df, delta, None)
+    admit(base, queryText, key, df, base.plan ++ delta.map(_._2), filters,
+      base.dims)
   }
 
   private def equalHit(n: CubeNode): CubeNode = {
@@ -400,20 +433,13 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
     repin(n)
   }
 
-  /** The cached node whose predicate set is exactly `key` (non-empty), as
-    * an Equal hit: counted, and re-pinned so its rows stay cached.
-    */
-  def equalNode(key: Set[String]): Option[CubeNode] =
-    if (key.isEmpty) None
-    else nodes.find(_.predicates == key).map(equalHit)
-
   /** Register a node this catalog computed from `base`: a delta hit when
     * `base` is a cached node (re-pinned), a miss when it is the root. The
     * new node gets the next id and is pinned.
     */
-  def admit(base: CubeNode, query: String, predicates: Set[String],
+  private def admit(base: CubeNode, query: String, predicates: Set[String],
       df: DataFrame, plan: Seq[LogicalOp], filterOps: Seq[LogicalOp],
-      dims: Map[String, DimensionViews] = Map.empty): CubeNode = {
+      dims: Map[String, DimensionViews]): CubeNode = {
     if (base.id == 0) misses += 1
     else { deltaHits += 1; repin(base) }
     val n = CubeNode(nextId, query, predicates, df, dims, plan, filterOps)

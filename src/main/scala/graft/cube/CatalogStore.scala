@@ -41,6 +41,8 @@ object CatalogStore {
       o.put("query", n.query)
       o.put("plan", PlanJson.encodePlan(n.plan))
       o.put("filter_ops", PlanJson.encodePlan(n.filterOps))
+      if (n.filterOps.isEmpty)
+        n.predicates.toSeq.sorted.foldLeft(o.putArray("key"))(_.add(_))
       if (n.id != 0)
         n.df.write.mode("overwrite").parquet(s"$path/node_${n.id}")
       val dimsArr = o.putArray("dims")
@@ -70,7 +72,9 @@ object CatalogStore {
     * so a subsequent `filterQuery` refinement scans only the (smaller)
     * persisted node. Predicates are re-derived from the decoded filter
     * ops, keeping the subsumption key and the implication machinery in
-    * sync with what actually executes.
+    * sync with what actually executes; a node without them (keyed by a
+    * logic tree) keeps its saved key, as an empty one would be any
+    * query's base.
     */
   def load(spark: SparkSession, root: DataFrame, path: String,
       oracle: SemanticOracle): CubeCatalog = {
@@ -103,9 +107,10 @@ object CatalogStore {
         val plan = PlanJson.decodePlan(o.get("plan").asText)
         val filterOps = PlanJson.decodePlan(o.get("filter_ops").asText)
         val df = spark.read.parquet(s"$path/node_$id")
-        cat.register(CubeNode(id, o.get("query").asText,
-          PredicateAtoms.atoms(filterOps), df, readDims(o, id), plan,
-          filterOps))
+        val key = Option(o.get("key")).map(_.asScala.map(_.asText).toSet)
+          .getOrElse(PredicateAtoms.atoms(filterOps))
+        cat.register(CubeNode(id, o.get("query").asText, key, df,
+          readDims(o, id), plan, filterOps))
       }
     }
     cat

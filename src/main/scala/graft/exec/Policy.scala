@@ -65,19 +65,14 @@ object Policy {
 final class MeteredOracle(inner: SemanticOracle, val calls: LongAccumulator,
     forwardCompile: Boolean = false, chars: LongAccumulator = null)
     extends SemanticOracle {
-  private def bill(t: String): Unit = {
-    calls.add(1L)
-    if (chars != null && t != null) chars.add(t.length.toLong)
-  }
-  private def addChars(ts: IterableOnce[String]): Unit =
+  /** Bill `n` calls and the chars of every non-null text in `ts`. */
+  private def bill(n: Long, ts: IterableOnce[String]): Unit = {
+    calls.add(n)
     if (chars != null) {
-      var n = 0L
-      ts.iterator.foreach(t => if (t != null) n += t.length)
-      chars.add(n)
+      var c = 0L
+      ts.iterator.foreach(t => if (t != null) c += t.length)
+      chars.add(c)
     }
-  private def billAll(ts: Seq[String]): Unit = {
-    calls.add(ts.count(_ != null).toLong)
-    addChars(ts)
   }
   override def compileJudge(c: String): Option[org.apache.spark.sql.Column =>
       org.apache.spark.sql.Column] =
@@ -94,57 +89,50 @@ final class MeteredOracle(inner: SemanticOracle, val calls: LongAccumulator,
   override def compileScore(q: String): Option[org.apache.spark.sql.Column =>
       org.apache.spark.sql.Column] =
     if (forwardCompile) inner.compileScore(q) else None
-  override def judge(text: String, condition: String): Boolean = {
-    bill(text); inner.judge(text, condition)
-  }
-  override def extract(text: String, desc: String): Option[String] = {
-    bill(text); inner.extract(text, desc)
-  }
+  // scalar calls are one-element batches, billed by the batch rule
+  override def judge(text: String, condition: String): Boolean =
+    judgeBatch(Seq(text), condition).head
+  override def extract(text: String, desc: String): Option[String] =
+    extractBatch(Seq(text), desc).head
   /** Forwards to the inner oracle's own one-to-many extraction (NOT the
     * scalar-default base impl, which would truncate every row to at most
-    * one value); one judged text = one billed call.
+    * one value).
     */
-  override def extractAll(text: String, desc: String): Seq[String] = {
-    bill(text); inner.extractAll(text, desc)
-  }
-  override def classify(text: String, vocab: Seq[TagRule]): Option[String] = {
-    bill(text); inner.classify(text, vocab)
-  }
+  override def extractAll(text: String, desc: String): Seq[String] =
+    extractAllBatch(Seq(text), desc).head
+  override def classify(text: String, vocab: Seq[TagRule]): Option[String] =
+    classifyBatch(Seq(text), vocab).head
   override def summarize(values: Seq[String], desc: String): String = {
-    calls.add(1L); addChars(values)
+    bill(1L, values)
     inner.summarize(values, desc)
   }
-  override def score(text: String, query: String): Double = {
-    bill(text); inner.score(text, query)
-  }
-  override def duel(a: String, b: String, query: String): Boolean = {
-    calls.add(1L); addChars(Iterator(a, b))
-    inner.duel(a, b, query)
-  }
+  override def score(text: String, query: String): Double =
+    scoreBatch(Seq(text), query).head
+  override def duel(a: String, b: String, query: String): Boolean =
+    duelBatch(Seq((a, b)), query).head
   // batched variants: forward WHOLE batches to the inner oracle (one RPC
   // for a batched transport), metering per non-null judged text
   override def judgeBatch(texts: Seq[String], condition: String): Seq[Boolean] = {
-    billAll(texts); inner.judgeBatch(texts, condition)
+    bill(texts.count(_ != null), texts); inner.judgeBatch(texts, condition)
   }
   override def extractBatch(texts: Seq[String], desc: String): Seq[Option[String]] = {
-    billAll(texts); inner.extractBatch(texts, desc)
+    bill(texts.count(_ != null), texts); inner.extractBatch(texts, desc)
   }
   override def extractAllBatch(texts: Seq[String],
       desc: String): Seq[Seq[String]] = {
-    billAll(texts); inner.extractAllBatch(texts, desc)
+    bill(texts.count(_ != null), texts); inner.extractAllBatch(texts, desc)
   }
   override def classifyBatch(texts: Seq[String],
       vocab: Seq[TagRule]): Seq[Option[String]] = {
-    billAll(texts); inner.classifyBatch(texts, vocab)
+    bill(texts.count(_ != null), texts); inner.classifyBatch(texts, vocab)
   }
   override def scoreBatch(texts: Seq[String], query: String): Seq[Double] = {
-    billAll(texts); inner.scoreBatch(texts, query)
+    bill(texts.count(_ != null), texts); inner.scoreBatch(texts, query)
   }
   /** One billed call per pair, with the chars of both sides. */
   override def duelBatch(pairs: Seq[(String, String)],
       query: String): Seq[Boolean] = {
-    calls.add(pairs.size.toLong)
-    addChars(pairs.iterator.flatMap { case (a, b) => Iterator(a, b) })
+    bill(pairs.size.toLong, pairs.iterator.flatMap { case (a, b) => Iterator(a, b) })
     inner.duelBatch(pairs, query)
   }
 }

@@ -256,8 +256,7 @@ object FilterEnum {
     * the contract [[graft.exec.Policied]]'s MinCost escalation needs —
     * the sampled [[ColumnStats]] gate can undercount a column whose
     * rare values cluster past the sample prefix, and acting on a
-    * truncated set silently drops rows. Same cost class as [[keepSet]]
-    * (one distinct aggregation, bounded collect).
+    * truncated set silently drops rows.
     */
   def distinctWithin(df: DataFrame, column: String,
       maxDistinct: Int): Option[Seq[String]] = {
@@ -267,29 +266,19 @@ object FilterEnum {
     if (d.length > maxDistinct) None else Some(d.sorted)
   }
 
-  /** Oracle pick over an already-collected distinct set — one judged
-    * value per distinct, never per row.
+  /** Oracle pick over an already-collected distinct set: values among
+    * the condition's tokens are kept, the others judged in one batch —
+    * one judged value per distinct, never per row.
     */
   def keepFrom(distinct: Seq[String], condition: String,
       oracle: SemanticOracle): Seq[String] = {
     val toks = graft.oracle.DeterministicOracle.tokens(condition).toSet
-    distinct.filter(v => toks.contains(v.toLowerCase) ||
-      oracle.judge(v, condition))
+    val asked = distinct.filterNot(v => toks.contains(v.toLowerCase))
+    val said = if (asked.isEmpty) Nil else oracle.judgeBatch(asked, condition)
+    require(said.length == asked.length,
+      s"oracle batch returned ${said.length} results for ${asked.length} inputs")
+    distinct.filterNot(asked.zip(said).collect { case (v, false) => v }.toSet)
   }
-
-  /** Reference semantics (first `maxDistinct` distincts, truncating —
-    * Operaters.py:290-294); kept for parity documentation. Execution
-    * paths use [[distinctWithin]] + [[fromValues]]: like the reference's
-    * `int(threshold)` and all-columns bugs, the silent first-N
-    * truncation is re-derived to the DOCUMENTED semantics (judge the
-    * value set), with overflow escalating to per-row judgment instead
-    * of quietly dropping rows.
-    */
-  def keepSet(df: DataFrame, column: String, condition: String,
-      oracle: SemanticOracle, maxDistinct: Int = 100): Seq[String] =
-    keepFrom(df.select(col(column).cast("string")).na.drop()
-      .distinct().limit(maxDistinct)
-      .collect().map(_.getString(0)).toSeq.sorted, condition, oracle)
 
   /** The keep-set filter over a pre-collected EXACT distinct set (from
     * [[distinctWithin]]) — no second distinct job, no truncation.

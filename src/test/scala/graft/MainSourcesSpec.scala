@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * escaping has one home, [[graft.sources.JsonEscape]], and every
   * non-compiled `sem_*` judgment goes through the oracle's batch methods
   * on `InternalRow`s, with no `Row` round trip. Merge and TxLog read the
-  * files their manifests name through [[graft.sources.ManifestScan]], and
-  * no `spark.range(1)` job evaluates driver-side expressions.
+  * files their manifests name through [[graft.sources.ManifestScan]], no
+  * `spark.range(1)` job evaluates driver-side expressions, and cube reuse
+  * keys ([[graft.cube.PredicateAtoms]]) are built only in `graft/cube`.
   */
 class MainSourcesSpec extends AnyFunSuite {
 
@@ -123,6 +124,15 @@ class MainSourcesSpec extends AnyFunSuite {
       f.getName == "ManifestScan.scala" &&
         lines.exists(_.contains("new InMemoryFileIndex(")) },
       "ManifestScan no longer builds its own file index")
+  }
+
+  test("reuse keys stay in the cube module: no PredicateAtoms outside it") {
+    val cube = new File("src/main/scala/graft/cube").getPath + File.separator
+    val hits = for {
+      (f, lines) <- main if !f.getPath.startsWith(cube)
+      (line, i) <- lines.zipWithIndex if line.contains("PredicateAtoms")
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("no spark.range(1) job evaluates expressions on the driver") {

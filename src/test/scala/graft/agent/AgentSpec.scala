@@ -207,19 +207,58 @@ class AgentSpec extends SparkSpec {
       s"expected delta Filter over the cached node:\n${n2.df.queryExecution.analyzed}")
   }
 
+  /** The completions of one filter-only turn of slice steps (each a
+    * keyword prefilter AND a per-row judgment) under `logic`.
+    */
+  private def turn(logic: String, actions: String*) = Seq(
+    """{"filter_query": "posts", "analysis_query": ""}""",
+    actions.zipWithIndex.map { case (a, i) =>
+      s"""{"id": ${i + 1}, "agent": "slice", "field": null, "action": "$a"}"""
+    }.mkString("""{"operations": [""", ", ",
+      s"""], "logic": ["$logic", ${actions.indices.map(_ + 1).mkString(", ")}]}"""),
+    """{"has_topk": false}""")
+  private val sparkStep = "mentions spark"
+  private val joinStep = "mentions join"
+  private val flinkStep = "mentions flink"
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select("id").as[Long].collect().sorted.toSeq
+
+  test("an AND turn never gets an Equal hit on the OR node of its steps") {
+    val s = new Scripted(turn("OR", sparkStep, joinStep) ++
+      turn("AND", sparkStep, joinStep): _*)
+    val agent = new OlapAgent(s, oracle)
+    val cat = new CubeCatalog(docs, oracle)
+    assert(ids(agent.runSession(cat, "spark or join posts")) ==
+      Seq(1L, 2L, 3L, 4L, 5L))
+    assert(ids(agent.runSession(cat, "spark and join posts")) == Seq(1L, 3L))
+    assert(cat.reuse == CubeCatalog.Reuse(equal = 0, delta = 0, miss = 2,
+      evicted = 0))
+  }
+
+  test("an OR node is reused only by the same tree, in any child order, " +
+      "and is never a delta base") {
+    val s = new Scripted(turn("OR", sparkStep, flinkStep) ++
+      turn("OR", flinkStep, sparkStep) ++
+      turn("AND", sparkStep, flinkStep, "mentions streaming"): _*)
+    val counting = new JudgeCountingOracle
+    val agent = new OlapAgent(s, counting)
+    val cat = new CubeCatalog(docs, oracle)
+    def judged = JudgeCountingOracle.judged(sparkStep) +
+      JudgeCountingOracle.judged(flinkStep)
+    val or = ids(agent.runSession(cat, "spark or flink posts"))
+    assert(or == Seq(1L, 2L, 3L, 4L, 5L))
+    // the repeat is an Equal hit on the pinned node: no judgment billed
+    val j0 = judged
+    assert(ids(agent.runSession(cat, "flink or spark posts")) == or)
+    assert(judged == j0)
+    // the AND turn runs from the root, not as a delta over the OR rows
+    assert(ids(agent.runSession(cat, "spark and flink streaming posts")).isEmpty)
+    assert(cat.reuse == CubeCatalog.Reuse(equal = 1, delta = 0, miss = 2,
+      evicted = 0))
+  }
+
   test("pinned session nodes: a repeat bills no judgments, a delta bills " +
       "only its own step over the cached rows, and the catalog counts both") {
-    // one turn: slice steps (keyword prefilter AND a per-row judgment)
-    def turn(logic: String, actions: String*) = Seq(
-      """{"filter_query": "posts", "analysis_query": ""}""",
-      actions.zipWithIndex.map { case (a, i) =>
-        s"""{"id": ${i + 1}, "agent": "slice", "field": null, "action": "$a"}"""
-      }.mkString("""{"operations": [""", ", ",
-        s"""], "logic": ["$logic", ${actions.indices.map(_ + 1).mkString(", ")}]}"""),
-      """{"has_topk": false}""")
-    val sparkStep = "mentions spark"
-    val joinStep = "mentions join"
-    val flinkStep = "mentions flink"
     import graft.oracle.CountingOracle
     def filters(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.logical.collect {

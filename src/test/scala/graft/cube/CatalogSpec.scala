@@ -60,7 +60,8 @@ class CatalogSpec extends SparkSpec {
     assert(n2.plan.size == 2)
     // delta applied on top of n1's frame, not the root
     assert(n2.predicates == Set(PredicateAtoms.atom(fSpark), PredicateAtoms.atom(fScore)))
-    assert(cat.bestBase(n2.predicates).id == n2.id)
+    assert(cat.filterQuery("spark docs, high score", Seq(fScore, fSpark)).id ==
+      n2.id)
     val ids = n2.df.select("id").as[Long].collect().sorted
     assert(ids.toSeq == Seq(3L, 4L))
   }
@@ -266,6 +267,40 @@ class CatalogSpec extends SparkSpec {
 
   private def ids(df: DataFrame): Seq[Long] =
     df.select("id").as[Long].collect().sorted.toSeq
+
+  test("a non-conjunctive tree is keyed by the whole tree: reused only by " +
+      "the same tree, never a base, also after a CatalogStore round-trip") {
+    import graft.plan.LogicTree.{Leaf, Node}
+    val or = Some(Node("OR", Seq(Leaf(0), Leaf(1))))
+    val cat = new CubeCatalog(fixture, oracle)
+    val n1 = cat.filterQuery("spark or high score", Seq(fSpark, fScore), or)
+    assert(ids(n1.df) == Seq(1L, 2L, 3L, 4L) && n1.filterOps.isEmpty)
+    // the same tree, children swapped: an Equal hit
+    assert(cat.filterQuery("high score or spark", Seq(fScore, fSpark), or).id ==
+      n1.id)
+    // a flat AND of the same atoms is no Equal hit and runs from the root
+    assert(ids(cat.filterQuery("spark and high score", Seq(fSpark, fScore),
+      Some(Node("AND", Seq(Leaf(1), Leaf(0))))).df) == Seq(3L, 4L))
+    assert(ids(cat.filterQuery("spark, high score, window",
+      Seq(fSpark, fScore, fSem)).df) == Seq(3L))
+    assert(cat.reuse == CubeCatalog.Reuse(equal = 1, delta = 1, miss = 2,
+      evicted = 0))
+
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_cat_store_tree").toString
+    val one = new CubeCatalog(fixture, oracle)
+    one.filterQuery("spark or high score", Seq(fSpark, fScore), or)
+    CatalogStore.save(one, path)
+    val fresh = CatalogStore.load(spark, fixture, path, oracle)
+    assert(fresh.node(1).predicates == n1.predicates)
+    // with an empty key the loaded node would be this query's base
+    assert(ids(fresh.filterQuery("low score", Seq(LogicalOp.NumFilter(
+      Seq(NumCondition("score", 20, "<")), "and"))).df) == Seq(1L, 5L))
+    assert(fresh.filterQuery("spark or high score again", Seq(fSpark, fScore),
+      or).id == 1)
+    assert(fresh.reuse == CubeCatalog.Reuse(equal = 1, delta = 0, miss = 1,
+      evicted = 0))
+  }
 
   test("a repeated filterQuery reads the pinned node: zero judgments, " +
       "same rows") {

@@ -163,9 +163,10 @@ class PolicySpec extends SparkSpec {
     assert(m.extractAll("a b c", "words") == Seq("a", "b", "c"),
       "must forward to the inner extractAll, not truncate via extract()")
     assert(acc.value == 1L)
+    assert(batchRpcs == 1, "a scalar call is a one-element batch")
     assert(m.extractAllBatch(Seq("a b", null, "c"), "words")
       == Seq(Seq("a", "b"), Seq.empty, Seq("c")))
-    assert(batchRpcs == 1, "whole batch forwarded in one RPC")
+    assert(batchRpcs == 2, "whole batch forwarded in one RPC")
     assert(acc.value == 3L, "nulls never bill")
     // the end-to-end failure mode this guards: SemMapMulti over a
     // MeteredOracle must fan out to ALL values per row

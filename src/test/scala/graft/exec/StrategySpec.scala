@@ -58,9 +58,21 @@ class StrategySpec extends SparkSpec {
   }
 
   test("filter_enum keeps distinct values named in the condition") {
-    val df = (1 to 50).map(i => (i.toLong, if (i % 2 == 0) "en" else "fr")).toDF("id", "lang")
-    val keep = FilterEnum.keepSet(df, "lang", "language is en or de", oracle)
-    assert(keep == Seq("en"))
+    // the others are judged, in one batch
+    val df = (1 to 60).map(i => (i.toLong, Seq("en", "fr", "it")(i % 3)))
+      .toDF("id", "lang")
+    val vals = FilterEnum.distinctWithin(df, "lang", 100)
+    assert(vals.contains(Seq("en", "fr", "it")))
+    assert(FilterEnum.distinctWithin(df, "lang", 2).isEmpty) // overflow
+    val batches = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    val recording = new DeterministicOracle {
+      override def judgeBatch(texts: Seq[String], c: String): Seq[Boolean] = {
+        batches += texts; super.judgeBatch(texts, c)
+      }
+    }
+    assert(FilterEnum.keepFrom(vals.get, "language is en or de", recording) ==
+      Seq("en"))
+    assert(batches == Seq(Seq("fr", "it")))
   }
 
   test("dice chooses pattern > compare > enum > sem in priority order") {
