@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.oracle.{SemanticOracle, TagRule}
 import graft.plan.{LogicTree, LogicalOp}
-import graft.exec.Cascade
+import graft.exec.{Cascade, PinSet}
 import graft.ops.{CountOp, NumReduce, Reattach, SemGroup, SemMap, SemReduce}
 
 /** The OLAP cube / memory layer (SURVEY.md §1, §4):
@@ -33,6 +33,15 @@ import graft.ops.{CountOp, NumReduce, Reattach, SemGroup, SemMap, SemReduce}
   * the pin set keeps its lazy lineage and recomputes the same answer from
   * it. The root, and nodes registered from outside (a
   * [[CatalogStore]] reload reads materialized parquet), are never pinned.
+  * A node computed from the root is sized to its data before it is
+  * pinned: coalesced to the partition count Spark's file-split rule gives
+  * the root's estimated bytes ([[graft.exec.PinSet.partitionsFor]], from
+  * plan statistics, once per catalog). A node over a table of a few MB is
+  * then one partition, so every later query over it runs one task per
+  * stage and its group-by needs no shuffle; delta nodes and the verbs'
+  * frames are narrow over their base and inherit its partitioning. A
+  * large root keeps at least one partition per core, and a root with no
+  * size statistics keeps its partitions.
   */
 final case class Granularity(name: String, view: DataFrame,
     plan: Seq[LogicalOp], summary: Option[DataFrame] = None)
@@ -168,6 +177,11 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
     * shared pin set has evicted.
     */
   def reuse: Reuse = Reuse(equalHits, deltaHits, misses, evictions.get)
+
+  /** The partition count of a node computed from the root, by Spark's
+    * split rule over the root's estimated size ([[PinSet.partitionsFor]]).
+    */
+  private lazy val rootPartitions = PinSet.partitionsFor(root)
 
   /** Pin a node this catalog computed (a no-op for any other node). */
   private def repin(n: CubeNode): CubeNode = {
@@ -435,14 +449,17 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
 
   /** Register a node this catalog computed from `base`: a delta hit when
     * `base` is a cached node (re-pinned), a miss when it is the root. The
-    * new node gets the next id and is pinned.
+    * new node gets the next id and is pinned. A node computed from the
+    * root is coalesced to [[rootPartitions]]; one computed from a cached
+    * node is narrow over it and keeps its partitioning.
     */
   private def admit(base: CubeNode, query: String, predicates: Set[String],
       df: DataFrame, plan: Seq[LogicalOp], filterOps: Seq[LogicalOp],
       dims: Map[String, DimensionViews]): CubeNode = {
     if (base.id == 0) misses += 1
     else { deltaHits += 1; repin(base) }
-    val n = CubeNode(nextId, query, predicates, df, dims, plan, filterOps)
+    val sized = if (base.id == 0) df.coalesce(rootPartitions) else df
+    val n = CubeNode(nextId, query, predicates, sized, dims, plan, filterOps)
     nextId += 1
     nodes = nodes :+ n
     computed += n.id
@@ -468,7 +485,7 @@ object CubeCatalog {
 
   /** Cap of the process-wide pin set that holds computed nodes. */
   private[cube] val MaxPinned = 8
-  private val pins = new graft.exec.PinSet(MaxPinned)
+  private val pins = new PinSet(MaxPinned)
 }
 
 /** The composite OLAP verbs over a cube node (SURVEY.md §2d). */

@@ -274,7 +274,10 @@ object PlanRunner {
                   oracle.compileExtract(m.mapDescription).isEmpty
                 case _ => false
               }
-              val src = if (oraclePaysUpstream) pins.pin(base) else base
+              val src =
+                if (oraclePaysUpstream)
+                  pins.pin(base.coalesce(PinSet.partitionsFor(base)))
+                else base
               base = SemGroup(src, op, oracle, maxTags = 20)
             }
             out = base

@@ -16,6 +16,10 @@ import scala.jdk.CollectionConverters._
   * shares its plan: Spark's CacheManager keys cached data by canonicalized
   * plan, so unpersisting the old duplicate would silently uncache the
   * live pin too.
+  *
+  * Pin sites size what they pin with [[PinSet.partitionsFor]], so a small
+  * frame is cached as one partition and every later query over it runs
+  * one task per stage, with no shuffle under a group-by.
   */
 private[graft] final class PinSet(cap: Int) {
   // access order: iteration runs from least to most recently pinned
@@ -44,4 +48,29 @@ private[graft] final class PinSet(cap: Int) {
       }
       df
     }
+}
+
+private[graft] object PinSet {
+
+  /** How many partitions a frame of this size needs, by the rule Spark
+    * splits a file scan with (`FilePartition.maxSplitBytes`): a split is
+    * `min(spark.sql.files.maxPartitionBytes, max(spark.sql.files.openCostInBytes,
+    * bytes / minPartitionNum))` bytes and the count is `ceil(bytes / split)`,
+    * at least 1. `minPartitionNum` is `spark.sql.files.minPartitionNum`,
+    * else the default parallelism. At the defaults a frame under 4 MB is
+    * one partition, and a large one keeps at least one partition per core. The size is the
+    * optimized plan's estimate (a file scan reports the sum of its file
+    * sizes), so no Spark job runs. A frame with no size statistics reports
+    * Spark's default size, which gives a count far above any real one;
+    * `coalesce` never raises a count, so such a frame keeps its partitions.
+    */
+  def partitionsFor(df: DataFrame): Int = {
+    val conf = df.sparkSession.sessionState.conf
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes.max(1)
+    val cores = conf.filesMinPartitionNum
+      .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
+    val split = (bytes / cores).max(conf.filesOpenCostInBytes)
+      .min(conf.filesMaxPartitionBytes)
+    ((bytes + split - 1) / split).min(Int.MaxValue).toInt
+  }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
+import graft.exec.PinSet
+
 /** Copy-on-write MERGE (upsert) for plain-parquet tables — the lakehouse
   * primitive (UPDATE existing keys + INSERT new ones in one atomic
   * commit) that raw `spark.write.parquet` lacks — with a minimal VERSION
@@ -4528,7 +4530,10 @@ object Merge {
     * sorted positions (see [[DvCodec]]). The encode is one shuffle of
     * the matched pairs, hash-partitioned by file and sorted within
     * partitions, then a streaming per-file fold — memory is bounded by
-    * the largest single file's blob, never the delete.
+    * the largest single file's blob, never the delete. The sidecar is
+    * written in at most 4 partitions, fewer when `matched` is small
+    * ([[graft.exec.PinSet.partitionsFor]]): a delete of a few rows writes
+    * one file, whatever its part-file names hash to.
     * bitmapFormat=false keeps the v1 row format (the mixed-manifest
     * compatibility tests write through it).
     */
@@ -4538,11 +4543,12 @@ object Merge {
     val dvDir = "_graft_dv/" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(16)
     val dvPath = new Path(root, dvDir)
+    val parts = math.min(4, PinSet.partitionsFor(matched))
     val dvDf =
-      if (!bitmapFormat) matched.coalesce(4)
+      if (!bitmapFormat) matched.coalesce(parts)
       else {
         import spark.implicits._
-        matched.repartition(4, col("file"))
+        matched.repartition(parts, col("file"))
           .sortWithinPartitions("file", "pos")
           .as[(String, Long)]
           .mapPartitions { it =>

@@ -12,6 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * files their manifests name through [[graft.sources.ManifestScan]], no
   * `spark.range(1)` job evaluates driver-side expressions, and cube reuse
   * keys ([[graft.cube.PredicateAtoms]]) are built only in `graft/cube`.
+  * No partition count is a literal in the cube, exec, oracle, agent or
+  * sources layers: counts come from [[graft.exec.PinSet.partitionsFor]]
+  * or from the data (bucket counts, say).
   */
 class MainSourcesSpec extends AnyFunSuite {
 
@@ -140,6 +143,17 @@ class MainSourcesSpec extends AnyFunSuite {
     val hits = for {
       (f, lines) <- main
       (line, i) <- lines.zipWithIndex if one.findFirstIn(line).isDefined
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no coalesce or repartition to a literal count in the engine layers") {
+    val layers = Seq("cube", "exec", "oracle", "agent", "sources")
+      .map(p => new File(s"src/main/scala/graft/$p").getPath + File.separator)
+    val literal = """\.(?:coalesce|repartition)\(\s*\d""".r
+    val hits = for {
+      (f, lines) <- main if layers.exists(f.getPath.startsWith)
+      (line, i) <- lines.zipWithIndex if literal.findFirstIn(line).isDefined
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
   }

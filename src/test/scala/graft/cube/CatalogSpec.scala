@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
@@ -517,5 +518,63 @@ class CatalogSpec extends SparkSpec {
     // a DIFFERENT pair still pays its own call
     cat.relation5Judged(Seq(fScore), q, "high score docs", "alien query")
     assert(asked == 2)
+  }
+
+  /** The fixture as a parquet root of two files, so Spark scans it in
+    * two partitions.
+    */
+  private def parquetRoot(tag: String): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(tag).resolve("root")
+    fixture.repartition(2).write.parquet(dir.toString)
+    spark.read.parquet(dir.toString)
+  }
+
+  private def partitions(df: DataFrame): Int = df.rdd.getNumPartitions
+
+  test("a node computed from a small root is one partition; a delta over " +
+      "it keeps one, and a group-by over it plans no Exchange") {
+    val root = parquetRoot("graft_cat_sized")
+    assert(root.inputFiles.length >= 2 && partitions(root) > 1)
+    val cat = new CubeCatalog(root, oracle)
+    val n1 = cat.filterQuery("spark docs", Seq(fSpark))
+    assert(partitions(n1.df) == 1)
+    val n2 = cat.filterQuery("high-score spark docs", Seq(fSpark, fScore))
+    assert(cat.reuse == CubeCatalog.Reuse(equal = 0, delta = 1, miss = 1,
+      evicted = 0))
+    assert(partitions(n2.df) == 1)
+    val grouped = n1.df.groupBy("year").count()
+    val plan = grouped.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    assert(grouped.as[(String, Long)].collect().sorted.toSeq ==
+      Seq(("2020", 1L), ("2021", 1L), ("2022", 1L)))
+    // the same answers as the un-sized filters over the root
+    val sparkRows = root.filter(col("title").contains("spark"))
+    assert(ids(n1.df) == ids(sparkRows) && ids(n1.df) == Seq(1L, 3L, 4L))
+    assert(ids(n2.df) == ids(sparkRows.filter(col("score") > 20)))
+    assert(ids(cat.filterQuery("window docs", Seq(fSem)).df) ==
+      ids(graft.exec.Cascade.filter(root, Seq(0 -> fSem), None, oracle)))
+  }
+
+  test("node sizing follows spark.sql.files.maxPartitionBytes, and a root " +
+      "with no size statistics keeps its partitions") {
+    val root = parquetRoot("graft_cat_split")
+    val bytes = root.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, (bytes / 2).toString)
+    try {
+      val node = new CubeCatalog(root, oracle).filterQuery("spark docs",
+        Seq(fSpark))
+      assert(partitions(node.df) > 1)
+      assert(ids(node.df) == Seq(1L, 3L, 4L))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+    val rdd = spark.createDataFrame(spark.sparkContext.parallelize(
+      fixture.collect().toSeq, 3), fixture.schema)
+    assert(partitions(rdd) == 3)
+    val node = new CubeCatalog(rdd, oracle).filterQuery("spark docs",
+      Seq(fSpark))
+    assert(partitions(node.df) == 3)
+    assert(ids(node.df) == Seq(1L, 3L, 4L))
   }
 }

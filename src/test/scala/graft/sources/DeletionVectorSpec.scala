@@ -174,6 +174,34 @@ class DeletionVectorSpec extends SparkSpec {
     assert(Merge.readKeyed(spark, path).count() == 70L)
   }
 
+  /** Parquet files per sidecar dir under `_graft_dv/`, by dir name. */
+  private def sidecarFiles(path: String): Map[String, Int] =
+    Option(new File(path, "_graft_dv").listFiles()).toSeq.flatten
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+      .toMap
+
+  test("a few-row DV delete and DV upsert each write exactly one sidecar " +
+      "file; the deleted rows stay deleted on re-read") {
+    val path = freshDir("one_sidecar")
+    Merge.writeKeyed(baseDf, path, "id", nBuckets = 8,
+      statsCols = Seq("id"))
+    val keys = Seq(1L, 22L, 43L, 64L, 85L) // spread over several buckets
+    val del = Merge.deleteWhereDV(spark, path, $"id".isin(keys: _*))
+    assert(del.rowsDeleted == 5)
+    assert(sidecarFiles(path).values.toSeq == Seq(1), sidecarFiles(path))
+    val batch = Seq((7L, "upd_7", 7.5), (38L, "upd_38", 38.5),
+      (69L, "upd_69", 69.5)).toDF("id", "name", "score")
+    val ups = Merge.upsertDV(spark, path, batch, "id", 8)
+    assert(ups.rowsUpserted == 3 && ups.rowsDeleted == 3, s"got $ups")
+    assert(sidecarFiles(path).values.toSeq == Seq(1, 1), sidecarFiles(path))
+    val cur = Merge.readKeyed(spark, path)
+    assert(cur.count() == 95L)
+    assert(cur.filter($"id".isin(keys: _*)).count() == 0L)
+    assert(cur.filter($"id".isin(7L, 38L, 69L)).select("name").as[String]
+      .collect().sorted.toSeq == Seq("upd_38", "upd_69", "upd_7"))
+    keys.foreach(k => assert(Merge.lookupKey(spark, path, k).isEmpty))
+  }
+
   test("mixed v1 (row) and v2 (bitmap) sidecar commits subtract " +
       "together through every read path") {
     val path = freshDir("mixed")
