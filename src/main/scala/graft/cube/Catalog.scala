@@ -34,14 +34,18 @@ import graft.ops.{CountOp, NumReduce, Reattach, SemGroup, SemMap, SemReduce}
   * it. The root, and nodes registered from outside (a
   * [[CatalogStore]] reload reads materialized parquet), are never pinned.
   * A node computed from the root is sized to its data before it is
-  * pinned: coalesced to the partition count Spark's file-split rule gives
-  * the root's estimated bytes ([[graft.exec.PinSet.partitionsFor]], from
-  * plan statistics, once per catalog). A node over a table of a few MB is
-  * then one partition, so every later query over it runs one task per
-  * stage and its group-by needs no shuffle; delta nodes and the verbs'
-  * frames are narrow over their base and inherit its partitioning. A
-  * large root keeps at least one partition per core, and a root with no
-  * size statistics keeps its partitions.
+  * pinned ([[graft.exec.PinSet.sized]]): brought to the partition count
+  * Spark's file-split rule gives the root's estimated bytes
+  * ([[graft.exec.PinSet.partitionsFor]], from plan statistics, once per
+  * catalog). A node over a table of a few MB is then one partition, so
+  * every later query over it runs one task per stage and its group-by
+  * needs no shuffle. A node whose filters judge out of band is shuffled
+  * into that count after its judgments, which keep the root scan's
+  * partitions; any other node is coalesced. Delta nodes and the verbs'
+  * frames are narrow over their base and inherit its partitioning, so a
+  * delta's out-of-band judgments run in its base's partitions. A large
+  * root keeps Spark's split, and a root with no size statistics keeps its
+  * partitions.
   */
 final case class Granularity(name: String, view: DataFrame,
     plan: Seq[LogicalOp], summary: Option[DataFrame] = None)
@@ -450,15 +454,15 @@ class CubeCatalog(root: DataFrame, oracle: SemanticOracle,
   /** Register a node this catalog computed from `base`: a delta hit when
     * `base` is a cached node (re-pinned), a miss when it is the root. The
     * new node gets the next id and is pinned. A node computed from the
-    * root is coalesced to [[rootPartitions]]; one computed from a cached
-    * node is narrow over it and keeps its partitioning.
+    * root is sized to [[rootPartitions]]; one computed from a cached node
+    * is narrow over it and keeps its partitioning.
     */
   private def admit(base: CubeNode, query: String, predicates: Set[String],
       df: DataFrame, plan: Seq[LogicalOp], filterOps: Seq[LogicalOp],
       dims: Map[String, DimensionViews]): CubeNode = {
     if (base.id == 0) misses += 1
     else { deltaHits += 1; repin(base) }
-    val sized = if (base.id == 0) df.coalesce(rootPartitions) else df
+    val sized = if (base.id == 0) PinSet.sized(df, rootPartitions) else df
     val n = CubeNode(nextId, query, predicates, sized, dims, plan, filterOps)
     nextId += 1
     nodes = nodes :+ n

@@ -263,10 +263,11 @@ object PlanRunner {
               // open-set grouping scans twice (vocabulary mining is a
               // separate action before classification); when an earlier
               // plan step pays an OUT-OF-BAND oracle per row, pin the
-              // frame (persist under a bounded [[PinSet]]) so the
-              // mining pass does not re-judge (and re-bill) the whole
-              // upstream cascade. Compiled upstreams recompute for free
-              // and skip the cache.
+              // frame (persist under a bounded [[PinSet]], sized by
+              // [[PinSet.sized]], which shuffles a small judged frame
+              // rather than narrow its judgments) so the mining pass does
+              // not re-judge (and re-bill) the whole upstream cascade.
+              // Compiled upstreams recompute for free and skip the cache.
               val oraclePaysUpstream = plan.take(i).exists {
                 case f: LogicalOp.SemFilter =>
                   oracle.compileJudge(f.condition).isEmpty
@@ -276,7 +277,7 @@ object PlanRunner {
               }
               val src =
                 if (oraclePaysUpstream)
-                  pins.pin(base.coalesce(PinSet.partitionsFor(base)))
+                  pins.pin(PinSet.sized(base, PinSet.partitionsFor(base)))
                 else base
               base = SemGroup(src, op, oracle, maxTags = 20)
             }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
+import graft.oracle.BatchedExec
+
 /** A bounded set of persisted frames, evicted least-recently-pinned
   * first.
   *
@@ -17,9 +19,9 @@ import scala.jdk.CollectionConverters._
   * plan, so unpersisting the old duplicate would silently uncache the
   * live pin too.
   *
-  * Pin sites size what they pin with [[PinSet.partitionsFor]], so a small
-  * frame is cached as one partition and every later query over it runs
-  * one task per stage, with no shuffle under a group-by.
+  * Pin sites size what they pin with [[PinSet.sized]], so a small frame
+  * is cached as one partition and every later query over it runs one
+  * task per stage, with no shuffle under a group-by.
   */
 private[graft] final class PinSet(cap: Int) {
   // access order: iteration runs from least to most recently pinned
@@ -58,19 +60,41 @@ private[graft] object PinSet {
     * bytes / minPartitionNum))` bytes and the count is `ceil(bytes / split)`,
     * at least 1. `minPartitionNum` is `spark.sql.files.minPartitionNum`,
     * else the default parallelism. At the defaults a frame under 4 MB is
-    * one partition, and a large one keeps at least one partition per core. The size is the
-    * optimized plan's estimate (a file scan reports the sum of its file
-    * sizes), so no Spark job runs. A frame with no size statistics reports
-    * Spark's default size, which gives a count far above any real one;
-    * `coalesce` never raises a count, so such a frame keeps its partitions.
+    * one partition, and a large one keeps at least one partition per
+    * core. The size is the optimized plan's estimate (a file scan reports
+    * the sum of its file sizes), so no Spark job runs. A frame with no
+    * size statistics reports Spark's default size, which gives a count far
+    * above any real one.
     */
   def partitionsFor(df: DataFrame): Int = {
     val conf = df.sparkSession.sessionState.conf
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes.max(1)
-    val cores = conf.filesMinPartitionNum
-      .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
-    val split = (bytes / cores).max(conf.filesOpenCostInBytes)
+    val split = (bytes / minPartitions(df)).max(conf.filesOpenCostInBytes)
       .min(conf.filesMaxPartitionBytes)
     ((bytes + split - 1) / split).min(Int.MaxValue).toInt
   }
+
+  /** `df` in at most `k` partitions, `k` from [[partitionsFor]].
+    *
+    * A frame whose plan judges out of band ([[BatchedExec.outOfBand]]) is
+    * shuffled into `k` partitions, so its judging stage keeps the
+    * partitions of its input and a remote oracle's batches still run one
+    * task per input partition. That happens only when `k` is below
+    * `minPartitionNum`, which the split rule gives only to a frame of less
+    * than one file-open cost (4 MB at the defaults) per core, so the
+    * shuffle is small; a larger judged frame keeps its partitions. Any other frame is coalesced, with no shuffle, and
+    * `coalesce` never raises a count: a large frame keeps Spark's split,
+    * and a frame with no size statistics keeps its partitions. One
+    * partition plans as Spark's `SinglePartition` in both forms, so a
+    * group-by over it needs no exchange.
+    */
+  def sized(df: DataFrame, k: Int): DataFrame =
+    if (!BatchedExec.outOfBand(df)) df.coalesce(k)
+    else if (k < minPartitions(df)) df.repartition(k)
+    else df
+
+  /** `spark.sql.files.minPartitionNum`, else the default parallelism. */
+  private def minPartitions(df: DataFrame): Int =
+    df.sparkSession.sessionState.conf.filesMinPartitionNum
+      .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
 }

@@ -63,6 +63,10 @@ object BatchedExec {
       OracleBatch(in, value.map(_._2), block, label, kernel, child)))
   }
 
+  /** Whether `df`'s plan runs an out-of-band kernel ([[OracleBatch]]). */
+  def outOfBand(df: DataFrame): Boolean =
+    df.queryExecution.logical.exists(_.isInstanceOf[OracleBatch])
+
   /** Set `outCol` (replacing a column of that name, like `withColumn`) to
     * a value computed by a batched kernel over the `inputs` texts.
     *

@@ -4522,6 +4522,9 @@ object Merge {
     }
   }
 
+  /** Most files one DV commit writes into its sidecar dir. */
+  private val DvSidecarParts = 4
+
   /** Write `matched` (file, pos) rows as ONE new sidecar dir under
     * `_graft_dv/` and return (manifest-relative sidecar refs, recorded
     * row count) — (empty, 0) with the dir already cleaned when nothing
@@ -4531,9 +4534,13 @@ object Merge {
     * the matched pairs, hash-partitioned by file and sorted within
     * partitions, then a streaming per-file fold — memory is bounded by
     * the largest single file's blob, never the delete. The sidecar is
-    * written in at most 4 partitions, fewer when `matched` is small
-    * ([[graft.exec.PinSet.partitionsFor]]): a delete of a few rows writes
-    * one file, whatever its part-file names hash to.
+    * written in at most [[DvSidecarParts]] partitions, fewer when the
+    * estimated size of `matched` is small
+    * ([[graft.exec.PinSet.partitionsFor]]). The estimate follows the
+    * scanned table's size, not the matched row count (counting would cost
+    * a job): on a table of a few MB a delete writes one file, whatever
+    * its part-file names hash to, while a few-row delete on a larger
+    * table still writes up to [[DvSidecarParts]].
     * bitmapFormat=false keeps the v1 row format (the mixed-manifest
     * compatibility tests write through it).
     */
@@ -4543,7 +4550,7 @@ object Merge {
     val dvDir = "_graft_dv/" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(16)
     val dvPath = new Path(root, dvDir)
-    val parts = math.min(4, PinSet.partitionsFor(matched))
+    val parts = math.min(DvSidecarParts, PinSet.partitionsFor(matched))
     val dvDf =
       if (!bitmapFormat) matched.coalesce(parts)
       else {

@@ -555,6 +555,25 @@ class CatalogSpec extends SparkSpec {
       ids(graft.exec.Cascade.filter(root, Seq(0 -> fSem), None, oracle)))
   }
 
+  test("a root miss that judges out of band judges in the root's " +
+      "partitions, and its node is one partition") {
+    val root = parquetRoot("graft_cat_judged")
+    val n = partitions(root)
+    assert(n > 1)
+    val node = new CubeCatalog(root,
+      new graft.exec.JudgePartitionsOracle("catalog_root_miss"))
+      .filterQuery("window docs", Seq(fSem))
+    assert(ids(node.df) ==
+      ids(graft.exec.Cascade.filter(root, Seq(0 -> fSem), None, oracle)))
+    assert(graft.exec.JudgePartitionsOracle.partitions("catalog_root_miss") ==
+      (0 until n).toSet)
+    assert(partitions(node.df) == 1)
+    // above the cached relation: its own plan holds the sizing shuffle
+    val plan = node.df.groupBy("year").count().queryExecution.executedPlan
+      .toString
+    assert(!plan.split("InMemoryRelation")(0).contains("Exchange"), plan)
+  }
+
   test("node sizing follows spark.sql.files.maxPartitionBytes, and a root " +
       "with no size statistics keeps its partitions") {
     val root = parquetRoot("graft_cat_split")

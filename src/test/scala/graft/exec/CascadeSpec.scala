@@ -1,8 +1,33 @@
 package graft.exec
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
+
 import graft.SparkSpec
 import graft.oracle.DeterministicOracle
 import graft.plan.{LogicalOp, LogicTree, NumCondition, PlanJson}
+
+/** Uncompiled judgments, run out of band through the default batch loop,
+  * that record the partition each ran in, per `tag` (one JVM).
+  */
+class JudgePartitionsOracle(tag: String) extends DeterministicOracle {
+  override def compileJudge(condition: String) = None
+  override def judge(text: String, condition: String): Boolean = {
+    JudgePartitionsOracle.seen
+      .computeIfAbsent(tag, _ => ConcurrentHashMap.newKeySet[Int]())
+      .add(TaskContext.getPartitionId())
+    super.judge(text, condition)
+  }
+}
+object JudgePartitionsOracle {
+  private val seen = new ConcurrentHashMap[String, java.util.Set[Int]]
+  /** The partitions the judgments tagged `tag` ran in. */
+  def partitions(tag: String): Set[Int] =
+    Option(seen.get(tag)).map(_.asScala.toSet).getOrElse(Set.empty)
+}
 
 class CascadeSpec extends SparkSpec {
   import spark.implicits._
@@ -50,6 +75,25 @@ class CascadeSpec extends SparkSpec {
     assert(rows.length == 1)
     // open-set vocabulary mined from filtered rows: "spark" is the top token
     assert(rows(0).getLong(rows(0).fieldIndex("count_of_op_kind")) == 3L)
+  }
+
+  test("PlanRunner pins a small judged frame before a sem_group without " +
+      "narrowing its judgments") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cascade_pin")
+      .resolve("t").toString
+    df.repartition(2).write.parquet(dir)
+    val files = spark.read.parquet(dir)
+    assert(files.rdd.getNumPartitions == 2)
+    val plan = PlanJson.decodePlan(
+      """[
+        {"operator":"sem_filter","params":{"columns":["txt"],"condition":"spark"}},
+        {"operator":"sem_group","params":{"columns":["txt"],"map_description":"group by op","keyword":"op_kind"}},
+        {"operator":"count","params":{"columns":[],"group_by":"op_kind"}}
+      ]""")
+    val out = PlanRunner.run(files, plan,
+      new JudgePartitionsOracle("sem_group_pin"))
+    assert(out.collect().map(_.getAs[Long]("count_of_op_kind")).sum == 3L)
+    assert(JudgePartitionsOracle.partitions("sem_group_pin") == Set(0, 1))
   }
 
   test("cost ordering puts sem leaves last within a node") {
