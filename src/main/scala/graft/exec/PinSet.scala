@@ -74,19 +74,21 @@ private[graft] object PinSet {
     ((bytes + split - 1) / split).min(Int.MaxValue).toInt
   }
 
-  /** `df` in at most `k` partitions, `k` from [[partitionsFor]].
+  /** `df` sized to `k` partitions, `k` from [[partitionsFor]].
     *
     * A frame whose plan judges out of band ([[BatchedExec.outOfBand]]) is
     * shuffled into `k` partitions, so its judging stage keeps the
     * partitions of its input and a remote oracle's batches still run one
     * task per input partition. That happens only when `k` is below
     * `minPartitionNum`, which the split rule gives only to a frame of less
-    * than one file-open cost (4 MB at the defaults) per core, so the
-    * shuffle is small; a larger judged frame keeps its partitions. Any other frame is coalesced, with no shuffle, and
-    * `coalesce` never raises a count: a large frame keeps Spark's split,
-    * and a frame with no size statistics keeps its partitions. One
-    * partition plans as Spark's `SinglePartition` in both forms, so a
-    * group-by over it needs no exchange.
+    * than one file-open cost (4 MB at the defaults) per core: the shuffle
+    * is small, and its count stays below one per core even where the
+    * input had fewer. A larger judged frame keeps its partitions. Any
+    * other frame is coalesced, with no shuffle, and `coalesce` never
+    * raises a count: a large frame keeps Spark's split, and a frame with
+    * no size statistics keeps its partitions. One partition plans as
+    * Spark's `SinglePartition` in both forms, so a group-by over it needs
+    * no exchange.
     */
   def sized(df: DataFrame, k: Int): DataFrame =
     if (!BatchedExec.outOfBand(df)) df.coalesce(k)
